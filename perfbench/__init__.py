@@ -1,0 +1,5 @@
+"""Seeded end-to-end benchmark of the geojson_vt_spark package.
+
+`python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>`
+runs one workload and prints one JSON result line; see perfbench/README.md.
+"""
