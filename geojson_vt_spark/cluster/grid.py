@@ -15,7 +15,7 @@ Properties vs the reference semantics (documented, invariant-tested):
   * ids keep the reference encoding (id - n) % 32 == origin zoom, with the
     packed cell index in place of the array position.
 
-Execution shape (default, `_batched_levels`): cells nest across zooms, so
+Execution shape (`_batched_levels`): cells nest across zooms, so
 after ONE repartition by the batch's coarsest-zoom anchor cell a numpy
 kernel finishes every zoom of the batch partition-locally; the two-tier
 `batch_plan` (k=4 levels for the raw-point head batch, k_tail=8 for the
@@ -23,17 +23,14 @@ cell-collapsed tail batches, each anchored at its own coarsest zoom) gives
 1 + ceil((levels-k)/k_tail) serial barriers with per-anchor row counts
 bounded at ~4^k_tail * min_points after the first batch — skew-safe on
 dense-city corpora where a single coarse anchor would otherwise hold most
-of the data.
-A per-zoom pure-Column engine (`_column_levels`, one
-partial-agg shuffle + one checkpoint per zoom, AQE-skew-friendly) remains
-selectable via SPARK_GRAFT_CLUSTER_LEVEL_MODE=column and is structurally
-equality-tested against the batched one. Pass a workdir for parquet
-snapshots (resumable lineage, same contract as plans/pyramid.py).
+of the data. The tests hold a per-zoom pure-Column reference
+(tests/grid_reference.py) that this engine is equality-tested against.
+Pass a workdir for parquet snapshots (resumable lineage, same contract as
+plans/pyramid.py).
 """
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
@@ -47,6 +44,16 @@ from ..config import ClusterOptions
 # offset with a 2^28 multiplier packs |cx|,|cy| < 2^27 (every max_zoom <= 23
 # at default extent/radius) into < 2^56, leaving 5 bits for the zoom slot.
 _CELL_OFF = 1 << 27
+
+# batch_plan depths: the raw-point head batch spans _LEVEL_BATCH levels, the
+# cell-collapsed tail batches _LEVEL_BATCH_TAIL levels each
+_LEVEL_BATCH = 4
+_LEVEL_BATCH_TAIL = 8
+# Arrow records per batch into the kernel: it buffers whole partitions
+# anyway, so big batches mean fewer JVM->pandas conversions and concat pieces
+_ARROW_BATCH = 262144
+# the kernel buffers a whole anchor partition in executor memory
+_MAX_PARTITION_ROWS = 100_000_000
 
 
 def _packed_cell(cx, cy):
@@ -119,16 +126,11 @@ def build_grid_trees(
     """points_df: (idx long, px double, py double, id string, tags string) ->
     {zoom: tree DataFrame (index.TREE_SCHEMA columns)}.
 
-    Two level engines (env ``SPARK_GRAFT_CLUSTER_LEVEL_MODE``):
+    ``_batched_levels`` runs one exchange + one materialization per GROUP
+    of levels (anchor-cell partitioning + a partition-local numpy kernel),
+    cutting a per-zoom loop's serial shuffle count by the batch factor.
 
-    * ``batched`` (default) — ``_batched_levels``: one exchange + one
-      materialization per GROUP of levels (anchor-cell partitioning + a
-      partition-local numpy kernel), cutting the loop's serial shuffle
-      count by the batch factor;
-    * ``column`` — ``_column_levels``: the pure-Column per-level loop
-      (one hash exchange + one checkpoint per zoom).
-
-    Both shuffle and checkpoint a NARROW frame — (x, y, src, parent, num,
+    It shuffles and checkpoints a NARROW frame — (x, y, src, parent, num,
     props) — about half the bytes of the full tree schema (props is NULL
     unless a reduce fold is configured); `_widen` reconstructs the derived
     columns lazily at the dict boundary. In a bandwidth-bound loop the byte
@@ -151,130 +153,15 @@ def build_grid_trees(
         F.lit(1).cast("long").alias("num"),
         props0.alias("props"),
     )
-    trees: dict[int, DataFrame] = {}
-    mode = os.environ.get("SPARK_GRAFT_CLUSTER_LEVEL_MODE", "batched")
-    if o.reduce_fn is not None:
-        # map/reduce property folds run in the batched kernel only — the
-        # pure-Column engine cannot evaluate a user Python reduce without
-        # giving up its no-Python property, so it stays the no-props path.
-        mode = "batched"
-    if mode == "batched" and o.max_zoom >= o.min_zoom:
-        # no eager materialization of the raw points: the first batch's own
-        # checkpoint is the first barrier (its exchange re-shuffles the rows
-        # anyway, and batch 1 overwrites trees[max_zoom+1] with the
-        # parent-finalized frame). Callers hand in a deterministic/pinned
-        # points_df (index.py localCheckpoints it), so lazy re-read is safe.
-        trees[o.max_zoom + 1] = _widen(level, n_points)
+    # no eager materialization of the raw points: the first batch's own
+    # checkpoint is the first barrier (its exchange re-shuffles the rows
+    # anyway, and batch 1 overwrites trees[max_zoom+1] with the
+    # parent-finalized frame). Callers hand in a deterministic/pinned
+    # points_df (index.py localCheckpoints it), so lazy re-read is safe.
+    trees = {o.max_zoom + 1: _widen(level, n_points)}
+    if o.max_zoom >= o.min_zoom:
         _batched_levels(level, trees, o, n_points, workdir)
-    else:
-        frontier = _checkpoint(level, workdir, f"ctree/z={o.max_zoom + 1:02d}")
-        trees[o.max_zoom + 1] = _widen(frontier, n_points)
-        if mode == "batched":
-            _batched_levels(frontier, trees, o, n_points, workdir)
-        else:
-            _column_levels(frontier, trees, o, n_points, workdir)
     return trees
-
-
-def _column_levels(
-    frontier: DataFrame,
-    trees: dict[int, DataFrame],
-    o: ClusterOptions,
-    n_points: int,
-    workdir: Optional[str],
-) -> None:
-    """Per-level Column-only engine: one exchange + one checkpoint per zoom."""
-    f32 = lambda c: c.cast("float").cast("double")  # noqa: E731 — JS fround
-
-    # Each level's COMBINED frame is localCheckpoint(eager)-ed: all three
-    # level products (parent-pointer rewrite, pass-through rows, new cluster
-    # rows) are filters over it, so one materialization per level replaces
-    # the diamond that previously re-executed the cells join per reference
-    # (measured 8x SLOWER with a 4-level lazy window). The knob stays for
-    # experimentation.
-    ckpt_every = int(os.environ.get("SPARK_GRAFT_CLUSTER_CKPT_EVERY", "1"))
-
-    def _window_ckpt(df: DataFrame, name: str, steps_done: int) -> DataFrame:
-        if workdir:
-            return _checkpoint(df, workdir, name)
-        if steps_done % ckpt_every == 0:
-            return df.localCheckpoint(eager=True)
-        return df.cache()
-
-    narrow_cols = ["x", "y", "src", "parent", "num", "props"]
-    for z in range(o.max_zoom, o.min_zoom - 1, -1):
-        r = o.radius / (o.extent * (2.0 ** z))
-        cur = frontier
-        # bin on the JS-fround quantization of the row coordinate (qx in the
-        # wide schema) — recomputed lazily, identical float math
-        binned = cur.withColumn(
-            "cx", F.floor(f32(F.col("x")) / F.lit(r))
-        ).withColumn("cy", F.floor(f32(F.col("y")) / F.lit(r)))
-        # the level's ONLY exchange: hash-place rows by cell ONCE; the cell
-        # aggregate below then needs no exchange of its own (partial+final
-        # agg over the already-clustered input) and the cells->rows join is
-        # co-partitioned on both sides. Catalyst's ReuseExchange dedupes the
-        # repartition across the union branches.
-        binned = binned.repartition("cx", "cy")
-        cells = binned.groupBy("cx", "cy").agg(
-            F.count(F.lit(1)).alias("cell_rows"),
-            F.sum("num").alias("cell_num"),
-            (F.sum(F.col("x") * F.col("num")) / F.sum("num")).alias("wx"),
-            (F.sum(F.col("y") * F.col("num")) / F.sum("num")).alias("wy"),
-        )
-        merged = (F.col("cell_rows") > 1) & (F.col("cell_num") >= F.lit(o.min_points))
-        cid = _packed_cell(F.col("cx"), F.col("cy")) * F.lit(32) + F.lit(
-            z + 1 + n_points
-        )
-        cells = cells.select(
-            "cx", "cy", merged.alias("merged"), cid.alias("cid"), "cell_num", "wx", "wy"
-        )
-
-        joined = binned.join(cells, ["cx", "cy"], "left")
-
-        # ONE materialization per level carries all three products — the
-        # parent-pointer update of level z+1, the pass-through rows, and the
-        # new cluster rows — discriminated by `rk`; the products are cheap
-        # filters over the checkpointed frame (no re-execution, no extra job)
-        rows_part = joined.select(
-            "x",
-            "y",
-            "src",
-            F.when(F.col("merged"), F.col("cid")).otherwise(F.col("parent")).alias(
-                "parent"
-            ),
-            "num",
-            "props",
-            F.coalesce(F.col("merged"), F.lit(False)).alias("merged"),
-            F.lit(0).alias("rk"),
-        )
-        clusters_part = (
-            cells.filter("merged")
-            .select(
-                F.col("wx").alias("x"),
-                F.col("wy").alias("y"),
-                F.col("cid").alias("src"),
-                F.lit(-1).cast("long").alias("parent"),
-                F.col("cell_num").alias("num"),
-                F.lit(None).cast("string").alias("props"),
-                F.lit(True).alias("merged"),
-                F.lit(1).alias("rk"),
-            )
-        )
-        combined = _window_ckpt(
-            rows_part.unionByName(clusters_part), f"ctree/z={z:02d}",
-            o.max_zoom - z + 1,
-        )
-        # level z+1 with parent pointers filled in (children drill-down)
-        trees[z + 1] = _widen(
-            combined.filter(F.col("rk") == 0).select(*narrow_cols), n_points
-        )
-        # level z frontier: non-merged rows keep their original parent (the
-        # when() above only rewrites merged rows) + the new cluster rows
-        frontier = combined.filter(
-            (F.col("rk") == 1) | (~F.col("merged"))
-        ).select(*narrow_cols)
-        trees[z] = _widen(frontier, n_points)
 
 
 _NARROW_COLS = ["x", "y", "src", "parent", "num", "props"]
@@ -317,18 +204,12 @@ def _make_level_kernel(levels: list, o: ClusterOptions, n_points: int):
         if not parts:
             return
         pdf = pd.concat(parts, ignore_index=True)
-        cap = int(os.environ.get("SPARK_GRAFT_CLUSTER_MAX_PARTITION_ROWS", "100000000"))
-        if len(pdf) > cap:
+        if len(pdf) > _MAX_PARTITION_ROWS:
             raise RuntimeError(
                 f"grid-cluster anchor partition holds {len(pdf)} rows "
-                f"(> {cap}); the batched kernel buffers whole partitions and "
-                "hash repartitioning cannot split one hot anchor cell — "
-                "lower SPARK_GRAFT_CLUSTER_LEVEL_BATCH / "
-                "SPARK_GRAFT_CLUSTER_LEVEL_BATCH_TAIL (finer anchors per "
-                "batch) or set SPARK_GRAFT_CLUSTER_LEVEL_MODE=column (the "
-                "partial-agg engine, which never buffers a partition); raise "
-                "SPARK_GRAFT_CLUSTER_MAX_PARTITION_ROWS only if the executor "
-                "heap genuinely fits the batch"
+                f"(> {_MAX_PARTITION_ROWS}); the batched kernel buffers whole "
+                "partitions and hash repartitioning cannot split one hot "
+                "anchor cell; cluster this corpus with method='exact'"
             )
         x = pdf["x"].to_numpy(np.float64)
         y = pdf["y"].to_numpy(np.float64)
@@ -442,13 +323,9 @@ def _batched_levels(
     count is capped at ~4^k_tail * min_points by the previous batch's
     frontier collapse (see batch_plan)."""
     spark = frontier.sparkSession
-    # the kernel buffers whole partitions anyway, so cross Arrow in big
-    # batches: fewer JVM->pandas conversions and concat pieces per task
     batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old_batch = spark.conf.get(batch_key, None)
-    spark.conf.set(
-        batch_key, os.environ.get("SPARK_GRAFT_CLUSTER_ARROW_BATCH", "262144")
-    )
+    spark.conf.set(batch_key, str(_ARROW_BATCH))
     try:
         parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
         _run_batches(frontier, trees, o, n_points, workdir, batch_plan(o, parts))
@@ -471,36 +348,30 @@ def batch_plan(o: ClusterOptions, shuffle_partitions: int) -> list:
     partitioning by anchor key cannot split that hot cell. The two-tier
     plan bounds skew structurally instead:
 
-    * batch 1 spans k levels (default 4), anchoring at max_zoom-k+1 — fine
-      enough that even a dense city spans many anchor cells (the data-heavy
-      top of the pyramid keeps its parallelism). Only this batch ever sees
-      RAW points, so only its depth is skew-sensitive;
+    * batch 1 spans k = _LEVEL_BATCH (4) levels, anchoring at max_zoom-k+1 —
+      fine enough that even a dense city spans many anchor cells (the
+      data-heavy top of the pyramid keeps its parallelism). Only this batch
+      ever sees RAW points, so only its depth is skew-sensitive;
     * every later batch's incoming frontier is already collapsed to at most
       ~min_points rows per cell of the PREVIOUS batch's coarsest zoom, so a
       tail batch spanning d levels holds at most ~4^d * min_points rows per
       anchor NO MATTER how skewed the corpus is — the bound is the cell
       nesting itself, not a data property. That lets tail batches run
-      deeper: k_tail levels each (default 8 → ≤ 4^8*min_points ≈ 1.3e5 rows
-      per anchor at min_points=2, still a sub-second partition-local numpy
-      workload).
+      deeper: k_tail = _LEVEL_BATCH_TAIL (8) levels each (≤ 4^8*min_points
+      ≈ 1.3e5 rows per anchor at min_points=2, still a sub-second
+      partition-local numpy workload).
 
     Barriers: 1 + ceil((levels-k)/k_tail) — 3 at the default z16 pyramid
     (vs 2 for the skew-unsafe round-2 plan and 5 for uniform k=4 chunks);
     all barriers after the first shuffle a collapsed (cell-bounded)
     frontier, so added wall-clock is per-barrier fixed cost, not volume.
-
-    ``SPARK_GRAFT_CLUSTER_LEVEL_BATCH`` overrides k (and, when set without
-    the tail var, k_tail too — the round-2 escape hatch stays one knob);
-    ``SPARK_GRAFT_CLUSTER_LEVEL_BATCH_TAIL`` overrides k_tail alone.
     """
     zs = list(range(o.max_zoom, o.min_zoom - 1, -1))
-    k_env = os.environ.get("SPARK_GRAFT_CLUSTER_LEVEL_BATCH")
-    k = max(1, int(k_env)) if k_env else 4
-    k_tail = max(
-        1, int(os.environ.get("SPARK_GRAFT_CLUSTER_LEVEL_BATCH_TAIL", k_env or "8"))
-    )
-    head, tail = zs[:k], zs[k:]
-    return [head] + [tail[i : i + k_tail] for i in range(0, len(tail), k_tail)]
+    head, tail = zs[:_LEVEL_BATCH], zs[_LEVEL_BATCH:]
+    return [head] + [
+        tail[i : i + _LEVEL_BATCH_TAIL]
+        for i in range(0, len(tail), _LEVEL_BATCH_TAIL)
+    ]
 
 
 def _run_batches(

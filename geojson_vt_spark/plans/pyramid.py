@@ -42,7 +42,6 @@ Spark-first design (NOT a translation of the single-threaded BFS):
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 from typing import Iterator, Optional
@@ -80,19 +79,15 @@ _SUBTREE_MIN_TILES = 48
 
 # head fusion: max extra levels one Arrow crossing may force-split when the
 # JVM lower-bound proof (_head_fuse_depth) allows it. 0 disables.
-def _head_fuse_max() -> int:
-    return int(os.environ.get("SPARK_GRAFT_HEAD_FUSE", "3"))
+_HEAD_FUSE_MAX = 3
 
-
-def _one_shot_max_points() -> int:
-    """Small-corpus one-shot gate: when the root tile's total vertex count
-    is at most this, the whole pyramid runs as ONE applyInPandas subtree
-    group (zero per-level crossings — the per-level fixed Spark overhead is
-    18-27x the reference's wall-clock at the 10k bench point, BASELINE.md
-    crossover table). Bounded by construction: the one task does at most
-    this many points; bigger corpora take the distributed level loop.
-    0 disables."""
-    return int(os.environ.get("SPARK_GRAFT_ONE_SHOT_MAX_POINTS", "200000"))
+# Small-corpus one-shot gate: when the root tile's total vertex count is at
+# most this, the whole pyramid runs as ONE applyInPandas subtree group (zero
+# per-level crossings — the per-level fixed Spark overhead is 18-27x the
+# reference's wall-clock at the 10k bench point, BASELINE.md crossover
+# table). Bounded by construction: the one task does at most this many
+# points; bigger corpora take the distributed level loop. 0 disables.
+_ONE_SHOT_MAX_POINTS = 200_000
 
 
 def _stop_rule(z, x, y, num_points, options: Options, target) -> bool:
@@ -865,68 +860,6 @@ class PyramidStore:
 
 
 _CKPT_POOL = None
-_PROOF_POOL = None
-
-
-def _proof_pool():
-    """Dedicated thread for the speculative head-fuse proof, separate from
-    the checkpoint pool so a queued subtree materialization never serializes
-    behind the proof (both are plain concurrent Spark jobs; task slots cap
-    actual parallelism)."""
-    global _PROOF_POOL
-    if _PROOF_POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _PROOF_POOL = ThreadPoolExecutor(max_workers=1)
-    return _PROOF_POOL
-
-
-def _submit_spec_proof(frontier, z: int, options: Options, cap: int):
-    """Launch the speculative head-fuse proof under its own cancellable job
-    group. Returns (future, cancel) where cancel() aborts the in-flight
-    Spark job and swallows the cancellation error — so a gate rejection
-    (z0 stops, or a retained stop) costs only cancellation latency instead
-    of serializing a wholly wasted full-frontier vertex-binning job (a
-    review finding: the old drain blocked on .result())."""
-    import threading
-    import uuid
-    from concurrent.futures import TimeoutError as _FutTimeout
-
-    sc = frontier.sparkSession.sparkContext
-    group = f"pyramid-spec-proof-{uuid.uuid4().hex}"
-    cancelled = threading.Event()
-
-    def run():
-        # cancelJobGroup only reaches jobs ALREADY submitted — a cancel that
-        # lands while this thread is still in plan analysis would otherwise
-        # be a no-op and cancel() would block on the full wasted proof job.
-        # The flag closes most of that window; the retry loop in cancel()
-        # closes the rest (a job submitted between flag-check and cancel).
-        if cancelled.is_set():
-            return 0
-        # job-group is a thread-local property; the proof pool is a
-        # dedicated thread, so tagging here scopes exactly this job
-        sc.setJobGroup(group, "speculative head-fuse proof", True)
-        try:
-            return _head_fuse_depth(frontier, z, options, cap)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-
-    fut = _proof_pool().submit(run)
-
-    def cancel():
-        cancelled.set()
-        while True:
-            sc.cancelJobGroup(group)
-            try:
-                fut.result(timeout=0.25)
-                return
-            except _FutTimeout:
-                continue  # job may have been submitted after the cancel
-            except Exception:  # noqa: BLE001 — cancelled job, result unused
-                return
-
-    return fut, cancel
 
 
 def _ckpt_pool():
@@ -1002,10 +935,8 @@ def build_pyramid(
 
     # reference debug option (tile-index.ts:14,166-169 timing logs): >=1
     # prints per-level phase timings on the driver
-    dbg = max(options.debug, int(os.environ.get("SPARK_GRAFT_DEBUG", "0")))
-
     def _tick(label: str, t0: float) -> float:
-        if dbg:
+        if options.debug:
             print(
                 f"[pyramid z={z:02d}] {label}: {time.time() - t0:.2f}s",
                 file=sys.stderr, flush=True,
@@ -1022,11 +953,7 @@ def build_pyramid(
     # Arrow-stream count that trips this sandbox's virtualized guest kernel
     # (45-75% system time at ~32 streams; real executors run 4-8 streams).
     _par = spark.sparkContext.defaultParallelism
-    arrow_parts = (
-        int(os.environ.get("SPARK_GRAFT_ARROW_PARTITIONS", "0"))
-        or int(os.environ.get("SPARK_GRAFT_SUBTREE_PARTITIONS", "0"))
-        or (_par if _par <= 8 else max(8, _par // 4))
-    )
+    arrow_parts = _par if _par <= 8 else max(8, _par // 4)
 
     tile_cols = [f.name for f in TILE_FEATURE_SCHEMA.fields]
     feat_cols = [f.name for f in FEATURE_SCHEMA.fields]
@@ -1060,25 +987,6 @@ def build_pyramid(
         sub_future = None
         subtree_list = []
         fuse_extra = 0
-        spec_proof, spec_cancel = None, None
-        # ---- speculative head-fuse proof: at the HEAD iteration the fusion
-        # gate (no retained stops at z0) almost always passes and the proof
-        # is the level's dominant job, so launch it concurrently with the
-        # stats collect below and consume (or discard) it after the gate.
-        # Deeper levels keep the sequential gated path — speculating there
-        # would pay a full-frontier job per level that the gate usually
-        # rejects. cap from expected_keys (>= split_list) is conservative,
-        # so min() with the post-stats cap stays sound.
-        if z == z0 and target is None and expected_keys is not None:
-            cap_spec = _head_fuse_max()
-            while cap_spec and (
-                len(expected_keys) << (2 * cap_spec)
-            ) > _BROADCAST_TILE_LIMIT:
-                cap_spec -= 1
-            if cap_spec:
-                spec_proof, spec_cancel = _submit_spec_proof(
-                    frontier, z, options, cap_spec
-                )
         # ---- decision stats: pure-JVM counters over the frontier (no
         # Python crossing; the stop rule needs only counts + vertex sums) ----
         stats = frontier.groupBy("z", "x", "y").agg(
@@ -1128,15 +1036,8 @@ def build_pyramid(
                 and got.get(split_list[0]) is not None
                 and 0
                 < got[split_list[0]].num_points
-                <= _one_shot_max_points()
+                <= _ONE_SHOT_MAX_POINTS
             ):
-                if spec_proof is not None:
-                    # cancel WITHOUT blocking: the fused-path proof is dead
-                    # weight here and the kernel job only needs one slot
-                    import threading
-
-                    threading.Thread(target=spec_cancel, daemon=True).start()
-                    spec_proof = None
                 # coalesce(1) + mapInPandas: narrow read of the checkpointed
                 # frontier blocks straight into the one task — no shuffle
                 # exchange for a single-group applyInPandas
@@ -1261,24 +1162,15 @@ def build_pyramid(
                 # cap the fused fan-out so the post-pass per-tile stats
                 # collect stays within the same driver bound as the
                 # per-level decision path (4x per fused level)
-                cap_extra = _head_fuse_max()
+                cap_extra = _HEAD_FUSE_MAX
                 while cap_extra and (
                     len(split_list) << (2 * cap_extra)
                 ) > _BROADCAST_TILE_LIMIT:
                     cap_extra -= 1
                 if not any_retained and cap_extra:
-                    if spec_proof is not None:
-                        fuse_extra = min(spec_proof.result(), cap_extra)
-                        spec_proof = None
-                    else:
-                        fuse_extra = _head_fuse_depth(
-                            frontier, z, options, cap_extra
-                        )
+                    fuse_extra = _head_fuse_depth(frontier, z, options, cap_extra)
                     if fuse_extra:
                         t0 = _tick(f"head-fuse proof (+{fuse_extra} levels)", t0)
-            if spec_proof is not None:
-                spec_cancel()  # gate rejected the speculation: abort the job
-                spec_proof = None
         else:
             # ---- distributed decision path (web-scale levels) ----
             if expected is None and expected_keys is not None:
@@ -1337,13 +1229,11 @@ def build_pyramid(
             frontier.join(flag_keys, ["z", "x", "y"], "left")
             .fillna(False, ["do_split"])
         )
-        if arrow_parts:
-            flagged = flagged.coalesce(arrow_parts)
-        unified = flagged.mapInPandas(
+        unified = flagged.coalesce(arrow_parts).mapInPandas(
             _level_fn(options, fuse_extra), UNIFIED_SCHEMA
         )
         # fused snapshots carry the depth in their name: resuming under a
-        # different SPARK_GRAFT_HEAD_FUSE recomputes (correct, orphaning the
+        # different _HEAD_FUSE_MAX recomputes (correct, orphaning the
         # old snapshot) instead of silently replaying a pass whose level
         # span the driver bookkeeping no longer matches
         uname = f"unified/z={z:02d}" + (f"+{fuse_extra}" if fuse_extra else "")
@@ -1406,8 +1296,9 @@ def build_pyramid(
                             f"z={j} x={key[1]} y={key[2]} has num_points="
                             f"{npts} <= index_max_points={cap_pts}; the "
                             "lower-bound proof admitted a tile the stop "
-                            "rule would have retained. Set "
-                            "SPARK_GRAFT_HEAD_FUSE=0 and report."
+                            "rule would have retained. Setting "
+                            "plans.pyramid._HEAD_FUSE_MAX = 0 disables head "
+                            "fusion; please report."
                         )
                     extra_rows.append((j, key[1], key[2], nf, npts, False))
                 prev_nonempty = [k for k in exp_j if (k[1], k[2]) in m]

@@ -1108,9 +1108,12 @@ def kmeans_embeddings(
     centroid table collects to the driver between iterations (the Lloyd-
     on-Spark contract, same as the IVF index build). Empty clusters keep
     their previous centroid. Returns (vec_id, cluster, cos) — the final
-    assignment plus the round-6 cosine to its centroid."""
+    assignment plus the round-6 cosine to its centroid.
+
+    `dim` must equal the embedding width; it is checked against the vector
+    positions of the first mean recompute (ValueError on a mismatch)."""
     cents = _ivf_centroids(embeddings, k)
-    for _ in range(iters):
+    for it in range(iters):
         assigned = embeddings.select(
             id_col,
             vec_col,
@@ -1132,6 +1135,13 @@ def kmeans_embeddings(
             by_cluster.setdefault(int(r.cluster), {})[int(r.pos)] = (
                 float(r.s), int(r.n)
             )
+        if it == 0 and stats:
+            width = 1 + max(int(r.pos) for r in stats)
+            if width != dim:
+                raise ValueError(
+                    f"kmeans_embeddings: dim={dim} but {vec_col} vectors "
+                    f"have {width} positions"
+                )
         new_cents = []
         for rk, old in cents:
             dims = by_cluster.get(rk)
@@ -1640,11 +1650,17 @@ def sessionize_events(
     a cast through the session time zone and desync from DuckDB's
     zone-less epoch_us).
 
-    `value_col` names the column summed into total_value; pass None (or a
-    column absent from the frame — auto-detected) to omit total_value for
-    event tables that carry no value measure.
+    `value_col` names the column summed into total_value; pass None to omit
+    total_value. The default "value" is dropped silently when the frame has
+    no such column (event tables that carry no value measure); any other
+    name that is not a column raises ValueError.
     """
     if value_col is not None and value_col not in events.columns:
+        if value_col != "value":
+            raise ValueError(
+                f"sessionize_events: value_col {value_col!r} is not a column "
+                f"of the events frame ({', '.join(events.columns)})"
+            )
         value_col = None
     us = F.expr(
         f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00',"

@@ -271,14 +271,14 @@ def test_grid_children_match_parent_counts(grid_index):
 
 
 def test_grid_level_engines_equivalent(spark):
-    """The batched (anchor-partition kernel) and per-level Column engines
-    produce the same cluster structure: identical src sets and identical
-    (src -> num, parent) maps at every zoom, on a seeded synthetic corpus."""
-    import os
-
+    """The batched engine (anchor-partition kernel) and the per-level Column
+    reference (tests/grid_reference.py) produce the same cluster structure:
+    identical src sets and identical (src -> num, parent) maps at every zoom,
+    on a seeded synthetic corpus."""
     from pyspark.sql import functions as F
 
     from geojson_vt_spark.cluster.grid import build_grid_trees
+    from tests.grid_reference import build_column_trees
 
     n = 5000
     pts = spark.range(n).select(
@@ -290,25 +290,17 @@ def test_grid_level_engines_equivalent(spark):
     ).localCheckpoint(eager=True)
     opts = ClusterOptions(max_zoom=7)
 
-    def snap(mode):
-        old = os.environ.get("SPARK_GRAFT_CLUSTER_LEVEL_MODE")
-        os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"] = mode
-        try:
-            trees = build_grid_trees(pts, opts, n)
-            return {
-                z: {
-                    r["src"]: (r["num"], r["parent"])
-                    for r in trees[z].select("src", "num", "parent").collect()
-                }
-                for z in range(0, opts.max_zoom + 2)
+    def snap(build):
+        trees = build(pts, opts, n)
+        return {
+            z: {
+                r["src"]: (r["num"], r["parent"])
+                for r in trees[z].select("src", "num", "parent").collect()
             }
-        finally:
-            if old is None:
-                del os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"]
-            else:
-                os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"] = old
+            for z in range(0, opts.max_zoom + 2)
+        }
 
-    a, b = snap("batched"), snap("column")
+    a, b = snap(build_grid_trees), snap(build_column_trees)
     for z in a:
         assert a[z] == b[z], f"zoom {z}: engines disagree"
 
@@ -316,11 +308,10 @@ def test_grid_level_engines_equivalent(spark):
 def test_grid_level_engines_equivalent_offset_zooms(spark):
     """Same equivalence with min_zoom > 0 and a level count that is not a
     multiple of the batch factor (partial final batch)."""
-    import os
-
     from pyspark.sql import functions as F
 
     from geojson_vt_spark.cluster.grid import build_grid_trees
+    from tests.grid_reference import build_column_trees
 
     n = 3000
     pts = spark.range(n).select(
@@ -332,25 +323,17 @@ def test_grid_level_engines_equivalent_offset_zooms(spark):
     ).localCheckpoint(eager=True)
     opts = ClusterOptions(min_zoom=2, max_zoom=6, min_points=4)
 
-    def snap(mode):
-        old = os.environ.get("SPARK_GRAFT_CLUSTER_LEVEL_MODE")
-        os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"] = mode
-        try:
-            trees = build_grid_trees(pts, opts, n)
-            return {
-                z: {
-                    r["src"]: (r["num"], r["parent"])
-                    for r in trees[z].select("src", "num", "parent").collect()
-                }
-                for z in sorted(trees)
+    def snap(build):
+        trees = build(pts, opts, n)
+        return {
+            z: {
+                r["src"]: (r["num"], r["parent"])
+                for r in trees[z].select("src", "num", "parent").collect()
             }
-        finally:
-            if old is None:
-                del os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"]
-            else:
-                os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"] = old
+            for z in sorted(trees)
+        }
 
-    a, b = snap("batched"), snap("column")
+    a, b = snap(build_grid_trees), snap(build_column_trees)
     assert sorted(a) == sorted(b)
     for z in a:
         assert a[z] == b[z], f"zoom {z}: engines disagree"
@@ -408,11 +391,10 @@ def test_grid_engines_handle_world_copy_coords(spark):
     """Antimeridian wrap copies put x outside [0,1] (x in [-1-b, 2+b]).
     The packed-cell math is offset-signed; both engines must agree and
     conserve counts for negative and >1 coordinates."""
-    import os
-
     from pyspark.sql import functions as F
 
     from geojson_vt_spark.cluster.grid import build_grid_trees
+    from tests.grid_reference import build_column_trees
 
     n = 900
     pts = spark.range(n).select(
@@ -430,25 +412,17 @@ def test_grid_engines_handle_world_copy_coords(spark):
     ).localCheckpoint(eager=True)
     opts = ClusterOptions(max_zoom=5)
 
-    def snap(mode):
-        old = os.environ.get("SPARK_GRAFT_CLUSTER_LEVEL_MODE")
-        os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"] = mode
-        try:
-            trees = build_grid_trees(pts, opts, n)
-            return {
-                z: {
-                    r["src"]: (r["num"], r["parent"])
-                    for r in trees[z].select("src", "num", "parent").collect()
-                }
-                for z in (0, 2, 5)
+    def snap(build):
+        trees = build(pts, opts, n)
+        return {
+            z: {
+                r["src"]: (r["num"], r["parent"])
+                for r in trees[z].select("src", "num", "parent").collect()
             }
-        finally:
-            if old is None:
-                del os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"]
-            else:
-                os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"] = old
+            for z in (0, 2, 5)
+        }
 
-    a, b = snap("batched"), snap("column")
+    a, b = snap(build_grid_trees), snap(build_column_trees)
     for z in a:
         assert a[z] == b[z], f"zoom {z}: engines disagree on world copies"
         assert sum(num for num, _ in a[z].values()) == n
@@ -462,12 +436,11 @@ def test_grid_dense_city_skew_balanced_and_equivalent(spark):
     coarse z_floor whose single hot cell held most rows. Gates: (a) the
     hottest batch-1 anchor holds a bounded share of the corpus while the old
     coarse anchoring provably concentrates it, (b) engines still agree."""
-    import os
-
     import numpy as np
     from pyspark.sql import functions as F
 
     from geojson_vt_spark.cluster.grid import batch_plan, build_grid_trees
+    from tests.grid_reference import build_column_trees
 
     n = 6000
     # 80% inside a 0.01-wide box at (0.30, 0.30); 20% uniform world
@@ -511,25 +484,17 @@ def test_grid_dense_city_skew_balanced_and_equivalent(spark):
     )
     assert hottest_share(z_floor) > 0.7
 
-    def snap(mode):
-        old = os.environ.get("SPARK_GRAFT_CLUSTER_LEVEL_MODE")
-        os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"] = mode
-        try:
-            trees = build_grid_trees(pts, opts, n)
-            return {
-                z: {
-                    r["src"]: (r["num"], r["parent"])
-                    for r in trees[z].select("src", "num", "parent").collect()
-                }
-                for z in (0, 3, 7, 10)
+    def snap(build):
+        trees = build(pts, opts, n)
+        return {
+            z: {
+                r["src"]: (r["num"], r["parent"])
+                for r in trees[z].select("src", "num", "parent").collect()
             }
-        finally:
-            if old is None:
-                del os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"]
-            else:
-                os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"] = old
+            for z in (0, 3, 7, 10)
+        }
 
-    a, b = snap("batched"), snap("column")
+    a, b = snap(build_grid_trees), snap(build_column_trees)
     for z in a:
         assert a[z] == b[z], f"zoom {z}: engines disagree on dense-city corpus"
         assert sum(num for num, _ in a[z].values()) == n
@@ -641,11 +606,7 @@ def test_leaves_deep_offset_matches_reference_order(default_index):
 def test_batch_plan_two_tier_shapes():
     """Pure-plan gates for the two-tier batch plan: a 4-level raw-point head
     (the only skew-sensitive batch), 8-level tail batches over collapsed
-    frontiers, each batch contiguous descending, covering every level once;
-    SPARK_GRAFT_CLUSTER_LEVEL_BATCH forces uniform chunks (the round-2
-    escape hatch stays one knob), _TAIL overrides tail depth alone."""
-    import os
-
+    frontiers, each batch contiguous descending, covering every level once."""
     from geojson_vt_spark.cluster.grid import batch_plan
     from geojson_vt_spark.config import ClusterOptions
 
@@ -664,21 +625,3 @@ def test_batch_plan_two_tier_shapes():
         [12, 11, 10, 9, 8, 7, 6, 5],
         [4, 3, 2, 1, 0],
     ]
-
-    old = {
-        k: os.environ.get(k)
-        for k in ("SPARK_GRAFT_CLUSTER_LEVEL_BATCH", "SPARK_GRAFT_CLUSTER_LEVEL_BATCH_TAIL")
-    }
-    try:
-        os.environ["SPARK_GRAFT_CLUSTER_LEVEL_BATCH"] = "3"
-        plan = batch_plan(ClusterOptions(max_zoom=8), 32)
-        assert [len(b) for b in plan] == [3, 3, 3], plan  # uniform chunks
-        os.environ["SPARK_GRAFT_CLUSTER_LEVEL_BATCH_TAIL"] = "6"
-        plan = batch_plan(ClusterOptions(max_zoom=8), 32)
-        assert [len(b) for b in plan] == [3, 6], plan
-    finally:
-        for k, v in old.items():
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v

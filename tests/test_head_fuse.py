@@ -4,11 +4,10 @@ Arrow crossing, the output must be IDENTICAL to the per-level path — same
 registry rows, same tile rows — and the fusion must actually engage (a
 vacuous test would pass with the proof never firing)."""
 
-import os
-
 import pytest
 
 import bench
+import geojson_vt_spark.plans.pyramid as pyr
 from geojson_vt_spark.config import Options
 from geojson_vt_spark.plans.pyramid import build_pyramid
 
@@ -22,40 +21,28 @@ def rects(spark):
     return feats, options
 
 
-def _run(feats, options, fuse):
+def _run(monkeypatch, feats, options, fuse):
     # head fusion is the machinery under test: force the per-level loop
     # (one-shot mode would otherwise swallow these small corpora whole)
-    old_os = os.environ.get("SPARK_GRAFT_ONE_SHOT_MAX_POINTS")
-    os.environ["SPARK_GRAFT_ONE_SHOT_MAX_POINTS"] = "0"
-    old = os.environ.get("SPARK_GRAFT_HEAD_FUSE")
-    os.environ["SPARK_GRAFT_HEAD_FUSE"] = str(fuse)
-    try:
-        store = build_pyramid(feats, options)
-        reg = sorted(tuple(r) for r in store.registry_df().collect())
-        tiles = sorted(
-            (
-                r.z, r.x, r.y, tuple(r.okey), r.tf_type, r.tf_id,
-                r.tf_tags, r.tf_geom, r.npoints, r.nsimplified,
-            )
-            for r in store.tiles_df().collect()
+    monkeypatch.setattr(pyr, "_ONE_SHOT_MAX_POINTS", 0)
+    monkeypatch.setattr(pyr, "_HEAD_FUSE_MAX", fuse)
+    store = build_pyramid(feats, options)
+    reg = sorted(tuple(r) for r in store.registry_df().collect())
+    tiles = sorted(
+        (
+            r.z, r.x, r.y, tuple(r.okey), r.tf_type, r.tf_id,
+            r.tf_tags, r.tf_geom, r.npoints, r.nsimplified,
         )
-        return reg, tiles, store.head_fused
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_HEAD_FUSE", None)
-        else:
-            os.environ["SPARK_GRAFT_HEAD_FUSE"] = old
-        if old_os is None:
-            os.environ.pop("SPARK_GRAFT_ONE_SHOT_MAX_POINTS", None)
-        else:
-            os.environ["SPARK_GRAFT_ONE_SHOT_MAX_POINTS"] = old_os
+        for r in store.tiles_df().collect()
+    )
+    return reg, tiles, store.head_fused
 
 
-def test_fused_equals_unfused_and_engages(rects):
+def test_fused_equals_unfused_and_engages(rects, monkeypatch):
     feats, options = rects
-    reg0, tiles0, hf0 = _run(feats, options, 0)
-    reg3, tiles3, hf3 = _run(feats, options, 3)
-    assert hf0 == []  # knob really disables
+    reg0, tiles0, hf0 = _run(monkeypatch, feats, options, 0)
+    reg3, tiles3, hf3 = _run(monkeypatch, feats, options, 3)
+    assert hf0 == []  # _HEAD_FUSE_MAX = 0 really disables
     assert hf3 and hf3[0][1] >= 1, hf3  # proof fired on this corpus
     assert reg0 == reg3
     assert tiles0 == tiles3
@@ -79,13 +66,13 @@ def test_sparse_corpus_never_fuses(spark):
     assert eng.store.head_fused == []
 
 
-def test_fusion_respects_index_max_zoom(rects):
+def test_fusion_respects_index_max_zoom(rects, monkeypatch):
     feats, _ = rects
     # zcap=2: levels 1.. are within one of the stop zoom — fusion must not
     # force-split a level where the zoom stop rule could fire
     options = Options(max_zoom=8, index_max_zoom=2, index_max_points=64)
-    reg0, tiles0, _hf0 = _run(feats, options, 0)
-    reg3, tiles3, hf3 = _run(feats, options, 3)
+    reg0, tiles0, _hf0 = _run(monkeypatch, feats, options, 0)
+    reg3, tiles3, hf3 = _run(monkeypatch, feats, options, 3)
     for z, extra in hf3:
         assert z + extra < 2, hf3
     assert reg0 == reg3 and tiles0 == tiles3
@@ -96,7 +83,7 @@ def test_fusion_resume_is_deterministic(rects, tmp_path, monkeypatch):
     decisions and reuse the per-pass snapshots (names include only the
     pass's start level, so determinism of the proof is what keeps resume
     aligned)."""
-    monkeypatch.setenv("SPARK_GRAFT_ONE_SHOT_MAX_POINTS", "0")
+    monkeypatch.setattr(pyr, "_ONE_SHOT_MAX_POINTS", 0)
     feats, options = rects
     wd = str(tmp_path / "wd")
     s1 = build_pyramid(feats, options, workdir=wd, resume=True)

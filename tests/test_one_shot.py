@@ -1,5 +1,5 @@
 """One-shot small-corpus pyramid mode (plans/pyramid.py): when the single
-z0 root splits and its vertex total fits SPARK_GRAFT_ONE_SHOT_MAX_POINTS,
+z0 root splits and its vertex total fits _ONE_SHOT_MAX_POINTS,
 the whole pyramid runs as ONE applyInPandas subtree group
 (_subtree_fn(emit_root=True)) — zero per-level crossings. The mode must be
 row-identical to the per-level loop across all three outputs (registry,
@@ -11,6 +11,7 @@ import os
 import pytest
 
 import bench
+import geojson_vt_spark.plans.pyramid as pyr
 from geojson_vt_spark.config import Options
 from geojson_vt_spark.plans.pyramid import build_pyramid
 
@@ -40,25 +41,18 @@ def _collect(store):
     return reg, tiles, src
 
 
-def _run(feats, options, cap, **kw):
-    old = os.environ.get("SPARK_GRAFT_ONE_SHOT_MAX_POINTS")
-    os.environ["SPARK_GRAFT_ONE_SHOT_MAX_POINTS"] = str(cap)
-    try:
-        return build_pyramid(feats, options, **kw)
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_ONE_SHOT_MAX_POINTS", None)
-        else:
-            os.environ["SPARK_GRAFT_ONE_SHOT_MAX_POINTS"] = old
+def _run(monkeypatch, feats, options, cap, **kw):
+    monkeypatch.setattr(pyr, "_ONE_SHOT_MAX_POINTS", cap)
+    return build_pyramid(feats, options, **kw)
 
 
-def test_one_shot_equals_loop_full_rows(rects):
+def test_one_shot_equals_loop_full_rows(rects, monkeypatch):
     """Registry, tile, and retained-source row sets are IDENTICAL between
     the one-shot kernel and the per-level loop (head fusion + subtree
     routing included) — the strongest engine check after golden parity."""
     feats, options = rects
-    s_loop = _run(feats, options, 0)
-    s_os = _run(feats, options, 200_000)
+    s_loop = _run(monkeypatch, feats, options, 0)
+    s_os = _run(monkeypatch, feats, options, 200_000)
     assert not s_loop.one_shot
     assert s_os.one_shot
     loop_out = _collect(s_loop)
@@ -69,63 +63,73 @@ def test_one_shot_equals_loop_full_rows(rects):
     assert len(loop_out[1]) > 1000  # non-vacuous corpus
 
 
-def test_one_shot_stands_down_above_cap(rects):
+def test_one_shot_never_runs_head_fuse_proof(rects, monkeypatch):
+    """A one-shot build finishes the whole pyramid in the subtree kernel, so
+    the head-fusion proof job (a full-frontier vertex scan) must never run."""
+    feats, options = rects
+    calls = []
+    real = pyr._head_fuse_depth
+
+    def recording(*args, **kw):
+        calls.append(args[1])
+        return real(*args, **kw)
+
+    monkeypatch.setattr(pyr, "_head_fuse_depth", recording)
+    s = _run(monkeypatch, feats, options, 200_000)
+    assert s.one_shot
+    assert calls == []
+
+
+def test_one_shot_stands_down_above_cap(rects, monkeypatch):
     """A corpus whose root exceeds the cap must take the distributed loop —
     the one task's work is bounded by construction."""
     feats, options = rects
-    s = _run(feats, options, 10)
+    s = _run(monkeypatch, feats, options, 10)
     assert not s.one_shot
 
 
-def test_one_shot_stands_down_when_root_stops(spark):
+def test_one_shot_stands_down_when_root_stops(spark, monkeypatch):
     """A root the stop rule retains never enters one-shot mode (the level
     loop finishes it in a single crossing anyway)."""
     options = Options(max_zoom=14, index_max_zoom=5, index_max_points=100_000)
     feats = bench.synth_rect_features(spark, 50, options).localCheckpoint(
         eager=True
     )
-    s = _run(feats, options, 200_000)
+    s = _run(monkeypatch, feats, options, 200_000)
     assert not s.one_shot
     assert s.registry_df().count() == 1  # just the stopped root
 
 
-def test_one_shot_resume_reuses_snapshot(rects, tmp_path):
+def test_one_shot_resume_reuses_snapshot(rects, tmp_path, monkeypatch):
     """Killed-and-resubmitted one-shot build reuses the oneshot/z=00
     snapshot and returns identical rows."""
     feats, options = rects
     wd = str(tmp_path / "wd")
-    s1 = _run(feats, options, 200_000, workdir=wd, resume=True)
+    s1 = _run(monkeypatch, feats, options, 200_000, workdir=wd, resume=True)
     assert s1.one_shot
     reg1 = sorted(tuple(r) for r in s1.registry_df().collect())
     assert os.path.isdir(os.path.join(wd, "oneshot"))
-    s2 = _run(feats, options, 200_000, workdir=wd, resume=True)
+    s2 = _run(monkeypatch, feats, options, 200_000, workdir=wd, resume=True)
     assert s2.one_shot
     reg2 = sorted(tuple(r) for r in s2.registry_df().collect())
     assert reg1 == reg2
 
 
-def test_one_shot_drill_down_serves_from_retained_sources(spark):
+def test_one_shot_drill_down_serves_from_retained_sources(spark, monkeypatch):
     """getTile below the indexed zoom must drill down correctly from a
     one-shot first pass (sources retained by the kernel's stop rule)."""
     from geojson_vt_spark.operators.engine import GeoJSONVTSpark
 
     from .conftest import load_fixture
 
-    old = os.environ.get("SPARK_GRAFT_ONE_SHOT_MAX_POINTS")
-    os.environ["SPARK_GRAFT_ONE_SHOT_MAX_POINTS"] = "200000"
-    try:
-        eng = GeoJSONVTSpark(
-            spark,
-            data=load_fixture("us-states.json"),
-            options=Options(index_max_zoom=4, index_max_points=64),
-        )
-        t = eng.get_tile(9, 148, 192)  # below indexed depth: drill-down path
-        assert t is not None and len(t) > 0
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_ONE_SHOT_MAX_POINTS", None)
-        else:
-            os.environ["SPARK_GRAFT_ONE_SHOT_MAX_POINTS"] = old
+    monkeypatch.setattr(pyr, "_ONE_SHOT_MAX_POINTS", 200_000)
+    eng = GeoJSONVTSpark(
+        spark,
+        data=load_fixture("us-states.json"),
+        options=Options(index_max_zoom=4, index_max_points=64),
+    )
+    t = eng.get_tile(9, 148, 192)  # below indexed depth: drill-down path
+    assert t is not None and len(t) > 0
 
 
 def test_tile_counters_oracle_matches_duckdb(spark):
@@ -225,7 +229,7 @@ def _random_geojson_corpus(seed, n):
     return {"type": "FeatureCollection", "features": feats}
 
 
-def test_one_shot_equals_loop_random_mixed_geometry(spark):
+def test_one_shot_equals_loop_random_mixed_geometry(spark, monkeypatch):
     """Randomized corpora of mixed points/lines/polygons (dateline
     included): the one-shot kernel and the per-level loop must stay
     row-identical across registry, tiles, and sources — the rect-corpus
@@ -255,7 +259,7 @@ def test_one_shot_equals_loop_random_mixed_geometry(spark):
         feats_df = spark.createDataFrame(pdf, schema=FEATURE_SCHEMA).localCheckpoint(
             eager=True
         )
-        s_loop = _run(feats_df, options, 0)
-        s_os = _run(feats_df, options, 200_000)
+        s_loop = _run(monkeypatch, feats_df, options, 0)
+        s_os = _run(monkeypatch, feats_df, options, 200_000)
         assert not s_loop.one_shot and s_os.one_shot, seed
         assert _collect(s_loop) == _collect(s_os), seed

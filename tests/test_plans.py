@@ -217,7 +217,6 @@ def test_grid_cluster_batched_materialization_count(spark):
     barrier count is ceil(levels / batch) + 0 eager point materializations,
     not one per zoom. Gate it structurally by counting _checkpoint calls."""
     import math
-    import os
 
     from pyspark.sql import functions as F
 
@@ -241,17 +240,11 @@ def test_grid_cluster_batched_materialization_count(spark):
         calls.append(name)
         return orig(df, workdir, name)
 
-    old_mode = os.environ.get("SPARK_GRAFT_CLUSTER_LEVEL_MODE")
-    os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"] = "batched"
     grid._checkpoint = counting
     try:
         grid.build_grid_trees(pts, opts, n)
     finally:
         grid._checkpoint = orig
-        if old_mode is None:
-            del os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"]
-        else:
-            os.environ["SPARK_GRAFT_CLUSTER_LEVEL_MODE"] = old_mode
 
     from geojson_vt_spark.cluster.grid import batch_plan
 

@@ -5,6 +5,7 @@ import json
 import os
 import shutil
 
+import geojson_vt_spark.plans.pyramid as pyr
 from geojson_vt_spark.config import Options
 from geojson_vt_spark.operators.engine import GeoJSONVTSpark
 
@@ -49,7 +50,7 @@ def test_pyramid_resume_mid_build(spark, tmp_path, monkeypatch):
     """Kill-at-level-k simulation: delete the deepest finished levels'
     _SUCCESS markers; resume recomputes only those. Pins the per-level
     loop (one-shot mode has its own resume test in test_one_shot.py)."""
-    monkeypatch.setenv("SPARK_GRAFT_ONE_SHOT_MAX_POINTS", "0")
+    monkeypatch.setattr(pyr, "_ONE_SHOT_MAX_POINTS", 0)
     options = Options(index_max_zoom=7, index_max_points=200)
     data = load_fixture("us-states.json")
     golden = load_fixture("us-states-tiles.json")

@@ -932,6 +932,25 @@ def test_sessionize_value_col_generic(spark):
     assert row.total_value == 7.0
 
 
+def test_sessionize_rejects_unknown_value_col(spark):
+    """A misspelled explicit value_col raises instead of silently dropping
+    total_value; only the default "value" may be absent."""
+    import datetime as dt
+
+    import pytest
+
+    from geojson_vt_spark.training import sessionize_events
+
+    named = spark.createDataFrame(
+        [(1, 1, dt.datetime(2024, 1, 1), 3.5)],
+        "event_id long, user_id long, ts timestamp_ntz, amount double",
+    )
+    with pytest.raises(ValueError, match="amout"):
+        sessionize_events(named, value_col="amout")
+    [row] = sessionize_events(named).collect()
+    assert "total_value" not in row.asDict()
+
+
 def test_sessionize_single_exchange(spark):
     """Scale gate: the lag window, running sum, and per-session aggregate
     must share ONE hash exchange on the entity (exchange reuse), with no
@@ -1071,6 +1090,22 @@ def test_kmeans_empty_clusters_keep_centroids(spark):
     for r in got:
         by_group.setdefault(r.vec_id < 3, set()).add(r.cluster)
     assert all(len(v) == 1 for v in by_group.values())
+
+
+def test_kmeans_rejects_wrong_dim(spark):
+    """`dim` is checked against the embedding width in both directions: a
+    smaller value would truncate the centroids, a larger one would index
+    past the observed positions."""
+    import pytest
+
+    from geojson_vt_spark.training import kmeans_embeddings
+
+    rows = [(i, [float(i % 2), 1.0, 0.0, float(i)]) for i in range(6)]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    for dim in (3, 5):
+        with pytest.raises(ValueError, match=f"dim={dim}"):
+            kmeans_embeddings(e, k=2, iters=1, dim=dim)
+    assert len(kmeans_embeddings(e, k=2, iters=1, dim=4).collect()) == 6
 
 
 # ---------------------------------------------------------------------------
