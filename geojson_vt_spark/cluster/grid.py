@@ -17,7 +17,8 @@ Properties vs the reference semantics (documented, invariant-tested):
 
 Execution shape (`_batched_levels`): cells nest across zooms, so
 after ONE repartition by the batch's coarsest-zoom anchor cell a numpy
-kernel finishes every zoom of the batch partition-locally; the two-tier
+kernel (one mapInArrow crossing: Arrow batches in, record batches out, no
+pandas) finishes every zoom of the batch partition-locally; the two-tier
 `batch_plan` (k=4 levels for the raw-point head batch, k_tail=8 for the
 cell-collapsed tail batches, each anchored at its own coarsest zoom) gives
 1 + ceil((levels-k)/k_tail) serial barriers with per-anchor row counts
@@ -33,7 +34,10 @@ from __future__ import annotations
 
 from typing import Optional
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..config import ClusterOptions
 
@@ -49,9 +53,6 @@ _CELL_OFF = 1 << 27
 # cell-collapsed tail batches _LEVEL_BATCH_TAIL levels each
 _LEVEL_BATCH = 4
 _LEVEL_BATCH_TAIL = 8
-# Arrow records per batch into the kernel: it buffers whole partitions
-# anyway, so big batches mean fewer JVM->pandas conversions and concat pieces
-_ARROW_BATCH = 262144
 # the kernel buffers a whole anchor partition in executor memory
 _MAX_PARTITION_ROWS = 100_000_000
 
@@ -165,15 +166,19 @@ def build_grid_trees(
 
 
 _NARROW_COLS = ["x", "y", "src", "parent", "num", "props"]
-_BATCH_SCHEMA = (
-    "level int, fr boolean, x double, y double, src long, parent long, "
-    "num long, props string"
-)
+_BATCH_ARROW = pa.schema([
+    ("level", pa.int32()), ("fr", pa.bool_()), ("x", pa.float64()),
+    ("y", pa.float64()), ("src", pa.int64()), ("parent", pa.int64()),
+    ("num", pa.int64()), ("props", pa.string()),
+])
+_BATCH_SCHEMA = from_arrow_schema(_BATCH_ARROW)
 
 
 def _make_level_kernel(levels: list, o: ClusterOptions, n_points: int):
-    """Partition-local kernel running `levels` (descending zooms) of grid
-    clustering over one anchor-partition's rows.
+    """Partition-local mapInArrow kernel running `levels` (descending zooms)
+    of grid clustering over one anchor-partition's rows: the partition's
+    Arrow batches are read as one table's numpy columns, and each finalized
+    level plus the closing frontier is yielded as a RecordBatch.
 
     Safe because cells nest: floor(q/(2^m*r)) == floor(floor(q/r)/2^m), so
     every cell of every level in the batch lies inside one anchor cell at
@@ -196,28 +201,32 @@ def _make_level_kernel(levels: list, o: ClusterOptions, n_points: int):
     radius, extent, min_points = o.radius, o.extent, o.min_points
     map_fn, reduce_fn = o.map_fn, o.reduce_fn
 
-    def kern(it):
-        import numpy as np
-        import pandas as pd
+    def rows(level, fr, x, y, src, parent, num, props):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(np.full(x.size, level, np.int32)),
+             pa.array(np.full(x.size, fr)), pa.array(x), pa.array(y),
+             pa.array(src), pa.array(parent), pa.array(num),
+             pa.array(props, pa.string())],
+            schema=_BATCH_ARROW,
+        )
 
-        parts = [p for p in it]
-        if not parts:
+    def kern(it):
+        batches = list(it)
+        if not batches:
             return
-        pdf = pd.concat(parts, ignore_index=True)
-        if len(pdf) > _MAX_PARTITION_ROWS:
+        t = pa.Table.from_batches(batches)
+        if t.num_rows > _MAX_PARTITION_ROWS:
             raise RuntimeError(
-                f"grid-cluster anchor partition holds {len(pdf)} rows "
+                f"grid-cluster anchor partition holds {t.num_rows} rows "
                 f"(> {_MAX_PARTITION_ROWS}); the batched kernel buffers whole "
                 "partitions and hash repartitioning cannot split one hot "
                 "anchor cell; cluster this corpus with method='exact'"
             )
-        x = pdf["x"].to_numpy(np.float64)
-        y = pdf["y"].to_numpy(np.float64)
-        src = pdf["src"].to_numpy(np.int64)
-        parent = pdf["parent"].to_numpy(np.int64)
-        num = pdf["num"].to_numpy(np.int64)
-        props = pdf["props"].to_numpy(dtype=object)
-        props[pd.isna(props)] = None
+        x, y, src, parent, num = (
+            t.column(c).to_numpy() for c in ("x", "y", "src", "parent", "num")
+        )
+        # object column, None for nulls (the fold's input)
+        props = t.column("props").to_numpy()
 
         def _mapped(k):
             import json
@@ -245,18 +254,10 @@ def _make_level_kernel(levels: list, o: ClusterOptions, n_points: int):
             row_merged = merged_cell[inv]
             cid_cell = uniq * np.int64(32) + np.int64(z + 1 + n_points)
             # finalized level z+1: parent filled in for rows that merge
-            # (yielded piecewise — no whole-output pd.concat copy)
-            yield pd.DataFrame(
-                {
-                    "level": np.full(x.size, z + 1, np.int32),
-                    "fr": np.zeros(x.size, bool),
-                    "x": x,
-                    "y": y,
-                    "src": src,
-                    "parent": np.where(row_merged, cid_cell[inv], parent),
-                    "num": num,
-                    "props": props,
-                }
+            # (yielded piecewise — no whole-output concat copy)
+            yield rows(
+                z + 1, False, x, y, src,
+                np.where(row_merged, cid_cell[inv], parent), num, props,
             )
             # next frontier: pass-through rows + new weighted-centroid clusters
             m = merged_cell
@@ -289,18 +290,7 @@ def _make_level_kernel(levels: list, o: ClusterOptions, n_points: int):
             )
             num = np.concatenate([num[keep], cell_num[m]])
             props = np.concatenate([props[keep], cprops])
-        yield pd.DataFrame(
-            {
-                "level": np.full(x.size, levels[-1], np.int32),
-                "fr": np.ones(x.size, bool),
-                "x": x,
-                "y": y,
-                "src": src,
-                "parent": parent,
-                "num": num,
-                "props": props,
-            }
-        )
+        yield rows(levels[-1], True, x, y, src, parent, num, props)
 
     return kern
 
@@ -322,18 +312,10 @@ def _batched_levels(
     still span many anchors there), and every later batch's per-anchor row
     count is capped at ~4^k_tail * min_points by the previous batch's
     frontier collapse (see batch_plan)."""
-    spark = frontier.sparkSession
-    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old_batch = spark.conf.get(batch_key, None)
-    spark.conf.set(batch_key, str(_ARROW_BATCH))
-    try:
-        parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        _run_batches(frontier, trees, o, n_points, workdir, batch_plan(o, parts))
-    finally:
-        if old_batch is None:
-            spark.conf.unset(batch_key)
-        else:
-            spark.conf.set(batch_key, old_batch)
+    parts = int(
+        frontier.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    )
+    _run_batches(frontier, trees, o, n_points, workdir, batch_plan(o, parts))
 
 
 def batch_plan(o: ClusterOptions, shuffle_partitions: int) -> list:
@@ -392,7 +374,7 @@ def _run_batches(
         out = (
             anchored.repartition("acx", "acy")
             .drop("acx", "acy")
-            .mapInPandas(_make_level_kernel(batch, o, n_points), _BATCH_SCHEMA)
+            .mapInArrow(_make_level_kernel(batch, o, n_points), _BATCH_SCHEMA)
         )
         out = _checkpoint(out, workdir, f"ctree/zb={z_hi:02d}-{z_lo:02d}")
         for z in batch:

@@ -21,7 +21,6 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 
 from .feature import (
     LINESTRING,
@@ -159,37 +158,46 @@ def concat_flats(fls: list) -> Flat:
 
 
 # --------------------------------------------------------------------------
-# pdf <-> Flat adapters (FEATURE_SCHEMA column cells are numpy arrays)
+# Arrow <-> Flat adapters (FEATURE_SCHEMA list columns read and written as
+# offsets + values buffers)
 # --------------------------------------------------------------------------
 
-def flat_from_cells(coords, rlens, rpoly, rsize, rstart, rend,
-                    ftype, minx, miny, maxx, maxy) -> Flat:
-    """Build a Flat from per-feature column cells (sequences of ndarrays)."""
-    F = len(ftype)
-    if F == 0:
+def list_parts(arr):
+    """(offsets, values) numpy views of a list column, rebased so
+    offsets[0] == 0 even when the array is a slice of a larger one."""
+    off = arr.offsets.to_numpy()
+    vals = arr.values.to_numpy()[off[0]:off[-1]]
+    return (off - off[0]).astype(_I8, copy=False), vals
+
+
+def flat_from_arrow(batch) -> Flat:
+    """FEATURE_SCHEMA pa.RecordBatch -> Flat, straight from the list
+    columns' buffers: no per-row Python objects."""
+    if batch.num_rows == 0:
         return empty_flat()
-    c = np.concatenate([np.asarray(a, np.float64) for a in coords]) if F else None
-    xs = np.ascontiguousarray(c[0::3])
-    ys = np.ascontiguousarray(c[1::3])
-    ms = np.ascontiguousarray(c[2::3])
-    rl = [np.asarray(a, _I8) for a in rlens]
-    rlc = np.concatenate(rl)
-    roff = np.empty(len(rlc) + 1, _I8)
+
+    def col(name, dtype):
+        return np.asarray(batch.column(name).to_numpy(), dtype)
+
+    def vals(name, dtype):
+        return list_parts(batch.column(name))[1].astype(dtype, copy=False)
+
+    c = vals("coords", np.float64)
+    foff, rl = list_parts(batch.column("rlens"))
+    roff = np.empty(len(rl) + 1, _I8)
     roff[0] = 0
-    np.cumsum(rlc, out=roff[1:])
-    foff = np.empty(F + 1, _I8)
-    foff[0] = 0
-    np.cumsum(np.fromiter((len(a) for a in rl), _I8, F), out=foff[1:])
+    np.cumsum(rl, out=roff[1:])
     return Flat(
-        xs, ys, ms, roff,
-        np.concatenate([np.asarray(a, np.int32) for a in rpoly]),
-        np.concatenate([np.asarray(a, np.float64) for a in rsize]),
-        np.concatenate([np.asarray(a, np.float64) for a in rstart]),
-        np.concatenate([np.asarray(a, np.float64) for a in rend]),
+        np.ascontiguousarray(c[0::3]),
+        np.ascontiguousarray(c[1::3]),
+        np.ascontiguousarray(c[2::3]),
+        roff,
+        vals("rpoly", np.int32), vals("rsize", np.float64),
+        vals("rstart", np.float64), vals("rend", np.float64),
         foff,
-        np.asarray(ftype, np.int32),
-        np.asarray(minx, np.float64), np.asarray(miny, np.float64),
-        np.asarray(maxx, np.float64), np.asarray(maxy, np.float64),
+        col("ftype", np.int32),
+        col("minx", np.float64), col("miny", np.float64),
+        col("maxx", np.float64), col("maxy", np.float64),
     )
 
 
@@ -206,12 +214,9 @@ def _interleave(fl: Flat):
 
 def flat_to_cells_arrow(fl: Flat) -> dict:
     """flat_to_cells for Spark-bound batches: the six list columns come back
-    as pyarrow-backed pandas arrays built with ListArray.from_arrays over
-    the Flat's existing contiguous buffers — zero per-feature Python view
-    objects (np.split per column was the hottest residual of the fused
-    level kernel once JSON assembly moved to Arrow), and Spark's Arrow
-    serializer consumes the pa.ListArray without re-boxing. Only for frames
-    yielded to Spark; Python consumers use flat_to_cells."""
+    as pa.ListArrays built with ListArray.from_arrays over the Flat's
+    existing contiguous buffers — zero per-feature Python view objects.
+    Only for batches handed to Spark; Python consumers use flat_to_cells."""
     import pyarrow as pa
 
     # int32 ListArray offsets bound BOTH cast quantities: coord offsets
@@ -226,9 +231,7 @@ def flat_to_cells_arrow(fl: Flat) -> dict:
     inter, fvo = _interleave(fl)
 
     def la(vals, offs):
-        return pd.arrays.ArrowExtensionArray(
-            pa.ListArray.from_arrays(pa.array(offs.astype(np.int32)), pa.array(vals))
-        )
+        return pa.ListArray.from_arrays(pa.array(offs.astype(np.int32)), pa.array(vals))
 
     return {
         "coords": la(inter, 3 * fvo),
@@ -243,7 +246,7 @@ def flat_to_cells_arrow(fl: Flat) -> dict:
 
 
 def flat_to_cells(fl: Flat) -> dict:
-    """Inverse of flat_from_cells: per-feature cells for row materialization."""
+    """Inverse of flat_from_arrow: per-feature cells for row materialization."""
     inter, fvo = _interleave(fl)
     rsplit = fl.foff[1:-1]
     return {
@@ -796,17 +799,17 @@ def tile_geometry_json(emit: dict, z_f, x_f, y_f, extent: int) -> dict:
 # --------------------------------------------------------------------------
 
 def flat_from_features(features: list) -> Flat:
-    """Internal feature dicts (functions/feature.py) -> Flat. Test bridge."""
+    """Internal feature dicts (functions/feature.py) -> Flat. Test bridge:
+    the rows go through the same Arrow reader as the Spark kernels."""
+    import pyarrow as pa
+
     from ..model import feature_to_row
 
     rows = [feature_to_row(f, 0, 0, 0, []) for f in features]
-    return flat_from_cells(
-        [r["coords"] for r in rows], [r["rlens"] for r in rows],
-        [r["rpoly"] for r in rows], [r["rsize"] for r in rows],
-        [r["rstart"] for r in rows], [r["rend"] for r in rows],
-        [f["type"] for f in features],
-        [f["minx"] for f in features], [f["miny"] for f in features],
-        [f["maxx"] for f in features], [f["maxy"] for f in features],
+    cols = ("coords", "rlens", "rpoly", "rsize", "rstart", "rend",
+            "ftype", "minx", "miny", "maxx", "maxy")
+    return flat_from_arrow(
+        pa.RecordBatch.from_pydict({c: [r[c] for r in rows] for c in cols})
     )
 
 

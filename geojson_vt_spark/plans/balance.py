@@ -1,7 +1,7 @@
 """Explicit skew handling for keyed Arrow stages (the north rule's
 "explicit salting for hot tiles").
 
-`groupBy(key).applyInPandas` always hash-shuffles on the group key, so a
+`groupBy(key).applyInArrow` always hash-shuffles on the group key, so a
 handful of heavy groups can land in the same task by hash accident and
 serialize the stage: with G groups over P partitions the max hash load is
 ~G/P + O(sqrt(G/P log P)), and when each group is a whole subtree of the
@@ -17,7 +17,7 @@ the per-level decision stats), so instead of praying over hash placement we
    ``pmod(murmur3(gid), n_partitions)`` — the exact placement Spark's
    HashPartitioning computes — equals the group's assigned bin.
 3. The caller broadcast-joins the (key -> gid) mapping onto the rows,
-   ``repartition(n, "gid")`` (satisfies the applyInPandas distribution, so
+   ``repartition(n, "gid")`` (satisfies the applyInArrow distribution, so
    no second shuffle) and groups by gid; the kernel still reads the real
    key from the rows.
 

@@ -14,14 +14,19 @@ Spark-first design (NOT a translation of the single-threaded BFS):
     partial-aggregated groupBy over the frontier: the decision costs NO
     Python crossing;
   * tile assembly (O13+O14) and the 4-way buffered quadrant clip run FUSED
-    in one whole-batch mapInPandas kernel per level (_level_fn): a single
+    in one whole-batch mapInArrow kernel per level (_level_fn): a single
     Arrow crossing of the frontier emits both the level's tile rows and the
     next frontier. Kernels are flat-numpy over the entire batch
     (functions/flat.py) — no per-vertex or per-feature Python;
+  * every crossing is Arrow in, Arrow out: the kernels read the list
+    columns' offset/value buffers straight into a Flat (flat_from_arrow),
+    keep okey/id/tags as Arrow arrays, and build their output record
+    batches against the one UNIFIED_SCHEMA Arrow schema (_unified_batch) —
+    no pandas conversion on either side;
   * counters stay SUM aggregates over per-feature rows, so no tile ever has
     to fit in one task (a z0 tile over the full corpus stays distributed);
   * the subtree phase routes task-sized splitting tiles (vertex count under
-    _SUBTREE_MAX_POINTS) to a one-shot applyInPandas kernel that finishes
+    _SUBTREE_MAX_POINTS) to a one-shot applyInArrow kernel that finishes
     the whole sub-pyramid as an in-kernel level-BFS — distributed clipping
     while single tiles hold huge data, per-subtree parallelism afterwards;
   * Arrow-stage parallelism defaults to defaultParallelism/4 (task-cpus
@@ -44,13 +49,28 @@ from __future__ import annotations
 import json
 import sys
 import time
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import Options
+from ..functions.feature import LINESTRING
+from ..functions.flat import (
+    AXIS_X,
+    AXIS_Y,
+    assemble_flat,
+    clip_flat,
+    concat_flats,
+    flat_from_arrow,
+    flat_to_cells_arrow,
+    list_parts,
+    take,
+    tile_geometry_json,
+)
 from ..model import FEATURE_SCHEMA, TILE_FEATURE_SCHEMA
 from .balance import balanced_gid_mapping
 from ..functions.tile import GEOJSONVT_CLIP_END, GEOJSONVT_CLIP_START, js_div
@@ -65,7 +85,7 @@ from collections import namedtuple  # noqa: E402
 _StatRow = namedtuple("_StatRow", ["num_features", "num_points"])
 
 # subtree phase: once a splitting tile's vertex count fits one task, its whole
-# sub-pyramid is finished inside a single applyInPandas group (no further
+# sub-pyramid is finished inside a single applyInArrow group (no further
 # per-level jobs/shuffles for that subtree). The per-level BFS keeps running
 # only for tiles too big for a task — exactly the two-phase shape a large
 # cluster wants: distributed clipping while single tiles hold huge data,
@@ -82,7 +102,7 @@ _SUBTREE_MIN_TILES = 48
 _HEAD_FUSE_MAX = 3
 
 # Small-corpus one-shot gate: when the root tile's total vertex count is at
-# most this, the whole pyramid runs as ONE applyInPandas subtree group (zero
+# most this, the whole pyramid runs as ONE subtree-kernel call (zero
 # per-level crossings — the per-level fixed Spark overhead is 18-27x the
 # reference's wall-clock at the 10k bench point, BASELINE.md crossover
 # table). Bounded by construction: the one task does at most this many
@@ -106,52 +126,87 @@ def _stop_rule(z, x, y, num_points, options: Options, target) -> bool:
     return z == options.max_zoom or z == cz or not is_anc
 
 
-def _flat_from_pdf(pdf: pd.DataFrame):
-    """FEATURE_SCHEMA batch -> (Flat, z, x, y, okey, id, tags arrays)."""
-    from ..functions.flat import flat_from_cells
+def _read_state(batch):
+    """FEATURE_SCHEMA Arrow batch -> kernel state (Flat, z, x, y, okey, id,
+    tags): geometry as flat numpy buffers, okey/id/tags kept as Arrow
+    arrays."""
+    def ints(name):
+        return batch.column(name).to_numpy().astype(np.int64)
 
-    fl = flat_from_cells(
-        list(pdf["coords"]), list(pdf["rlens"]), list(pdf["rpoly"]),
-        list(pdf["rsize"]), list(pdf["rstart"]), list(pdf["rend"]),
-        pdf["ftype"].to_numpy(),
-        pdf["minx"].to_numpy(), pdf["miny"].to_numpy(),
-        pdf["maxx"].to_numpy(), pdf["maxy"].to_numpy(),
-    )
     return (
-        fl,
-        pdf["z"].to_numpy().astype(np.int64),
-        pdf["x"].to_numpy().astype(np.int64),
-        pdf["y"].to_numpy().astype(np.int64),
-        pdf["okey"].to_numpy(),
-        pdf["id"].to_numpy(),
-        pdf["tags"].to_numpy(),
+        flat_from_arrow(batch), ints("z"), ints("x"), ints("y"),
+        batch.column("okey"), batch.column("id"), batch.column("tags"),
     )
 
 
-def _assemble_columns(fl, z, x, y, ids, tags, options: Options):
-    """Batched assembly -> (npoints, nsimplified, tf_type/tf_id/tf_tags/
-    tf_geom object lists). One output slot per input feature."""
-    from ..functions.feature import LINESTRING
-    from ..functions.flat import assemble_flat, tile_geometry_json
+def _take_state(state, idx):
+    """Sub-state of the selected features, in the given order."""
+    fl, z, x, y, okeys, ids, tags = state
+    ia = pa.array(idx, pa.int64())
+    return (take(fl, idx), z[idx], x[idx], y[idx],
+            okeys.take(ia), ids.take(ia), tags.take(ia))
 
-    npts, nsimp, emit = assemble_flat(fl, z, options)
+
+def _concat_states(states):
+    return (
+        concat_flats([s[0] for s in states]),
+        *(np.concatenate([s[i] for s in states]) for i in (1, 2, 3)),
+        *(pa.concat_arrays([s[i] for s in states]) for i in (4, 5, 6)),
+    )
+
+
+def _span_idx(spans):
+    """Row indices of a list of (start, end) row ranges."""
+    return np.concatenate([np.arange(s, e, dtype=np.int64) for s, e in spans])
+
+
+def _unified_batch(n: int, kind: int, **cols) -> pa.RecordBatch:
+    """n UNIFIED_SCHEMA rows of one kind; absent columns are all-null."""
+    cols["kind"] = np.full(n, kind, np.int32)
+    out = []
+    for f in _UNIFIED_ARROW:
+        v = cols.get(f.name)
+        if v is None:
+            out.append(pa.nulls(n, f.type))
+        elif isinstance(v, pa.Array):
+            out.append(v if v.type == f.type else v.cast(f.type))
+        else:
+            out.append(pa.array(v, f.type))
+    return pa.RecordBatch.from_arrays(out, schema=_UNIFIED_ARROW)
+
+
+def _feature_rows(state, kind: int) -> pa.RecordBatch:
+    """FEATURE_SCHEMA rows of a state: kind=0 next-frontier children,
+    kind=2 retained sources."""
+    fl, z, x, y, okeys, ids, tags = state
+    return _unified_batch(
+        fl.n_features, kind, z=z, x=x, y=y, okey=okeys, id=ids, tags=tags,
+        **flat_to_cells_arrow(fl),
+    )
+
+
+def _tile_rows(state, options: Options):
+    """Batched assembly -> (kind=1 batch with one row per input feature,
+    npoints, nsimplified). tf_* are null where the feature simplifies
+    away; npoints/nsimplified are always set (registry counters)."""
+    fl, z, x, y, okeys, ids, tags = state
     nfe = fl.n_features
-    tf_type = [None] * nfe
-    tf_id = [None] * nfe
-    tf_tags = [None] * nfe
-    tf_geom = [None] * nfe
-    if emit is not None:
-        geoms = tile_geometry_json(
-            emit, z, x.astype(np.float64), y.astype(np.float64), options.extent
-        )
-        ttypes = emit["f_tile_type"]
-        lm = options.line_metrics
-        for i, g in geoms.items():
-            tf_geom[i] = g
-            tf_type[i] = int(ttypes[i])
-            tf_id[i] = ids[i]
-            if lm and fl.ftype[i] == LINESTRING:
-                tg = {} if tags[i] is None else json.loads(tags[i])
+    npts, nsimp, emit = assemble_flat(fl, z, options)
+    geoms = {} if emit is None else tile_geometry_json(
+        emit, z, x.astype(np.float64), y.astype(np.float64), options.extent
+    )
+    gi = np.fromiter(geoms, np.int64, len(geoms))
+    slot = np.full(nfe, -1, np.int64)  # feature -> its geometry's slot
+    slot[gi] = np.arange(len(gi))
+    dropped = slot < 0
+    own = pa.array(np.arange(nfe), pa.int64(), mask=dropped)
+    tf_tags = tags.take(own)
+    if options.line_metrics:
+        lines = gi[fl.ftype[gi] == LINESTRING]
+        if lines.size:
+            vals = tf_tags.to_pylist()
+            for i in lines:
+                tg = {} if vals[i] is None else json.loads(vals[i])
                 r0 = fl.foff[i]
                 tg[GEOJSONVT_CLIP_START] = js_div(
                     float(fl.rstart[r0]), float(fl.rsize[r0])
@@ -159,20 +214,31 @@ def _assemble_columns(fl, z, x, y, ids, tags, options: Options):
                 tg[GEOJSONVT_CLIP_END] = js_div(
                     float(fl.rend[r0]), float(fl.rsize[r0])
                 )
-                tf_tags[i] = json.dumps(tg)
-            else:
-                tf_tags[i] = tags[i]
-    return npts, nsimp, tf_type, tf_id, tf_tags, tf_geom
+                vals[i] = json.dumps(tg)
+            tf_tags = pa.array(vals, pa.string())
+    rows = _unified_batch(
+        nfe, 1, z=z, x=x, y=y, okey=okeys,
+        tf_type=pa.array(
+            np.zeros(nfe, np.int32) if emit is None else emit["f_tile_type"],
+            pa.int32(), mask=dropped,
+        ),
+        tf_id=ids.take(own),
+        tf_tags=tf_tags,
+        tf_geom=pa.array(list(geoms.values()), pa.string()).take(
+            pa.array(slot, pa.int64(), mask=dropped)
+        ),
+        npoints=npts, nsimplified=nsimp,
+        minx=fl.minx, miny=fl.miny, maxx=fl.maxx, maxy=fl.maxy,
+    )
+    return rows, npts, nsimp
 
 
-def _split_children(fl, z, x, y, okeys, ids, tags, options: Options):
+def _split_children(state, options: Options) -> list:
     """Batched 4-way buffered quadrant clip (tile-index.ts:198-219).
 
-    Returns per-quadrant child bundles [(flat, z, x, y, okey, id, tags), ...]
-    — x bands first then y, okey extended with (x-slice, y-slice)."""
-    from ..functions.clip import AXIS_X as AX, AXIS_Y as AY
-    from ..functions.flat import clip_flat
-
+    Returns per-quadrant child states — x bands first then y, okey extended
+    with (x-slice, y-slice) on its offset and value buffers."""
+    fl, z, x, y, okeys, ids, tags = state
     k1 = 0.5 * options.buffer / options.extent
     k2 = 0.5 - k1
     k3 = 0.5 + k1
@@ -185,7 +251,7 @@ def _split_children(fl, z, x, y, okeys, ids, tags, options: Options):
             sx, ex = (x - k1) / z2, (x + k3) / z2
         else:
             sx, ex = (x + k2) / z2, (x + k4) / z2
-        flx, srcx, jx = clip_flat(fl, sx, ex, AX, lm)
+        flx, srcx, jx = clip_flat(fl, sx, ex, AXIS_X, lm)
         if flx.n_features == 0:
             continue
         ysrc = y[srcx]
@@ -195,74 +261,36 @@ def _split_children(fl, z, x, y, okeys, ids, tags, options: Options):
                 sy, ey = (ysrc - k1) / z2x, (ysrc + k3) / z2x
             else:
                 sy, ey = (ysrc + k2) / z2x, (ysrc + k4) / z2x
-            fly, srcy, jy = clip_flat(flx, sy, ey, AY, lm)
+            fly, srcy, jy = clip_flat(flx, sy, ey, AXIS_Y, lm)
             if fly.n_features == 0:
                 continue
             src0 = srcx[srcy]
-            jx_out = jx[srcy]
-            # vectorized okey append: old okeys flattened once, scattered to
-            # their shifted slots (+2 per preceding row), slice suffixes set
-            # in bulk — no per-row np.concatenate
-            src_list = list(okeys[src0])
-            n_out = len(src_list)
-            lens = np.fromiter((len(a) for a in src_list), np.int64, n_out)
-            old_flat = (
-                np.concatenate(src_list).astype(np.int64, copy=False)
-                if n_out else np.empty(0, np.int64)
-            )
-            new_off = np.empty(n_out + 1, np.int64)
-            new_off[0] = 0
-            np.cumsum(lens + 2, out=new_off[1:])
+            ia = pa.array(src0, pa.int64())
+            # okey append on the buffers: old values scattered to their
+            # shifted slots (+2 per preceding row), slice suffixes in bulk
+            off, old = list_parts(okeys.take(ia))
+            n_out = len(src0)
+            new_off = off + 2 * np.arange(n_out + 1, dtype=np.int64)
             flat = np.empty(int(new_off[-1]), np.int64)
-            if old_flat.size:
-                flat[
-                    np.arange(old_flat.size, dtype=np.int64)
-                    + np.repeat(2 * np.arange(n_out, dtype=np.int64), lens)
-                ] = old_flat
-            flat[new_off[1:] - 2] = jx_out
+            flat[
+                np.arange(old.size, dtype=np.int64)
+                + np.repeat(2 * np.arange(n_out, dtype=np.int64), np.diff(off))
+            ] = old
+            flat[new_off[1:] - 2] = jx[srcy]
             flat[new_off[1:] - 1] = jy
-            cells_list = np.split(flat, new_off[1:-1])
-            okey_out = np.empty(n_out, dtype=object)
-            for i, c in enumerate(cells_list):
-                okey_out[i] = c
             out.append((
                 fly,
                 z[src0] + 1,
                 x[src0] * 2 + qx,
                 y[src0] * 2 + qy,
-                okey_out,
-                ids[src0],
-                tags[src0],
+                pa.ListArray.from_arrays(
+                    pa.array(new_off, pa.int32()), pa.array(flat),
+                    type=okeys.type,
+                ),
+                ids.take(ia),
+                tags.take(ia),
             ))
     return out
-
-
-def _child_rows_pdf(bundle) -> pd.DataFrame:
-    """One child bundle -> FEATURE_SCHEMA pandas batch (list columns
-    Arrow-backed — this frame only ever flows to the Arrow serializer)."""
-    from ..functions.flat import flat_to_cells_arrow
-
-    fly, cz, cx, cy, okey_out, ids_out, tags_out = bundle
-    cells = flat_to_cells_arrow(fly)
-    return pd.DataFrame({
-        "z": cz.astype(np.int32),
-        "x": cx.astype(np.int32),
-        "y": cy.astype(np.int32),
-        "okey": okey_out,
-        "id": ids_out,
-        "ftype": cells["ftype"],
-        "tags": tags_out,
-        "coords": cells["coords"],
-        "rlens": cells["rlens"],
-        "rpoly": cells["rpoly"],
-        "rsize": cells["rsize"],
-        "rstart": cells["rstart"],
-        "rend": cells["rend"],
-        "minx": cells["minx"],
-        "miny": cells["miny"],
-        "maxx": cells["maxx"],
-        "maxy": cells["maxy"],
-    })
 
 
 def _head_fuse_depth(frontier, z: int, options: Options, max_extra: int) -> int:
@@ -416,13 +444,14 @@ def _head_fuse_depth(frontier, z: int, options: Options, max_extra: int) -> int:
 
 
 def _level_fn(options: Options, extra_levels: int = 0):
-    """FUSED per-level kernel: one Arrow crossing does both tile assembly and
-    the 4-way split. Input: FEATURE rows + a `do_split` boolean (the driver's
-    stop-rule decision, computed JVM-side from SUM(rlens) before this kernel
-    runs). Output: UNIFIED rows — kind=1 assembled tile-feature rows for
-    EVERY input feature (tf_* null when the feature simplifies away;
-    npoints/nsimplified always set, they feed the registry aggregate), and
-    kind=0 child-feature rows for the splitting tiles (the next frontier).
+    """FUSED per-level mapInArrow kernel: one Arrow crossing does both tile
+    assembly and the 4-way split. Input: FEATURE rows + a `do_split`
+    boolean (the driver's stop-rule decision, computed JVM-side from
+    SUM(rlens) before this kernel runs). Output: UNIFIED record batches —
+    kind=1 assembled tile-feature rows for EVERY input feature (tf_* null
+    when the feature simplifies away; npoints/nsimplified always set, they
+    feed the registry aggregate), and kind=0 child-feature rows for the
+    splitting tiles (the next frontier).
 
     extra_levels > 0 is HEAD FUSION (_head_fuse_depth): the driver has
     proved that every possibly-non-empty tile at the next `extra_levels`
@@ -437,101 +466,36 @@ def _level_fn(options: Options, extra_levels: int = 0):
     Versus separate assemble + split kernels this halves the frontier's
     Arrow transfers per level — the dominant cost once the kernels are
     vectorized."""
-    ucols = [f.name for f in UNIFIED_SCHEMA.fields]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
+    def fn(batches):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            fl, z, x, y, okeys, ids, tags = _flat_from_pdf(pdf)
-            npts, nsimp, tf_type, tf_id, tf_tags, tf_geom = _assemble_columns(
-                fl, z, x, y, ids, tags, options
+            state = _read_state(batch)
+            yield _tile_rows(state, options)[0]
+            sidx = np.flatnonzero(
+                batch.column("do_split").to_numpy(zero_copy_only=False)
             )
-            nfe = fl.n_features
-            k1 = pd.DataFrame({
-                "z": pdf["z"].to_numpy(),
-                "x": pdf["x"].to_numpy(),
-                "y": pdf["y"].to_numpy(),
-                "okey": okeys,
-                "tf_type": tf_type,
-                "tf_id": tf_id,
-                "tf_tags": tf_tags,
-                "tf_geom": tf_geom,
-                "npoints": npts,
-                "nsimplified": nsimp,
-                "minx": pdf["minx"].to_numpy(),
-                "miny": pdf["miny"].to_numpy(),
-                "maxx": pdf["maxx"].to_numpy(),
-                "maxy": pdf["maxy"].to_numpy(),
-                "kind": np.ones(nfe, np.int32),
-            })
-            for c in ucols:
-                if c not in k1.columns:
-                    k1[c] = None
-            yield k1[ucols]
-
-            sidx = np.flatnonzero(pdf["do_split"].to_numpy())
             if not sidx.size:
                 continue
-            from ..functions.flat import concat_flats, take as _take
-
-            sub = _take(fl, sidx)
-            bundles = _split_children(
-                sub, z[sidx], x[sidx], y[sidx], okeys[sidx], ids[sidx],
-                tags[sidx], options,
-            )
+            bundles = _split_children(_take_state(state, sidx), options)
             for _step in range(extra_levels):
                 # head fusion: every child tile is driver-guaranteed to
                 # split — assemble this level and descend, all in-task
                 if not bundles:
                     break
-                fl2 = concat_flats([b[0] for b in bundles])
-                z2 = np.concatenate([b[1] for b in bundles]).astype(np.int64)
-                x2 = np.concatenate([b[2] for b in bundles]).astype(np.int64)
-                y2 = np.concatenate([b[3] for b in bundles]).astype(np.int64)
-                ok2 = np.concatenate([b[4] for b in bundles])
-                id2 = np.concatenate([b[5] for b in bundles])
-                tg2 = np.concatenate([b[6] for b in bundles])
-                npts2, nsimp2, tf_type2, tf_id2, tf_tags2, tf_geom2 = (
-                    _assemble_columns(fl2, z2, x2, y2, id2, tg2, options)
-                )
-                k1f = pd.DataFrame({
-                    "z": z2.astype(np.int32),
-                    "x": x2.astype(np.int32),
-                    "y": y2.astype(np.int32),
-                    "okey": ok2,
-                    "tf_type": tf_type2,
-                    "tf_id": tf_id2,
-                    "tf_tags": tf_tags2,
-                    "tf_geom": tf_geom2,
-                    "npoints": npts2,
-                    "nsimplified": nsimp2,
-                    "minx": fl2.minx,
-                    "miny": fl2.miny,
-                    "maxx": fl2.maxx,
-                    "maxy": fl2.maxy,
-                    "kind": np.ones(fl2.n_features, np.int32),
-                })
-                for c in ucols:
-                    if c not in k1f.columns:
-                        k1f[c] = None
-                yield k1f[ucols]
-                bundles = _split_children(
-                    fl2, z2, x2, y2, ok2, id2, tg2, options
-                )
+                state = _concat_states(bundles)
+                yield _tile_rows(state, options)[0]
+                bundles = _split_children(state, options)
             for bundle in bundles:
-                child = _child_rows_pdf(bundle)
-                child["kind"] = np.zeros(len(child), np.int32)
-                for c in ucols:
-                    if c not in child.columns:
-                        child[c] = None
-                yield child[ucols]
+                yield _feature_rows(bundle, 0)
 
     return fn
 
 
-# unified output of the subtree kernel: one applyInPandas pass emits tile
-# features (kind=1), retained sources (kind=2) and registry rows (kind=3)
+# unified output of the pyramid kernels: one pass emits next-frontier
+# features (kind=0), tile features (kind=1), retained sources (kind=2) and
+# registry rows (kind=3)
 def _unified_schema():
     from pyspark.sql import types as T
 
@@ -549,14 +513,15 @@ def _unified_schema():
 
 
 UNIFIED_SCHEMA = _unified_schema()
+_UNIFIED_ARROW = to_arrow_schema(UNIFIED_SCHEMA)
 
 
 def _subtree_fn(options: Options, target, emit_root: bool = False):
-    """applyInPandas kernel: all feature rows of ONE splitting tile -> the
-    tile's entire sub-pyramid (reference splitTile semantics,
-    tile-index.ts:138-228), processed as a batched BFS: each subtree level
-    assembles + 4-way-clips EVERY tile of the level at once with the
-    flat-array kernels (functions/flat.py) — no per-vertex Python.
+    """applyInArrow kernel (table in, table out): all feature rows of ONE
+    splitting tile -> the tile's entire sub-pyramid (reference splitTile
+    semantics, tile-index.ts:138-228), processed as a batched BFS: each
+    subtree level assembles + 4-way-clips EVERY tile of the level at once
+    with the flat-array kernels (functions/flat.py) — no per-vertex Python.
 
     emit_root=False (loop mode): the caller's level crossing already
     assembled the root tile and wrote its registry row, so the kernel
@@ -564,79 +529,17 @@ def _subtree_fn(options: Options, target, emit_root: bool = False):
     emit_root=True (one-shot small-corpus mode): the kernel owns the WHOLE
     pyramid — the root goes through the same generic assemble/registry/
     stop path as every deeper level, so build_pyramid can route a small
-    corpus through one applyInPandas group with zero per-level crossings."""
-    ucols = [f.name for f in UNIFIED_SCHEMA.fields]
+    corpus through one kernel call with zero per-level crossings."""
 
-    def _obj_array(seq) -> np.ndarray:
-        a = np.empty(len(seq), dtype=object)
-        for i, v in enumerate(seq):
-            a[i] = v
-        return a
-
-    def _result_pdf(parts: list) -> pd.DataFrame:
-        """Column-wise assembly of the emission batches: per column one
-        np.concatenate (object columns where any batch lacks the field) —
-        pandas' concat machinery scans every cell for NA compatibility,
-        which dominated large subtrees; this path is O(columns) + C-level
-        copies."""
-        if not parts:
-            return pd.DataFrame({c: [] for c in ucols}, columns=ucols)
-        data = {}
-        for c in ucols:
-            segs = [cols.get(c) for cols, _ in parts]
-            arrow = [
-                s for s in segs if isinstance(s, pd.arrays.ArrowExtensionArray)
-            ]
-            if arrow:
-                # kind=2 list columns arrive pyarrow-backed
-                # (flat_to_cells_arrow); splice them with null runs for the
-                # kind=1/3 rows, then materialize to an object column in ONE
-                # C call. The column cannot stay Arrow-backed: Spark's
-                # applyInPandas serializer runs a per-cell list() converter
-                # on every ArrayType output column and chokes on the pd.NA
-                # an ArrowDtype series yields for nulls (needs None), so
-                # to_numpy — nulls→None, values→np.ndarray — is the fastest
-                # encoding that survives it (no per-feature np.split loop).
-                import pyarrow as pa
-
-                t = arrow[0]._pa_array.type
-                chunks = []
-                for (cols, n), s in zip(parts, segs):
-                    if s is None:
-                        chunks.append(pa.nulls(n, type=t))
-                    elif isinstance(s, pd.arrays.ArrowExtensionArray):
-                        chunks.extend(s._pa_array.chunks)
-                    else:
-                        chunks.append(pa.array(s, type=t))
-                data[c] = pa.chunked_array(chunks, type=t).to_numpy(
-                    zero_copy_only=False
-                )
-                continue
-            obj = any(
-                s is None or (isinstance(s, np.ndarray) and s.dtype == object)
-                for s in segs
-            )
-            out = []
-            for (cols, n), s in zip(parts, segs):
-                if s is None:
-                    out.append(np.full(n, None, dtype=object))
-                elif obj and s.dtype != object:
-                    out.append(s.astype(object))
-                else:
-                    out.append(s)
-            data[c] = out[0] if len(out) == 1 else np.concatenate(out)
-        return pd.DataFrame(data, columns=ucols)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..functions.flat import concat_flats, flat_to_cells_arrow, take as _take
-
-        pdf = (
-            pdf.sort_values("okey", key=lambda s: s.map(tuple))
-            .reset_index(drop=True)
+    def fn(table: pa.Table) -> pa.Table:
+        okey = table.column("okey").to_pylist()
+        order = sorted(range(table.num_rows), key=okey.__getitem__)
+        state = _read_state(
+            table.take(pa.array(order, pa.int64())).combine_chunks()
+            .to_batches()[0]
         )
-        state = _flat_from_pdf(pdf)
         z0, x0, y0 = int(state[1][0]), int(state[2][0]), int(state[3][0])
-        frames: list = []  # (column dict, n_rows) emission batches
+        out: list = []  # emitted UNIFIED record batches
         expected: list = []
         is_root = True
         if emit_root:
@@ -648,8 +551,7 @@ def _subtree_fn(options: Options, target, emit_root: bool = False):
             is_root = False
 
         while True:
-            fl, z, x, y, okeys, ids, tags = state
-            nfe = fl.n_features
+            nfe = state[0].n_features
 
             if is_root:
                 split_ranges = [(0, nfe)]
@@ -659,52 +561,31 @@ def _subtree_fn(options: Options, target, emit_root: bool = False):
                 if nfe == 0 and not expected:
                     break
                 # ---- group this level's features by tile ----
+                pres = {}
                 if nfe:
-                    key = x * (1 << 26) + y
+                    key = state[2] * (1 << 26) + state[3]
                     perm = np.argsort(key, kind="stable")
-                    fl = _take(fl, perm)
-                    z, x, y = z[perm], x[perm], y[perm]
-                    okeys, ids, tags = okeys[perm], ids[perm], tags[perm]
-                    key = key[perm]
-                    bd = np.flatnonzero(np.diff(key)) + 1
+                    state = _take_state(state, perm)
+                    z, x, y = state[1:4]
+                    bd = np.flatnonzero(np.diff(key[perm])) + 1
                     tstart = np.concatenate(([0], bd))
                     tend = np.concatenate((bd, [nfe]))
                     pres = {
                         (int(z[s]), int(x[s]), int(y[s])): (int(s), int(e))
                         for s, e in zip(tstart, tend)
                     }
-                else:
-                    pres = {}
 
                 # ---- batched assembly + kind=1 tile-feature emission ----
-                npts, nsimp, tf_type, tf_id, tf_tags, tf_geom = (
-                    _assemble_columns(fl, z, x, y, ids, tags, options)
-                    if nfe
-                    else (np.zeros(0, np.int64), np.zeros(0, np.int64),
-                          [], [], [], [])
-                )
-                ei = [i for i, g in enumerate(tf_geom) if g is not None]
-                if ei:
-                    frames.append(({
-                        "z": z[ei], "x": x[ei], "y": y[ei],
-                        "okey": okeys[ei],
-                        "tf_type": _obj_array([tf_type[i] for i in ei]),
-                        "tf_id": _obj_array([tf_id[i] for i in ei]),
-                        "tf_tags": _obj_array([tf_tags[i] for i in ei]),
-                        "tf_geom": _obj_array([tf_geom[i] for i in ei]),
-                        "npoints": npts[ei], "nsimplified": nsimp[ei],
-                        "minx": fl.minx[ei], "miny": fl.miny[ei],
-                        "maxx": fl.maxx[ei], "maxy": fl.maxy[ei],
-                        "kind": np.full(len(ei), 1, np.int32),
-                    }, len(ei)))
+                rows, npts, nsimp = _tile_rows(state, options)
+                rows = rows.filter(pc.is_valid(rows.column("tf_geom")))
+                if rows.num_rows:
+                    out.append(rows)
 
                 # ---- per-tile stop rule + kind=3 registry (all expected
                 # children, empty ones included — tile-index.ts:223-226) ----
                 npc = np.concatenate(([0], np.cumsum(npts)))
                 nsc = np.concatenate(([0], np.cumsum(nsimp)))
-                reg = {c: [] for c in
-                       ("z", "x", "y", "num_features", "num_points",
-                        "num_simplified", "has_source")}
+                reg = []
                 split_ranges = []
                 split_keys = []
                 stop_ranges = []
@@ -718,68 +599,37 @@ def _subtree_fn(options: Options, target, emit_root: bool = False):
                         tp = int(npc[e] - npc[s])
                         ts = int(nsc[e] - nsc[s])
                     stopped = _stop_rule(kz, kx, ky, tp, options, target)
-                    reg["z"].append(kz)
-                    reg["x"].append(kx)
-                    reg["y"].append(ky)
-                    reg["num_features"].append(nf)
-                    reg["num_points"].append(tp)
-                    reg["num_simplified"].append(ts)
-                    reg["has_source"].append(bool(stopped and nf > 0))
+                    reg.append((kz, kx, ky, nf, tp, ts, stopped and nf > 0))
                     if stopped:
                         if nf:
                             stop_ranges.append(se)
                     elif nf:  # empty tiles never split (tile-index.ts:193)
                         split_ranges.append(se)
                         split_keys.append((kz, kx, ky))
-                n_reg = len(reg["z"])
-                if n_reg:
-                    frames.append(({
-                        "z": np.array(reg["z"], np.int64),
-                        "x": np.array(reg["x"], np.int64),
-                        "y": np.array(reg["y"], np.int64),
-                        "num_features": np.array(reg["num_features"], np.int64),
-                        "num_points": np.array(reg["num_points"], np.int64),
-                        "num_simplified": np.array(reg["num_simplified"], np.int64),
-                        "has_source": _obj_array(reg["has_source"]),
-                        "okey": _obj_array([[]] * n_reg),
-                        "kind": np.full(n_reg, 3, np.int32),
-                    }, n_reg))
+                if reg:
+                    c = list(zip(*reg))
+                    out.append(_unified_batch(
+                        len(reg), 3, z=c[0], x=c[1], y=c[2],
+                        num_features=c[3], num_points=c[4],
+                        num_simplified=c[5], has_source=c[6],
+                        okey=pa.ListArray.from_arrays(
+                            pa.array(np.zeros(len(reg) + 1, np.int32)),
+                            pa.array([], pa.int64()),
+                        ),
+                    ))
 
                 # ---- kind=2 retained-source rows for stopped tiles ----
                 if stop_ranges:
-                    sidx = np.concatenate(
-                        [np.arange(s, e, dtype=np.int64) for s, e in stop_ranges]
-                    )
-                    sub = _take(fl, sidx)
-                    cells = flat_to_cells_arrow(sub)
-                    frames.append(({
-                        "z": z[sidx], "x": x[sidx], "y": y[sidx],
-                        "okey": okeys[sidx],
-                        "id": ids[sidx],
-                        "ftype": cells["ftype"],
-                        "tags": tags[sidx],
-                        "coords": cells["coords"],
-                        "rlens": cells["rlens"],
-                        "rpoly": cells["rpoly"],
-                        "rsize": cells["rsize"],
-                        "rstart": cells["rstart"],
-                        "rend": cells["rend"],
-                        "minx": cells["minx"], "miny": cells["miny"],
-                        "maxx": cells["maxx"], "maxy": cells["maxy"],
-                        "kind": np.full(len(sidx), 2, np.int32),
-                    }, len(sidx)))
+                    out.append(_feature_rows(
+                        _take_state(state, _span_idx(stop_ranges)), 2
+                    ))
 
             if not split_keys:
                 break
 
             # ---- batched 4-way split of every splitting tile at once ----
-            sidx = np.concatenate(
-                [np.arange(s, e, dtype=np.int64) for s, e in split_ranges]
-            )
-            sub = _take(fl, sidx)
             bundles = _split_children(
-                sub, z[sidx], x[sidx], y[sidx], okeys[sidx], ids[sidx],
-                tags[sidx], options,
+                _take_state(state, _span_idx(split_ranges)), options
             )
             expected = [
                 (kz + 1, kx * 2 + dx, ky * 2 + dy)
@@ -787,25 +637,12 @@ def _subtree_fn(options: Options, target, emit_root: bool = False):
                 for dx in (0, 1)
                 for dy in (0, 1)
             ]
-            if bundles:
-                state = (
-                    concat_flats([b[0] for b in bundles]),
-                    np.concatenate([b[1] for b in bundles]),
-                    np.concatenate([b[2] for b in bundles]),
-                    np.concatenate([b[3] for b in bundles]),
-                    np.concatenate([b[4] for b in bundles]),
-                    np.concatenate([b[5] for b in bundles]),
-                    np.concatenate([b[6] for b in bundles]),
-                )
-            else:
-                state = (
-                    _take(fl, np.empty(0, np.int64)),
-                    np.empty(0, np.int64), np.empty(0, np.int64),
-                    np.empty(0, np.int64), np.empty(0, object),
-                    np.empty(0, object), np.empty(0, object),
-                )
+            state = (
+                _concat_states(bundles) if bundles
+                else _take_state(state, np.empty(0, np.int64))
+            )
 
-        return _result_pdf(frames)
+        return pa.Table.from_batches(out, schema=_UNIFIED_ARROW)
 
     return fn
 
@@ -824,7 +661,7 @@ class PyramidStore:
         # head-fusion audit: [(level, extra_levels_fused)] per build pass
         self.head_fused: list = []
         # one-shot audit: True when a build pass ran the whole pyramid
-        # through the single applyInPandas subtree kernel (small corpora)
+        # through the single subtree-kernel call (small corpora)
         self.one_shot: bool = False
 
     def tiles_df(self) -> DataFrame:
@@ -921,18 +758,6 @@ def build_pyramid(
     pre_got: Optional[dict] = None  # next level's stats carried from the
     # fused bookkeeping collect (one aggregate answers both; saves a job)
 
-    def _stop_rule_py(tz, tx, ty, num_points):
-        if target is None:
-            return tz == min(options.index_max_zoom, options.max_zoom) or (
-                num_points <= options.index_max_points
-            )
-        steps = cz - tz
-        is_anc = tz == cz or (
-            tx == (cx >> steps if steps > 0 else cx)
-            and ty == (cy >> steps if steps > 0 else cy)
-        )
-        return tz == options.max_zoom or tz == cz or not is_anc
-
     # reference debug option (tile-index.ts:14,166-169 timing logs): >=1
     # prints per-level phase timings on the driver
     def _tick(label: str, t0: float) -> float:
@@ -1015,7 +840,7 @@ def build_pyramid(
                 r = got.get(key)
                 nf = r.num_features if r else 0
                 npts = r.num_points if r else 0
-                stopped = _stop_rule_py(key[0], key[1], key[2], npts)
+                stopped = _stop_rule(*key, npts, options, target)
                 if (not stopped) and nf > 0:
                     split_list.append(key)
                 else:
@@ -1038,24 +863,20 @@ def build_pyramid(
                 < got[split_list[0]].num_points
                 <= _ONE_SHOT_MAX_POINTS
             ):
-                # coalesce(1) + mapInPandas: narrow read of the checkpointed
+                # coalesce(1) + mapInArrow: narrow read of the checkpointed
                 # frontier blocks straight into the one task — no shuffle
-                # exchange for a single-group applyInPandas
+                # exchange for a single-group applyInArrow
                 sub_kernel = _subtree_fn(options, None, emit_root=True)
 
-                def _one_shot_fn(batches):
-                    pdfs = [p for p in batches if len(p)]
-                    if not pdfs:
-                        return
-                    pdf = (
-                        pd.concat(pdfs, ignore_index=True)
-                        if len(pdfs) > 1
-                        else pdfs[0]
-                    )
-                    yield sub_kernel(pdf)
+                def _one_shot(batches):
+                    rows = [b for b in batches if b.num_rows]
+                    if rows:
+                        yield from sub_kernel(
+                            pa.Table.from_batches(rows)
+                        ).to_batches()
 
-                unified_os = frontier.coalesce(1).mapInPandas(
-                    _one_shot_fn, UNIFIED_SCHEMA
+                unified_os = frontier.coalesce(1).mapInArrow(
+                    _one_shot, UNIFIED_SCHEMA
                 )
                 unified_os = _checkpoint(
                     unified_os, workdir, f"oneshot/z={z0:02d}", resume
@@ -1121,7 +942,7 @@ def build_pyramid(
                         F.broadcast(map_df), ["z", "x", "y"], "inner"
                     )
                     sub_frontier = sub_frontier.repartition(sub_parts, "gid")
-                    unified_sub = sub_frontier.groupBy("gid").applyInPandas(
+                    unified_sub = sub_frontier.groupBy("gid").applyInArrow(
                         _subtree_fn(options, target), UNIFIED_SCHEMA
                     )
                     # materialize CONCURRENTLY with this level's fused pass:
@@ -1229,7 +1050,7 @@ def build_pyramid(
             frontier.join(flag_keys, ["z", "x", "y"], "left")
             .fillna(False, ["do_split"])
         )
-        unified = flagged.coalesce(arrow_parts).mapInPandas(
+        unified = flagged.coalesce(arrow_parts).mapInArrow(
             _level_fn(options, fuse_extra), UNIFIED_SCHEMA
         )
         # fused snapshots carry the depth in their name: resuming under a

@@ -29,6 +29,9 @@ counts the north rule asks the job surfaces to carry.
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 DOCS_SCHEMA = T.StructType(
@@ -148,7 +151,8 @@ def run_ingest_to_parquet(
     so a resumed job skips exactly the files whose rows are already on
     disk. Pair a FRESH checkpoint only with a fresh out_dir: batch ids
     restart at 0 under a new checkpoint and would interleave with stale
-    batch directories.
+    batch directories, so an out_dir that already holds `ingest_batch=*`
+    directories under a missing or empty checkpoint raises ValueError.
 
     Per-batch metrics land in `out_dir + "_metrics"` the same
     batch-id-overwrite way (one row per micro-batch: batch_id, docs_in,
@@ -157,6 +161,16 @@ def run_ingest_to_parquet(
     list. Read the corpus back with
     `spark.read.parquet(out_dir)` (ingest_batch becomes a partition
     column)."""
+    ckpt = checkpoint_dir or out_dir.rstrip("/") + "_ckpt"
+    if glob.glob(os.path.join(out_dir, "ingest_batch=*")) and not (
+        os.path.isdir(ckpt) and os.listdir(ckpt)
+    ):
+        raise ValueError(
+            f"{out_dir} already holds ingest_batch=* directories but the "
+            f"checkpoint {ckpt} is missing or empty: a fresh drain would "
+            "restart batch ids at 0 and mix with the old batches; pass the "
+            "original checkpoint_dir or a fresh out_dir"
+        )
     metrics: list[dict] = []
     mdir = out_dir.rstrip("/") + "_metrics"
 
@@ -182,13 +196,7 @@ def run_ingest_to_parquet(
             "lang_passed long, admitted long",
         ).write.mode("overwrite").parquet(f"{mdir}/ingest_batch={bid}")
 
-    q = _run_ingest(
-        spark,
-        stream_dir,
-        _each,
-        checkpoint_dir or out_dir.rstrip("/") + "_ckpt",
-        max_files_per_trigger,
-    )
+    q = _run_ingest(spark, stream_dir, _each, ckpt, max_files_per_trigger)
     return q, metrics
 
 

@@ -251,7 +251,7 @@ def _assert_cells_equal(arrow_cells, plain_cells, n):
     plain numpy-split twin, feature by feature."""
     for col in ("coords", "rlens", "rpoly", "rsize", "rstart", "rend"):
         a_list = [np.asarray(v, dtype=np.float64)
-                  for v in arrow_cells[col].tolist()]
+                  for v in arrow_cells[col].to_pylist()]
         p_list = [np.asarray(v, dtype=np.float64) for v in plain_cells[col]]
         assert len(a_list) == len(p_list) == n, col
         for i, (av, pv) in enumerate(zip(a_list, p_list)):
@@ -280,3 +280,26 @@ def test_cells_arrow_twin_line_metrics_and_empty():
     empty = flat_from_features([])
     ec = flat_to_cells_arrow(empty)
     assert len(ec["coords"]) == 0 and len(ec["ftype"]) == 0
+
+
+def test_flat_from_arrow_reads_sliced_batch():
+    """A sliced batch (list offsets not starting at 0) reads exactly its own
+    rows: the Arrow reader rebases every list column's offsets."""
+    import pyarrow as pa
+
+    from geojson_vt_spark.functions.flat import (
+        Flat,
+        flat_from_arrow,
+        flat_to_cells_arrow,
+        take,
+    )
+
+    data = json.load(open(os.path.join(FIX, "us-states.json")))
+    fl = flat_from_features(convert_geojson(data, Options()))
+    batch = pa.RecordBatch.from_pydict(flat_to_cells_arrow(fl))
+    got = flat_from_arrow(batch.slice(5, 10))
+    want = take(fl, np.arange(5, 15))
+    for name in Flat.__slots__:
+        g, w = getattr(got, name), getattr(want, name)
+        assert g.dtype == w.dtype, name
+        assert np.array_equal(g, w, equal_nan=True), name

@@ -701,6 +701,35 @@ def test_streaming_ingest_parquet_sink_idempotent(spark, tmp_path):
     }
 
 
+def test_streaming_ingest_parquet_sink_rejects_fresh_checkpoint(spark, tmp_path):
+    """An out_dir that already holds ingest_batch=* directories must not be
+    drained under a missing or empty checkpoint: batch ids would restart
+    at 0 and silently mix with the old batches."""
+    import os
+
+    import pytest
+
+    from geojson_vt_spark.streaming.ingest_stream import run_ingest_to_parquet
+
+    evals = spark.createDataFrame([(9000, "zz1 zz2 zz3")], ["doc_id", "text"])
+    arrivals = tmp_path / "arrivals"
+    arrivals.mkdir()
+    out = tmp_path / "admitted"
+    (out / "ingest_batch=0").mkdir(parents=True)
+
+    with pytest.raises(ValueError, match="ingest_batch"):  # default ckpt: missing
+        run_ingest_to_parquet(spark, str(arrivals), evals, str(out))
+    empty_ckpt = tmp_path / "ckpt"
+    empty_ckpt.mkdir()
+    with pytest.raises(ValueError, match="missing or empty"):
+        run_ingest_to_parquet(
+            spark, str(arrivals), evals, str(out),
+            checkpoint_dir=str(empty_ckpt),
+        )
+    assert os.listdir(empty_ckpt) == []  # failed before the stream started
+    assert not os.path.exists(str(out) + "_metrics")
+
+
 def test_decontaminate_hits_join_engines_equal(spark):
     """hits_join='shuffle' (the mass-contamination fallback) returns rows
     identical to the broadcast default."""

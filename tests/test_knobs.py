@@ -1,6 +1,8 @@
-"""Inventory of the package's environment knobs. Engines run one production
-path; tuning constants live in their modules (tests monkeypatch them). A new
-SPARK_GRAFT_* variable therefore needs a deliberate edit here."""
+"""Inventory of the package's environment knobs and engine crossings.
+Engines run one production path; tuning constants live in their modules
+(tests monkeypatch them). A new SPARK_GRAFT_* variable therefore needs a
+deliberate edit here, and so does a pandas crossing in an Arrow-native
+engine."""
 
 import pathlib
 import re
@@ -8,13 +10,22 @@ import re
 import geojson_vt_spark
 
 ALLOWED = {"TABLE_FORMAT", "CELL_SCHEME", "MEDIA_FAKE"}
+ROOT = pathlib.Path(geojson_vt_spark.__file__).parent
 
 
 def test_env_knob_inventory():
-    root = pathlib.Path(geojson_vt_spark.__file__).parent
     found = {
         m
-        for path in root.rglob("*.py")
+        for path in ROOT.rglob("*.py")
         for m in re.findall(r"SPARK_GRAFT_([A-Z_]+)", path.read_text())
     }
     assert found == ALLOWED, sorted(found ^ ALLOWED)
+
+
+def test_pyramid_and_grid_engines_have_no_pandas_crossing():
+    """The pyramid and grid-cluster kernels take and return Arrow batches;
+    a pandas crossing must not creep back into either engine."""
+    for rel in ("plans/pyramid.py", "cluster/grid.py"):
+        text = (ROOT / rel).read_text()
+        for banned in ("mapInPandas", "applyInPandas", "import pandas"):
+            assert banned not in text, f"{rel}: {banned}"

@@ -1,6 +1,6 @@
 """One-shot small-corpus pyramid mode (plans/pyramid.py): when the single
 z0 root splits and its vertex total fits _ONE_SHOT_MAX_POINTS,
-the whole pyramid runs as ONE applyInPandas subtree group
+the whole pyramid runs as ONE subtree-kernel call
 (_subtree_fn(emit_root=True)) — zero per-level crossings. The mode must be
 row-identical to the per-level loop across all three outputs (registry,
 tiles, sources), engage/stand down exactly on the gate, and resume from
@@ -144,28 +144,24 @@ def test_tile_counters_oracle_matches_duckdb(spark):
     assert r.get("hash_match"), r
 
 
-def test_one_shot_plan_no_shuffle(rects):
-    """The one-shot pass must reach the kernel through a NARROW coalesce —
-    no shuffle Exchange anywhere between the materialized frontier and the
-    single mapInPandas task."""
-    from pyspark.sql import functions as F
-
-    from geojson_vt_spark.plans.pyramid import UNIFIED_SCHEMA, _subtree_fn
-
+def test_one_shot_plan_no_shuffle(rects, monkeypatch):
+    """The one-shot pass build_pyramid runs must reach the kernel through a
+    NARROW coalesce — no shuffle Exchange anywhere between the materialized
+    frontier and the single mapInArrow task."""
     feats, options = rects
-    import pandas as pd
+    handed = {}
+    real = pyr._checkpoint
 
-    sub = _subtree_fn(options, None, emit_root=True)
+    def recording(df, workdir, name, resume):
+        handed[name] = df
+        return real(df, workdir, name, resume)
 
-    def fn(batches):
-        pdfs = [p for p in batches if len(p)]
-        if pdfs:
-            yield sub(pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0])
-
-    df = feats.coalesce(1).mapInPandas(fn, UNIFIED_SCHEMA)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(pyr, "_checkpoint", recording)
+    s = _run(monkeypatch, feats, options, 200_000)
+    assert s.one_shot
+    plan = handed["oneshot/z=00"]._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-    assert "Coalesce" in plan
+    assert "Coalesce" in plan, plan
 
 
 def test_tile_counters_replay_parameter_sweep(spark):
