@@ -145,9 +145,9 @@ class GeoJSONVTSpark:
         return anc
 
     def _ancestor_lookup_df(self, anc: list):
-        """Pruned registry lookup for an ancestor chain (<= 24 keys): one
-        isin filter over the packed tile key, no full-registry collect
-        (plan-asserted in tests/test_plans.py)."""
+        """Pruned registry lookup for an ancestor chain and its children
+        (<= 24 x 5 keys): one isin filter over the packed tile key, no
+        full-registry collect (plan-asserted in tests/test_plans.py)."""
         packed = (
             F.col("z").cast("long") * F.lit(1 << 50)
             + F.col("x").cast("long") * F.lit(1 << 25)
@@ -179,9 +179,17 @@ class GeoJSONVTSpark:
         # filter over the registry (isin on a packed key) — never a full
         # registry collect (at z14 full-earth the registry is ~10^8 rows).
         anc = self._ancestor_chain(z, x, y)
+        # the same lookup finds the chain's children the store already
+        # holds: the drill-down must not register them a second time
+        kids = [
+            (az + 1, ax * 2 + dx, ay * 2 + dy)
+            for az, ax, ay in anc
+            for dx in (0, 1)
+            for dy in (0, 1)
+        ]
         reg = {
             (r.z, r.x, r.y): r.has_source
-            for r in self._ancestor_lookup_df(anc).collect()
+            for r in self._ancestor_lookup_df(anc + kids).collect()
         }
         found = next((k for k in anc if k in reg), None)
         if found is None or not reg[found]:
@@ -199,6 +207,7 @@ class GeoJSONVTSpark:
             workdir=None,
             start=found,
             target=(z, x, y),
+            registered=frozenset(reg),
         )
         if len(self.store.tiles) > 24:
             self.store.compact()
@@ -290,7 +299,6 @@ class GeoJSONVTSpark:
             workdir=None,
             start=(0, 0, 0),
             target=(0, 0, 0),
-            register_start=True,
         )
 
     def get_data(self) -> dict:

@@ -25,10 +25,15 @@ Spark-first design (NOT a translation of the single-threaded BFS):
     no pandas conversion on either side;
   * counters stay SUM aggregates over per-feature rows, so no tile ever has
     to fit in one task (a z0 tile over the full corpus stays distributed);
-  * the subtree phase routes task-sized splitting tiles (vertex count under
-    _SUBTREE_MAX_POINTS) to a one-shot applyInArrow kernel that finishes
-    the whole sub-pyramid as an in-kernel level-BFS — distributed clipping
-    while single tiles hold huge data, per-subtree parallelism afterwards;
+  * one routing rule skips per-level passes: at every driver-mode level, a
+    splitting tile whose vertex count is at most _SUBTREE_MAX_POINTS goes to
+    the subtree kernel (_subtree_fn, one applyInArrow group per tile), which
+    finishes the tile's whole sub-pyramid, root included, as an in-kernel
+    level-BFS. The level pass sees only the rows of tiles that were not
+    routed and does not run when none remain, so a small corpus is the rule
+    applied at z0: one kernel call, zero per-level crossings. Distributed
+    clipping while single tiles hold huge data, per-subtree parallelism
+    afterwards;
   * Arrow-stage parallelism defaults to defaultParallelism/4 (task-cpus
     accounting for JVM serde + Python worker + numpy threads; see
     arrow_parts in build_pyramid);
@@ -79,35 +84,11 @@ from ..functions.tile import GEOJSONVT_CLIP_END, GEOJSONVT_CLIP_START, js_div
 # the tile list is comfortably below the driver/executor broadcast limit
 _BROADCAST_TILE_LIMIT = 200_000
 
-# carried per-tile decision stats (same fields the stats.collect Rows expose)
-from collections import namedtuple  # noqa: E402
-
-_StatRow = namedtuple("_StatRow", ["num_features", "num_points"])
-
-# subtree phase: once a splitting tile's vertex count fits one task, its whole
-# sub-pyramid is finished inside a single applyInArrow group (no further
-# per-level jobs/shuffles for that subtree). The per-level BFS keeps running
-# only for tiles too big for a task — exactly the two-phase shape a large
-# cluster wants: distributed clipping while single tiles hold huge data,
-# per-subtree parallelism as soon as fan-out provides it.
-# The cap is sized so routing waits one extra level when tiles are chunky:
-# many smaller groups hash-balance far better across the Arrow-stage
-# partitions than few large ones (64 groups over 8 partitions leaves ~2x
-# straggler skew; 256+ groups average it out).
-_SUBTREE_MAX_POINTS = 32_000
-_SUBTREE_MIN_TILES = 48
-
-# head fusion: max extra levels one Arrow crossing may force-split when the
-# JVM lower-bound proof (_head_fuse_depth) allows it. 0 disables.
-_HEAD_FUSE_MAX = 3
-
-# Small-corpus one-shot gate: when the root tile's total vertex count is at
-# most this, the whole pyramid runs as ONE subtree-kernel call (zero
-# per-level crossings — the per-level fixed Spark overhead is 18-27x the
-# reference's wall-clock at the 10k bench point, BASELINE.md crossover
-# table). Bounded by construction: the one task does at most this many
-# points; bigger corpora take the distributed level loop. 0 disables.
-_ONE_SHOT_MAX_POINTS = 200_000
+# subtree routing: a splitting tile whose vertex count fits one task's budget
+# has its whole sub-pyramid finished inside a single applyInArrow group (no
+# further per-level jobs for that subtree). The per-level loop keeps running
+# only for tiles too big for a task. 0 routes nothing (the pure level loop).
+_SUBTREE_MAX_POINTS = 200_000
 
 
 def _stop_rule(z, x, y, num_points, options: Options, target) -> bool:
@@ -293,175 +274,16 @@ def _split_children(state, options: Options) -> list:
     return out
 
 
-def _head_fuse_depth(frontier, z: int, options: Options, max_extra: int) -> int:
-    """How many consecutive levels below z may be FORCE-SPLIT in one fused
-    Arrow crossing (head fusion). Returns E: for every level j in
-    z+1..z+E, EVERY tile that can possibly be non-empty after clipping is
-    GUARANTEED to split by the stop rule, so the kernel may recurse those
-    levels in-task without consulting per-level stats — saving one
-    full-corpus Arrow round trip per fused level.
-
-    The guarantee is a JVM-side lower bound, no Python crossing: a vertex
-    of tile A's frontier copy that lies strictly inside A's own UNBUFFERED
-    core survives every clip on the path to any descendant tile whose core
-    contains it (clip windows nest and only add buffer), so the per-tile
-    count of own-core frontier vertices is a lower bound of the tile's
-    eventual num_points. The own-core filter (floor(v * 2^z) == the row's
-    own tile key) is what makes the bound sound with a plain count:
-      * buffer-strip vertices duplicated across sibling copies are counted
-        for exactly one copy — the one whose core they sit in — matching
-        the single subtree they actually descend through;
-      * vertices INSERTED by ancestor clips sit on clip-window edges,
-        outside their own copy's core, and are dropped;
-      * out-of-world vertices never satisfy the floor equality.
-    A level is safe iff every tile whose BUFFERED window intersects any
-    feature bbox (the superset of possibly-non-empty tiles) has lower bound
-    > index_max_points. One vertex-binning aggregate at the deepest
-    candidate level is reused for every coarser level via bit shifts.
-
-    Cost: ONE Spark job. All candidate levels are checked together — the
-    binned counts explode to every level's tile key by bit shift, the
-    per-level candidate sets union with a level column, and a single
-    groupBy(level).min(lower_bound) collect answers every level at once
-    (the round-3 shape ran a join + isEmpty action PER level, which made
-    the proof cost ~3 serial jobs and dominate the small-corpus build —
-    6.2 s of a 12 s pyramid at the 10k bench point).
-
-    If the bound ever proved unsound the driver would raise (guarantee
-    recheck against the exact fused stats in build_pyramid) instead of
-    producing a silently-divergent pyramid."""
-    zcap = min(options.index_max_zoom, options.max_zoom)
-    max_extra = min(int(max_extra), zcap - z - 1)
-    if max_extra <= 0:
-        return 0
-    cap = int(options.index_max_points)
-    p = options.buffer / options.extent
-    l_max = z + max_extra
-    sz = float(1 << z)
-    smax = float(1 << l_max)
-
-    # coords is stride-3 [x, y, m] (model.py FEATURE_SCHEMA) — enumerate
-    # true vertices only, skipping the DP m slots
-    pairs = F.explode(
-        F.expr(
-            "transform(sequence(0, int(size(coords)/3) - 1), "
-            "i -> struct(coords[3*i] AS vx, coords[3*i+1] AS vy))"
-        )
-    ).alias("p")
-    # size<3 rows would make sequence(0,-1) DESCEND instead of be empty
-    v = frontier.where(F.size("coords") >= 3).select("x", "y", pairs).select(
-        "x", "y", "p.vx", "p.vy"
-    )
-
-    binned = (
-        v.where(
-            (F.floor(F.col("vx") * sz) == F.col("x").cast("long"))
-            & (F.floor(F.col("vy") * sz) == F.col("y").cast("long"))
-        )
-        .select(
-            F.floor(F.col("vx") * smax).cast("long").alias("bx"),
-            F.floor(F.col("vy") * smax).cast("long").alias("by"),
-        )
-        .groupBy("bx", "by")
-        .agg(F.count(F.lit(1)).alias("lb"))
-    )
-
-    levels = list(range(z + 1, z + max_extra + 1))
-    # every level's tile-keyed lower bounds from the ONE binned aggregate
-    lb_all = (
-        binned.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            F.shiftright(F.col("bx"), l_max - j).alias("tx"),
-                            F.shiftright(F.col("by"), l_max - j).alias("ty"),
-                        )
-                        for j in levels
-                    ]
-                )
-            ).alias("s"),
-            "lb",
-        )
-        .groupBy("s.j", "s.tx", "s.ty")
-        .agg(F.sum("lb").alias("lb"))
-    )
-
-    bb = frontier.select("minx", "miny", "maxx", "maxy")
-    cand_parts = []
-    for j in levels:
-        sj = float(1 << j)
-        x0 = F.greatest(
-            F.lit(0).cast("long"),
-            F.ceil(F.col("minx") * sj - 1 - p).cast("long"),
-        )
-        x1 = F.least(
-            F.lit((1 << j) - 1).cast("long"),
-            F.floor(F.col("maxx") * sj + p).cast("long"),
-        )
-        y0 = F.greatest(
-            F.lit(0).cast("long"),
-            F.ceil(F.col("miny") * sj - 1 - p).cast("long"),
-        )
-        y1 = F.least(
-            F.lit((1 << j) - 1).cast("long"),
-            F.floor(F.col("maxy") * sj + p).cast("long"),
-        )
-        cand_parts.append(
-            bb.where((x1 >= x0) & (y1 >= y0))
-            .select(
-                F.lit(j).alias("j"),
-                F.explode(F.sequence(x0, x1)).alias("tx"),
-                y0.alias("y0"),
-                y1.alias("y1"),
-            )
-            .select(
-                "j",
-                "tx",
-                F.explode(F.sequence(F.col("y0"), F.col("y1"))).alias("ty"),
-            )
-        )
-    cand = cand_parts[0]
-    for part in cand_parts[1:]:
-        cand = cand.unionByName(part)
-    # duplicate candidate rows are harmless under the MIN — skip per-level
-    # distincts; one aggregate answers every level
-    worst = {
-        r.j: r.wlb
-        for r in cand.join(lb_all, ["j", "tx", "ty"], "left")
-        .groupBy("j")
-        .agg(F.min(F.coalesce(F.col("lb"), F.lit(0))).alias("wlb"))
-        .collect()
-    }
-    extra = 0
-    for j in levels:
-        wlb = worst.get(j)  # absent = no candidate tiles at j = nothing unsafe
-        if wlb is not None and wlb <= cap:
-            break
-        extra += 1
-    return extra
-
-
-def _level_fn(options: Options, extra_levels: int = 0):
+def _level_fn(options: Options):
     """FUSED per-level mapInArrow kernel: one Arrow crossing does both tile
-    assembly and the 4-way split. Input: FEATURE rows + a `do_split`
-    boolean (the driver's stop-rule decision, computed JVM-side from
-    SUM(rlens) before this kernel runs). Output: UNIFIED record batches —
-    kind=1 assembled tile-feature rows for EVERY input feature (tf_* null
-    when the feature simplifies away; npoints/nsimplified always set, they
-    feed the registry aggregate), and kind=0 child-feature rows for the
-    splitting tiles (the next frontier).
-
-    extra_levels > 0 is HEAD FUSION (_head_fuse_depth): the driver has
-    proved that every possibly-non-empty tile at the next `extra_levels`
-    levels must split, so the kernel recurses them in-task — assembling and
-    force-splitting each level's children without returning to the JVM —
-    and emits the frontier at z + extra_levels + 1. Per fused level this
-    saves a full-corpus Arrow round trip plus a checkpoint materialization;
-    the per-row outputs are bit-identical to the unfused path because the
-    exact same assemble/split kernels run in the exact same per-feature
-    order.
+    assembly and the 4-way split. Input: FEATURE rows of the tiles not
+    routed to the subtree kernel, plus a `do_split` boolean (the driver's
+    stop-rule decision, computed JVM-side from SUM(rlens) before this kernel
+    runs). Output: UNIFIED record batches — kind=1 assembled tile-feature
+    rows for EVERY input feature (tf_* null when the feature simplifies
+    away; npoints/nsimplified always set, they feed the registry aggregate),
+    and kind=0 child-feature rows for the splitting tiles (the next
+    frontier).
 
     Versus separate assemble + split kernels this halves the frontier's
     Arrow transfers per level — the dominant cost once the kernels are
@@ -478,16 +300,7 @@ def _level_fn(options: Options, extra_levels: int = 0):
             )
             if not sidx.size:
                 continue
-            bundles = _split_children(_take_state(state, sidx), options)
-            for _step in range(extra_levels):
-                # head fusion: every child tile is driver-guaranteed to
-                # split — assemble this level and descend, all in-task
-                if not bundles:
-                    break
-                state = _concat_states(bundles)
-                yield _tile_rows(state, options)[0]
-                bundles = _split_children(state, options)
-            for bundle in bundles:
+            for bundle in _split_children(_take_state(state, sidx), options):
                 yield _feature_rows(bundle, 0)
 
     return fn
@@ -516,20 +329,15 @@ UNIFIED_SCHEMA = _unified_schema()
 _UNIFIED_ARROW = to_arrow_schema(UNIFIED_SCHEMA)
 
 
-def _subtree_fn(options: Options, target, emit_root: bool = False):
+def _subtree_fn(options: Options, target):
     """applyInArrow kernel (table in, table out): all feature rows of ONE
-    splitting tile -> the tile's entire sub-pyramid (reference splitTile
-    semantics, tile-index.ts:138-228), processed as a batched BFS: each
-    subtree level assembles + 4-way-clips EVERY tile of the level at once
-    with the flat-array kernels (functions/flat.py) — no per-vertex Python.
-
-    emit_root=False (loop mode): the caller's level crossing already
-    assembled the root tile and wrote its registry row, so the kernel
-    splits the root silently and starts emitting at the children.
-    emit_root=True (one-shot small-corpus mode): the kernel owns the WHOLE
-    pyramid — the root goes through the same generic assemble/registry/
-    stop path as every deeper level, so build_pyramid can route a small
-    corpus through one kernel call with zero per-level crossings."""
+    routed splitting tile -> the tile's entire sub-pyramid, root included
+    (reference splitTile semantics, tile-index.ts:138-228), processed as a
+    batched BFS: each subtree level assembles + 4-way-clips EVERY tile of
+    the level at once with the flat-array kernels (functions/flat.py) — no
+    per-vertex Python. The root goes through the same assemble/registry/
+    stop path as every deeper level, so the kernel writes its registry row
+    (and retained-source rows for every stopped tile) itself."""
 
     def fn(table: pa.Table) -> pa.Table:
         okey = table.column("okey").to_pylist()
@@ -538,91 +346,74 @@ def _subtree_fn(options: Options, target, emit_root: bool = False):
             table.take(pa.array(order, pa.int64())).combine_chunks()
             .to_batches()[0]
         )
-        z0, x0, y0 = int(state[1][0]), int(state[2][0]), int(state[3][0])
+        expected = [(int(state[1][0]), int(state[2][0]), int(state[3][0]))]
         out: list = []  # emitted UNIFIED record batches
-        expected: list = []
-        is_root = True
-        if emit_root:
-            # one-shot mode: treat the root as an expected tile so the
-            # generic level code below assembles it, writes its registry
-            # row, and applies the stop rule — identical per-tile math to
-            # the per-level loop it replaces
-            expected = [(z0, x0, y0)]
-            is_root = False
 
         while True:
             nfe = state[0].n_features
 
-            if is_root:
-                split_ranges = [(0, nfe)]
-                split_keys = [(z0, x0, y0)]
-                is_root = False
-            else:
-                if nfe == 0 and not expected:
-                    break
-                # ---- group this level's features by tile ----
-                pres = {}
-                if nfe:
-                    key = state[2] * (1 << 26) + state[3]
-                    perm = np.argsort(key, kind="stable")
-                    state = _take_state(state, perm)
-                    z, x, y = state[1:4]
-                    bd = np.flatnonzero(np.diff(key[perm])) + 1
-                    tstart = np.concatenate(([0], bd))
-                    tend = np.concatenate((bd, [nfe]))
-                    pres = {
-                        (int(z[s]), int(x[s]), int(y[s])): (int(s), int(e))
-                        for s, e in zip(tstart, tend)
-                    }
+            # ---- group this level's features by tile ----
+            pres = {}
+            if nfe:
+                key = state[2] * (1 << 26) + state[3]
+                perm = np.argsort(key, kind="stable")
+                state = _take_state(state, perm)
+                z, x, y = state[1:4]
+                bd = np.flatnonzero(np.diff(key[perm])) + 1
+                tstart = np.concatenate(([0], bd))
+                tend = np.concatenate((bd, [nfe]))
+                pres = {
+                    (int(z[s]), int(x[s]), int(y[s])): (int(s), int(e))
+                    for s, e in zip(tstart, tend)
+                }
 
-                # ---- batched assembly + kind=1 tile-feature emission ----
-                rows, npts, nsimp = _tile_rows(state, options)
-                rows = rows.filter(pc.is_valid(rows.column("tf_geom")))
-                if rows.num_rows:
-                    out.append(rows)
+            # ---- batched assembly + kind=1 tile-feature emission ----
+            rows, npts, nsimp = _tile_rows(state, options)
+            rows = rows.filter(pc.is_valid(rows.column("tf_geom")))
+            if rows.num_rows:
+                out.append(rows)
 
-                # ---- per-tile stop rule + kind=3 registry (all expected
-                # children, empty ones included — tile-index.ts:223-226) ----
-                npc = np.concatenate(([0], np.cumsum(npts)))
-                nsc = np.concatenate(([0], np.cumsum(nsimp)))
-                reg = []
-                split_ranges = []
-                split_keys = []
-                stop_ranges = []
-                for kz, kx, ky in expected:
-                    se = pres.get((kz, kx, ky))
-                    if se is None:
-                        nf, tp, ts = 0, 0, 0
-                    else:
-                        s, e = se
-                        nf = e - s
-                        tp = int(npc[e] - npc[s])
-                        ts = int(nsc[e] - nsc[s])
-                    stopped = _stop_rule(kz, kx, ky, tp, options, target)
-                    reg.append((kz, kx, ky, nf, tp, ts, stopped and nf > 0))
-                    if stopped:
-                        if nf:
-                            stop_ranges.append(se)
-                    elif nf:  # empty tiles never split (tile-index.ts:193)
-                        split_ranges.append(se)
-                        split_keys.append((kz, kx, ky))
-                if reg:
-                    c = list(zip(*reg))
-                    out.append(_unified_batch(
-                        len(reg), 3, z=c[0], x=c[1], y=c[2],
-                        num_features=c[3], num_points=c[4],
-                        num_simplified=c[5], has_source=c[6],
-                        okey=pa.ListArray.from_arrays(
-                            pa.array(np.zeros(len(reg) + 1, np.int32)),
-                            pa.array([], pa.int64()),
-                        ),
-                    ))
+            # ---- per-tile stop rule + kind=3 registry (all expected
+            # children, empty ones included — tile-index.ts:223-226) ----
+            npc = np.concatenate(([0], np.cumsum(npts)))
+            nsc = np.concatenate(([0], np.cumsum(nsimp)))
+            reg = []
+            split_ranges = []
+            split_keys = []
+            stop_ranges = []
+            for kz, kx, ky in expected:
+                se = pres.get((kz, kx, ky))
+                if se is None:
+                    nf, tp, ts = 0, 0, 0
+                else:
+                    s, e = se
+                    nf = e - s
+                    tp = int(npc[e] - npc[s])
+                    ts = int(nsc[e] - nsc[s])
+                stopped = _stop_rule(kz, kx, ky, tp, options, target)
+                reg.append((kz, kx, ky, nf, tp, ts, stopped and nf > 0))
+                if stopped:
+                    if nf:
+                        stop_ranges.append(se)
+                elif nf:  # empty tiles never split (tile-index.ts:193)
+                    split_ranges.append(se)
+                    split_keys.append((kz, kx, ky))
+            c = list(zip(*reg))
+            out.append(_unified_batch(
+                len(reg), 3, z=c[0], x=c[1], y=c[2],
+                num_features=c[3], num_points=c[4],
+                num_simplified=c[5], has_source=c[6],
+                okey=pa.ListArray.from_arrays(
+                    pa.array(np.zeros(len(reg) + 1, np.int32)),
+                    pa.array([], pa.int64()),
+                ),
+            ))
 
-                # ---- kind=2 retained-source rows for stopped tiles ----
-                if stop_ranges:
-                    out.append(_feature_rows(
-                        _take_state(state, _span_idx(stop_ranges)), 2
-                    ))
+            # ---- kind=2 retained-source rows for stopped tiles ----
+            if stop_ranges:
+                out.append(_feature_rows(
+                    _take_state(state, _span_idx(stop_ranges)), 2
+                ))
 
             if not split_keys:
                 break
@@ -658,10 +449,10 @@ class PyramidStore:
         self.tiles: list[DataFrame] = []
         self.registry: list[DataFrame] = []
         self.sources: list[DataFrame] = []
-        # head-fusion audit: [(level, extra_levels_fused)] per build pass
+        # always empty: head fusion is gone; kept for readers of the field
         self.head_fused: list = []
-        # one-shot audit: True when a build pass ran the whole pyramid
-        # through the single subtree-kernel call (small corpora)
+        # one-shot audit: True when a build pass routed the z0 root, so the
+        # whole pyramid ran as a single subtree-kernel call (small corpora)
         self.one_shot: bool = False
 
     def tiles_df(self) -> DataFrame:
@@ -733,13 +524,18 @@ def build_pyramid(
     resume: bool = False,
     start: tuple = (0, 0, 0),
     target: Optional[tuple] = None,
-    register_start: bool = False,
+    registered: frozenset = frozenset(),
 ) -> PyramidStore:
     """Run the per-zoom split loop.
 
     features_df: FEATURE_SCHEMA rows already assigned to the `start` tile.
     target: (cz, cx, cy) for drill-down mode (getTile miss), else None for the
             first-pass indexing run.
+    registered: tile keys the store already holds (drill-down re-entry: the
+            start tile, and siblings an earlier drill-down registered that
+            an update left valid). The reference keeps an existing tile
+            (splitTile creates one only `if (!tile)`), so this call's rows
+            for them are dropped — level pass and subtree kernel alike.
     """
     spark = features_df.sparkSession
     if store is None:
@@ -754,9 +550,6 @@ def build_pyramid(
     expected: Optional[DataFrame] = None  # child keys owed a registry entry
     expected_keys: Optional[list] = [start]  # driver mode; None once too large
     z = z0
-    first_level = True
-    pre_got: Optional[dict] = None  # next level's stats carried from the
-    # fused bookkeeping collect (one aggregate answers both; saves a job)
 
     # reference debug option (tile-index.ts:14,166-169 timing logs): >=1
     # prints per-level phase timings on the driver
@@ -782,6 +575,7 @@ def build_pyramid(
 
     tile_cols = [f.name for f in TILE_FEATURE_SCHEMA.fields]
     feat_cols = [f.name for f in FEATURE_SCHEMA.fields]
+    reg_cols = [f.name for f in REGISTRY_SCHEMA.fields]
     # decision counter, computed JVM-side: total source vertices per feature
     # equals SUM(rlens) — identical to the assembly's npoints counter
     npts_col = F.aggregate(
@@ -807,11 +601,15 @@ def build_pyramid(
             frontier, workdir, f"frontier/z={z0:02d}", resume
         )
 
+    # frames the store held before this call
+    marks = {a: len(getattr(store, a)) for a in ("registry", "tiles", "sources")}
+
     while True:
         t0 = time.time()
         sub_future = None
-        subtree_list = []
-        fuse_extra = 0
+        routed: list = []
+        sources: Optional[DataFrame] = None
+        run_level = True
         # ---- decision stats: pure-JVM counters over the frontier (no
         # Python crossing; the stop rule needs only counts + vertex sums) ----
         stats = frontier.groupBy("z", "x", "y").agg(
@@ -821,177 +619,90 @@ def build_pyramid(
 
         driver_mode = expected_keys is not None and len(expected_keys) <= _BROADCAST_TILE_LIMIT
 
-        carried, pre_got = pre_got, None
         if driver_mode:
             # ---- driver-side decision path: the per-level tile-count is
             # bounded (<= 4 x previous splits), so the split/stop decision
             # table fits the driver; one job per level instead of four.
             # Tile DATA stays distributed; only per-tile counters come back.
-            if carried is not None:
-                got = carried
-                t0 = _tick("stats carried (fused bookkeeping agg)", t0)
-            else:
-                got = {(r.z, r.x, r.y): r for r in stats.collect()}
-                t0 = _tick("stats collect (JVM counters)", t0)
+            got = {(r.z, r.x, r.y): r for r in stats.collect()}
+            t0 = _tick("stats collect (JVM counters)", t0)
             skel_rows = []
             split_list: list = []
-            stop_list: list = []
+            stop_list: list = []  # stopped tiles that hold rows
             for key in expected_keys:
                 r = got.get(key)
                 nf = r.num_features if r else 0
                 npts = r.num_points if r else 0
                 stopped = _stop_rule(*key, npts, options, target)
-                if (not stopped) and nf > 0:
+                if not stopped and 0 < npts <= _SUBTREE_MAX_POINTS:
+                    # task-sized splitting tile: the subtree kernel owns its
+                    # whole sub-pyramid, root registry row included
+                    routed.append(key)
+                    continue
+                if not stopped and nf > 0:
                     split_list.append(key)
-                else:
+                elif nf > 0:
                     stop_list.append(key)
                 skel_rows.append(
                     (key[0], key[1], key[2], nf, npts, bool(stopped and nf > 0))
                 )
-            # ---- one-shot small-corpus mode: a single splitting root whose
-            # total vertex count fits one task's budget runs the WHOLE
-            # pyramid through the subtree kernel (emit_root=True) — no
-            # per-level crossings, no per-level checkpoints; the kernel's
-            # per-tile math is identical to the loop (equality-tested) ----
-            if (
-                z == z0
-                and target is None
-                and len(expected_keys) == 1
-                and split_list == expected_keys
-                and got.get(split_list[0]) is not None
-                and 0
-                < got[split_list[0]].num_points
-                <= _ONE_SHOT_MAX_POINTS
-            ):
-                # coalesce(1) + mapInArrow: narrow read of the checkpointed
-                # frontier blocks straight into the one task — no shuffle
-                # exchange for a single-group applyInArrow
-                sub_kernel = _subtree_fn(options, None, emit_root=True)
-
-                def _one_shot(batches):
-                    rows = [b for b in batches if b.num_rows]
-                    if rows:
-                        yield from sub_kernel(
-                            pa.Table.from_batches(rows)
-                        ).to_batches()
-
-                unified_os = frontier.coalesce(1).mapInArrow(
-                    _one_shot, UNIFIED_SCHEMA
-                )
-                unified_os = _checkpoint(
-                    unified_os, workdir, f"oneshot/z={z0:02d}", resume
-                )
-                store.tiles.append(
-                    unified_os.filter(F.col("kind") == 1).select(*tile_cols)
-                )
-                store.sources.append(
-                    unified_os.filter(F.col("kind") == 2).select(*feat_cols)
-                )
-                store.registry.append(
-                    unified_os.filter(F.col("kind") == 3).select(
-                        *[f.name for f in REGISTRY_SCHEMA.fields]
-                    )
-                )
-                store.one_shot = True
-                _tick("one-shot subtree (whole pyramid)", t0)
-                return store
-
             skel = spark.createDataFrame(
                 skel_rows,
                 "z int, x int, y int, num_features long, num_points long, has_source boolean",
             )
 
-            # ---- subtree phase: route task-sized splitting tiles to a
-            # one-shot per-subtree kernel; keep oversized tiles in the loop
-            if split_list and (
-                target is not None or len(split_list) >= _SUBTREE_MIN_TILES
-            ):
-                subtree_list = [
-                    k
-                    for k in split_list
-                    if got.get(k) is not None
-                    and got[k].num_points <= _SUBTREE_MAX_POINTS
-                ]
-                if subtree_list:
-                    sub_set = set(subtree_list)
-                    split_list = [k for k in split_list if k not in sub_set]
-                    # Explicit skew handling (the north rule's "salting for
-                    # hot tiles"): hash placement of whole-subtree groups is
-                    # a lottery — a partition that draws several heavy
-                    # subtrees serializes the level. The driver knows every
-                    # subtree's vertex count from the decision stats, so
-                    # LPT-pack them into near-equal bins and mint synthetic
-                    # group ids whose Murmur3 hash pins each bin to its own
-                    # partition (plans/balance.py). repartition on the gid
-                    # satisfies the groupBy's ClusteredDistribution, so the
-                    # balanced shuffle is the ONLY shuffle.
-                    sub_parts = max(
-                        arrow_parts, min(len(subtree_list), arrow_parts * 4)
-                    )
-                    sub_weights = [
-                        max(1, int(got[k].num_points)) for k in subtree_list
-                    ]
-                    gid_map = balanced_gid_mapping(
-                        subtree_list, sub_weights, sub_parts
-                    )
-                    map_df = spark.createDataFrame(
-                        [(k[0], k[1], k[2], gid_map[k]) for k in subtree_list],
-                        "z int, x int, y int, gid long",
-                    )
-                    sub_frontier = frontier.join(
-                        F.broadcast(map_df), ["z", "x", "y"], "inner"
-                    )
-                    sub_frontier = sub_frontier.repartition(sub_parts, "gid")
-                    unified_sub = sub_frontier.groupBy("gid").applyInArrow(
-                        _subtree_fn(options, target), UNIFIED_SCHEMA
-                    )
-                    # materialize CONCURRENTLY with this level's fused pass:
-                    # both jobs read the (already-checkpointed) frontier, and
-                    # total in-flight tasks stay capped by the task slots, so
-                    # the scheduler interleaves instead of serializing two
-                    # barriers per level
-                    sub_name = f"subtree/z={z:02d}"
-                    sub_future = _ckpt_pool().submit(
-                        _checkpoint, unified_sub, workdir, sub_name, resume
-                    )
+            # ---- one broadcast map of the level's tiles: split tiles carry
+            # do_split, routed tiles their subtree group id. Explicit skew
+            # handling (the north rule's "salting for hot tiles"): hash
+            # placement of whole-subtree groups is a lottery, so the driver
+            # LPT-packs the routed tiles by vertex count into near-equal bins
+            # and mints gids whose Murmur3 hash pins each bin to its own
+            # partition (plans/balance.py); repartition on the gid satisfies
+            # the groupBy's distribution, so it is the ONLY shuffle.
+            sub_parts = max(arrow_parts, min(len(routed), arrow_parts * 4))
+            gids = balanced_gid_mapping(
+                routed, [got[k].num_points for k in routed], sub_parts
+            )
+            flags = spark.createDataFrame(
+                [(*k, True, None) for k in split_list]
+                + [(*k, None, gids[k]) for k in routed],
+                "z int, x int, y int, do_split boolean, gid long",
+            )
+            tagged = frontier.join(F.broadcast(flags), ["z", "x", "y"], "left")
+            level_in = tagged.where(F.col("gid").isNull()).drop("gid")
+            run_level = bool(split_list or stop_list)
+            if stop_list:
+                sources = frontier.join(
+                    F.broadcast(spark.createDataFrame(stop_list, "z int, x int, y int")),
+                    ["z", "x", "y"], "leftsemi",
+                ).cache()  # lazy — materialized only if a drill-down reads it
 
-            n_split = len(split_list)
-            split_keys = spark.createDataFrame(
-                split_list or [(0, 0, 0)], ["z", "x", "y"]
-            )
-            if not split_list:
-                split_keys = split_keys.limit(0)
-            stop_keys_df = spark.createDataFrame(
-                stop_list or [(0, 0, 0)], ["z", "x", "y"]
-            )
-            if not stop_list:
-                stop_keys_df = stop_keys_df.limit(0)
-            sources = frontier.join(
-                F.broadcast(stop_keys_df), ["z", "x", "y"], "leftsemi"
-            ).cache()  # lazy — materialized only if a drill-down reads it
-            flag_keys = F.broadcast(split_keys.withColumn("do_split", F.lit(True)))
-            decision = None
-            if target is None and split_list:
-                # a stopped-with-features tile at this level makes the proof
-                # fail for free: candidates strictly under it can only draw
-                # lower-bound mass from its own rows (<= its num_points <=
-                # cap), so skip the full-corpus vertex scan entirely
-                any_retained = any(
-                    got.get(k) is not None and got[k].num_features > 0
-                    for k in stop_list
+            if len(routed) == 1:
+                # a lone group reads the checkpointed frontier through a
+                # narrow filter + coalesce(1): no exchange before its task
+                (rz, rx, ry), = routed
+                sub_in = frontier.where(
+                    (F.col("z") == rz) & (F.col("x") == rx) & (F.col("y") == ry)
+                ).withColumn("gid", F.lit(gids[routed[0]])).coalesce(1)
+            elif routed:
+                sub_in = tagged.where(F.col("gid").isNotNull()).repartition(
+                    sub_parts, "gid"
                 )
-                # cap the fused fan-out so the post-pass per-tile stats
-                # collect stays within the same driver bound as the
-                # per-level decision path (4x per fused level)
-                cap_extra = _HEAD_FUSE_MAX
-                while cap_extra and (
-                    len(split_list) << (2 * cap_extra)
-                ) > _BROADCAST_TILE_LIMIT:
-                    cap_extra -= 1
-                if not any_retained and cap_extra:
-                    fuse_extra = _head_fuse_depth(frontier, z, options, cap_extra)
-                    if fuse_extra:
-                        t0 = _tick(f"head-fuse proof (+{fuse_extra} levels)", t0)
+            if routed:
+                # materialize CONCURRENTLY with this level's pass: both jobs
+                # read the (already-checkpointed) frontier, and in-flight
+                # tasks stay capped by the task slots
+                sub_future = _ckpt_pool().submit(
+                    _checkpoint,
+                    sub_in.groupBy("gid").applyInArrow(
+                        _subtree_fn(options, target), UNIFIED_SCHEMA
+                    ),
+                    workdir, f"subtree/z={z:02d}", resume,
+                )
+                if z == z0 and target is None:
+                    store.one_shot = True
+            n_split = len(split_list)
+            decision = None
         else:
             # ---- distributed decision path (web-scale levels) ----
             if expected is None and expected_keys is not None:
@@ -1044,101 +755,43 @@ def build_pyramid(
             flag_keys = split_keys.withColumn("do_split", F.lit(True))
             if n_split < _BROADCAST_TILE_LIMIT:
                 flag_keys = F.broadcast(flag_keys)
+            level_in = frontier.join(flag_keys, ["z", "x", "y"], "left")
 
-        # ---- fused assemble+split: ONE Arrow crossing per level ----
-        flagged = (
-            frontier.join(flag_keys, ["z", "x", "y"], "left")
-            .fillna(False, ["do_split"])
-        )
-        unified = flagged.coalesce(arrow_parts).mapInArrow(
-            _level_fn(options, fuse_extra), UNIFIED_SCHEMA
-        )
-        # fused snapshots carry the depth in their name: resuming under a
-        # different _HEAD_FUSE_MAX recomputes (correct, orphaning the
-        # old snapshot) instead of silently replaying a pass whose level
-        # span the driver bookkeeping no longer matches
-        uname = f"unified/z={z:02d}" + (f"+{fuse_extra}" if fuse_extra else "")
-        unified = _checkpoint(unified, workdir, uname, resume)
-        t0 = _tick(
-            "fused assemble+split ckpt"
-            + (f" (head-fused +{fuse_extra})" if fuse_extra else ""),
-            t0,
-        )
-
-        if fuse_extra:
-            # ---- head-fusion bookkeeping: registry skeletons for the fused
-            # levels from the kernel's own kind=1 emissions (exact
-            # num_features/num_points — npoints is the same SUM(rlens) the
-            # per-level JVM stats would have computed), expected-children
-            # chains per level, and a loud recheck of the split guarantee.
-            # The SAME aggregate also groups the kind=0 frontier rows, so the
-            # NEXT level's decision stats ride this collect for free (carried
-            # via pre_got — one serial job per fused pass instead of two) ----
-            comb = (
-                unified.filter(F.col("kind").isin(0, 1))
-                .groupBy("kind", "z", "x", "y")
-                .agg(
-                    F.count(F.lit(1)).alias("nf"),
-                    F.sum(
-                        F.when(F.col("kind") == 1, F.col("npoints")).otherwise(
-                            npts_col
-                        )
-                    ).alias("npts"),
-                )
-                .collect()
+        if run_level:
+            # ---- fused assemble+split: ONE Arrow crossing per level ----
+            unified = level_in.fillna(False, ["do_split"]).coalesce(
+                arrow_parts
+            ).mapInArrow(_level_fn(options), UNIFIED_SCHEMA)
+            unified = _checkpoint(unified, workdir, f"unified/z={z:02d}", resume)
+            t0 = _tick("fused assemble+split ckpt", t0)
+            kind1 = unified.filter(F.col("kind") == 1)
+            # registry: driver/decision skeleton (num_features, num_points,
+            # has_source) + per-tile num_simplified from the assembled rows —
+            # a small lazy join, materialized only when the registry is read
+            nsimp_agg = kind1.groupBy("z", "x", "y").agg(
+                F.sum("nsimplified").alias("num_simplified")
             )
-            fus = [r for r in comb if r.kind == 1 and r.z > z]
-            pre_got = {
-                (r.z, r.x, r.y): _StatRow(int(r.nf), int(r.npts))
-                for r in comb
-                if r.kind == 0
-            }
-            bylv: dict = {}
-            for r in fus:
-                bylv.setdefault(int(r.z), {})[(int(r.x), int(r.y))] = (
-                    int(r.nf), int(r.npts),
-                )
-            cap_pts = int(options.index_max_points)
-            prev_nonempty = split_list
-            extra_rows = []
-            for j in range(z + 1, z + fuse_extra + 1):
-                exp_j = [
-                    (j, kx * 2 + dx, ky * 2 + dy)
-                    for (_kz, kx, ky) in prev_nonempty
-                    for dx in (0, 1)
-                    for dy in (0, 1)
-                ]
-                m = bylv.get(j, {})
-                for key in exp_j:
-                    nf, npts = m.get((key[1], key[2]), (0, 0))
-                    if nf and npts <= cap_pts:
-                        raise RuntimeError(
-                            "head-fusion guarantee violated: tile "
-                            f"z={j} x={key[1]} y={key[2]} has num_points="
-                            f"{npts} <= index_max_points={cap_pts}; the "
-                            "lower-bound proof admitted a tile the stop "
-                            "rule would have retained. Setting "
-                            "plans.pyramid._HEAD_FUSE_MAX = 0 disables head "
-                            "fusion; please report."
-                        )
-                    extra_rows.append((j, key[1], key[2], nf, npts, False))
-                prev_nonempty = [k for k in exp_j if (k[1], k[2]) in m]
-            skel = skel.unionByName(
-                spark.createDataFrame(
-                    extra_rows,
-                    "z int, x int, y int, num_features long, "
-                    "num_points long, has_source boolean",
-                )
+            store.registry.append(
+                skel.join(nsimp_agg, ["z", "x", "y"], "left")
+                .fillna(0, ["num_simplified"])
+                .select(*reg_cols)
             )
-            store.head_fused.append((z, fuse_extra))
-            # advance the loop past the fused levels: the next iteration's
-            # expected children derive from the DEEPEST fused level's
-            # non-empty (hence split) tiles
-            split_list = prev_nonempty
-            z += fuse_extra
+            store.tiles.append(
+                kind1.filter(F.col("tf_type").isNotNull()).select(*tile_cols)
+            )
+        elif skel_rows:
+            # only empty tiles left beside the routed ones: registry rows
+            # straight from the driver skeleton
+            store.registry.append(
+                skel.withColumn("num_simplified", F.lit(0).cast("long"))
+                .select(*reg_cols)
+            )
+        # source retained only where we stopped (tile-index.ts:174,191)
+        if sources is not None:
+            store.sources.append(sources)
         if sub_future is not None:
             unified_sub = sub_future.result()
-            t0 = _tick(f"subtree join ({len(subtree_list)} tiles)", t0)
+            t0 = _tick(f"subtree pass ({len(routed)} tiles)", t0)
             store.tiles.append(
                 unified_sub.filter(F.col("kind") == 1).select(*tile_cols)
             )
@@ -1146,40 +799,8 @@ def build_pyramid(
                 unified_sub.filter(F.col("kind") == 2).select(*feat_cols)
             )
             store.registry.append(
-                unified_sub.filter(F.col("kind") == 3).select(
-                    *[f.name for f in REGISTRY_SCHEMA.fields]
-                )
+                unified_sub.filter(F.col("kind") == 3).select(*reg_cols)
             )
-        kind1 = unified.filter(F.col("kind") == 1)
-
-        # registry: driver/decision skeleton (num_features, num_points,
-        # has_source) + per-tile num_simplified from the assembled rows —
-        # a small lazy join, materialized only when the registry is read
-        nsimp_agg = kind1.groupBy("z", "x", "y").agg(
-            F.sum("nsimplified").alias("num_simplified")
-        )
-        registry_df = (
-            skel.join(nsimp_agg, ["z", "x", "y"], "left")
-            .fillna(0, ["num_simplified"])
-            .select(*[f.name for f in REGISTRY_SCHEMA.fields])
-        )
-
-        # registry entries for this level (tiles kept forever; source retained
-        # only where we stopped — tile-index.ts:174,191)
-        store.registry.append(registry_df)
-        store.tiles.append(
-            kind1.filter(F.col("tf_type").isNotNull()).select(*tile_cols)
-        )
-        store.sources.append(sources)
-
-        if first_level and target is not None and not register_start:
-            # drill-down re-entry: the start tile itself is already registered
-            # by the first pass; drop the duplicate entry
-            start_df = spark.createDataFrame([start], ["z", "x", "y"])
-            for attr in ("registry", "tiles", "sources"):
-                lst = getattr(store, attr)
-                lst[-1] = lst[-1].join(start_df, ["z", "x", "y"], "left_anti")
-        first_level = False
 
         if n_split == 0:
             if decision is not None:
@@ -1221,4 +842,11 @@ def build_pyramid(
             decision.unpersist()
         z += 1
 
+    if registered:
+        known = F.broadcast(
+            spark.createDataFrame(sorted(registered), "z int, x int, y int")
+        )
+        for attr, i in marks.items():
+            lst = getattr(store, attr)
+            lst[i:] = [d.join(known, ["z", "x", "y"], "left_anti") for d in lst[i:]]
     return store

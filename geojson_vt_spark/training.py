@@ -1441,6 +1441,11 @@ def q_semantic_dedup_keep(spark, sf_dir):
 def _sql_semantic_dedup_keep(
     k: int = 8, iters: int = 2, dim: int = 64
 ) -> str:
+    # Oracle caveat: this replay searches pairs EXACTLY within each cluster,
+    # while semantic_dedup_keep finds candidates by banded LSH, whose recall
+    # is below 1 for pairs near the cosine threshold. The two agree only
+    # while no pair sits near the threshold — true of the planted corpus
+    # (twins at cosine ~0.987-0.991 against 0.9), not of arbitrary data.
     chain, final = _sql_kmeans_chain(k, iters, dim, table="aug")
     cos_ab = """ROUND(
          list_reduce(list_transform(list_zip(a.embedding, b.embedding),

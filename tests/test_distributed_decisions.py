@@ -22,9 +22,9 @@ def rects(spark):
 
 
 def _build(monkeypatch, feats, options, limit=None):
-    """Level-loop build (one-shot off); returns (registry, tiles, sources)
-    rows and the snapshot names the build checkpointed."""
-    monkeypatch.setattr(pyr, "_ONE_SHOT_MAX_POINTS", 0)
+    """Pure level-loop build (subtree routing off); returns (registry,
+    tiles, sources) rows and the snapshot names the build checkpointed."""
+    monkeypatch.setattr(pyr, "_SUBTREE_MAX_POINTS", 0)
     if limit is not None:
         monkeypatch.setattr(pyr, "_BROADCAST_TILE_LIMIT", limit)
     names = []
@@ -69,3 +69,24 @@ def test_distributed_decisions_equal_driver_decisions(rects, monkeypatch):
     dist_levels = [n for n in names if n.startswith("sources/")]
     assert dist_levels and "sources/z=00" not in dist_levels, names
     assert mid == base
+
+
+def test_distributed_stop_rule_boundary(rects, monkeypatch):
+    """index_max_points equal to the num_points of a tile whose ancestors
+    all hold more: the stop rule's `<=` retains exactly that tile, and the
+    distributed decision path must agree with the driver path there."""
+    feats, _ = rects
+    probe = Options(max_zoom=8, index_max_zoom=1, index_max_points=64)
+    (reg, _tiles, _src), _names = _build(monkeypatch, feats, probe)
+    root = next(r[4] for r in reg if r[:3] == (0, 0, 0))
+    cap = min(r[4] for r in reg if r[0] == 1 and r[4] > 0)
+    assert 0 < cap < root, (cap, root)
+
+    options = Options(max_zoom=8, index_max_zoom=8, index_max_points=cap)
+    base, _names = _build(monkeypatch, feats, options)
+    # the boundary tile is a retained leaf (has_source), not a split
+    assert any(r[0] == 1 and r[4] == cap and r[6] for r in base[0]), base[0]
+
+    dist, names = _build(monkeypatch, feats, options, limit=0)
+    assert "sources/z=00" in names, names
+    assert dist == base

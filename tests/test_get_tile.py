@@ -39,6 +39,40 @@ def test_get_tile_us_states_drilldown(spark):
     assert eng.get_tile(25, 200, 200) is None
 
 
+def test_drill_down_keeps_store_keys_unique(spark):
+    """Drill-down re-entry drops the rows of tiles the store already holds:
+    the start tile (the subtree kernel emits its root rows when it is
+    routed) and siblings an earlier drill-down registered that an update
+    left valid. After a drill-down, and after update_data followed by a
+    drill-down, no registry key or tile-feature row may repeat."""
+    eng = GeoJSONVTSpark(
+        spark, data=load_fixture("us-states.json"),
+        options=Options(updateable=True),
+    )
+
+    def assert_unique():
+        reg = [
+            (r.z, r.x, r.y)
+            for r in eng.store.registry_df().select("z", "x", "y").collect()
+        ]
+        assert len(reg) == len(set(reg))
+        tiles = [
+            (r.z, r.x, r.y, tuple(r.okey))
+            for r in eng.store.tiles_df().select("z", "x", "y", "okey").collect()
+        ]
+        assert len(tiles) == len(set(tiles))
+
+    assert eng.get_tile(7, 37, 48)  # below the indexed zoom: drill-down
+    assert_unique()
+    eng.update_data({"add": [{
+        "type": "Feature", "id": "added", "properties": {},
+        "geometry": {"type": "Point", "coordinates": [-74.5, 40.0]},
+    }]})
+    tile = eng.get_tile(7, 37, 48)  # its ancestors were invalidated
+    assert "added" in [f.get("id") for f in tile]
+    assert_unique()
+
+
 def test_get_tile_fractional_coords_guard(spark):
     # get-tile.test.ts:41 — negative z with fractional x/y returns null
     eng = GeoJSONVTSpark(spark, data=load_fixture("us-states.json"), options=Options())

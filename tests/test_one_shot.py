@@ -1,10 +1,11 @@
-"""One-shot small-corpus pyramid mode (plans/pyramid.py): when the single
-z0 root splits and its vertex total fits _ONE_SHOT_MAX_POINTS,
-the whole pyramid runs as ONE subtree-kernel call
-(_subtree_fn(emit_root=True)) — zero per-level crossings. The mode must be
-row-identical to the per-level loop across all three outputs (registry,
-tiles, sources), engage/stand down exactly on the gate, and resume from
-its snapshot."""
+"""Subtree routing in the pyramid (plans/pyramid.py): every splitting tile
+whose vertex count fits _SUBTREE_MAX_POINTS goes to the subtree kernel
+(_subtree_fn), which finishes its whole sub-pyramid, root included. The
+one-shot small-corpus mode is that rule applied at z0: the whole pyramid
+runs as ONE kernel call, zero per-level crossings. Routed builds must be
+row-identical to the pure level loop (cap 0) across all three outputs
+(registry, tiles, sources), engage/stand down exactly on the cap, and
+resume from their snapshots."""
 
 import os
 
@@ -42,42 +43,34 @@ def _collect(store):
 
 
 def _run(monkeypatch, feats, options, cap, **kw):
-    monkeypatch.setattr(pyr, "_ONE_SHOT_MAX_POINTS", cap)
+    monkeypatch.setattr(pyr, "_SUBTREE_MAX_POINTS", cap)
     return build_pyramid(feats, options, **kw)
 
 
-def test_one_shot_equals_loop_full_rows(rects, monkeypatch):
-    """Registry, tile, and retained-source row sets are IDENTICAL between
-    the one-shot kernel and the per-level loop (head fusion + subtree
-    routing included) — the strongest engine check after golden parity."""
+@pytest.fixture(scope="module")
+def loop(rects):
+    """The pure per-level loop (cap 0, nothing routed) over `rects`: the
+    reference build, shared by the equality tests."""
     feats, options = rects
-    s_loop = _run(monkeypatch, feats, options, 0)
+    with pytest.MonkeyPatch.context() as mp:
+        store = _run(mp, feats, options, 0)
+    return store, _collect(store)
+
+
+def test_one_shot_equals_loop_full_rows(rects, loop, monkeypatch):
+    """Registry, tile, and retained-source row sets are IDENTICAL between
+    the one-shot kernel and the pure per-level loop (cap 0, nothing routed)
+    — the strongest engine check after golden parity."""
+    feats, options = rects
+    s_loop, loop_out = loop
     s_os = _run(monkeypatch, feats, options, 200_000)
     assert not s_loop.one_shot
     assert s_os.one_shot
-    loop_out = _collect(s_loop)
     os_out = _collect(s_os)
     assert loop_out[0] == os_out[0]  # registry
     assert loop_out[1] == os_out[1]  # tiles
     assert loop_out[2] == os_out[2]  # sources
     assert len(loop_out[1]) > 1000  # non-vacuous corpus
-
-
-def test_one_shot_never_runs_head_fuse_proof(rects, monkeypatch):
-    """A one-shot build finishes the whole pyramid in the subtree kernel, so
-    the head-fusion proof job (a full-frontier vertex scan) must never run."""
-    feats, options = rects
-    calls = []
-    real = pyr._head_fuse_depth
-
-    def recording(*args, **kw):
-        calls.append(args[1])
-        return real(*args, **kw)
-
-    monkeypatch.setattr(pyr, "_head_fuse_depth", recording)
-    s = _run(monkeypatch, feats, options, 200_000)
-    assert s.one_shot
-    assert calls == []
 
 
 def test_one_shot_stands_down_above_cap(rects, monkeypatch):
@@ -101,14 +94,14 @@ def test_one_shot_stands_down_when_root_stops(spark, monkeypatch):
 
 
 def test_one_shot_resume_reuses_snapshot(rects, tmp_path, monkeypatch):
-    """Killed-and-resubmitted one-shot build reuses the oneshot/z=00
+    """Killed-and-resubmitted one-shot build reuses the subtree/z=00
     snapshot and returns identical rows."""
     feats, options = rects
     wd = str(tmp_path / "wd")
     s1 = _run(monkeypatch, feats, options, 200_000, workdir=wd, resume=True)
     assert s1.one_shot
     reg1 = sorted(tuple(r) for r in s1.registry_df().collect())
-    assert os.path.isdir(os.path.join(wd, "oneshot"))
+    assert os.path.isdir(os.path.join(wd, "subtree"))
     s2 = _run(monkeypatch, feats, options, 200_000, workdir=wd, resume=True)
     assert s2.one_shot
     reg2 = sorted(tuple(r) for r in s2.registry_df().collect())
@@ -122,7 +115,7 @@ def test_one_shot_drill_down_serves_from_retained_sources(spark, monkeypatch):
 
     from .conftest import load_fixture
 
-    monkeypatch.setattr(pyr, "_ONE_SHOT_MAX_POINTS", 200_000)
+    monkeypatch.setattr(pyr, "_SUBTREE_MAX_POINTS", 200_000)
     eng = GeoJSONVTSpark(
         spark,
         data=load_fixture("us-states.json"),
@@ -147,7 +140,7 @@ def test_tile_counters_oracle_matches_duckdb(spark):
 def test_one_shot_plan_no_shuffle(rects, monkeypatch):
     """The one-shot pass build_pyramid runs must reach the kernel through a
     NARROW coalesce — no shuffle Exchange anywhere between the materialized
-    frontier and the single mapInArrow task."""
+    frontier and the single applyInArrow task."""
     feats, options = rects
     handed = {}
     real = pyr._checkpoint
@@ -159,9 +152,33 @@ def test_one_shot_plan_no_shuffle(rects, monkeypatch):
     monkeypatch.setattr(pyr, "_checkpoint", recording)
     s = _run(monkeypatch, feats, options, 200_000)
     assert s.one_shot
-    plan = handed["oneshot/z=00"]._jdf.queryExecution().executedPlan().toString()
+    plan = handed["subtree/z=00"]._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert "Coalesce" in plan, plan
+
+
+def test_routing_below_root_equals_loop(rects, loop, monkeypatch):
+    """The benchmark build's shape: the root is over the cap, so it takes
+    the level pass, and every z1 tile fits, so all four route to the
+    subtree kernel at z1. Rows must equal the pure level loop."""
+    feats, options = rects
+    loop_out = loop[1]
+    reg = {r[:3]: r[4] for r in loop_out[0]}  # (z, x, y) -> num_points
+    z1_max = max(n for (z, _x, _y), n in reg.items() if z == 1)
+    cap = reg[(0, 0, 0)] - 1
+    assert z1_max <= cap, (z1_max, cap)
+    handed = {}
+    real = pyr._checkpoint
+
+    def recording(df, workdir, name, resume):
+        handed[name] = df
+        return real(df, workdir, name, resume)
+
+    monkeypatch.setattr(pyr, "_checkpoint", recording)
+    s_sub = _run(monkeypatch, feats, options, cap)
+    assert "subtree/z=01" in handed, sorted(handed)
+    assert not s_sub.one_shot
+    assert _collect(s_sub) == loop_out
 
 
 def test_tile_counters_replay_parameter_sweep(spark):

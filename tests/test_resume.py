@@ -49,8 +49,8 @@ def test_pyramid_resume_skips_finished_levels(spark, tmp_path):
 def test_pyramid_resume_mid_build(spark, tmp_path, monkeypatch):
     """Kill-at-level-k simulation: delete the deepest finished levels'
     _SUCCESS markers; resume recomputes only those. Pins the per-level
-    loop (one-shot mode has its own resume test in test_one_shot.py)."""
-    monkeypatch.setattr(pyr, "_ONE_SHOT_MAX_POINTS", 0)
+    loop (routed builds have their own resume test in test_one_shot.py)."""
+    monkeypatch.setattr(pyr, "_SUBTREE_MAX_POINTS", 0)
     options = Options(index_max_zoom=7, index_max_points=200)
     data = load_fixture("us-states.json")
     golden = load_fixture("us-states-tiles.json")

@@ -2,7 +2,7 @@
 
 The north rule requires skew handled explicitly, not by luck. The pyramid's
 two-phase plan does it structurally: per-level kernels are row-wise
-mapInPandas (one hot tile's rows spread over every task, so a skewed key
+mapInArrow (one hot tile's rows spread over every task, so a skewed key
 cannot overload a single worker), and a tile's whole subtree collapses into
 one task only once its vertex count fits the _SUBTREE_MAX_POINTS cap.
 These tests build the skewed corpus and assert (a) the distributed phase
@@ -71,10 +71,11 @@ def _assert_hot_chain(store):
     return reg
 
 
-def test_dense_city_distributed_phase(spark):
-    """Sparse tiles stop early (<=100 pts), so the hot chain never reaches
-    the >=48-splitting-tiles subtree trigger: all 14 levels run the
-    distributed per-level phase — the skewed key rides row-wise kernels."""
+def test_dense_city_distributed_phase(spark, monkeypatch):
+    """With subtree routing off (cap 0; the whole 30k corpus would route at
+    z0 otherwise), all 14 levels run the distributed per-level phase — the
+    skewed key rides row-wise kernels."""
+    monkeypatch.setattr(pyr, "_SUBTREE_MAX_POINTS", 0)
     options = Options(max_zoom=14, index_max_zoom=14, index_max_points=100)
     t0 = time.time()
     store = pyr.build_pyramid(_skewed_features(spark), options)
@@ -83,12 +84,12 @@ def test_dense_city_distributed_phase(spark):
     assert build_sec < 420, f"skewed build took {build_sec:.0f}s"
 
 
-def test_dense_city_subtree_phase(spark, monkeypatch):
-    """With the trigger lowered, the hot tile (24k vertices, under the
-    _SUBTREE_MAX_POINTS cap) collapses into one subtree task — the one-task
-    path must produce the identical hot chain."""
-    monkeypatch.setattr(pyr, "_SUBTREE_MIN_TILES", 1)
+def test_dense_city_subtree_phase(spark):
+    """The whole corpus (30k vertices, under the _SUBTREE_MAX_POINTS cap)
+    routes at z0, so the hot chain collapses into one subtree task — the
+    one-task path must produce the identical hot chain."""
     assert N_DENSE + N_SPARSE <= pyr._SUBTREE_MAX_POINTS
     options = Options(max_zoom=14, index_max_zoom=14, index_max_points=100)
     store = pyr.build_pyramid(_skewed_features(spark), options)
+    assert store.one_shot
     _assert_hot_chain(store)
