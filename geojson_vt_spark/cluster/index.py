@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types a
 
 from ..config import ClusterOptions
 from ..functions.projection import project_x, project_y, unproject_x, unproject_y
+from ..model import local_frame
 from .kernel import Level, cluster_pass, initial_level
 
 TREE_SCHEMA = T.StructType(
@@ -213,7 +214,7 @@ class ClusterTileIndexSpark:
                 )
                 for p in self._points
             ]
-            self._points_df = self.spark.createDataFrame(rows, POINTS_SCHEMA)
+            self._points_df = local_frame(self.spark, rows, POINTS_SCHEMA)
         return self._points_df
 
     def tree_df(self, z: int) -> Optional[DataFrame]:
@@ -240,7 +241,7 @@ class ClusterTileIndexSpark:
             )
             for i in range(len(level))
         ]
-        df = self.spark.createDataFrame(rows, TREE_SCHEMA).cache()
+        df = local_frame(self.spark, rows, TREE_SCHEMA).cache()
         self._tree_dfs[z] = df
         return df
 

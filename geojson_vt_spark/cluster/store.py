@@ -35,6 +35,7 @@ from typing import Optional
 from pyspark.sql import SparkSession, functions as F, types as T
 
 from ..config import ClusterOptions
+from ..model import local_frame
 from .index import POINTS_SCHEMA, TREE_SCHEMA, ClusterTileIndexSpark
 
 _SCALAR_OPTS = (
@@ -80,7 +81,7 @@ def write_cluster_store(index: ClusterTileIndexSpark, path: str) -> None:
             k: getattr(index.options, k) for k in _SCALAR_OPTS
         },
     }
-    spark.createDataFrame([(json.dumps(meta),)], "meta string").coalesce(
+    local_frame(spark, [(json.dumps(meta),)], "meta string").coalesce(
         1
     ).write.mode("overwrite").json(f"{path}/meta")
 

@@ -525,10 +525,16 @@ def _sharded_binned(
     back. `offset + local_prefix` reconstructs the exact global per-source
     prefix sum for ANY contiguous sharding, so bins are identical to the
     single-window engine regardless of where the sampled range boundaries
-    land (equality-tested in tests/test_hygiene.py)."""
-    sharded = base.repartitionByRange(
-        n_shards, F.col(part_col).asc(), F.col(id_col).asc()
-    ).withColumn("shard", F.spark_partition_id())
+    land (equality-tested in tests/test_hygiene.py) — as long as both levels
+    read the SAME sharding. Two evaluations of the range exchange sample
+    their bounds independently, so `sharded` is cached: both levels scan one
+    materialization even when Spark does not reuse the exchange
+    (spark.sql.exchange.reuse=false)."""
+    sharded = (
+        base.repartitionByRange(n_shards, F.col(part_col).asc(), F.col(id_col).asc())
+        .withColumn("shard", F.spark_partition_id())
+        .cache()
+    )
     wl = (
         Window.partitionBy("shard", part_col)
         .orderBy(id_col)

@@ -18,7 +18,9 @@ import json
 from typing import Any, Iterable, Optional
 
 import numpy as np
-from pyspark.sql import types as T
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .functions.feature import make_feature, make_ring
 
@@ -74,6 +76,28 @@ REGISTRY_SCHEMA = T.StructType(
         T.StructField("has_source", T.BooleanType(), False),
     ]
 )
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: T.StructType | str
+) -> DataFrame:
+    """A driver-built frame as a JVM-local relation.
+
+    `rows` are tuples in schema order or dicts (list columns may hold numpy
+    arrays); `schema` is a StructType or a DDL string. The rows become one
+    Arrow table that Spark reads on the JVM side: a LocalRelation, or an RDD
+    of Arrow batches above spark.sql.execution.arrow.localRelationThreshold.
+    `spark.createDataFrame` over a Python list instead builds a LogicalRDD
+    on a PythonRDD, so every later scan of the frame starts Python workers.
+    Every driver-built frame in the package goes through here.
+    """
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    rows = list(rows)
+    if rows and not isinstance(rows[0], dict):
+        rows = [dict(zip(schema.names, r)) for r in rows]
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def feature_to_row(feature: dict, z: int, x: int, y: int, okey: list) -> dict:

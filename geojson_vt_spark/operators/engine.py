@@ -17,7 +17,7 @@ from ..cluster.index import ClusterTileIndexSpark
 from ..config import ClusterOptions, Options
 from ..functions.convert import convert_geojson
 from ..functions.wrap import wrap_features
-from ..model import FEATURE_SCHEMA, feature_to_row, tile_feature_from_row
+from ..model import FEATURE_SCHEMA, feature_to_row, local_frame, tile_feature_from_row
 from ..plans.pyramid import PyramidStore, build_pyramid
 
 
@@ -27,14 +27,10 @@ def geojson_to_feature_rows(data: dict, options: Options) -> list:
     inside mapInPandas."""
     feats = convert_geojson(data, options)
     wrapped = wrap_features(feats, options)
-    rows = []
-    for fid, (wcopy, f) in enumerate(wrapped):
-        row = feature_to_row(f, 0, 0, 0, [wcopy, fid])
-        # createDataFrame verification rejects numpy arrays; mapInPandas doesn't
-        rows.append(
-            {k: (v.tolist() if hasattr(v, "tolist") else v) for k, v in row.items()}
-        )
-    return rows
+    return [
+        feature_to_row(f, 0, 0, 0, [wcopy, fid])
+        for fid, (wcopy, f) in enumerate(wrapped)
+    ]
 
 
 class GeoJSONVTSpark:
@@ -55,7 +51,7 @@ class GeoJSONVTSpark:
             if data is None:
                 raise ValueError("provide GeoJSON data or a features_df")
             rows = geojson_to_feature_rows(data, self.options)
-            features_df = spark.createDataFrame(rows, FEATURE_SCHEMA) if rows else None
+            features_df = local_frame(spark, rows, FEATURE_SCHEMA) if rows else None
 
         if features_df is not None and features_df.isEmpty():
             features_df = None
@@ -67,7 +63,7 @@ class GeoJSONVTSpark:
             self.source_df = (
                 features_df.localCheckpoint(eager=True)
                 if features_df is not None
-                else spark.createDataFrame([], FEATURE_SCHEMA)
+                else local_frame(spark, [], FEATURE_SCHEMA)
             )
             features_df = self.source_df if features_df is not None else None
 
@@ -268,7 +264,7 @@ class GeoJSONVTSpark:
         inv = (
             reg.join(F.broadcast(boxes), intersects, "leftsemi")
             .select("z", "x", "y")
-            .union(self.spark.createDataFrame([(0, 0, 0)], ["z", "x", "y"]))
+            .union(local_frame(self.spark, [(0, 0, 0)], "z long, x long, y long"))
             .distinct()
             .localCheckpoint(eager=True)
         )
@@ -287,9 +283,7 @@ class GeoJSONVTSpark:
             from ..model import REGISTRY_SCHEMA
 
             self.store.registry.append(
-                self.spark.createDataFrame(
-                    [(0, 0, 0, 0, 0, 0, False)], REGISTRY_SCHEMA
-                )
+                local_frame(self.spark, [(0, 0, 0, 0, 0, 0, False)], REGISTRY_SCHEMA)
             )
             return
         build_pyramid(

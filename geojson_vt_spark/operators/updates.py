@@ -36,7 +36,7 @@ from ..config import Options
 from ..functions.convert import convert_geojson
 from ..functions.deconvert import feature_to_geojson
 from ..functions.wrap import wrap_features
-from ..model import FEATURE_SCHEMA, feature_to_row, row_to_feature
+from ..model import FEATURE_SCHEMA, feature_to_row, local_frame, row_to_feature
 
 
 def _convert_batch(
@@ -46,13 +46,13 @@ def _convert_batch(
     okey = [batch, position] (appended after every existing row)."""
     feats = convert_geojson({"type": "FeatureCollection", "features": features}, options)
     wrapped = wrap_features(feats, options)
-    rows = []
-    for i, (_wcopy, f) in enumerate(wrapped):
-        row = feature_to_row(f, 0, 0, 0, [batch, i])
-        rows.append({k: (v.tolist() if hasattr(v, "tolist") else v) for k, v in row.items()})
+    rows = [
+        feature_to_row(f, 0, 0, 0, [batch, i])
+        for i, (_wcopy, f) in enumerate(wrapped)
+    ]
     if not rows:
         return None
-    return spark.createDataFrame(rows, FEATURE_SCHEMA)
+    return local_frame(spark, rows, FEATURE_SCHEMA)
 
 
 def _id_lit(v) -> str:
@@ -92,7 +92,7 @@ def apply_source_diff(
     for u in diff.get("update") or []:
         update_map[json.dumps(u["id"])] = u
 
-    empty = spark.createDataFrame([], FEATURE_SCHEMA)
+    empty = local_frame(spark, [], FEATURE_SCHEMA)
     affected_parts: list = []
 
     if diff.get("removeAll"):
@@ -102,13 +102,12 @@ def apply_source_diff(
     if remove_ids or add_map:
         keys = {_id_lit(k) for k in remove_ids} | set(add_map.keys())
         key_df = F.broadcast(
-            spark.createDataFrame([(k,) for k in keys], "id_key string")
+            local_frame(spark, [(k,) for k in keys], "id_key string")
         )
         match = F.coalesce(F.col("id"), F.lit("null")) == F.col("id_key")
-        removed = source.join(key_df, match, "leftsemi")
-        if not removed.isEmpty():
-            affected_parts.append(removed)
-            source = source.join(key_df, match, "left_anti")
+        # both are no-ops when nothing matches: no emptiness job first
+        affected_parts.append(source.join(key_df, match, "leftsemi"))
+        source = source.join(key_df, match, "left_anti")
         if add_map:
             added = _convert_batch(spark, list(add_map.values()), options, batch)
             batch += 1
@@ -118,7 +117,7 @@ def apply_source_diff(
 
     if update_map:
         ukeys = F.broadcast(
-            spark.createDataFrame([(k,) for k in update_map], "id_key string")
+            local_frame(spark, [(k,) for k in update_map], "id_key string")
         )
         umatch = F.col("id") == F.col("id_key")
         old_rows = source.join(ukeys, umatch, "leftsemi").orderBy("okey").collect()
@@ -167,24 +166,19 @@ def apply_source_diff(
         if touched_ids:
             source = source.join(
                 F.broadcast(
-                    spark.createDataFrame([(k,) for k in touched_ids], "id_key string")
+                    local_frame(spark, [(k,) for k in touched_ids], "id_key string")
                 ),
                 umatch,
                 "left_anti",
             )
             rows = [
-                {
-                    k: (v.tolist() if hasattr(v, "tolist") else v)
-                    for k, v in feature_to_row(f, 0, 0, 0, [batch, i]).items()
-                }
+                feature_to_row(f, 0, 0, 0, [batch, i])
                 for i, f in enumerate(new_rows)
             ]
             batch += 1
-            updated_df = (
-                spark.createDataFrame(rows, FEATURE_SCHEMA) if rows else None
-            )
-            old_rows_df = spark.createDataFrame(
-                [r.asDict() for r in old_rows], FEATURE_SCHEMA
+            updated_df = local_frame(spark, rows, FEATURE_SCHEMA) if rows else None
+            old_rows_df = local_frame(
+                spark, [r.asDict() for r in old_rows], FEATURE_SCHEMA
             )
             affected_parts.append(old_rows_df)
             if updated_df is not None:

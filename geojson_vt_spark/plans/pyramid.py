@@ -76,7 +76,7 @@ from ..functions.flat import (
     take,
     tile_geometry_json,
 )
-from ..model import FEATURE_SCHEMA, TILE_FEATURE_SCHEMA
+from ..model import FEATURE_SCHEMA, TILE_FEATURE_SCHEMA, local_frame
 from .balance import balanced_gid_mapping
 from ..functions.tile import GEOJSONVT_CLIP_END, GEOJSONVT_CLIP_START, js_div
 
@@ -468,7 +468,7 @@ class PyramidStore:
 
     def _union(self, dfs: list[DataFrame], schema) -> DataFrame:
         if not dfs:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
@@ -646,7 +646,8 @@ def build_pyramid(
                 skel_rows.append(
                     (key[0], key[1], key[2], nf, npts, bool(stopped and nf > 0))
                 )
-            skel = spark.createDataFrame(
+            skel = local_frame(
+                spark,
                 skel_rows,
                 "z int, x int, y int, num_features long, num_points long, has_source boolean",
             )
@@ -663,7 +664,8 @@ def build_pyramid(
             gids = balanced_gid_mapping(
                 routed, [got[k].num_points for k in routed], sub_parts
             )
-            flags = spark.createDataFrame(
+            flags = local_frame(
+                spark,
                 [(*k, True, None) for k in split_list]
                 + [(*k, None, gids[k]) for k in routed],
                 "z int, x int, y int, do_split boolean, gid long",
@@ -673,7 +675,7 @@ def build_pyramid(
             run_level = bool(split_list or stop_list)
             if stop_list:
                 sources = frontier.join(
-                    F.broadcast(spark.createDataFrame(stop_list, "z int, x int, y int")),
+                    F.broadcast(local_frame(spark, stop_list, "z int, x int, y int")),
                     ["z", "x", "y"], "leftsemi",
                 ).cache()  # lazy — materialized only if a drill-down reads it
 
@@ -710,7 +712,7 @@ def build_pyramid(
                 # outgrew the broadcast limit but still owes registry entries
                 # for empty children (tile-index.ts:223-226) — seed `expected`
                 # from it before dropping the driver-side list.
-                expected = spark.createDataFrame(expected_keys, ["z", "x", "y"])
+                expected = local_frame(spark, expected_keys, "z long, x long, y long")
                 expected_keys = None
             if expected is not None:
                 stats = (
@@ -844,7 +846,7 @@ def build_pyramid(
 
     if registered:
         known = F.broadcast(
-            spark.createDataFrame(sorted(registered), "z int, x int, y int")
+            local_frame(spark, sorted(registered), "z int, x int, y int")
         )
         for attr, i in marks.items():
             lst = getattr(store, attr)

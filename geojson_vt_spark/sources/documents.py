@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from ..config import Options
 from ..functions.convert import convert_geojson
 from ..functions.wrap import wrap_features
-from ..model import FEATURE_SCHEMA, feature_to_row
+from ..model import FEATURE_SCHEMA, feature_to_row, local_frame
 
 SPAN_SCHEMA = T.StructType(
     [
@@ -91,7 +91,7 @@ def synthesize_documents(
             {"kind": "text", "text": texts[(i + 3) % len(texts)], "media_ref": None, "offset": off}
         )
         rows.append({"doc_id": doc_id, "spans": spans})
-    return spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
+    return local_frame(spark, rows, DOCUMENTS_SCHEMA)
 
 
 def features_from_documents(

@@ -34,6 +34,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..model import local_frame
+
 DOCS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), True),
@@ -190,7 +192,8 @@ def run_ingest_to_parquet(
         )
         row = {"batch_id": bid, **stage, "admitted": int(n_admitted)}
         metrics.append(row)
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [row],
             "batch_id long, docs_in long, quality_passed long, "
             "lang_passed long, admitted long",
@@ -249,8 +252,6 @@ def run_ingest_to_memory(
         checkpoint_dir or tempfile.mkdtemp(prefix="ingest_ckpt_"),
         max_files_per_trigger,
     )
-    out = spark.createDataFrame(
-        admitted_rows or [], "doc_id long, source string, text string"
-    )
+    out = local_frame(spark, admitted_rows, "doc_id long, source string, text string")
     out.createOrReplaceTempView(table)
     return q, metrics

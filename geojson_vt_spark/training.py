@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from .analytics import ranked_topk
 
 from .functions.projection import project_x_col, project_y_col
+from .model import local_frame
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -944,8 +945,8 @@ def ivf_index_write(embeddings: DataFrame, path: str, nlist: int = 16) -> None:
         .partitionBy("list_id")
         .parquet(f"{path}/lists")
     )
-    spark.createDataFrame(
-        [(rk, c) for rk, c in cents], "rk int, embedding array<double>"
+    local_frame(
+        spark, [(rk, c) for rk, c in cents], "rk int, embedding array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
 

@@ -206,12 +206,12 @@ def grid_index(spark, places):
 
     from geojson_vt_spark.config import Options
     from geojson_vt_spark.operators.engine import geojson_to_feature_rows
-    from geojson_vt_spark.model import FEATURE_SCHEMA
+    from geojson_vt_spark.model import FEATURE_SCHEMA, local_frame
 
     rows = geojson_to_feature_rows(
         {"type": "FeatureCollection", "features": places}, Options(cluster=True)
     )
-    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
+    df = local_frame(spark, rows, FEATURE_SCHEMA)
     idx = ClusterTileIndexSpark(spark, ClusterOptions(), method="grid")
     idx.initialize_df(df)
     return idx
@@ -510,7 +510,7 @@ def test_grid_reduce_aggregation(spark, places):
     import json as _json
 
     from geojson_vt_spark.config import Options
-    from geojson_vt_spark.model import FEATURE_SCHEMA
+    from geojson_vt_spark.model import FEATURE_SCHEMA, local_frame
     from geojson_vt_spark.operators.engine import geojson_to_feature_rows
 
     def map_fn(props):
@@ -522,7 +522,7 @@ def test_grid_reduce_aggregation(spark, places):
     rows = geojson_to_feature_rows(
         {"type": "FeatureCollection", "features": places}, Options(cluster=True)
     )
-    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
+    df = local_frame(spark, rows, FEATURE_SCHEMA)
     idx = ClusterTileIndexSpark(
         spark,
         ClusterOptions(radius=100, map_fn=map_fn, reduce_fn=reduce_fn),

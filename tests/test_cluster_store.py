@@ -19,7 +19,7 @@ def stored(spark, tmp_path_factory):
     )
 
     from geojson_vt_spark.config import Options
-    from geojson_vt_spark.model import FEATURE_SCHEMA
+    from geojson_vt_spark.model import FEATURE_SCHEMA, local_frame
     from geojson_vt_spark.operators.engine import geojson_to_feature_rows
 
     places = load_fixture("places.json")["features"]
@@ -27,7 +27,7 @@ def stored(spark, tmp_path_factory):
         {"type": "FeatureCollection", "features": places}, Options(cluster=True)
     )
     live = ClusterTileIndexSpark(spark, ClusterOptions(), method="grid")
-    live.initialize_df(spark.createDataFrame(rows, FEATURE_SCHEMA))
+    live.initialize_df(local_frame(spark, rows, FEATURE_SCHEMA))
     path = str(tmp_path_factory.mktemp("clstore") / "store")
     write_cluster_store(live, path)
     return live, load_cluster_store(spark, path), path

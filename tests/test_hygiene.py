@@ -357,6 +357,36 @@ def test_sequence_pack_giant_source_multi_task(spark):
     assert got == want
 
 
+def test_sequence_pack_sharded_without_exchange_reuse(spark):
+    """Both levels of the sharded engine must read ONE sharding. With
+    exchange reuse off, two evaluations of the range exchange sample
+    different bounds (each input partition holds more rows than the
+    sampler keeps), so an unpinned sharding mismatches local prefixes and
+    per-shard totals."""
+    from geojson_vt_spark.hygiene import sequence_pack
+
+    df = spark.createDataFrame(
+        [(f"s{i % 3}", f"d{i:06d}", " ".join("w" for _ in range(i % 37 + 1)))
+         for i in range(6000)],
+        "source string, doc_id string, text string",
+    )
+    want = sorted(
+        tuple(r) for r in sequence_pack(df, engine="window").collect()
+    )
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    try:
+        for n_shards in (8, 16):
+            got = sorted(
+                tuple(r)
+                for r in sequence_pack(
+                    df, engine="sharded", n_shards=n_shards
+                ).collect()
+            )
+            assert got == want, n_shards
+    finally:
+        spark.conf.unset("spark.sql.exchange.reuse")
+
+
 # ---------------------------------------------------------------------------
 # doc_chunks
 

@@ -29,3 +29,13 @@ def test_pyramid_and_grid_engines_have_no_pandas_crossing():
         text = (ROOT / rel).read_text()
         for banned in ("mapInPandas", "applyInPandas", "import pandas"):
             assert banned not in text, f"{rel}: {banned}"
+
+
+def test_driver_built_frames_go_through_local_frame():
+    """`createDataFrame(<list>)` scans through Python workers; every
+    driver-built frame goes through `model.local_frame`, the only caller."""
+    found = {
+        str(path.relative_to(ROOT)): path.read_text().count("createDataFrame(")
+        for path in ROOT.rglob("*.py")
+    }
+    assert {rel: n for rel, n in found.items() if n} == {"model.py": 1}

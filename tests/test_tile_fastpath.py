@@ -105,11 +105,11 @@ def test_distributed_single_tile_matches_driver(spark):
     tile as the reference-parity driver path."""
     import json
 
-    from geojson_vt_spark.model import FEATURE_SCHEMA, tile_feature_from_row
+    from geojson_vt_spark.model import FEATURE_SCHEMA, local_frame, tile_feature_from_row
 
     geojson = load_fixture("us-states.json")
     rows = geojson_to_feature_rows(geojson, Options())
-    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
+    df = local_frame(spark, rows, FEATURE_SCHEMA)
     out = tile_from_features_df(df, 7, 37, 48).collect()
     out.sort(key=lambda r: tuple(r.okey))
     got = [tile_feature_from_row(r.asDict()) for r in out]
