@@ -2,27 +2,34 @@
 GeoJSONVT, Supercluster, geoJSONToTile, clip constants) so a reference user
 can switch imports 1:1, plus the option dataclasses Spark users configure.
 
-Heavy submodules (analytics, training, streaming) are imported explicitly by
-path; this module stays import-light so `from geojson_vt_spark import ...`
-never drags pandas/numpy kernels into a driver that only serves tiles.
+The names load on first access (PEP 562 module __getattr__), so importing a
+submodule — a Python worker unpickling a pyramid or grid kernel — does not
+pull in the engine, pandas or the cluster index. Heavy submodules
+(analytics, training, streaming) are imported explicitly by path.
 """
 
-from .config import ClusterOptions, Options
-from .functions.tile import GEOJSONVT_CLIP_END, GEOJSONVT_CLIP_START
-from .operators.engine import GeoJSONVTSpark
-from .operators.geojson_to_tile import geojson_to_tile
-from .cluster.index import ClusterTileIndexSpark
+import importlib
 
-# reference naming alias (index.ts exports ClusterTileIndex as Supercluster)
-SuperclusterSpark = ClusterTileIndexSpark
+# public name -> (submodule, attribute)
+_EXPORTS = {
+    "GeoJSONVTSpark": ("operators.engine", "GeoJSONVTSpark"),
+    "ClusterTileIndexSpark": ("cluster.index", "ClusterTileIndexSpark"),
+    # reference naming alias (index.ts exports ClusterTileIndex as Supercluster)
+    "SuperclusterSpark": ("cluster.index", "ClusterTileIndexSpark"),
+    "geojson_to_tile": ("operators.geojson_to_tile", "geojson_to_tile"),
+    "GEOJSONVT_CLIP_START": ("functions.tile", "GEOJSONVT_CLIP_START"),
+    "GEOJSONVT_CLIP_END": ("functions.tile", "GEOJSONVT_CLIP_END"),
+    "Options": ("config", "Options"),
+    "ClusterOptions": ("config", "ClusterOptions"),
+}
 
-__all__ = [
-    "GeoJSONVTSpark",
-    "ClusterTileIndexSpark",
-    "SuperclusterSpark",
-    "geojson_to_tile",
-    "GEOJSONVT_CLIP_START",
-    "GEOJSONVT_CLIP_END",
-    "Options",
-    "ClusterOptions",
-]
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    module, attr = _EXPORTS[name]
+    value = getattr(importlib.import_module(f".{module}", __name__), attr)
+    globals()[name] = value
+    return value

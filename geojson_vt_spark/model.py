@@ -19,7 +19,7 @@ from typing import Any, Iterable, Optional
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .functions.feature import make_feature, make_ring
@@ -76,6 +76,42 @@ REGISTRY_SCHEMA = T.StructType(
         T.StructField("has_source", T.BooleanType(), False),
     ]
 )
+
+# The one tile-store row layout (reference: one tile map, tile-index.ts:12,88,
+# each entry holding a tile's features, counters and retained source). Every
+# row carries a `kind`; the columns of the other kinds are null. The build's
+# kernels emit it, the engine's store holds it, the on-disk store is its
+# kinds 1 and 3. Kind 0 (next-frontier features) lives only inside a build.
+KIND_FRONTIER, KIND_TILE, KIND_SOURCE, KIND_REGISTRY = 0, 1, 2, 3
+
+_STORE_FIELDS = TILE_FEATURE_SCHEMA.fields + FEATURE_SCHEMA.fields + REGISTRY_SCHEMA.fields
+STORE_SCHEMA = T.StructType(
+    [T.StructField(n, t) for n, t in {f.name: f.dataType for f in _STORE_FIELDS}.items()]
+    + [T.StructField("kind", T.IntegerType())]
+)
+
+
+def store_rows(df: DataFrame, kind: int) -> DataFrame:
+    """`df`'s rows as STORE_SCHEMA rows of one kind (absent columns null).
+    A literal kind lets Catalyst fold a kind filter over the branch away.
+    List columns keep their type: read back from parquet their elements are
+    nullable, which a cast to the schema's non-null elements rejects."""
+    have = set(df.columns)
+
+    def col(f):
+        if f.name == "kind":
+            return F.lit(kind).cast(f.dataType)
+        if f.name not in have:
+            return F.lit(None).cast(f.dataType)
+        c = F.col(f.name)
+        return c if isinstance(f.dataType, T.ArrayType) else c.cast(f.dataType)
+
+    return df.select(*(col(f).alias(f.name) for f in STORE_SCHEMA.fields))
+
+
+def kind_rows(store: DataFrame, kind: int, schema: T.StructType) -> DataFrame:
+    """The rows of one kind of a STORE_SCHEMA frame, as `schema` columns."""
+    return store.where(F.col("kind") == kind).select(*schema.names)
 
 
 def local_frame(

@@ -17,8 +17,10 @@ from ..cluster.index import ClusterTileIndexSpark
 from ..config import ClusterOptions, Options
 from ..functions.convert import convert_geojson
 from ..functions.wrap import wrap_features
-from ..model import FEATURE_SCHEMA, feature_to_row, local_frame, tile_feature_from_row
+from ..model import FEATURE_SCHEMA, KIND_REGISTRY, KIND_SOURCE, REGISTRY_SCHEMA
+from ..model import feature_to_row, local_frame, store_rows
 from ..plans.pyramid import PyramidStore, build_pyramid
+from ..sources.tile_store import lookup_frame, read_tiles
 
 
 def geojson_to_feature_rows(data: dict, options: Options) -> list:
@@ -45,7 +47,6 @@ class GeoJSONVTSpark:
     ):
         self.spark = spark
         self.options = (options or Options()).validate()
-        self.workdir = workdir
 
         if features_df is None:
             if data is None:
@@ -71,7 +72,7 @@ class GeoJSONVTSpark:
         if self.options.cluster:
             # cluster mode (geojsonvt.ts:64-68): ClusterTileIndex over the
             # wrapped point features instead of the tile pyramid
-            self.store = PyramidStore(spark, self.options, workdir)
+            self.store = PyramidStore(spark)
             self.cluster_index = ClusterTileIndexSpark(
                 spark, self.options.cluster_options
             )
@@ -82,7 +83,7 @@ class GeoJSONVTSpark:
         self.store: PyramidStore
         if features_df is None:
             # empty input -> empty index (geojsonvt.ts:64-67 skips initialize)
-            self.store = PyramidStore(spark, self.options, workdir)
+            self.store = PyramidStore(spark)
         else:
             self.store = build_pyramid(
                 features_df, self.options, workdir=workdir, resume=resume
@@ -111,24 +112,16 @@ class GeoJSONVTSpark:
 
     def all_tiles(self) -> dict:
         """Collect the whole pyramid keyed 'z{z}-{x}-{y}' -> [tile features]
-        (the reference genTiles shape). One Spark job.
+        (the reference genTiles shape). One collect (read_tiles).
 
         TEST SURFACE, NOT SERVING: this materializes every tile on the
         driver — reference-parity and fixture comparisons only. Serving
         reads go through DiskTileServer.get_tile/get_tiles
         (sources/tile_store.py), which scan only the pruned partitions."""
-        rows = self.tiles().collect()
-        reg = self.registry().select("z", "x", "y").collect()
-        out: dict = {}
-        for r in reg:
-            out[f"z{r.z}-{r.x}-{r.y}"] = []
-        buckets: dict = {}
-        for r in rows:
-            buckets.setdefault((r.z, r.x, r.y), []).append(r)
-        for (z, x, y), rs in buckets.items():
-            rs.sort(key=lambda r: tuple(r.okey))
-            out[f"z{z}-{x}-{y}"] = [tile_feature_from_row(r.asDict()) for r in rs]
-        return out
+        return {
+            f"z{z}-{x}-{y}": tile
+            for (z, x, y), tile in read_tiles(self.store.frame()).items()
+        }
 
     @staticmethod
     def _ancestor_chain(z: int, x: int, y: int) -> list:
@@ -142,18 +135,11 @@ class GeoJSONVTSpark:
 
     def _ancestor_lookup_df(self, anc: list):
         """Pruned registry lookup for an ancestor chain and its children
-        (<= 24 x 5 keys): one isin filter over the packed tile key, no
-        full-registry collect (plan-asserted in tests/test_plans.py)."""
-        packed = (
-            F.col("z").cast("long") * F.lit(1 << 50)
-            + F.col("x").cast("long") * F.lit(1 << 25)
-            + F.col("y").cast("long")
-        )
-        wanted = [(az << 50) + (ax << 25) + ay for az, ax, ay in anc]
-        return (
-            self.registry()
-            .filter(packed.isin(wanted))
-            .select("z", "x", "y", "has_source")
+        (<= 24 x 5 keys): the shared key filter (lookup_frame) over the
+        registry rows, no full-registry collect (plan-asserted in
+        tests/test_plans.py)."""
+        return lookup_frame(self.store.frame(), anc, [KIND_REGISTRY]).select(
+            "z", "x", "y", "has_source"
         )
 
     def get_tile(self, z, x, y) -> Optional[list]:
@@ -191,8 +177,8 @@ class GeoJSONVTSpark:
         if found is None or not reg[found]:
             return None
 
-        src = self.store.sources_df().filter(
-            (F.col("z") == found[0]) & (F.col("x") == found[1]) & (F.col("y") == found[2])
+        src = lookup_frame(self.store.frame(), [found], [KIND_SOURCE]).select(
+            *FEATURE_SCHEMA.names
         )
         if src.isEmpty():
             return None
@@ -205,7 +191,7 @@ class GeoJSONVTSpark:
             target=(z, x, y),
             registered=frozenset(reg),
         )
-        if len(self.store.tiles) > 24:
+        if len(self.store.frames) > 24:
             self.store.compact()
         return self._fetch(z, x, y)
 
@@ -240,7 +226,7 @@ class GeoJSONVTSpark:
 
         self._invalidate_tiles(affected)
         self._rebuild_root()
-        if len(self.store.tiles) > 24:
+        if len(self.store.frames) > 24:
             self.store.compact()
 
     def _invalidate_tiles(self, affected: DataFrame) -> None:
@@ -268,23 +254,19 @@ class GeoJSONVTSpark:
             .distinct()
             .localCheckpoint(eager=True)
         )
-        store = self.store
-        for attr in ("tiles", "registry", "sources"):
-            kept = [
-                df.join(F.broadcast(inv), ["z", "x", "y"], "left_anti")
-                for df in getattr(store, attr)
-            ]
-            setattr(store, attr, kept)
+        self.store.frames = [
+            df.join(F.broadcast(inv), ["z", "x", "y"], "left_anti")
+            for df in self.store.frames
+        ]
 
     def _rebuild_root(self) -> None:
         # eager root regen with retained source (tile-index.ts:47-54)
         if self.source_df is None or self.source_df.isEmpty():
             # the reference still creates an (empty) root tile
-            from ..model import REGISTRY_SCHEMA
-
-            self.store.registry.append(
-                local_frame(self.spark, [(0, 0, 0, 0, 0, 0, False)], REGISTRY_SCHEMA)
-            )
+            self.store.frames.append(store_rows(
+                local_frame(self.spark, [(0, 0, 0, 0, 0, 0, False)], REGISTRY_SCHEMA),
+                KIND_REGISTRY,
+            ))
             return
         build_pyramid(
             self.source_df,
@@ -329,13 +311,13 @@ class GeoJSONVTSpark:
             )
             if src is not None:
                 self.cluster_index.initialize_df(src)
-            self.store = PyramidStore(self.spark, self.options, self.workdir)
+            self.store = PyramidStore(self.spark)
         else:
             self.cluster_index = None
             self.store = (
                 build_pyramid(src, self.options, workdir=None)
                 if src is not None
-                else PyramidStore(self.spark, self.options, self.workdir)
+                else PyramidStore(self.spark)
             )
 
     # -- cluster surfaces (geojsonvt.ts:160-183) ----------------------------
@@ -361,17 +343,4 @@ class GeoJSONVTSpark:
         return self.cluster_index.get_leaves(cluster_id, limit, offset)
 
     def _fetch(self, z: int, x: int, y: int) -> Optional[list]:
-        reg = (
-            self.registry()
-            .filter((F.col("z") == z) & (F.col("x") == x) & (F.col("y") == y))
-            .count()
-        )
-        if not reg:
-            return None
-        rows = (
-            self.tiles()
-            .filter((F.col("z") == z) & (F.col("x") == x) & (F.col("y") == y))
-            .collect()
-        )
-        rows.sort(key=lambda r: tuple(r.okey))
-        return [tile_feature_from_row(r.asDict()) for r in rows]
+        return read_tiles(self.store.frame(), [(z, x, y)]).get((z, x, y))

@@ -21,8 +21,8 @@ Spark-first design (NOT a translation of the single-threaded BFS):
   * every crossing is Arrow in, Arrow out: the kernels read the list
     columns' offset/value buffers straight into a Flat (flat_from_arrow),
     keep okey/id/tags as Arrow arrays, and build their output record
-    batches against the one UNIFIED_SCHEMA Arrow schema (_unified_batch) —
-    no pandas conversion on either side;
+    batches against the kind-tagged store layout (model.STORE_SCHEMA,
+    _store_batch) — no pandas conversion on either side;
   * counters stay SUM aggregates over per-feature rows, so no tile ever has
     to fit in one task (a z0 tile over the full corpus stays distributed);
   * one routing rule skips per-level passes: at every driver-mode level, a
@@ -51,6 +51,7 @@ Spark-first design (NOT a translation of the single-threaded BFS):
 
 from __future__ import annotations
 
+import functools
 import json
 import sys
 import time
@@ -76,7 +77,9 @@ from ..functions.flat import (
     take,
     tile_geometry_json,
 )
-from ..model import FEATURE_SCHEMA, TILE_FEATURE_SCHEMA, local_frame
+from ..model import FEATURE_SCHEMA, REGISTRY_SCHEMA, STORE_SCHEMA, TILE_FEATURE_SCHEMA
+from ..model import KIND_FRONTIER, KIND_REGISTRY, KIND_SOURCE, KIND_TILE
+from ..model import kind_rows, local_frame, store_rows
 from .balance import balanced_gid_mapping
 from ..functions.tile import GEOJSONVT_CLIP_END, GEOJSONVT_CLIP_START, js_div
 
@@ -89,6 +92,9 @@ _BROADCAST_TILE_LIMIT = 200_000
 # further per-level jobs for that subtree). The per-level loop keeps running
 # only for tiles too big for a task. 0 routes nothing (the pure level loop).
 _SUBTREE_MAX_POINTS = 200_000
+
+# every kernel output batch is built against the store layout (model.py)
+_STORE_ARROW = to_arrow_schema(STORE_SCHEMA)
 
 
 def _stop_rule(z, x, y, num_points, options: Options, target) -> bool:
@@ -141,11 +147,11 @@ def _span_idx(spans):
     return np.concatenate([np.arange(s, e, dtype=np.int64) for s, e in spans])
 
 
-def _unified_batch(n: int, kind: int, **cols) -> pa.RecordBatch:
-    """n UNIFIED_SCHEMA rows of one kind; absent columns are all-null."""
+def _store_batch(n: int, kind: int, **cols) -> pa.RecordBatch:
+    """n STORE_SCHEMA rows of one kind; absent columns are all-null."""
     cols["kind"] = np.full(n, kind, np.int32)
     out = []
-    for f in _UNIFIED_ARROW:
+    for f in _STORE_ARROW:
         v = cols.get(f.name)
         if v is None:
             out.append(pa.nulls(n, f.type))
@@ -153,14 +159,14 @@ def _unified_batch(n: int, kind: int, **cols) -> pa.RecordBatch:
             out.append(v if v.type == f.type else v.cast(f.type))
         else:
             out.append(pa.array(v, f.type))
-    return pa.RecordBatch.from_arrays(out, schema=_UNIFIED_ARROW)
+    return pa.RecordBatch.from_arrays(out, schema=_STORE_ARROW)
 
 
 def _feature_rows(state, kind: int) -> pa.RecordBatch:
     """FEATURE_SCHEMA rows of a state: kind=0 next-frontier children,
     kind=2 retained sources."""
     fl, z, x, y, okeys, ids, tags = state
-    return _unified_batch(
+    return _store_batch(
         fl.n_features, kind, z=z, x=x, y=y, okey=okeys, id=ids, tags=tags,
         **flat_to_cells_arrow(fl),
     )
@@ -197,8 +203,8 @@ def _tile_rows(state, options: Options):
                 )
                 vals[i] = json.dumps(tg)
             tf_tags = pa.array(vals, pa.string())
-    rows = _unified_batch(
-        nfe, 1, z=z, x=x, y=y, okey=okeys,
+    rows = _store_batch(
+        nfe, KIND_TILE, z=z, x=x, y=y, okey=okeys,
         tf_type=pa.array(
             np.zeros(nfe, np.int32) if emit is None else emit["f_tile_type"],
             pa.int32(), mask=dropped,
@@ -279,7 +285,7 @@ def _level_fn(options: Options):
     assembly and the 4-way split. Input: FEATURE rows of the tiles not
     routed to the subtree kernel, plus a `do_split` boolean (the driver's
     stop-rule decision, computed JVM-side from SUM(rlens) before this kernel
-    runs). Output: UNIFIED record batches — kind=1 assembled tile-feature
+    runs). Output: store-layout record batches — kind=1 assembled tile-feature
     rows for EVERY input feature (tf_* null when the feature simplifies
     away; npoints/nsimplified always set, they feed the registry aggregate),
     and kind=0 child-feature rows for the splitting tiles (the next
@@ -301,32 +307,9 @@ def _level_fn(options: Options):
             if not sidx.size:
                 continue
             for bundle in _split_children(_take_state(state, sidx), options):
-                yield _feature_rows(bundle, 0)
+                yield _feature_rows(bundle, KIND_FRONTIER)
 
     return fn
-
-
-# unified output of the pyramid kernels: one pass emits next-frontier
-# features (kind=0), tile features (kind=1), retained sources (kind=2) and
-# registry rows (kind=3)
-def _unified_schema():
-    from pyspark.sql import types as T
-
-    fields = {}
-    for f in TILE_FEATURE_SCHEMA.fields:
-        fields[f.name] = f.dataType
-    for f in FEATURE_SCHEMA.fields:
-        fields.setdefault(f.name, f.dataType)
-    fields["num_features"] = T.LongType()
-    fields["num_points"] = T.LongType()
-    fields["num_simplified"] = T.LongType()
-    fields["has_source"] = T.BooleanType()
-    fields["kind"] = T.IntegerType()
-    return T.StructType([T.StructField(n, t, True) for n, t in fields.items()])
-
-
-UNIFIED_SCHEMA = _unified_schema()
-_UNIFIED_ARROW = to_arrow_schema(UNIFIED_SCHEMA)
 
 
 def _subtree_fn(options: Options, target):
@@ -347,7 +330,7 @@ def _subtree_fn(options: Options, target):
             .to_batches()[0]
         )
         expected = [(int(state[1][0]), int(state[2][0]), int(state[3][0]))]
-        out: list = []  # emitted UNIFIED record batches
+        out: list = []  # emitted store-layout record batches
 
         while True:
             nfe = state[0].n_features
@@ -399,8 +382,8 @@ def _subtree_fn(options: Options, target):
                     split_ranges.append(se)
                     split_keys.append((kz, kx, ky))
             c = list(zip(*reg))
-            out.append(_unified_batch(
-                len(reg), 3, z=c[0], x=c[1], y=c[2],
+            out.append(_store_batch(
+                len(reg), KIND_REGISTRY, z=c[0], x=c[1], y=c[2],
                 num_features=c[3], num_points=c[4],
                 num_simplified=c[5], has_source=c[6],
                 okey=pa.ListArray.from_arrays(
@@ -412,7 +395,7 @@ def _subtree_fn(options: Options, target):
             # ---- kind=2 retained-source rows for stopped tiles ----
             if stop_ranges:
                 out.append(_feature_rows(
-                    _take_state(state, _span_idx(stop_ranges)), 2
+                    _take_state(state, _span_idx(stop_ranges)), KIND_SOURCE
                 ))
 
             if not split_keys:
@@ -433,58 +416,54 @@ def _subtree_fn(options: Options, target):
                 else _take_state(state, np.empty(0, np.int64))
             )
 
-        return pa.Table.from_batches(out, schema=_UNIFIED_ARROW)
+        return pa.Table.from_batches(out, schema=_STORE_ARROW)
 
     return fn
 
 
 class PyramidStore:
-    """Accumulated pyramid state: tile features, tile registry, retained
-    sources (the drill-down frontier, tile-index.ts:174)."""
+    """Accumulated pyramid state: one list of kind-tagged STORE_SCHEMA frames
+    holding tile features (kind 1), retained sources (kind 2, the drill-down
+    frontier, tile-index.ts:174) and registry rows (kind 3). Each build call
+    appends one frame; the three tables are kind projections of the union."""
 
-    def __init__(self, spark: SparkSession, options: Options, workdir: Optional[str]):
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.options = options
-        self.workdir = workdir
-        self.tiles: list[DataFrame] = []
-        self.registry: list[DataFrame] = []
-        self.sources: list[DataFrame] = []
+        self.frames: list[DataFrame] = []
         # always empty: head fusion is gone; kept for readers of the field
         self.head_fused: list = []
         # one-shot audit: True when a build pass routed the z0 root, so the
         # whole pyramid ran as a single subtree-kernel call (small corpora)
         self.one_shot: bool = False
 
+    # read-only aliases of `frames` for readers of the old three lists
+    # (perfbench); drop them with head_fused at the next benchmark change
+    tiles = registry = sources = property(lambda self: self.frames)
+
+    def frame(self) -> DataFrame:
+        """The whole store as one STORE_SCHEMA frame."""
+        if not self.frames:
+            return local_frame(self.spark, [], STORE_SCHEMA)
+        return functools.reduce(DataFrame.union, self.frames)
+
     def tiles_df(self) -> DataFrame:
-        return self._union(self.tiles, TILE_FEATURE_SCHEMA)
+        return kind_rows(self.frame(), KIND_TILE, TILE_FEATURE_SCHEMA)
 
     def registry_df(self) -> DataFrame:
-        from ..model import REGISTRY_SCHEMA
-
-        return self._union(self.registry, REGISTRY_SCHEMA)
+        return kind_rows(self.frame(), KIND_REGISTRY, REGISTRY_SCHEMA)
 
     def sources_df(self) -> DataFrame:
-        return self._union(self.sources, FEATURE_SCHEMA)
-
-    def _union(self, dfs: list[DataFrame], schema) -> DataFrame:
-        if not dfs:
-            return local_frame(self.spark, [], schema)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        return kind_rows(self.frame(), KIND_SOURCE, FEATURE_SCHEMA)
 
     def compact(self) -> None:
-        """Fold each accumulated frame list into one materialized frame.
+        """Fold the frame list into one materialized frame.
 
         Incremental updates and repeated drill-downs append (and anti-join)
-        per-level frames; left unchecked the union plans grow linearly with
-        the number of operations and every tile lookup re-plans them all.
-        Compacting is the Iceberg-snapshot analog: one localCheckpoint per
-        table, after which lookups scan a single cached relation."""
-        self.tiles = [self.tiles_df().localCheckpoint(eager=True)]
-        self.registry = [self.registry_df().localCheckpoint(eager=True)]
-        self.sources = [self.sources_df().localCheckpoint(eager=True)]
+        frames; left unchecked the union plan grows linearly with the number
+        of operations and every tile lookup re-plans it. Compacting is the
+        Iceberg-snapshot analog: one localCheckpoint, after which lookups
+        scan a single cached relation."""
+        self.frames = [self.frame().localCheckpoint(eager=True)]
 
 
 _CKPT_POOL = None
@@ -539,7 +518,7 @@ def build_pyramid(
     """
     spark = features_df.sparkSession
     if store is None:
-        store = PyramidStore(spark, options, workdir)
+        store = PyramidStore(spark)
 
     z0, _, _ = start
     cz = cx = cy = None
@@ -561,8 +540,6 @@ def build_pyramid(
             )
         return time.time()
 
-    from ..model import REGISTRY_SCHEMA
-
     # Arrow-stage parallelism: each Python-stage task occupies ~2-4 native
     # threads (JVM Arrow serde + the Python worker + numpy), the
     # `spark.task.cpus`-style accounting a cluster deployment expresses with
@@ -573,9 +550,7 @@ def build_pyramid(
     _par = spark.sparkContext.defaultParallelism
     arrow_parts = _par if _par <= 8 else max(8, _par // 4)
 
-    tile_cols = [f.name for f in TILE_FEATURE_SCHEMA.fields]
-    feat_cols = [f.name for f in FEATURE_SCHEMA.fields]
-    reg_cols = [f.name for f in REGISTRY_SCHEMA.fields]
+    feat_cols = FEATURE_SCHEMA.names
     # decision counter, computed JVM-side: total source vertices per feature
     # equals SUM(rlens) — identical to the assembly's npoints counter
     npts_col = F.aggregate(
@@ -601,8 +576,8 @@ def build_pyramid(
             frontier, workdir, f"frontier/z={z0:02d}", resume
         )
 
-    # frames the store held before this call
-    marks = {a: len(getattr(store, a)) for a in ("registry", "tiles", "sources")}
+    # this call's kind-tagged store rows; the store gets their union
+    parts: list[DataFrame] = []
 
     while True:
         t0 = time.time()
@@ -697,7 +672,7 @@ def build_pyramid(
                 sub_future = _ckpt_pool().submit(
                     _checkpoint,
                     sub_in.groupBy("gid").applyInArrow(
-                        _subtree_fn(options, target), UNIFIED_SCHEMA
+                        _subtree_fn(options, target), STORE_SCHEMA
                     ),
                     workdir, f"subtree/z={z:02d}", resume,
                 )
@@ -763,53 +738,44 @@ def build_pyramid(
             # ---- fused assemble+split: ONE Arrow crossing per level ----
             unified = level_in.fillna(False, ["do_split"]).coalesce(
                 arrow_parts
-            ).mapInArrow(_level_fn(options), UNIFIED_SCHEMA)
+            ).mapInArrow(_level_fn(options), STORE_SCHEMA)
             unified = _checkpoint(unified, workdir, f"unified/z={z:02d}", resume)
             t0 = _tick("fused assemble+split ckpt", t0)
-            kind1 = unified.filter(F.col("kind") == 1)
+            kind1 = unified.filter(F.col("kind") == KIND_TILE)
             # registry: driver/decision skeleton (num_features, num_points,
             # has_source) + per-tile num_simplified from the assembled rows —
             # a small lazy join, materialized only when the registry is read
             nsimp_agg = kind1.groupBy("z", "x", "y").agg(
                 F.sum("nsimplified").alias("num_simplified")
             )
-            store.registry.append(
+            parts.append(store_rows(
+                kind1.filter(F.col("tf_type").isNotNull()), KIND_TILE
+            ))
+            parts.append(store_rows(
                 skel.join(nsimp_agg, ["z", "x", "y"], "left")
-                .fillna(0, ["num_simplified"])
-                .select(*reg_cols)
-            )
-            store.tiles.append(
-                kind1.filter(F.col("tf_type").isNotNull()).select(*tile_cols)
-            )
+                .fillna(0, ["num_simplified"]),
+                KIND_REGISTRY,
+            ))
         elif skel_rows:
             # only empty tiles left beside the routed ones: registry rows
             # straight from the driver skeleton
-            store.registry.append(
-                skel.withColumn("num_simplified", F.lit(0).cast("long"))
-                .select(*reg_cols)
-            )
+            parts.append(store_rows(
+                skel.withColumn("num_simplified", F.lit(0)), KIND_REGISTRY
+            ))
         # source retained only where we stopped (tile-index.ts:174,191)
         if sources is not None:
-            store.sources.append(sources)
+            parts.append(store_rows(sources, KIND_SOURCE))
         if sub_future is not None:
-            unified_sub = sub_future.result()
+            # the subtree kernel's output is store rows of kinds 1-3 already
+            parts.append(sub_future.result())
             t0 = _tick(f"subtree pass ({len(routed)} tiles)", t0)
-            store.tiles.append(
-                unified_sub.filter(F.col("kind") == 1).select(*tile_cols)
-            )
-            store.sources.append(
-                unified_sub.filter(F.col("kind") == 2).select(*feat_cols)
-            )
-            store.registry.append(
-                unified_sub.filter(F.col("kind") == 3).select(*reg_cols)
-            )
 
         if n_split == 0:
             if decision is not None:
                 decision.unpersist()
             break
 
-        frontier = unified.filter(F.col("kind") == 0).select(*feat_cols)
+        frontier = unified.filter(F.col("kind") == KIND_FRONTIER).select(*feat_cols)
 
         # all 4 children of every split tile get a tile entry, even if empty
         # (tile-index.ts:223-226)
@@ -844,11 +810,11 @@ def build_pyramid(
             decision.unpersist()
         z += 1
 
+    built = functools.reduce(DataFrame.union, parts)
     if registered:
-        known = F.broadcast(
-            local_frame(spark, sorted(registered), "z int, x int, y int")
+        built = built.join(
+            F.broadcast(local_frame(spark, sorted(registered), "z int, x int, y int")),
+            ["z", "x", "y"], "left_anti",
         )
-        for attr, i in marks.items():
-            lst = getattr(store, attr)
-            lst[i:] = [d.join(known, ["z", "x", "y"], "left_anti") for d in lst[i:]]
+    store.frames.append(built)
     return store

@@ -4,7 +4,7 @@ from geojson_vt_spark.config import Options
 from geojson_vt_spark.operators.engine import GeoJSONVTSpark
 
 from .conftest import load_fixture
-from .util import deep_equal
+from .util import count_jobs, deep_equal
 
 SQUARE = [
     {
@@ -159,3 +159,24 @@ def test_get_tile_x_wrap(spark):
     t = eng.get_tile(1, 0, 0)
     # x=-2 wraps to x=0 at z1 (tile-index.ts:86)
     assert eng.get_tile(1, -2, 0) == t
+
+
+def test_hit_job_budget(spark):
+    """A stored tile is one shared lookup (read_tiles): 1 Spark job on a
+    fresh engine (the store is the subtree kernel's checkpoint), at most 2
+    after update_data (the rebuilt root's registry rows join the level's
+    num_simplified aggregate, one more shuffle stage)."""
+    eng = GeoJSONVTSpark(
+        spark, data=load_fixture("us-states.json"),
+        options=Options(updateable=True, index_max_zoom=7, index_max_points=200),
+    )
+    want = eng.all_tiles()
+    for key in ((0, 0, 0), (7, 37, 48)):
+        tile, jobs = count_jobs(spark, lambda: eng.get_tile(*key))
+        assert tile == want["z%d-%d-%d" % key] and jobs == 1, (key, jobs)
+    eng.update_data({"add": [{
+        "type": "Feature", "id": "added", "properties": {},
+        "geometry": {"type": "Point", "coordinates": [-74.5, 40.0]},
+    }]})
+    tile, jobs = count_jobs(spark, lambda: eng.get_tile(0, 0, 0))
+    assert "added" in [f.get("id") for f in tile] and jobs <= 2, jobs

@@ -187,6 +187,31 @@ def test_get_tile_ancestor_lookup_is_pruned(spark):
     assert len(rows) <= len(anc)
 
 
+def test_tile_lookup_folds_away_cached_sources(spark):
+    """The store is one list of kind-tagged frames; a stopped level's
+    retained sources are a lazily cached branch tagged with a literal kind.
+    A tile lookup's kind filter must fold that branch away in the optimized
+    plan (through the invalidation anti-join too), or every tile read would
+    materialize the cache."""
+    from geojson_vt_spark.config import Options
+    from geojson_vt_spark.operators.engine import GeoJSONVTSpark
+    from geojson_vt_spark.sources.tile_store import lookup_frame
+
+    from .conftest import load_fixture
+
+    eng = GeoJSONVTSpark(
+        spark, data=load_fixture("us-states.json"),
+        options=Options(updateable=True),
+    )
+    eng.update_data({"add": [{
+        "type": "Feature", "id": "added", "properties": {},
+        "geometry": {"type": "Point", "coordinates": [-74.5, 40.0]},
+    }]})
+    assert "InMemoryRelation" in _optimized(eng.store.sources_df())
+    opt = _optimized(lookup_frame(eng.store.frame(), [(0, 0, 0)]))
+    assert "InMemoryRelation" not in opt, opt[:3000]
+
+
 def test_cluster_tree_rows_broadcasts_window_not_points(spark):
     """Cluster range queries: the broadcast build sides are the FILTERED
     tree window and the window-pruned points — the full points table is

@@ -1,15 +1,17 @@
 """On-disk tile store (sources/tile_store.py): the written layout must serve
 get_tile byte-identically to the live engine for every materialized tile,
-and the point lookup must be pruned — z at the partition level, x/y pushed
-into the scan — visible in the plan, not assumed."""
+the point lookup must be pruned — z at the partition level, x/y pushed
+into the scan — visible in the plan, not assumed, and every read is one
+Spark job."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from geojson_vt_spark.config import Options
 from geojson_vt_spark.operators.engine import GeoJSONVTSpark
+from geojson_vt_spark.sources.tile_store import lookup_frame
 
 from .conftest import load_fixture
+from .util import count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -56,7 +58,7 @@ def test_point_lookup_is_pruned(built):
     the scan as PushedFilters (row-group stats pruning over the sorted
     layout)."""
     _eng, srv = built
-    df = srv._key_filter(srv.tiles, 7, 37, 48)
+    df = lookup_frame(srv.store, [(7, 37, 48)])
     plan = df._jdf.queryExecution().executedPlan().toString()
     scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     assert scan_lines, plan
@@ -111,22 +113,9 @@ def test_batch_get_tiles_scan_is_pruned(spark, built):
     keys = srv.all_tile_keys()
     zs = sorted({z for z, _x, _y in keys})
     pick = [next(k for k in keys if k[0] == z) for z in zs[:2]]
-    # reproduce the filter get_tiles builds, gate its plan + metrics
+    # the frame get_tiles collects: gate its plan + metrics
     sub_zs = sorted({z for z, _x, _y in pick})
-    xs = sorted({x for _z, x, _y in pick})
-    ys = sorted({y for _z, _x, y in pick})
-    packed = [(z << 50) | (x << 25) | y for z, x, y in pick]
-    key_col = (
-        F.shiftleft(F.col("z").cast("long"), 50)
-        + F.shiftleft(F.col("x").cast("long"), 25)
-        + F.col("y").cast("long")
-    )
-    df = srv.tiles.where(
-        F.col("z").isin(sub_zs)
-        & F.col("x").isin(xs)
-        & F.col("y").isin(ys)
-        & key_col.isin(packed)
-    )
+    df = lookup_frame(srv.store, pick)
     plan = df._jdf.queryExecution().executedPlan().toString()
     line = [ln for ln in plan.splitlines() if "PartitionFilters" in ln][0]
     part = line.split("PartitionFilters:", 1)[1].split("PushedFilters:")[0]
@@ -147,3 +136,21 @@ def test_batch_get_tiles_scan_is_pruned(spark, built):
     # and the filter semantics stay exact
     got = {(r.z, r.x, r.y) for r in df.select("z", "x", "y").collect()}
     assert got <= set(pick)
+
+
+def test_disk_reads_are_one_job_each(spark, built):
+    """One pruned scan per read: a stored tile, a registered-but-empty tile
+    and a never-built key each cost one Spark job, and so does a batch."""
+    eng, srv = built
+    tiles = eng.all_tiles()
+    stored = next(k for k, v in tiles.items() if v)
+    empty = next(k for k, v in tiles.items() if not v)
+    for key, want in ((stored, tiles[stored]), (empty, [])):
+        z, x, y = (int(v) for v in key[1:].split("-"))
+        got, jobs = count_jobs(spark, lambda: srv.get_tile(z, x, y))
+        assert got == want and jobs == 1, (key, jobs)
+    got, jobs = count_jobs(spark, lambda: srv.get_tile(14, 0, 0))
+    assert got is None and jobs == 1
+    keys = srv.all_tile_keys()[:25]
+    got, jobs = count_jobs(spark, lambda: srv.get_tiles(keys))
+    assert len(got) == len(keys) and jobs == 1

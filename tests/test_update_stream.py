@@ -128,7 +128,7 @@ def test_out_of_order_seq_warns_and_strict_raises(spark):
         [(5, json.dumps(DIFFS[0]))], ["seq", "diff"]
     )
     with warnings.catch_warnings():
-        warnings.simplefilter("error")  # no warning expected on first batch
+        warnings.simplefilter("error", UserWarning)  # no stale-seq warning on the first batch
         assert apply_diff_batch(eng, b1) == 1
     assert eng._diff_seq_watermark == 5
 

@@ -42,3 +42,19 @@ def assert_tiles_equal(got: dict, expected: dict, tol=1e-9):
     for k in expected:
         ok, p = deep_equal(got[k], expected[k], tol, k)
         assert ok, f"tile {k} differs at {p}"
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
