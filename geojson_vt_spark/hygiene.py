@@ -9,28 +9,30 @@ sets, (2) drop boilerplate lines that repeat across the corpus, (3) redact
 PII, and (4) pack documents into fixed token-budget training sequences.
 
 Every operator here is pure Column algebra — whole-stage codegen, zero
-Python rows — and every driver query has a full-pipeline DuckDB oracle.
+Python rows — with one production plan each, and every driver query has a
+full-pipeline DuckDB oracle. Where the right join depends on data size, AQE
+picks it from the measured size at runtime; no caller picks a plan.
 
 Scale shapes (the 100 TB story, per operator):
 
 * decontaminate — the eval set's shingle table is tiny (eval suites are
   thousands of docs, not billions); it is DISTINCT-ed and broadcast. The
   corpus side explodes shingles but only rows that MATCH the broadcast ever
-  reach the (partial-agg) count shuffle, and the hit table that joins back
-  onto the corpus is again broadcast. Net: two corpus scans, zero corpus
-  shuffles.
+  reach the (partial-agg) count shuffle. The hit table joins back onto the
+  corpus ids as a plain left join: its size is the contaminated-doc count,
+  so AQE broadcasts it when small and shuffles it under mass contamination.
 * line_dedup — pass 1 computes corpus-wide line frequencies via explode +
-  partial-agg groupBy (the only shuffle, and map-side combine collapses it
-  to ~unique-lines volume); lines above the threshold are aggregated into
-  ONE array row and broadcast; pass 2 rebuilds every document with a
-  `filter` lambda against that array — no corpus shuffle, order preserved
-  positionally.
+  partial-agg groupBy (map-side combine collapses it to ~unique-lines
+  volume); pass 2 posexplodes every document's lines, marks the frequent
+  ones with an equi-join on the line (AQE: broadcast-hash or shuffle join by
+  the frequent-line table's size) and reassembles each document with one
+  groupBy on the id, order restored from the line positions.
 * pii_scrub — embarrassingly parallel regexp Column ops; nothing shuffles.
-* sequence_pack — a running-sum window partitioned by source: each source
-  packs independently (one shuffle on source). A single mega-source
-  serializes inside its partition; at corpus scale you pre-split sources
-  into bounded shards upstream (documented, same trade as any
-  order-dependent packing).
+* sequence_pack — two-level packing: a range exchange cuts every source
+  into order-contiguous shards (`spark.sql.shuffle.partitions` of them),
+  shard-local running sums plus a broadcast cumsum of the tiny per-shard
+  totals give the exact global per-source bins, so a giant source packs
+  across many tasks instead of one window partition.
 """
 
 from __future__ import annotations
@@ -95,9 +97,8 @@ def contamination_hits(
     all-docs audit frame (a second corpus scan).
 
     The RESULT's size is bounded by the contaminated-doc count, not the
-    eval-set size; consumers that broadcast it (decontaminate's default
-    join-back, the pipeline's anti-join) inherit that bound — see
-    decontaminate's hits_join knob for the mass-contamination fallback."""
+    eval-set size: consumers join it back without a broadcast hint, so AQE
+    broadcasts it only while that count is small."""
     eval_shingles = (
         eval_docs.select(
             F.explode(ngram_shingles(F.col(text_col), n, hash_fn)).alias(
@@ -126,7 +127,6 @@ def decontaminate(
     id_col: str = "doc_id",
     n: int = DECONTAM_NGRAM,
     hash_fn: str = "xxhash64",
-    hits_join: str = "broadcast",
 ) -> DataFrame:
     """Flag corpus documents sharing any n-gram shingle with the eval set.
 
@@ -136,17 +136,12 @@ def decontaminate(
     SIZE BOUND (ADVICE r4): the hit table joined back here is bounded by
     the number of CONTAMINATED CORPUS DOCS — not by the eval-set size. A
     clean-ish corpus keeps it tiny, but a boilerplate string shared
-    between one eval doc and millions of corpus docs makes the broadcast
-    (and the pipeline's contaminated-id set) the failure point. For
-    corpora where mass contamination is plausible, pass
-    hits_join="shuffle": the join back runs as a plain equi-join on
-    doc_id (one corpus-id shuffle, no driver-size dependency) with
-    identical rows."""
+    between one eval doc and millions of corpus docs makes it corpus-sized.
+    The join back is therefore a plain left equi-join on doc_id: AQE
+    broadcasts the hits from their measured size when they are small and
+    shuffles both sides when they are not (plan-gated in
+    tests/test_plans.py under autoBroadcastJoinThreshold=-1)."""
     hits = contamination_hits(corpus, eval_docs, text_col, id_col, n, hash_fn)
-    if hits_join == "broadcast":
-        hits = F.broadcast(hits)
-    elif hits_join != "shuffle":
-        raise ValueError(f"decontaminate: unknown hits_join {hits_join!r}")
     return corpus.select(id_col).join(hits, id_col, "left").select(
         id_col,
         F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
@@ -184,7 +179,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # md5 pinned so the DuckDB oracle replays the identical shingle keys;
-    # the library default stays xxhash64 (same split simhash_dedup uses)
+    # the library default stays xxhash64 (same split minhash uses)
     return decontaminate(corpus, evals, hash_fn="md5")
 
 
@@ -247,51 +242,28 @@ def doc_lines(text_col, line_tokens: int = LINE_TOKENS):
     )
 
 
-LINE_BOILER_CAP = 4_096  # ceiling for the broadcast-array rebuild engine
-
-
 def line_dedup(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     line_tokens: int = LINE_TOKENS,
     max_count: int = LINE_MAX_COUNT,
-    engine: str = "auto",
-    boiler_cap: int | None = LINE_BOILER_CAP,
 ) -> DataFrame:
     """Remove corpus-frequent lines from every document. Returns
     (doc_id, n_lines, n_kept, kept_md5); kept_md5 hashes the surviving
     lines joined in document order.
 
-    Two rebuild engines (equality-tested), because the right plan depends
-    on how big the frequent-line set is:
+    Plan: posexplode lines, mark the frequent ones with an equi-join on the
+    line, and reassemble each document with ONE groupBy(doc_id), order
+    restored by sorting the collected (pos, line) structs. The size-adaptive
+    choice is AQE's at runtime: the frequent-line table's measured size
+    picks broadcast-hash vs shuffle join inside one plan, so the cost per
+    line is a hash lookup at any boilerplate volume. Building the frame runs
+    zero jobs.
 
-    * 'array' — frequent lines collapse into ONE array row, broadcast, and
-      every document rebuilds with a positional `filter` lambda: zero
-      corpus shuffle, but the lambda's array_contains is a LINEAR scan of
-      the boiler array per line, so cost is O(lines x |boiler|) — only
-      right when boilerplate is genuinely tiny (hundreds). A lazy
-      assert_true guard fails the job past `boiler_cap` rather than let
-      that quadratic term run away (measured: a 16x-duplicated 80k-doc
-      corpus put ~25k lines over threshold and the array engine took 300+ s
-      where the join engine takes seconds).
-    * 'join' — posexplode lines, mark frequent ones with an equi-join
-      (AQE picks broadcast vs shuffle by the freq table's real size), and
-      reassemble each document with ONE groupBy(doc_id): order restored by
-      sorting the collected (pos, line) structs. One corpus shuffle,
-      hash-lookup cost per line — the 100 TB shape.
-    * 'auto' (default) — the join engine, LAZILY: construction runs zero
-      jobs (the r4 verdict's eager count is gone), and the size-adaptive
-      decision the old eager pick made is now AQE's at runtime — the freq
-      side's measured size chooses broadcast-hash vs shuffle join inside
-      ONE plan. The array engine's only remaining edge over an
-      AQE-broadcast join is skipping the corpus reassembly shuffle; pin
-      engine='array' explicitly for genuinely tiny boiler sets on hot
-      paths (the driver query does). boiler_cap is ignored under auto.
-
-    Null-text documents are excluded from the output (both engines,
-    identically — posexplode of a null array would silently drop them
-    from the join engine only; filter or coalesce upstream to keep them).
+    Null-text documents are excluded from the output (posexplode of a null
+    array would drop them silently; filter or coalesce upstream to keep
+    them).
     """
     docs = docs.where(F.col(text_col).isNotNull())
     lines = docs.select(
@@ -302,74 +274,29 @@ def line_dedup(
         .groupBy("line")
         .agg(F.count(F.lit(1)).alias("n"))
         .where(F.col("n") > max_count)
-        .select("line")
+        .select("line", F.lit(True).alias("_boiler"))
     )
-    if engine == "auto":
-        engine = "join"
-
-    if engine == "join":
-        ex = lines.select(
-            F.col(id_col),
-            F.size("lines").alias("n_lines"),
-            F.posexplode("lines").alias("pos", "line"),
-        )
-        marked = ex.join(
-            freq.withColumn("_boiler", F.lit(True)), "line", "left"
-        )
-        ordered = F.array_sort(
-            F.collect_list(F.struct("pos", "line", "_boiler"))
-        )
-        kept_lines = F.transform(
-            F.filter(ordered, lambda s: ~F.coalesce(s["_boiler"], F.lit(False))),
-            lambda s: s["line"],
-        )
-        return marked.groupBy(id_col).agg(
-            F.first("n_lines").cast("long").alias("n_lines"),
-            F.size(kept_lines).cast("long").alias("n_kept"),
-            F.md5(F.concat_ws("\n", kept_lines)).alias("kept_md5"),
-        )
-
-    if engine != "array":
-        raise ValueError(f"line_dedup: unknown engine {engine!r}")
-    frequent = freq.agg(F.collect_set("line").alias("boiler")).select(
-        F.coalesce("boiler", F.array().cast("array<string>")).alias("boiler")
+    ex = lines.select(
+        F.col(id_col),
+        F.size("lines").alias("n_lines"),
+        F.posexplode("lines").alias("pos", "line"),
     )
-    if boiler_cap is not None:
-        # same lazy-guard pattern as ngram_jaccard_pairs: assert_true is
-        # NULL on pass, so the filter keeps the row and survives Catalyst
-        # (a when() with identical branches would be folded away)
-        frequent = frequent.where(
-            F.assert_true(
-                F.size("boiler") <= boiler_cap,
-                F.format_string(
-                    "line_dedup: %s distinct lines exceed boiler_cap="
-                    f"{boiler_cap} — the broadcast-array rebuild is the "
-                    "wrong plan at this volume; use engine='join'.",
-                    F.size("boiler"),
-                ),
-            ).isNull()
-        )
-    kept = F.filter(
-        "lines", lambda x: ~F.array_contains(F.col("boiler"), x)
+    ordered = F.array_sort(
+        F.collect_list(F.struct("pos", "line", "_boiler"))
     )
-    return (
-        lines.crossJoin(F.broadcast(frequent))
-        .select(
-            id_col,
-            F.size("lines").cast("long").alias("n_lines"),
-            F.size(kept).cast("long").alias("n_kept"),
-            F.md5(F.concat_ws("\n", kept)).alias("kept_md5"),
-        )
+    kept_lines = F.transform(
+        F.filter(ordered, lambda s: ~F.coalesce(s["_boiler"], F.lit(False))),
+        lambda s: s["line"],
+    )
+    return ex.join(freq, "line", "left").groupBy(id_col).agg(
+        F.first("n_lines").cast("long").alias("n_lines"),
+        F.size(kept_lines).cast("long").alias("n_kept"),
+        F.md5(F.concat_ws("\n", kept_lines)).alias("kept_md5"),
     )
 
 
 def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # engine pinned: 'auto' would run its engine-picking count job at
-    # query-BUILD time (the construction-time-scan anti-pattern a round-3
-    # review removed from ngram_jaccard_pairs), and the synthetic corpus's
-    # boiler set is tiny, which is exactly the array engine's case. The
-    # join engine is equality-tested against it in test_hygiene.py.
-    return line_dedup(_docs(spark, sf_dir), engine="array")
+    return line_dedup(_docs(spark, sf_dir))
 
 
 SQL_LINE_DEDUP = f"""
@@ -503,35 +430,33 @@ PACK_BUDGET = 256  # tokens per training sequence in the driver query
 
 
 def _sharded_binned(
-    base: DataFrame,
-    budget: int,
-    id_col: str,
-    part_col: str,
-    n_shards: int,
+    base: DataFrame, budget: int, id_col: str, part_col: str
 ) -> DataFrame:
-    """Two-level (sharded) bin assignment: exact same bins as the global
-    per-source window, computed WITHOUT ever serializing a whole source
-    through one task.
+    """Two-level (sharded) bin assignment: exact same bins as a global
+    per-source running-sum window, computed WITHOUT ever serializing a whole
+    source through one task.
 
-    Level 1 — shard: `repartitionByRange(n_shards, part_col, id_col)` cuts
-    every source into order-contiguous doc_id runs (`shard` is the range
-    partition id, read inside the post-exchange stage). The running sum
-    within each (shard, source) run is a window over at most one shard of
-    rows — distributed across tasks.
+    Level 1 — shard: `repartitionByRange(part_col, id_col)` into
+    `spark.sql.shuffle.partitions` ranges cuts every source into
+    order-contiguous doc_id runs (`shard` is the range partition id, read
+    inside the post-exchange stage). The running sum within each (shard,
+    source) run is a window over at most one shard of rows — distributed
+    across tasks.
 
     Level 2 — offset: the per-(shard, source) token totals are a tiny table
-    (<= n_shards + n_sources rows, since shards are contiguous); a cumsum
+    (<= n_ranges + n_sources rows, since shards are contiguous); a cumsum
     over it per source gives each run's global prefix offset, broadcast
     back. `offset + local_prefix` reconstructs the exact global per-source
-    prefix sum for ANY contiguous sharding, so bins are identical to the
-    single-window engine regardless of where the sampled range boundaries
-    land (equality-tested in tests/test_hygiene.py) — as long as both levels
+    prefix sum for ANY contiguous sharding, so bins do not depend on where
+    the sampled range boundaries land (equality-tested against the
+    one-window formula in tests/test_hygiene.py) — as long as both levels
     read the SAME sharding. Two evaluations of the range exchange sample
     their bounds independently, so `sharded` is cached: both levels scan one
     materialization even when Spark does not reuse the exchange
     (spark.sql.exchange.reuse=false)."""
+    n_ranges = int(base.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     sharded = (
-        base.repartitionByRange(n_shards, F.col(part_col).asc(), F.col(id_col).asc())
+        base.repartitionByRange(n_ranges, F.col(part_col).asc(), F.col(id_col).asc())
         .withColumn("shard", F.spark_partition_id())
         .cache()
     )
@@ -572,22 +497,16 @@ def sequence_pack(
     id_col: str = "doc_id",
     part_col: str = "source",
     n_tokens_col: str | None = None,
-    engine: str = "sharded",
-    n_shards: int | None = None,
 ) -> DataFrame:
     """Pack documents into fixed token-budget training sequences by
     concatenation order (the standard pretraining packing: documents are
     concatenated per source in doc_id order and chunked every `budget`
     tokens; a document belongs to the bin its first token lands in).
 
-    Engines (identical bins, equality-tested):
-    - "sharded" (default, the 100 TB path): two-level packing via
-      `_sharded_binned` — a 10 TB source packs across n_shards tasks
-      instead of serializing through one window partition. One range
-      exchange + one hash exchange on the corpus, plus a broadcast of the
-      tiny per-shard offset table.
-    - "window": the single global window per source (one shuffle, but one
-      task per source — fine when every source is bounded).
+    Plan: two-level packing via `_sharded_binned` — a 10 TB source packs
+    across `spark.sql.shuffle.partitions` tasks instead of serializing
+    through one window partition. One range exchange + one hash exchange on
+    the corpus, plus a broadcast of the tiny per-shard offset table.
 
     Returns per-bin rows: (source, bin, n_docs, n_tokens, first_doc,
     last_doc).
@@ -602,24 +521,7 @@ def sequence_pack(
         else F.size(F.split(F.col(text_col), " ")).cast("long")
     )
     base = docs.select(part_col, id_col, n_tok.alias("n_tokens"))
-    if engine == "window":
-        w = (
-            Window.partitionBy(part_col)
-            .orderBy(id_col)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        binned = base.withColumn(
-            "bin",
-            F.floor((F.sum("n_tokens").over(w) - F.col("n_tokens")) / budget),
-        )
-    elif engine == "sharded":
-        if n_shards is None:
-            n_shards = int(
-                docs.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        binned = _sharded_binned(base, budget, id_col, part_col, n_shards)
-    else:
-        raise ValueError(f"unknown sequence_pack engine: {engine!r}")
+    binned = _sharded_binned(base, budget, id_col, part_col)
     return binned.groupBy(part_col, "bin").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("n_tokens"),

@@ -52,42 +52,37 @@ class GeoJSONVTSpark:
             if data is None:
                 raise ValueError("provide GeoJSON data or a features_df")
             rows = geojson_to_feature_rows(data, self.options)
-            features_df = local_frame(spark, rows, FEATURE_SCHEMA) if rows else None
+            features_df = local_frame(spark, rows, FEATURE_SCHEMA)
 
-        if features_df is not None and features_df.isEmpty():
-            features_df = None
-
-        # updateable source snapshot (geojsonvt.ts:57-59)
+        # updateable source snapshot (geojsonvt.ts:57-59). The caller's plan
+        # runs once: the snapshot here, or the build's frontier checkpoint;
+        # an empty input is found from data already computed, never by a
+        # probe job over the caller's plan.
         self.source_df: Optional[DataFrame] = None
         self._batch = 3  # okey batch prefix for appended diffs (init uses 0-2)
+        if self.options.updateable or self.options.cluster:
+            features_df = features_df.localCheckpoint(eager=True)
         if self.options.updateable:
-            self.source_df = (
-                features_df.localCheckpoint(eager=True)
-                if features_df is not None
-                else local_frame(spark, [], FEATURE_SCHEMA)
-            )
-            features_df = self.source_df if features_df is not None else None
+            self.source_df = features_df
 
         self.cluster_index: Optional[ClusterTileIndexSpark] = None
         if self.options.cluster:
             # cluster mode (geojsonvt.ts:64-68): ClusterTileIndex over the
-            # wrapped point features instead of the tile pyramid
+            # wrapped point features instead of the tile pyramid; empty
+            # input leaves it uninitialized (the probe reads the checkpoint)
             self.store = PyramidStore(spark)
             self.cluster_index = ClusterTileIndexSpark(
                 spark, self.options.cluster_options
             )
-            if features_df is not None:
+            if not features_df.isEmpty():
                 self.cluster_index.initialize_df(features_df)
             return
 
-        self.store: PyramidStore
-        if features_df is None:
-            # empty input -> empty index (geojsonvt.ts:64-67 skips initialize)
-            self.store = PyramidStore(spark)
-        else:
-            self.store = build_pyramid(
-                features_df, self.options, workdir=workdir, resume=resume
-            )
+        # empty input -> empty index (geojsonvt.ts:64-67 skips initialize):
+        # build_pyramid's first pass appends nothing when z0 holds no rows
+        self.store: PyramidStore = build_pyramid(
+            features_df, self.options, workdir=workdir, resume=resume
+        )
 
     # -- queries ------------------------------------------------------------
 

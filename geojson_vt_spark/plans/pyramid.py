@@ -509,7 +509,8 @@ def build_pyramid(
 
     features_df: FEATURE_SCHEMA rows already assigned to the `start` tile.
     target: (cz, cx, cy) for drill-down mode (getTile miss), else None for the
-            first-pass indexing run.
+            first-pass indexing run, which appends nothing to the store when
+            features_df holds no rows.
     registered: tile keys the store already holds (drill-down re-entry: the
             start tile, and siblings an earlier drill-down registered that
             an update left valid). The reference keeps an existing tile
@@ -601,6 +602,10 @@ def build_pyramid(
             # Tile DATA stays distributed; only per-tile counters come back.
             got = {(r.z, r.x, r.y): r for r in stats.collect()}
             t0 = _tick("stats collect (JVM counters)", t0)
+            if not got and target is None and z == z0:
+                # empty input: no root tile, like the reference, which
+                # skips splitTile when there are no features
+                return store
             skel_rows = []
             split_list: list = []
             stop_list: list = []  # stopped tiles that hold rows

@@ -319,8 +319,8 @@ WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
 _SQL_MINHASH_ORACLE = _sql_minhash_replay()
 
 
-# DuckDB replay of the full simhash pipeline over md5-derived bits (same
-# bits the Spark md5_16 variant uses; banding is omitted because it is
+# DuckDB replay of the full simhash pipeline over md5-derived bits (the
+# same bits q_simhash_dedup uses; banding is omitted because it is
 # recall-exact — pairs(ham<=3, same source) IS the ground truth)
 _NIB = "(strpos('0123456789abcdef', substr(md5(t), {pos}, 1)) - 1)"
 _H16 = " + ".join(
@@ -351,40 +351,31 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 """
 
 
-def q_simhash_dedup(
-    spark, sf_dir, hash_fn: str = "xxhash64", bucket_cap: int | None = None
-):
+def q_simhash_dedup(spark, sf_dir):
     """16-bit simhash per document; near-dup pairs = same source, Hamming
     distance <= 3. Candidates via 4 bands of 4 bits (pigeonhole: ham <= 3
     over 4 bands forces >= 1 identical band, so recall is EXACTLY 1 —
     banding here is a pure shuffle-reduction, not an approximation).
 
-    hash_fn picks the per-token bit source: "xxhash64" (default; fastest,
-    pure JVM) or "md5_16" (low 16 bits of md5's hex — bit-identical across
-    engines, so the DuckDB oracle can replay the whole pipeline; recall
-    exactness is hash-agnostic).
+    The per-token bit source is the low 16 bits of md5's hex: bit-identical
+    across engines, so the DuckDB oracle replays the whole pipeline (recall
+    exactness is hash-agnostic). md5-of-string per token row is the replay
+    tax, so each DISTINCT token is hashed once and the dictionary broadcast
+    back (same move as minhash_signatures vocab_broadcast).
 
-    bucket_cap: optional hot-bucket guard (see _cap_hot_buckets). Default
-    OFF because capping breaks the pigeonhole recall-exactness this entry
-    advertises (and its ground-truth oracle); at web scale, where one
-    4-bit band value can hold n_source/16 docs, the honest scale levers are
-    a wider simhash + more/narrower bands, with the cap as the last-resort
-    bound (turn it on knowing recall drops inside mega-buckets)."""
+    No hot-bucket cap: capping would break the pigeonhole recall-exactness
+    this entry advertises (and its ground-truth oracle); at web scale, where
+    one 4-bit band value can hold n_source/16 docs, the scale levers are a
+    wider simhash + more/narrower bands."""
     d = _t(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
         "source",
         F.explode(F.array_distinct(F.split("text", " "))).alias("t"),
     )
-    if hash_fn == "md5_16":
-        # md5-of-string per token row is the oracle-replay tax: hash each
-        # DISTINCT token once and broadcast the dictionary back (same move
-        # as minhash_signatures vocab_broadcast)
-        h = F.conv(F.substring(F.md5(F.col("t")), 29, 4), 16, 10).cast("long")
-        vocab = tok.select("t").distinct().select("t", h.alias("h"))
-        tok = tok.join(F.broadcast(vocab), "t")
-    else:
-        tok = tok.withColumn("h", F.xxhash64("t"))
+    h = F.conv(F.substring(F.md5(F.col("t")), 29, 4), 16, 10).cast("long")
+    vocab = tok.select("t").distinct().select("t", h.alias("h"))
+    tok = tok.join(F.broadcast(vocab), "t")
     contribs = [
         F.sum(
             F.when(F.shiftright("h", i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -419,7 +410,6 @@ def q_simhash_dedup(
             )
         ).alias("b"),
     ).select("doc_id", "source", "simhash", "b.band", "b.bval")
-    bands = _cap_hot_buckets(bands, ["source", "band", "bval"], bucket_cap)
     cand = (
         bands.alias("x")
         .join(bands.alias("y"), ["source", "band", "bval"])
@@ -778,10 +768,11 @@ def q_ann_cosine_topk_ivf(
 
     Everything stays JVM-side codegen (zip_with/aggregate folds) so the
     DuckDB oracle replays the FULL pipeline — centroid choice, assignment
-    argmax, probe set, refine. At corpus scale the assignment fold is the
-    knob to swap for a mapInPandas matmul (batch @ centroids.T) and nlist
-    grows toward sqrt(n); the plan shape (broadcast centroids, list_id
-    equi-semijoin, candidate-only refine) is unchanged."""
+    argmax, probe set, refine — with no Python crossing. At corpus scale
+    nlist grows toward sqrt(n) and the plan shape (broadcast centroids,
+    list_id probe filter, candidate-only refine) is unchanged; an index
+    written once (`ivf_index_write`) lets `ann_topk_ivf_indexed` skip the
+    non-probed lists at the file level."""
     e = _t(spark, sf_dir, "embeddings")
     cents = _ivf_centroids(e, nlist)
     ranked = _ivf_rank_structs(cents)
@@ -852,88 +843,19 @@ SELECT vec_id, cos, rank FROM (
 """
 
 
-def ann_topk_ivf_matmul(
-    embeddings: DataFrame,
-    query_id: int = 0,
-    nlist: int = 16,
-    nprobe: int = 4,
-    k: int = 10,
-) -> DataFrame:
-    """The corpus-scale IVF execution the codegen variant's docstring names:
-    one fused Arrow mapInPandas scan — per batch, assignment is a single
-    `E_hat @ C_hat.T` matmul against the broadcast unit-normalized centroid
-    matrix, the probe filter is a numpy isin mask, and the exact cosine
-    refine (`E_hat[mask] @ q_hat`) runs over surviving candidates only. No
-    joins, no shuffle until the final top-k reduction: the plan is
-    scan -> ArrowEval -> window, so at 100 TB the cost is one streaming
-    pass at memory bandwidth plus ~nprobe/nlist of the rows paying a
-    d-length dot (the non-probed rows pay only the nlist-length assignment
-    row). The storage-layout continuation is writing the corpus partitioned
-    by list_id so non-probed lists are never read at all.
-
-    Contract vs q_ann_cosine_topk_ivf: identical centroid pick, assignment
-    argmax (round-6 cosine, ties to the smaller centroid rank — np.argmax's
-    first-max tie rule over rank-ordered columns), probe set, and top-k
-    ordering. BLAS pairwise summation differs from the sequential fold in
-    the last ulps, so the equality contract is ids+ranks (and cos to 1e-6),
-    not bit parity — tests/test_ivf_matmul.py gates it both against the
-    codegen IVF query and, at full probe, the brute-force exact top-k."""
-    import numpy as np
-
-    cents = _ivf_centroids(embeddings, nlist)
-    C = np.array([c for _, c in cents], dtype=np.float64)
-    C_hat = C / np.linalg.norm(C, axis=1, keepdims=True)
-    qrows = embeddings.where(F.col("vec_id") == query_id).select("embedding").collect()
-    q = np.array(qrows[0][0], dtype=np.float64)
-    q_hat = q / np.linalg.norm(q)
-    # Probe selection mirrors _ivf_rank_structs on the query row: round-6
-    # HALF_UP cosine (Spark F.round semantics; np.round would tie to even),
-    # ties to the smaller rank (argsort is stable over rank order).
-    qcos = np.array([_round6_half_up(v) for v in (C_hat @ q_hat)])
-    probe_ranks = (np.argsort(-qcos, kind="stable")[:nprobe] + 1).astype(np.int64)
-    probes = frozenset(int(r) for r in probe_ranks)
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            E_hat = E / np.linalg.norm(E, axis=1, keepdims=True)
-            # first-max argmax == smallest centroid rank among round-6 ties;
-            # HALF_UP to match the codegen F.round (see _round6_half_up_np)
-            assign = np.argmax(_round6_half_up_np(E_hat @ C_hat.T), axis=1) + 1
-            ids = pdf["vec_id"].to_numpy()
-            mask = np.isin(assign, list(probes)) & (ids != query_id)
-            if not mask.any():
-                continue
-            yield pd.DataFrame(
-                {
-                    "vec_id": ids[mask],
-                    "cos": _round6_half_up_np(E_hat[mask] @ q_hat),
-                }
-            )
-
-    scanned = embeddings.select("vec_id", "embedding").mapInPandas(
-        kernel, "vec_id long, cos double"
-    )
-    return ranked_topk(scanned, k)
-
-
 def ivf_index_write(embeddings: DataFrame, path: str, nlist: int = 16) -> None:
     """Materialize the IVF index as storage layout: the corpus written
     `partitionBy("list_id")` (each inverted list is a physical parquet
     directory) plus the tiny centroid table beside it. This is the 100 TB
-    continuation the in-memory IVF variants name — once lists are
-    directories, a probe-filtered query never READS non-probed lists at all
-    (Catalyst partition pruning, not a post-scan filter), so query cost is
-    ~nprobe/nlist of the corpus bytes.
+    continuation of the scan-time IVF query (q_ann_cosine_topk_ivf) — once
+    lists are directories, a probe-filtered query never READS non-probed
+    lists at all (Catalyst partition pruning, not a post-scan filter), so
+    query cost is ~nprobe/nlist of the corpus bytes.
 
     Assignment uses the same codegen rank fold as q_ann_cosine_topk_ivf
     (round-6 cosine vs broadcast centroid literals, ties to the smaller
     centroid rank), so an index written here answers queries identically to
-    the scan-time variants — asserted in tests/test_ivf_indexed.py."""
+    the scan-time query — asserted in tests/test_ivf_indexed.py."""
     spark = embeddings.sparkSession
     cents = _ivf_centroids(embeddings, nlist)
     ranked = _ivf_rank_structs(cents)
@@ -1016,18 +938,6 @@ def _round6_half_up(x: float) -> float:
     )
 
 
-def _round6_half_up_np(x):
-    """Vectorized HALF_UP round-6 for the Arrow batch kernels (numpy has no
-    decimal mode; np.round is half-to-even). floor(|x|*1e6 + 0.5) with the
-    sign restored implements HALF_UP exactly except when x*1e6 itself
-    rounds across the .5 boundary in float64 — off the exact contract by
-    at most 1 ulp of the 6th decimal, and the equality contract for the
-    matmul path is ids+ranks (cos to 1e-6), not bit parity."""
-    import numpy as np
-
-    return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
-
-
 def _seq_round6_cos(a: list, b: list) -> float:
     """Driver-side twin of _cos_lit + F.round(.., 6): sequential float64
     left folds in the same order and a BigDecimal-faithful HALF_UP quantize
@@ -1060,8 +970,8 @@ def ann_topk_ivf_indexed(
     excludes non-probed list directories, so unprobed corpus bytes are
     never opened (plan-gated: PartitionFilters on list_id, candidate scan
     only). Refine is the exact round-6 cosine fold against the query
-    literal + a top-k window — identical ordering contract to the other
-    IVF variants."""
+    literal + a top-k window — identical ordering contract to the
+    scan-time IVF query."""
     cents = [
         (int(r.rk), [float(v) for v in r.embedding])
         for r in spark.read.parquet(f"{path}/centroids").collect()
@@ -1398,10 +1308,11 @@ def semantic_dedup_keep(
     Scale shape: the clustering is the broadcast-literal Lloyd pass; the
     near-dup search is one banded equi-join whose buckets shrink by the
     cluster fan-out; CC runs over the tiny pair graph; the final drop-list
-    is broadcast anti-joined — the corpus is never all-pairs joined and
-    never shuffled for the keep step. The documented recall trade is
-    SemDeDup's own: near-dups that straddle a cluster boundary are not
-    searched (raise k-means `iters`/lower `k` to tighten)."""
+    is anti-joined without a hint (`drop_cluster_members`: AQE broadcasts
+    it while small) — the corpus is never all-pairs joined. The documented
+    recall trade is SemDeDup's own: near-dups that straddle a cluster
+    boundary are not searched (raise k-means `iters`/lower `k` to
+    tighten)."""
     assign = (
         kmeans_embeddings(embeddings, k, iters, dim)
         .select("vec_id", "cluster")
@@ -1413,12 +1324,7 @@ def semantic_dedup_keep(
     cc = connected_components(
         pairs.select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
     )
-    drops = cc.where(F.col("doc_id") != F.col("cluster_rep")).select(
-        F.col("doc_id").alias("vec_id")
-    )
-    return assign.join(F.broadcast(drops), "vec_id", "left_anti").select(
-        "vec_id", "cluster"
-    )
+    return drop_cluster_members(assign, cc, "vec_id").select("vec_id", "cluster")
 
 
 def q_semantic_dedup_keep(spark, sf_dir):
@@ -1918,13 +1824,14 @@ def _edge_sig(both: DataFrame) -> tuple:
 
 def connected_components_star(edges: DataFrame, _stats: dict = None) -> DataFrame:
     """Alternating large-star/small-star contraction: converges in O(log n)
-    driver-synced rounds regardless of component diameter — the adversarial-
-    diameter mode (chained-template corpora) of `connected_components`,
-    whose min-label propagation pays O(diameter) rounds instead."""
+    driver-synced rounds regardless of component diameter — where
+    `connected_components` escalates on adversarial diameters
+    (chained-template corpora), since its min-label propagation pays
+    O(diameter) rounds."""
     both = _cc_bidir(edges).localCheckpoint(eager=True)
     # vertex universe up front: star contraction keeps every vertex incident
     # to an edge, but self-loop-only vertices in the INPUT must still label
-    # themselves (parity with the label-propagation mode)
+    # themselves (parity with label propagation)
     verts = (
         edges.select(F.col("src").alias("doc_id"))
         .union(edges.select(F.col("dst").alias("doc_id")))
@@ -1956,32 +1863,26 @@ def connected_components_star(edges: DataFrame, _stats: dict = None) -> DataFram
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    algorithm: str = "auto",
-    round_budget: int = 8,
-    _stats: dict = None,
-) -> DataFrame:
+_CC_ROUND_BUDGET = 8  # label-propagation rounds before star contraction
+
+
+def connected_components(edges: DataFrame, _stats: dict = None) -> DataFrame:
     """Connected components over an undirected edge list (src, dst) ->
     (doc_id, cluster_rep) for every vertex, rep = component minimum.
 
-    * ``label`` — min-label propagation: ONE shuffle per round (edge-label
-      equi-join + partial-agg min), rounds bounded by component diameter.
-      Near-dup graphs are near-cliques, so this converges in 2-3 rounds.
-    * ``star`` — large-star/small-star contraction (O(log n) rounds on any
-      diameter), see `connected_components_star`.
-    * ``auto`` (default) — label propagation with a round budget; if a
-      pathological diameter (chained templates) exhausts the budget, the
-      partial labels join the edge set as (vertex -> label) edges — keeping
-      the contraction already paid for — and star mode finishes.
+    Min-label propagation first: ONE shuffle per round (edge-label equi-join
+    + partial-agg min), rounds bounded by component diameter — near-dup
+    graphs are near-cliques, so this converges in 2-3 rounds. If a
+    pathological diameter (chained templates) is still changing labels after
+    `_CC_ROUND_BUDGET` rounds, the partial labels join the edge set as
+    (vertex -> label) edges — keeping the contraction already paid for — and
+    large-star/small-star contraction (`connected_components_star`, O(log n)
+    rounds on any diameter) finishes. The escalation is driven by the round
+    count the loop observes, not by the caller.
 
     Labels are localCheckpoint-ed per round: lineage cut + one stable frame
     per round, the same driver-synchronized-loop pattern as the kNN ring
     search."""
-    if algorithm not in ("auto", "label", "star"):
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
-    if algorithm == "star":
-        return connected_components_star(edges, _stats=_stats)
     both = edges.union(edges.select(F.col("dst"), F.col("src"))).toDF("src", "dst")
     both = both.distinct().localCheckpoint(eager=True)
     labels = (
@@ -2003,7 +1904,7 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
-        if algorithm == "auto" and rounds >= round_budget:
+        if rounds >= _CC_ROUND_BUDGET:
             if _stats is not None:
                 _stats["label_rounds"] = rounds
                 _stats["escalated"] = True
@@ -2017,6 +1918,22 @@ def connected_components(
         _stats["label_rounds"] = rounds
         _stats["escalated"] = False
     return labels.select("doc_id", F.col("label").alias("cluster_rep"))
+
+
+def drop_cluster_members(
+    frame: DataFrame, clusters: DataFrame, id_col: str = "doc_id"
+) -> DataFrame:
+    """The dedup keep rule: drop every row of `frame` whose id is a
+    non-representative member of a near-dup cluster (`clusters` =
+    connected_components output). The drop list joins as a plain left
+    anti-join: AQE broadcasts it from its measured size while it is small
+    and shuffles both sides when a web-scale corpus yields a corpus-sized
+    drop list (plan-gated in tests/test_plans.py under
+    autoBroadcastJoinThreshold=-1)."""
+    drops = clusters.where(F.col("doc_id") != F.col("cluster_rep")).select(
+        F.col("doc_id").alias(id_col)
+    )
+    return frame.join(drops, id_col, "left_anti")
 
 
 def q_dedup_cluster_cc(spark, sf_dir):
@@ -2039,30 +1956,11 @@ def q_dedup_cluster_cc(spark, sf_dir):
     return connected_components(pairs)
 
 
-def q_dedup_cluster_cc_star(spark, sf_dir):
-    """The same clusters via the large-star/small-star contraction (the
-    adversarial-diameter mode, O(log n) rounds on ANY graph shape) — output
-    is identical to label propagation by construction (both converge to the
-    component minimum), so the exact transitive-closure oracle gates this
-    engine too. bucket_cap=None for the same exact-recall contract as
-    q_dedup_cluster_cc."""
-    pairs = minhash_lsh_pairs(
-        _docs_tokens(spark, sf_dir), threshold=0.5, n_hashes=16, n_bands=16,
-        bucket_cap=None,
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    return connected_components(pairs, algorithm="star")
-
-
 def q_dedup_keep(spark, sf_dir):
     """The corpus-dedup endpoint: drop every non-representative member of a
-    near-dup cluster, keep everything else. One broadcast-able anti-join of
-    the (tiny) drop-list against the corpus — the big table is scanned once
-    and never shuffled."""
-    drops = q_dedup_cluster_cc(spark, sf_dir).where(
-        F.col("doc_id") != F.col("cluster_rep")
-    ).select("doc_id")
+    near-dup cluster, keep everything else (`drop_cluster_members`)."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    return d.join(F.broadcast(drops), "doc_id", "left_anti")
+    return drop_cluster_members(d, q_dedup_cluster_cc(spark, sf_dir))
 
 
 SQL_DEDUP_KEEP = """
@@ -2187,19 +2085,12 @@ FROM ranked WHERE rank <= 50
 """
 
 
-def _q_simhash_dedup_md5(spark, sf_dir):
-    return q_simhash_dedup(spark, sf_dir, hash_fn="md5_16")
-
-
 QUERIES = {
     "minhash_lsh_dedup": q_minhash_lsh_dedup,
     "dedup_cluster_cc": q_dedup_cluster_cc,
-    "dedup_cluster_cc_star": q_dedup_cluster_cc_star,
     "stratified_sample": q_stratified_sample,
     "dedup_keep": q_dedup_keep,
-    # driver-facing entry uses the engine-portable md5_16 bits so the DuckDB
-    # oracle can replay the pipeline; the library default stays xxhash64
-    "simhash_dedup": _q_simhash_dedup_md5,
+    "simhash_dedup": q_simhash_dedup,
     "ann_cosine_topk_lsh": q_ann_cosine_topk_lsh,
     "ann_cosine_topk_ivf": q_ann_cosine_topk_ivf,
     "kmeans_embeddings": q_kmeans_embeddings,
@@ -2222,9 +2113,6 @@ ORACLES = {
     # transitive closure of the same pair graph; MIN over reachable labels
     # is exactly the component minimum the Spark loop converges to
     "dedup_cluster_cc": SQL_DEDUP_CLUSTER_CC,
-    # identical output contract (component minimum), different engine —
-    # the closure oracle gates the star contraction too
-    "dedup_cluster_cc_star": SQL_DEDUP_CLUSTER_CC,
     # the oracle ranks whole strata (fine at sf); the Spark plan pre-filters
     # on the hash prefix so only ~4k rows per stratum are ever sorted
     "stratified_sample": SQL_STRATIFIED_SAMPLE,

@@ -32,8 +32,8 @@ clusters, which never reach the band join. Stage 3b (near-dup) runs
 minhash-LSH banding over the exact-deduped survivors (one band-join
 shuffle + candidate-only refine; buckets above --lsh-bucket-cap are
 dropped — the documented recall trade for bounded skew), connected
-components over the pair graph, and a broadcast anti-join of the tiny
-drop-list. Stage 4 (sampling) is the hash-prefix pre-filtered stratified
+components over the pair graph, and a plain anti-join of the drop-list
+(AQE broadcasts it while it is small). Stage 4 (sampling) is the hash-prefix pre-filtered stratified
 draw (no whole-stratum sorts).
 
 Optional hygiene stages (hygiene.py): --decontam-eval drops docs sharing
@@ -445,7 +445,11 @@ def _finish(spark, args, t0, exact_ids, pairs, counts, resumed: bool) -> None:
     mode=overwrite — never a partial mix of two runs."""
     from pyspark.sql import functions as F
 
-    from geojson_vt_spark.training import connected_components, stratified_sample
+    from geojson_vt_spark.training import (
+        connected_components,
+        drop_cluster_members,
+        stratified_sample,
+    )
 
     ofp = dict(
         _compute_fingerprint(spark, args),
@@ -479,10 +483,7 @@ def _finish(spark, args, t0, exact_ids, pairs, counts, resumed: bool) -> None:
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
     n_clusters = clusters.select("cluster_rep").distinct().count()
-    drops = clusters.where(F.col("doc_id") != F.col("cluster_rep")).select(
-        "doc_id"
-    )
-    kept = exact_ids.join(F.broadcast(drops), "doc_id", "left_anti")
+    kept = drop_cluster_members(exact_ids, clusters)
 
     # Stage 4: optional balanced draw per source stratum.
     if args.sample_k > 0:

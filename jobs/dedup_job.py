@@ -44,7 +44,11 @@ def main(argv: list[str]) -> None:
 
     from pyspark.sql import SparkSession, functions as F
 
-    from geojson_vt_spark.training import connected_components, q_minhash_lsh_dedup
+    from geojson_vt_spark.training import (
+        connected_components,
+        drop_cluster_members,
+        q_minhash_lsh_dedup,
+    )
 
     spark = SparkSession.builder.appName("geojson-vt-spark dedup").getOrCreate()
 
@@ -79,12 +83,9 @@ def main(argv: list[str]) -> None:
         clusters = spark.read.parquet(args.clusters_output)
     n_clusters = clusters.select("cluster_rep").distinct().count()
 
-    # same plan shape as q_dedup_keep, but reusing the pairs/clusters
-    # computed above instead of re-deriving them
-    drops = clusters.where(F.col("doc_id") != F.col("cluster_rep")).select("doc_id")
-    keep = docs.select("doc_id", "source").join(
-        F.broadcast(drops), "doc_id", "left_anti"
-    )
+    # the keep rule q_dedup_keep runs, over the pairs/clusters computed
+    # above instead of re-deriving them
+    keep = drop_cluster_members(docs.select("doc_id", "source"), clusters)
     keep.write.mode("overwrite").parquet(args.output)
     n_kept = spark.read.parquet(args.output).count()
 

@@ -3,6 +3,8 @@ rows -> pyramid, with golden parity and the span-sequence invariant."""
 
 import json
 
+import pytest
+
 from geojson_vt_spark.config import Options
 from geojson_vt_spark.operators.engine import GeoJSONVTSpark
 from geojson_vt_spark.sources.documents import (
@@ -72,3 +74,54 @@ def test_span_roundtrip_oracle_parity(spark):
 
     res = run_all(spark, "/root/testdata/sf0.001", names={"span_roundtrip"})
     assert res["span_roundtrip"].get("hash_match"), res["span_roundtrip"]
+
+
+@pytest.mark.parametrize(
+    "opts",
+    [Options(), Options(updateable=True), Options(cluster=True)],
+    ids=["pyramid", "updateable", "cluster"],
+)
+def test_constructor_parses_documents_once(spark, opts):
+    """The constructor runs the caller's plan once: no emptiness probe
+    parses a first partition before the build parses everything. An
+    accumulator counts the documents that enter the parse."""
+    payload = json.dumps({"type": "FeatureCollection", "features": [
+        {"type": "Feature", "properties": {}, "geometry": {
+            "type": "Point", "coordinates": [10.0, 20.0]}},
+        load_fixture("feature.json"),
+    ]})
+    docs = synthesize_documents(spark, [payload, payload], n_docs=8)
+    parsed = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        for b in batches:
+            parsed.add(b.num_rows)
+            yield b
+
+    counted = docs.mapInArrow(count, docs.schema)
+    eng = GeoJSONVTSpark(
+        spark, features_df=features_from_documents(counted, opts), options=opts
+    )
+    assert parsed.value == 8
+    assert eng.get_tile(0, 0, 0)
+
+
+def test_empty_features_df_is_an_empty_index(spark):
+    """A features_df with no rows gives the same engine as `data=` with no
+    features: empty registry and no root tile, in pyramid, updateable and
+    cluster mode."""
+    docs = synthesize_documents(spark, [], n_docs=4)  # no geojson spans
+    empty = {"type": "FeatureCollection", "features": []}
+    for opts in (Options(), Options(updateable=True)):
+        feats = features_from_documents(docs, opts)
+        for eng in (
+            GeoJSONVTSpark(spark, features_df=feats, options=opts),
+            GeoJSONVTSpark(spark, data=empty, options=opts),
+        ):
+            assert eng.total == 0
+            assert eng.get_tile(0, 0, 0) is None
+    opts = Options(cluster=True)
+    eng = GeoJSONVTSpark(
+        spark, features_df=features_from_documents(docs, opts), options=opts
+    )
+    assert eng.get_tile(0, 0, 0) is None

@@ -66,15 +66,24 @@ def test_decontaminate_counts_distinct_shared_shingles(spark):
 
 
 def test_decontaminate_plan_broadcasts_eval_side(spark):
-    """Scale gate: the eval shingle table and the hit table join back as
-    broadcasts — the corpus never shuffles through a SortMergeJoin and no
-    cartesian appears."""
+    """Scale gate: the eval shingle table joins as a broadcast, so the
+    corpus never shuffles through a shingle SortMergeJoin and no cartesian
+    appears; the hit table's join back is AQE's choice, and at this size
+    the executed plan broadcasts it."""
     from geojson_vt_spark.hygiene import q_decontaminate
 
-    plan = q_decontaminate(spark, SF)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    df = q_decontaminate(spark, SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin [shingle" in plan
+    assert "SortMergeJoin [shingle" not in plan
     assert "CartesianProduct" not in plan
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final
+    assert any(
+        "BroadcastHashJoin" in ln and "LeftOuter" in ln
+        for ln in final.split("\n")
+    ), final
 
 
 # ---------------------------------------------------------------------------
@@ -126,28 +135,37 @@ def test_line_dedup_preserves_order_of_kept_lines(spark):
     assert row.kept_md5 == hashlib.md5(f"{l1}\n{l2}".encode()).hexdigest()
 
 
-def test_line_dedup_boiler_cap_guard(spark):
-    """More frequent lines than boiler_cap must fail the array engine
-    loudly at action time (its per-line rebuild cost is linear in the
-    boiler size), and the guard must cost nothing at build time."""
-    from geojson_vt_spark.hygiene import line_dedup
+def _line_dedup_reference(rows, line_tokens=10, max_count=3):
+    """Pure-Python frequent-line removal: the doc_lines split, per-line
+    document counts (a line repeated inside one doc counts each time, as in
+    the Spark explode), then each doc's surviving lines in order."""
+    import collections
+    import hashlib
+    import math
 
-    l1 = " ".join(f"a{i}" for i in range(10))
-    l2 = " ".join(f"b{i}" for i in range(10))
-    rows = [(d, f"{l1} {l2}") for d in range(5)]  # both lines 5x frequent
-    df = line_dedup(_mkdocs(spark, rows), engine="array", boiler_cap=1)
-    with pytest.raises(Exception, match="boiler_cap"):
-        df.collect()
-    # at or under the cap the same corpus runs
-    ok = line_dedup(_mkdocs(spark, rows), engine="array", boiler_cap=2).collect()
-    assert all(r.n_kept == 0 for r in ok)
+    lines = {}
+    for doc_id, text in rows:
+        toks = text.split(" ")
+        lines[doc_id] = [
+            " ".join(toks[j * line_tokens:(j + 1) * line_tokens])
+            for j in range(math.ceil(len(toks) / line_tokens))
+        ]
+    freq = collections.Counter(ln for ls in lines.values() for ln in ls)
+    out = []
+    for doc_id, ls in lines.items():
+        kept = [ln for ln in ls if freq[ln] <= max_count]
+        out.append((
+            doc_id, len(ls), len(kept),
+            hashlib.md5("\n".join(kept).encode()).hexdigest(),
+        ))
+    return sorted(out)
 
 
 def test_line_dedup_engines_equal(spark):
-    """The join engine (the 100 TB shape) must produce row-identical output
-    to the broadcast-array engine, including on an adversarial corpus where
-    EVERY line is over threshold and on mixed kept/dropped ordering; 'auto'
-    (the lazy join engine) must match both."""
+    """The join engine must produce row-identical output to a pure-Python
+    reference, including on mixed kept/dropped ordering and on a corpus
+    where EVERY line is over threshold (every doc survives as an empty
+    rebuild)."""
     from geojson_vt_spark.hygiene import line_dedup
 
     boiler = [" ".join(f"b{k}_{i}" for i in range(10)) for k in range(6)]
@@ -156,35 +174,32 @@ def test_line_dedup_engines_equal(spark):
         (d, f"{boiler[d % 6]} {uniq[d]} {boiler[(d + 1) % 6]}")
         for d in range(8)
     ] + [(100 + d, boiler[d % 6]) for d in range(24)]  # every boiler 5x+
-    docs = _mkdocs(spark, rows)
     key = lambda r: (r.doc_id, r.n_lines, r.n_kept, r.kept_md5)  # noqa: E731
-    arr = sorted(map(key, line_dedup(docs, engine="array").collect()))
-    join = sorted(map(key, line_dedup(docs, engine="join").collect()))
-    assert arr == join
-    # auto = the lazy join engine — same rows again
-    auto = sorted(map(key, line_dedup(docs, boiler_cap=2).collect()))
-    assert auto == join
-    # fully-boilerplate corpus: every doc survives as an empty rebuild
-    all_boiler = _mkdocs(spark, [(d, boiler[0]) for d in range(5)])
-    got = line_dedup(all_boiler, engine="join").collect()
+    got = sorted(map(key, line_dedup(_mkdocs(spark, rows)).collect()))
+    assert got == _line_dedup_reference(rows)
+    assert any(n_kept < n_lines for _, n_lines, n_kept, _ in got)
+    all_boiler = [(d, boiler[0]) for d in range(5)]
+    got = sorted(map(key, line_dedup(_mkdocs(spark, all_boiler)).collect()))
+    assert got == _line_dedup_reference(all_boiler)
     import hashlib
 
     assert all(
-        (r.n_lines, r.n_kept, r.kept_md5)
-        == (1, 0, hashlib.md5(b"").hexdigest())
-        for r in got
+        (n_lines, n_kept, md5) == (1, 0, hashlib.md5(b"").hexdigest())
+        for _, n_lines, n_kept, md5 in got
     )
 
 
-def test_line_dedup_plan_no_corpus_shuffle_join(spark):
-    """Scale gate: the rebuild side is a 1-row broadcast nested-loop (the
-    boilerplate array), never a SortMergeJoin or cartesian of the corpus."""
+def test_line_dedup_plan_equi_join_on_line(spark):
+    """Scale gate: frequent lines are marked by an equi-join on the line
+    (AQE picks broadcast-hash or shuffle join by the frequent-line table's
+    size) — never a cartesian or nested-loop join against the corpus."""
     from geojson_vt_spark.hygiene import q_line_dedup
 
     plan = q_line_dedup(spark, SF)._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in plan
+    joins = [ln for ln in plan.split("\n") if "Join" in ln]
+    assert joins and all("[line#" in ln for ln in joins), joins
     assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" in plan  # the 1-row boiler array
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 # ---------------------------------------------------------------------------
@@ -280,7 +295,7 @@ def test_sequence_pack_sources_independent(spark):
 
 
 def test_sequence_pack_sharded_plan_shape(spark):
-    """Scale gate (round-5): the default two-level engine range-partitions
+    """Scale gate (round-5): the two-level packer range-partitions
     the corpus (no per-source single-task window), joins the tiny offset
     table by BROADCAST only, and never plans a corpus-shuffle join or
     cartesian."""
@@ -294,34 +309,20 @@ def test_sequence_pack_sharded_plan_shape(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_sequence_pack_window_engine_no_join(spark):
-    """The bounded-source window engine keeps its original shape: one
-    Exchange for the source window, no join anywhere."""
-    from geojson_vt_spark.hygiene import _docs, sequence_pack
-
-    df = sequence_pack(_docs(spark, SF), engine="window")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_sequence_pack_engines_equal(spark):
-    """Exact bin equality between the global-window and two-level sharded
-    engines on the real documents table, across shard counts (including
-    shard counts that cut sources mid-run)."""
+    """Exact bin equality between the two-level packer and the one-window
+    reference (tests/util.py) on the real documents table, across shard
+    counts (`spark.sql.shuffle.partitions`), including shard counts that cut
+    sources mid-run."""
     from geojson_vt_spark.hygiene import _docs, sequence_pack
+
+    from .util import sequence_pack_reference, session_conf
 
     docs = _docs(spark, SF)
-    want = sorted(
-        tuple(r) for r in sequence_pack(docs, engine="window").collect()
-    )
+    want = sorted(tuple(r) for r in sequence_pack_reference(docs).collect())
     for n_shards in (1, 3, 16):
-        got = sorted(
-            tuple(r)
-            for r in sequence_pack(
-                docs, engine="sharded", n_shards=n_shards
-            ).collect()
-        )
+        with session_conf(spark, {"spark.sql.shuffle.partitions": str(n_shards)}):
+            got = sorted(tuple(r) for r in sequence_pack(docs).collect())
         assert got == want, n_shards
 
 
@@ -329,8 +330,10 @@ def test_sequence_pack_giant_source_multi_task(spark):
     """The r4 verdict's mega-source hazard: ONE source must pack across
     many tasks. Plant a single 4000-doc source, shard it 8 ways, and
     assert (a) the shard level actually spread the source over >1 range
-    partition and (b) bins equal the single-window engine exactly."""
+    partition and (b) bins equal the one-window reference exactly."""
     from geojson_vt_spark.hygiene import _sharded_binned, sequence_pack
+
+    from .util import sequence_pack_reference, session_conf
 
     df = spark.createDataFrame(
         [("s0", f"d{i:06d}", " ".join("w" for _ in range(i % 37 + 1)))
@@ -342,49 +345,40 @@ def test_sequence_pack_giant_source_multi_task(spark):
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
     )
-    n_used = (
-        _sharded_binned(base, 256, "doc_id", "source", 8)
-        .select("shard").distinct().count()
-    )
+    want = sorted(tuple(r) for r in sequence_pack_reference(df).collect())
+    with session_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+        n_used = (
+            _sharded_binned(base, 256, "doc_id", "source")
+            .select("shard").distinct().count()
+        )
+        got = sorted(tuple(r) for r in sequence_pack(df).collect())
     assert n_used > 1, "giant source still serialized through one shard"
-    want = sorted(
-        tuple(r) for r in sequence_pack(df, engine="window").collect()
-    )
-    got = sorted(
-        tuple(r)
-        for r in sequence_pack(df, engine="sharded", n_shards=8).collect()
-    )
     assert got == want
 
 
 def test_sequence_pack_sharded_without_exchange_reuse(spark):
-    """Both levels of the sharded engine must read ONE sharding. With
+    """Both levels of the two-level packer must read ONE sharding. With
     exchange reuse off, two evaluations of the range exchange sample
     different bounds (each input partition holds more rows than the
     sampler keeps), so an unpinned sharding mismatches local prefixes and
     per-shard totals."""
     from geojson_vt_spark.hygiene import sequence_pack
 
+    from .util import sequence_pack_reference, session_conf
+
     df = spark.createDataFrame(
         [(f"s{i % 3}", f"d{i:06d}", " ".join("w" for _ in range(i % 37 + 1)))
          for i in range(6000)],
         "source string, doc_id string, text string",
     )
-    want = sorted(
-        tuple(r) for r in sequence_pack(df, engine="window").collect()
-    )
-    spark.conf.set("spark.sql.exchange.reuse", "false")
-    try:
-        for n_shards in (8, 16):
-            got = sorted(
-                tuple(r)
-                for r in sequence_pack(
-                    df, engine="sharded", n_shards=n_shards
-                ).collect()
-            )
-            assert got == want, n_shards
-    finally:
-        spark.conf.unset("spark.sql.exchange.reuse")
+    want = sorted(tuple(r) for r in sequence_pack_reference(df).collect())
+    for n_shards in (8, 16):
+        with session_conf(spark, {
+            "spark.sql.exchange.reuse": "false",
+            "spark.sql.shuffle.partitions": str(n_shards),
+        }):
+            got = sorted(tuple(r) for r in sequence_pack(df).collect())
+        assert got == want, n_shards
 
 
 # ---------------------------------------------------------------------------
@@ -610,17 +604,16 @@ def test_streaming_ingest_gate_matches_batch(spark, tmp_path):
 
 
 def test_line_dedup_null_text_consistent_across_engines(spark):
-    """Null-text docs are excluded identically by BOTH engines (posexplode
-    would otherwise silently drop them from the join engine only)."""
+    """Null-text docs are excluded from the output, not silently dropped by
+    the posexplode alone (the oracle's documents carry no nulls)."""
     from geojson_vt_spark.hygiene import line_dedup
 
     l1 = " ".join(f"n{i}" for i in range(10))
     df = spark.createDataFrame(
         [(1, l1), (2, None), (3, l1)], "doc_id long, text string"
     )
-    for eng in ("array", "join"):
-        got = {r.doc_id for r in line_dedup(df, engine=eng).collect()}
-        assert got == {1, 3}, eng
+    got = {r.doc_id for r in line_dedup(df).collect()}
+    assert got == {1, 3}
 
 
 def test_ingest_gate_quality_knobs(spark):
@@ -760,34 +753,10 @@ def test_streaming_ingest_parquet_sink_rejects_fresh_checkpoint(spark, tmp_path)
     assert not os.path.exists(str(out) + "_metrics")
 
 
-def test_decontaminate_hits_join_engines_equal(spark):
-    """hits_join='shuffle' (the mass-contamination fallback) returns rows
-    identical to the broadcast default."""
-    from geojson_vt_spark.hygiene import decontaminate
-
-    evals = _mkdocs(spark, [(100, "a b c d e f g h i j")])
-    corpus = _mkdocs(
-        spark,
-        [(1, "x y a b c d e f g h z"), (2, "x y a b c d Q f g h z"),
-         (3, "a b c")],
-    )
-    key = lambda r: (r.doc_id, r.n_hits, r.contaminated)  # noqa: E731
-    bc = sorted(map(key, decontaminate(corpus, evals).collect()))
-    sh = sorted(
-        map(key, decontaminate(corpus, evals, hits_join="shuffle").collect())
-    )
-    assert bc == sh
-    plan = (
-        decontaminate(corpus, evals, hits_join="shuffle")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "CartesianProduct" not in plan
-
-
 def test_line_dedup_auto_construction_runs_no_job(spark):
-    """Round-5 gate (VERDICT r4 item 6): building the auto-engine query
-    must cost ZERO Spark jobs — the engine decision is AQE's at runtime,
-    not an eager count at construction."""
+    """Round-5 gate (VERDICT r4 item 6): building the query must cost ZERO
+    Spark jobs — the join choice is AQE's at runtime, not an eager count at
+    construction."""
     from geojson_vt_spark.hygiene import line_dedup
 
     l1 = " ".join(f"c{i}" for i in range(10))
@@ -795,7 +764,7 @@ def test_line_dedup_auto_construction_runs_no_job(spark):
     sc = spark.sparkContext
     sc.setJobGroup("linededup-build-probe", "construction only")
     try:
-        df = line_dedup(docs)  # engine='auto'
+        df = line_dedup(docs)
     finally:
         sc.setJobGroup(None, None)
     n_jobs = len(

@@ -39,3 +39,45 @@ def test_driver_built_frames_go_through_local_frame():
         for path in ROOT.rglob("*.py")
     }
     assert {rel: n for rel, n in found.items() if n} == {"model.py": 1}
+
+
+def test_data_pipeline_operators_have_no_engine_selectors():
+    """One production path per hygiene/training operator: no public function
+    lets its caller pick an engine, a join strategy or a loop budget, and
+    the removed second engines stay gone."""
+    import inspect
+
+    from geojson_vt_spark import hygiene, training
+
+    banned = {
+        "engine", "algorithm", "hits_join", "boiler_cap", "n_shards",
+        "round_budget",
+    }
+    for mod in (hygiene, training):
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if name.startswith("_") or fn.__module__ != mod.__name__:
+                continue
+            params = set(inspect.signature(fn).parameters)
+            assert not params & banned, (mod.__name__, name, params & banned)
+    assert list(inspect.signature(training.q_simhash_dedup).parameters) == [
+        "spark", "sf_dir",
+    ]
+    for mod, name in [
+        (training, "ann_topk_ivf_matmul"),
+        (training, "_round6_half_up_np"),
+        (training, "_q_simhash_dedup_md5"),
+        (training, "q_dedup_cluster_cc_star"),
+        (hygiene, "LINE_BOILER_CAP"),
+    ]:
+        assert not hasattr(mod, name), name
+
+
+def test_pandas_crossing_inventory():
+    """Six mapInPandas sites remain (updates filter, spatial-join refine,
+    geojson_to_tile, documents parse, media decode, analytics event
+    features); a new one needs a deliberate edit here."""
+    found = {
+        str(path.relative_to(ROOT)): path.read_text().count("mapInPandas(")
+        for path in ROOT.rglob("*.py")
+    }
+    assert sum(found.values()) == 6, {k: n for k, n in found.items() if n}

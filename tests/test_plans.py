@@ -81,13 +81,20 @@ def test_connected_components_round_is_equi_join(spark):
 
 
 def test_dedup_keep_broadcasts_drop_list(spark):
-    """Corpus dedup must anti-join a broadcast drop-list against the big
-    table — one scan, no shuffle of the corpus."""
+    """Corpus dedup anti-joins the drop list without a hint; with a drop
+    list this small AQE broadcasts it at runtime (the executed plan), and
+    no cartesian appears."""
     from geojson_vt_spark.training import q_dedup_keep
 
-    plan = _plan(q_dedup_keep(spark, "/root/testdata/sf0.001"))
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert "CartesianProduct" not in plan
+    keep = q_dedup_keep(spark, "/root/testdata/sf0.001")
+    assert "CartesianProduct" not in _plan(keep)
+    keep.collect()
+    final = _plan(keep)
+    assert "isFinalPlan=true" in final
+    assert any(
+        "BroadcastHashJoin" in ln and "LeftAnti" in ln
+        for ln in final.split("\n")
+    ), final
 
 
 def test_heatmap_partial_aggregation(spark):
@@ -302,7 +309,6 @@ def test_ann_topk_bounded_heap(spark, tmp_path):
     from geojson_vt_spark.analytics import q_ann_cosine_topk
     from geojson_vt_spark.training import (
         ann_topk_ivf_indexed,
-        ann_topk_ivf_matmul,
         ivf_index_write,
         q_ann_cosine_topk_ivf,
         q_ann_cosine_topk_lsh,
@@ -317,10 +323,36 @@ def test_ann_topk_bounded_heap(spark, tmp_path):
         "brute": q_ann_cosine_topk(spark, sf),
         "lsh": q_ann_cosine_topk_lsh(spark, sf),
         "ivf": q_ann_cosine_topk_ivf(spark, sf),
-        "matmul": ann_topk_ivf_matmul(e),
         "indexed": ann_topk_ivf_indexed(spark, idx, qvec, exclude_id=0),
     }
     for name, df in dfs.items():
         plan = _plan(df)
         assert "TakeOrderedAndProject" in plan, (name, plan)
         assert plan.index("Window") < plan.index("TakeOrderedAndProject"), name
+
+
+def test_drop_and_hit_lists_join_without_broadcast_hint(spark):
+    """The dedup drop lists (`drop_cluster_members`, which q_dedup_keep,
+    semantic_dedup_keep and both dedup jobs run) and decontaminate's hit
+    table join as plain joins: AQE picks broadcast or shuffle from their
+    measured size. Under autoBroadcastJoinThreshold=-1 none of those joins
+    may be a broadcast join — a hinted broadcast ignores the threshold."""
+    from geojson_vt_spark.hygiene import q_decontaminate
+    from geojson_vt_spark.training import q_dedup_keep, q_semantic_dedup_keep
+
+    from .util import session_conf
+
+    sf = "/root/testdata/sf0.001"
+    cases = {
+        "dedup_keep": (q_dedup_keep, "LeftAnti"),
+        "semantic_dedup_keep": (q_semantic_dedup_keep, "LeftAnti"),
+        "decontaminate": (q_decontaminate, "LeftOuter"),
+    }
+    with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        for name, (fn, join_type) in cases.items():
+            joins = [
+                ln for ln in _plan(fn(spark, sf)).split("\n")
+                if "Join" in ln and join_type in ln
+            ]
+            assert joins, name
+            assert not any("Broadcast" in ln for ln in joins), (name, joins)

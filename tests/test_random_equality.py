@@ -1,5 +1,5 @@
 """Seeded-random equality sweeps for the round-5 plan rewrites: the
-two-level sequence packer vs the global-window engine, and the
+two-level sequence packer vs the one-window reference, and the
 bounded-heap `ranked_topk` vs the global row_number window it replaced.
 Spark-level randomized checks use fixed numpy seeds (a Spark session per
 hypothesis example would be prohibitive), several draws each, with the
@@ -13,6 +13,8 @@ from pyspark.sql import Window, functions as F
 
 def test_sequence_pack_random_equality(spark):
     from geojson_vt_spark.hygiene import sequence_pack
+
+    from .util import sequence_pack_reference, session_conf
 
     for seed in range(4):
         rng = np.random.RandomState(seed)
@@ -30,16 +32,16 @@ def test_sequence_pack_random_equality(spark):
         )
         budget = int(rng.choice([16, 64, 256]))
         want = sorted(
-            tuple(r)
-            for r in sequence_pack(docs, budget=budget, engine="window").collect()
+            tuple(r) for r in sequence_pack_reference(docs, budget).collect()
         )
         n_shards = int(rng.randint(1, 11))
-        got = sorted(
-            tuple(r)
-            for r in sequence_pack(
-                docs, budget=budget, engine="sharded", n_shards=n_shards
-            ).collect()
-        )
+        with session_conf(
+            spark, {"spark.sql.shuffle.partitions": str(n_shards)}
+        ):
+            got = sorted(
+                tuple(r)
+                for r in sequence_pack(docs, budget=budget).collect()
+            )
         assert got == want, (seed, n_shards, budget)
 
 

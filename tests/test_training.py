@@ -18,6 +18,8 @@ def test_new_oracles_match_duckdb(spark):
         "events_tile_heatmap",
         "raster_vector_bridge",
         "media_decode_stats",
+        "simhash_dedup",
+        "dedup_keep",
     }
     res = run_all(spark, SF, names=names)
     assert set(res) == names
@@ -232,7 +234,8 @@ def test_minhash_banding_prunes_low_jaccard_candidates(spark):
 
 def test_simhash_exact_recall_by_pigeonhole(spark):
     """The 4x4-bit banding must find EVERY pair with hamming <= 3 — verify
-    against a brute-force pandas computation of the same simhashes."""
+    against a brute-force pandas computation of the same simhashes (low 16
+    bits of each distinct token's md5)."""
     import pandas as pd
 
     from geojson_vt_spark.training import q_simhash_dedup, _t
@@ -247,7 +250,7 @@ def test_simhash_exact_recall_by_pigeonhole(spark):
         "doc_id",
         "source",
         F.explode(F.array_distinct(F.split("text", " "))).alias("t"),
-    ).withColumn("h", F.xxhash64("t"))
+    ).withColumn("h", F.conv(F.substring(F.md5("t"), 29, 4), 16, 10).cast("long"))
     pdf = tok.toPandas()
 
     sims = {}
@@ -613,37 +616,39 @@ def test_connected_components_star_chain_logn_rounds(spark):
     assert stats["star_rounds"] <= 3 * int(math.log2(n)) + 5, stats
 
 
-def test_connected_components_auto_escalates_and_matches(spark):
-    """auto mode: a long chain exhausts the label-propagation budget and
-    finishes via star — with identical output to pure label propagation."""
+def test_connected_components_auto_escalates_and_matches(spark, monkeypatch):
+    """A long chain exhausts the label-propagation round budget and
+    finishes via star contraction, labelling every vertex with its
+    component minimum."""
     from pyspark.sql import functions as F
 
+    from geojson_vt_spark import training
     from geojson_vt_spark.training import connected_components
 
+    monkeypatch.setattr(training, "_CC_ROUND_BUDGET", 3)
     n = 300
     edges = spark.range(n - 1).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     ).union(spark.createDataFrame([(9000, 9001), (9001, 9002)], ["src", "dst"]))
     stats = {}
-    auto = {
+    got = {
         r.doc_id: r.cluster_rep
-        for r in connected_components(
-            edges, algorithm="auto", round_budget=3, _stats=stats
-        ).collect()
+        for r in connected_components(edges, _stats=stats).collect()
     }
-    assert stats["escalated"] is True
-    label = {
-        r.doc_id: r.cluster_rep
-        for r in connected_components(edges, algorithm="label").collect()
-    }
-    assert auto == label
-    assert set(auto.values()) == {0, 9000}
+    assert stats["escalated"] is True and stats["label_rounds"] == 3, stats
+    want = {i: 0 for i in range(n)}
+    want.update({9000: 9000, 9001: 9000, 9002: 9000})
+    assert got == want
 
 
 def test_connected_components_star_matches_label_on_pair_graph(spark):
-    """Star and label modes agree on a realistic near-dup shape (cliques +
-    a bridge + isolated pair)."""
-    from geojson_vt_spark.training import connected_components
+    """Star contraction and label propagation agree on a realistic near-dup
+    shape (cliques + a bridge + isolated pair), which label propagation
+    finishes inside its round budget."""
+    from geojson_vt_spark.training import (
+        connected_components,
+        connected_components_star,
+    )
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 7), (7, 8), (20, 21), (40, 41), (41, 40)],
@@ -651,14 +656,38 @@ def test_connected_components_star_matches_label_on_pair_graph(spark):
     )
     a = {
         r.doc_id: r.cluster_rep
-        for r in connected_components(edges, algorithm="star").collect()
+        for r in connected_components_star(edges).collect()
     }
+    stats = {}
     b = {
         r.doc_id: r.cluster_rep
-        for r in connected_components(edges, algorithm="label").collect()
+        for r in connected_components(edges, _stats=stats).collect()
     }
+    assert stats["escalated"] is False
     assert a == b
     assert a[8] == 1 and a[21] == 20 and a[41] == 40
+
+
+def test_connected_components_star_matches_dedup_cluster_cc(spark):
+    """Star contraction over q_dedup_cluster_cc's own pair graph (the r=1
+    exact-recall minhash pairs) gives exactly q_dedup_cluster_cc's rows,
+    so the DuckDB closure oracle that gates the query gates the star
+    engine too."""
+    from geojson_vt_spark.training import (
+        _docs_tokens,
+        connected_components_star,
+        minhash_lsh_pairs,
+        q_dedup_cluster_cc,
+    )
+
+    pairs = minhash_lsh_pairs(
+        _docs_tokens(spark, SF), threshold=0.5, n_hashes=16, n_bands=16,
+        bucket_cap=None,
+    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    star = sorted(tuple(r) for r in connected_components_star(pairs).collect())
+    want = sorted(tuple(r) for r in q_dedup_cluster_cc(spark, SF).collect())
+    assert star == want
+    assert any(doc != rep for doc, rep in want)
 
 
 def test_ann_join_oracle_and_plan(spark):

@@ -1,8 +1,10 @@
-"""Comparison helpers for golden-fixture parity.
+"""Comparison helpers for golden-fixture parity, plus shared test-side
+references and session helpers.
 
 Geometry coords are exact integers; lineMetrics tags are float ratios compared
 within tolerance (the fixtures quantize everything else — SURVEY.md §7)."""
 
+import contextlib
 import math
 
 
@@ -58,3 +60,43 @@ def count_jobs(spark, fn):
     # job-start events reach the status store through the async listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextlib.contextmanager
+def session_conf(spark, conf: dict):
+    """Set SQL confs for the block, then restore (or unset) each one."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def sequence_pack_reference(docs, budget=256):
+    """The one-window form of `hygiene.sequence_pack`: a running token sum
+    per source in doc_id order, bin = floor((prefix - own tokens) / budget).
+    One task per source, so it is the equality reference for the two-level
+    packer, not a production plan."""
+    from pyspark.sql import Window, functions as F
+
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    n_tok = F.size(F.split(F.col("text"), " ")).cast("long")
+    binned = docs.select("source", "doc_id", n_tok.alias("n_tokens")).withColumn(
+        "bin", F.floor((F.sum("n_tokens").over(w) - F.col("n_tokens")) / budget)
+    )
+    return binned.groupBy("source", "bin").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("n_tokens").cast("long").alias("n_tokens"),
+        F.min("doc_id").alias("first_doc"),
+        F.max("doc_id").alias("last_doc"),
+    )
