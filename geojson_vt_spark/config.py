@@ -46,6 +46,9 @@ class Options:
     updateable: bool = False
     cluster: bool = False
     cluster_options: ClusterOptions = field(default_factory=ClusterOptions)
+    # the reference's debug option (tile-index.ts:14,166-169 timing logs);
+    # kept for option parity, prints nothing: a build's routing decisions
+    # are data on PyramidStore.decisions
     debug: int = 0
 
     def validate(self) -> "Options":

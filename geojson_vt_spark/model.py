@@ -91,6 +91,29 @@ STORE_SCHEMA = T.StructType(
 )
 
 
+def num_points_col():
+    """A feature row's vertex count, SUM(rlens), computed JVM-side. Summed
+    over a tile's rows it is the stop rule's numPoints, identical to the
+    assembly's npoints counter."""
+    return F.aggregate("rlens", F.lit(0).cast("long"), lambda a, v: a + v.cast("long"))
+
+
+def tile_key(z: int, x: int, y: int) -> int:
+    """(z, x, y) packed into one long; collision-free for 0 <= x, y < 2^z
+    and z <= 24."""
+    return (z << 50) | (x << 25) | y
+
+
+def tile_key_col():
+    """`tile_key` of a frame's z, x, y columns: a key-set literal predicate
+    (`tile_key_col().isin(...)`) filters in place, with no join job."""
+    return (
+        F.shiftleft(F.col("z").cast("long"), 50)
+        + F.shiftleft(F.col("x").cast("long"), 25)
+        + F.col("y").cast("long")
+    )
+
+
 def store_rows(df: DataFrame, kind: int) -> DataFrame:
     """`df`'s rows as STORE_SCHEMA rows of one kind (absent columns null).
     A literal kind lets Catalyst fold a kind filter over the branch away.

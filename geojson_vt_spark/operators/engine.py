@@ -11,14 +11,14 @@ from __future__ import annotations
 import json
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..cluster.index import ClusterTileIndexSpark
 from ..config import ClusterOptions, Options
 from ..functions.convert import convert_geojson
 from ..functions.wrap import wrap_features
-from ..model import FEATURE_SCHEMA, KIND_REGISTRY, KIND_SOURCE, REGISTRY_SCHEMA
-from ..model import feature_to_row, local_frame, store_rows
+from ..model import FEATURE_SCHEMA, KIND_REGISTRY, KIND_SOURCE
+from ..model import feature_to_row, local_frame, num_points_col
 from ..plans.pyramid import PyramidStore, build_pyramid
 from ..sources.tile_store import lookup_frame, read_tiles
 
@@ -33,6 +33,19 @@ def geojson_to_feature_rows(data: dict, options: Options) -> list:
         feature_to_row(f, 0, 0, 0, [wcopy, fid])
         for fid, (wcopy, f) in enumerate(wrapped)
     ]
+
+
+def _counted_checkpoint(df: DataFrame) -> tuple:
+    """(eager localCheckpoint of df, (rows, vertices)): build_pyramid's
+    start counts of the z0 root, observed metrics of the checkpoint's own
+    job rather than a second job."""
+    obs = Observation()
+    ckpt = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(num_points_col()), F.lit(0)).alias("points"),
+    ).localCheckpoint(eager=True)
+    return ckpt, (obs.get["n"], obs.get["points"])
 
 
 class GeoJSONVTSpark:
@@ -56,12 +69,14 @@ class GeoJSONVTSpark:
 
         # updateable source snapshot (geojsonvt.ts:57-59). The caller's plan
         # runs once: the snapshot here, or the build's frontier checkpoint;
-        # an empty input is found from data already computed, never by a
-        # probe job over the caller's plan.
+        # an empty input is found from data already computed (the
+        # snapshot's counts), never by a probe job over the caller's plan.
         self.source_df: Optional[DataFrame] = None
+        # (rows, vertices) of the snapshot, None without one
+        self._source_counts: Optional[tuple] = None
         self._batch = 3  # okey batch prefix for appended diffs (init uses 0-2)
         if self.options.updateable or self.options.cluster:
-            features_df = features_df.localCheckpoint(eager=True)
+            features_df, self._source_counts = _counted_checkpoint(features_df)
         if self.options.updateable:
             self.source_df = features_df
 
@@ -69,19 +84,20 @@ class GeoJSONVTSpark:
         if self.options.cluster:
             # cluster mode (geojsonvt.ts:64-68): ClusterTileIndex over the
             # wrapped point features instead of the tile pyramid; empty
-            # input leaves it uninitialized (the probe reads the checkpoint)
+            # input leaves it uninitialized
             self.store = PyramidStore(spark)
             self.cluster_index = ClusterTileIndexSpark(
                 spark, self.options.cluster_options
             )
-            if not features_df.isEmpty():
+            if self._source_counts[0]:
                 self.cluster_index.initialize_df(features_df)
             return
 
         # empty input -> empty index (geojsonvt.ts:64-67 skips initialize):
         # build_pyramid's first pass appends nothing when z0 holds no rows
         self.store: PyramidStore = build_pyramid(
-            features_df, self.options, workdir=workdir, resume=resume
+            features_df, self.options, workdir=workdir, resume=resume,
+            start_counts=self._source_counts,
         )
 
     # -- queries ------------------------------------------------------------
@@ -134,11 +150,22 @@ class GeoJSONVTSpark:
         registry rows, no full-registry collect (plan-asserted in
         tests/test_plans.py)."""
         return lookup_frame(self.store.frame(), anc, [KIND_REGISTRY]).select(
-            "z", "x", "y", "has_source"
+            "z", "x", "y", "num_features", "num_points", "has_source"
         )
 
     def get_tile(self, z, x, y) -> Optional[list]:
-        """Point lookup with lazy drill-down (tile-index.ts:82-120)."""
+        """Point lookup with lazy drill-down (tile-index.ts:82-120).
+
+        A stored tile (or a registered empty one) is one Spark job: one
+        pruned collect of its tile and registry rows (read_tiles). A miss
+        adds one collect of the ancestor chain's registry rows, and when
+        the nearest registered ancestor retained its source, one build in
+        target mode from those rows, with the ancestor's registry counters
+        as its start counts: for a task-sized ancestor that is a single
+        subtree-kernel call whose output is a checkpoint. A
+        has_source flag is proof that the source rows exist (invalidation
+        drops every kind of row of a key together), so nothing probes them
+        first."""
         z, x, y = int(z), int(x), int(y)
         if z < 0 or z > 24:  # geojsonvt.ts:82
             return None
@@ -165,18 +192,16 @@ class GeoJSONVTSpark:
             for dy in (0, 1)
         ]
         reg = {
-            (r.z, r.x, r.y): r.has_source
+            (r.z, r.x, r.y): r
             for r in self._ancestor_lookup_df(anc + kids).collect()
         }
         found = next((k for k in anc if k in reg), None)
-        if found is None or not reg[found]:
+        if found is None or not reg[found].has_source:
             return None
 
         src = lookup_frame(self.store.frame(), [found], [KIND_SOURCE]).select(
             *FEATURE_SCHEMA.names
         )
-        if src.isEmpty():
-            return None
         build_pyramid(
             src,
             self.options,
@@ -185,6 +210,9 @@ class GeoJSONVTSpark:
             start=found,
             target=(z, x, y),
             registered=frozenset(reg),
+            # a retained source is the tile's rows: its registry counters
+            # are the build's start counts
+            start_counts=(reg[found].num_features, reg[found].num_points),
         )
         if len(self.store.frames) > 24:
             self.store.compact()
@@ -195,22 +223,31 @@ class GeoJSONVTSpark:
     def update_data(self, diff: Optional[dict] = None, filter=None) -> None:
         """Apply a source diff + optional predicate filter, invalidate the
         affected tiles, rebuild the root eagerly; deeper tiles regenerate
-        lazily on get_tile (tile-index.ts:36-61)."""
+        lazily on get_tile (tile-index.ts:36-61).
+
+        Jobs: the update's old-row collect (only for a diff with updates),
+        the new source's checkpoint, the invalidation's compaction and the
+        root rebuild (one subtree-kernel call for a task-sized source; the
+        checkpoint's observed counts are its start counts). Whether
+        anything was affected comes from the same checkpoint's row count:
+        every row that left the source and every appended row is affected,
+        so the diff was a no-op exactly when the count grew by twice the
+        appended rows (apply_source_diff). No job probes the affected set."""
         if not self.options.updateable:
             raise ValueError(
                 "to update tile geojson `updateable` option must be set to true"
             )
         from .updates import apply_source_diff, filter_update
 
-        affected, source, self._batch = apply_source_diff(
+        affected, source, self._batch, appended = apply_source_diff(
             self.spark, self.source_df, diff, self.options, self._batch
         )
         if filter is not None:
             affected, source = filter_update(source, affected, filter)
-        affected = affected.localCheckpoint(eager=True)
-        if affected.isEmpty():
-            return
-        self.source_df = source.localCheckpoint(eager=True)
+        source, counts = _counted_checkpoint(source)
+        if counts[0] == self._source_counts[0] + 2 * appended:
+            return  # nothing affected: the reference returns early too
+        self.source_df, self._source_counts = source, counts
 
         if self.cluster_index is not None:
             # cluster mode: full rebuild (cluster-tile-index.ts:104-107)
@@ -221,13 +258,19 @@ class GeoJSONVTSpark:
 
         self._invalidate_tiles(affected)
         self._rebuild_root()
-        if len(self.store.frames) > 24:
-            self.store.compact()
 
     def _invalidate_tiles(self, affected: DataFrame) -> None:
         """Interval/bbox join between affected-feature bboxes and buffered
-        tile bounds -> delete intersecting tiles (tile-index.ts:235-305).
-        The root is always rebuilt, so it is always invalidated here."""
+        tile bounds -> delete intersecting tiles, every kind of row of a key
+        together (tile-index.ts:235-305). The root is always rebuilt, so it
+        is always invalidated here.
+
+        The store is then compacted: one checkpoint materializes the
+        anti-join, so no later tile read re-runs its broadcasts. That
+        rewrites the store, O(store) per update, the same order as the
+        reference's invalidation sweep over every tile. The invalidated
+        keys never reach the driver as a list (under removeAll or filter=
+        they can be the whole registry)."""
         k1 = self.options.buffer / self.options.extent  # NOT halved (:254)
         boxes = affected.select("minx", "miny", "maxx", "maxy")
         reg = self.store.registry_df()
@@ -242,27 +285,22 @@ class GeoJSONVTSpark:
             & (F.col("maxy") >= tminy)
             & (F.col("miny") < tmaxy)
         )
+        # registry keys are unique, so the semi-join's keys are too
         inv = (
             reg.join(F.broadcast(boxes), intersects, "leftsemi")
             .select("z", "x", "y")
-            .union(local_frame(self.spark, [(0, 0, 0)], "z long, x long, y long"))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .union(local_frame(self.spark, [(0, 0, 0)], "z int, x int, y int"))
         )
         self.store.frames = [
             df.join(F.broadcast(inv), ["z", "x", "y"], "left_anti")
             for df in self.store.frames
         ]
+        self.store.compact()
 
     def _rebuild_root(self) -> None:
-        # eager root regen with retained source (tile-index.ts:47-54)
-        if self.source_df is None or self.source_df.isEmpty():
-            # the reference still creates an (empty) root tile
-            self.store.frames.append(store_rows(
-                local_frame(self.spark, [(0, 0, 0, 0, 0, 0, False)], REGISTRY_SCHEMA),
-                KIND_REGISTRY,
-            ))
-            return
+        # eager root regen with retained source (tile-index.ts:47-54); over
+        # an empty source the build still emits the reference's (empty)
+        # root tile
         build_pyramid(
             self.source_df,
             self.options,
@@ -270,6 +308,7 @@ class GeoJSONVTSpark:
             workdir=None,
             start=(0, 0, 0),
             target=(0, 0, 0),
+            start_counts=self._source_counts,
         )
 
     def get_data(self) -> dict:
@@ -299,7 +338,7 @@ class GeoJSONVTSpark:
         self.options = self.options.with_(
             cluster=cluster, cluster_options=cluster_options
         )
-        src = None if self.source_df.isEmpty() else self.source_df
+        src = self.source_df if self._source_counts[0] else None
         if cluster:
             self.cluster_index = ClusterTileIndexSpark(
                 self.spark, self.options.cluster_options

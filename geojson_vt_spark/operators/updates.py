@@ -6,12 +6,16 @@ property add/remove/removeAll), applied to ALL antimeridian copies of an id;
 returns the affected feature set (old + new rows) used for tile invalidation.
 
 Spark shape (MERGE INTO semantics, not a list rewrite):
-  * remove/replace  -> broadcast semi/anti-join on the id column;
+  * remove/replace  -> an `id IN (...)` literal predicate and its negation:
+                       the key set is the caller's diff, already in driver
+                       memory, so no key list is shipped or joined (a
+                       broadcast of a driver-built relation is a Spark job
+                       of its own every time a plan runs it);
   * add             -> driver-side convert+wrap of the (small, driver-provided)
                        diff payload, unioned in;
-  * update          -> semi-join collect of the touched rows (bounded by the
-                       diff size x wrap copies), recomputed driver-side,
-                       unioned back;
+  * update          -> one filtered collect of the touched rows (bounded by
+                       the diff size x wrap copies), sorted by okey and
+                       recomputed driver-side, unioned back;
   * ordering        -> the reference appends adds/updates to the END of the
                        source array (difference.ts:104-131); we reproduce
                        source order with a monotonically increasing batch
@@ -39,24 +43,25 @@ from ..functions.wrap import wrap_features
 from ..model import FEATURE_SCHEMA, feature_to_row, local_frame, row_to_feature
 
 
-def _convert_batch(
-    spark: SparkSession, features: list, options: Options, batch: int
-) -> Optional[DataFrame]:
+def _convert_batch(features: list, options: Options, batch: int) -> list:
     """convert+wrap a FeatureCollection of diff features into source rows with
     okey = [batch, position] (appended after every existing row)."""
     feats = convert_geojson({"type": "FeatureCollection", "features": features}, options)
     wrapped = wrap_features(feats, options)
-    rows = [
+    return [
         feature_to_row(f, 0, 0, 0, [batch, i])
         for i, (_wcopy, f) in enumerate(wrapped)
     ]
-    if not rows:
-        return None
-    return local_frame(spark, rows, FEATURE_SCHEMA)
 
 
 def _id_lit(v) -> str:
     return json.dumps(v)
+
+
+def _id_in(keys):
+    """`id IN keys` over JSON-encoded ids, where the key "null" matches a
+    null id; never null itself, so its negation keeps null-id rows."""
+    return F.coalesce(F.col("id"), F.lit("null")).isin(sorted(keys))
 
 
 def _apply_property_updates(tags: Optional[dict], update: dict) -> dict:
@@ -78,7 +83,13 @@ def apply_source_diff(
     options: Options,
     batch: int,
 ) -> tuple:
-    """Returns (affected_df, new_source_df, next_batch)."""
+    """Returns (affected_df, new_source_df, next_batch, appended): appended
+    is the number of rows the diff added to the source (adds plus updated
+    rows). Every row that left the old source and every appended row is in
+    the affected set, so it holds old_rows + 2 * appended - new_rows rows:
+    a caller that counts the new source knows whether the diff was a no-op
+    without probing `affected`. Runs at most one Spark job (the update's
+    old-row collect)."""
     diff = diff or {}
     remove_ids = set(diff.get("remove") or [])
     add_map: dict = {}
@@ -94,6 +105,7 @@ def apply_source_diff(
 
     empty = local_frame(spark, [], FEATURE_SCHEMA)
     affected_parts: list = []
+    appended = 0
 
     if diff.get("removeAll"):
         affected_parts.append(source)
@@ -101,40 +113,35 @@ def apply_source_diff(
 
     if remove_ids or add_map:
         keys = {_id_lit(k) for k in remove_ids} | set(add_map.keys())
-        key_df = F.broadcast(
-            local_frame(spark, [(k,) for k in keys], "id_key string")
-        )
-        match = F.coalesce(F.col("id"), F.lit("null")) == F.col("id_key")
+        match = _id_in(keys)
         # both are no-ops when nothing matches: no emptiness job first
-        affected_parts.append(source.join(key_df, match, "leftsemi"))
-        source = source.join(key_df, match, "left_anti")
+        affected_parts.append(source.where(match))
+        source = source.where(~match)
         if add_map:
-            added = _convert_batch(spark, list(add_map.values()), options, batch)
+            rows = _convert_batch(list(add_map.values()), options, batch)
             batch += 1
-            if added is not None:
+            if rows:
+                appended += len(rows)
+                added = local_frame(spark, rows, FEATURE_SCHEMA)
                 affected_parts.append(added)
                 source = source.unionByName(added)
 
     if update_map:
-        ukeys = F.broadcast(
-            local_frame(spark, [(k,) for k in update_map], "id_key string")
-        )
-        umatch = F.col("id") == F.col("id_key")
-        old_rows = source.join(ukeys, umatch, "leftsemi").orderBy("okey").collect()
+        # a null id is never updated (difference.ts:121 finds no feature)
+        umatch = _id_in(set(update_map) - {"null"})
+        old_rows = sorted(source.where(umatch).collect(), key=lambda r: r.okey)
         by_id: dict = {}
         for r in old_rows:
             by_id.setdefault(r.id, []).append(r)
 
         touched_ids = []
         new_rows = []
-        old_affected = []
         for id_key, update in update_map.items():  # diff order (difference.ts:119)
             olds = by_id.get(id_key)
             if not olds:
                 continue  # wrong id: no-op (difference.ts:121)
             touched_ids.append(id_key)
             old_feats = [row_to_feature(r.asDict()) for r in olds]
-            old_affected.extend(old_feats)
             change_geometry = bool(update.get("newGeometry"))
             change_props = bool(
                 update.get("removeAllProperties")
@@ -164,13 +171,8 @@ def apply_source_diff(
                 new_rows.extend(old_feats)
 
         if touched_ids:
-            source = source.join(
-                F.broadcast(
-                    local_frame(spark, [(k,) for k in touched_ids], "id_key string")
-                ),
-                umatch,
-                "left_anti",
-            )
+            source = source.where(~_id_in(touched_ids))
+            appended += len(new_rows)
             rows = [
                 feature_to_row(f, 0, 0, 0, [batch, i])
                 for i, f in enumerate(new_rows)
@@ -188,7 +190,7 @@ def apply_source_diff(
     affected = empty
     for p in affected_parts:
         affected = affected.unionByName(p)
-    return affected, source, batch
+    return affected, source, batch, appended
 
 
 def filter_update(

@@ -26,14 +26,19 @@ Spark-first design (NOT a translation of the single-threaded BFS):
   * counters stay SUM aggregates over per-feature rows, so no tile ever has
     to fit in one task (a z0 tile over the full corpus stays distributed);
   * one routing rule skips per-level passes: at every driver-mode level, a
-    splitting tile whose vertex count is at most _SUBTREE_MAX_POINTS goes to
-    the subtree kernel (_subtree_fn, one applyInArrow group per tile), which
-    finishes the tile's whole sub-pyramid, root included, as an in-kernel
-    level-BFS. The level pass sees only the rows of tiles that were not
-    routed and does not run when none remain, so a small corpus is the rule
-    applied at z0: one kernel call, zero per-level crossings. Distributed
-    clipping while single tiles hold huge data, per-subtree parallelism
-    afterwards;
+    tile that holds rows and at most _SUBTREE_MAX_POINTS vertices goes to
+    the subtree kernel (_subtree_fn, one applyInArrow group per tile),
+    whether the stop rule splits it or stops it. The kernel finishes the
+    tile's whole sub-pyramid, root included, as an in-kernel level-BFS and
+    writes the registry and retained-source rows of every tile it stops
+    (a stopped root is a one-level sub-pyramid). The level pass sees only
+    the rows of tiles too big for a task and does not run when none remain.
+    So a small corpus is the rule applied at z0 (one kernel call, zero
+    per-level crossings), and the engine's root rebuild and every
+    drill-down from a task-sized ancestor are one kernel call whose output
+    is a checkpoint: a tile read after them never re-plans a lazy
+    registry aggregate or a cached sources branch. Distributed clipping
+    while single tiles hold huge data, per-subtree parallelism afterwards;
   * Arrow-stage parallelism defaults to defaultParallelism/4 (task-cpus
     accounting for JVM serde + Python worker + numpy threads; see
     arrow_parts in build_pyramid);
@@ -53,8 +58,6 @@ from __future__ import annotations
 
 import functools
 import json
-import sys
-import time
 from typing import Optional
 
 import numpy as np
@@ -62,6 +65,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.util import inheritable_thread_target
 
 from ..config import Options
 from ..functions.feature import LINESTRING
@@ -79,7 +83,8 @@ from ..functions.flat import (
 )
 from ..model import FEATURE_SCHEMA, REGISTRY_SCHEMA, STORE_SCHEMA, TILE_FEATURE_SCHEMA
 from ..model import KIND_FRONTIER, KIND_REGISTRY, KIND_SOURCE, KIND_TILE
-from ..model import kind_rows, local_frame, store_rows
+from ..model import kind_rows, local_frame, num_points_col, store_rows, tile_key
+from ..model import tile_key_col
 from .balance import balanced_gid_mapping
 from ..functions.tile import GEOJSONVT_CLIP_END, GEOJSONVT_CLIP_START, js_div
 
@@ -87,10 +92,11 @@ from ..functions.tile import GEOJSONVT_CLIP_END, GEOJSONVT_CLIP_START, js_div
 # the tile list is comfortably below the driver/executor broadcast limit
 _BROADCAST_TILE_LIMIT = 200_000
 
-# subtree routing: a splitting tile whose vertex count fits one task's budget
-# has its whole sub-pyramid finished inside a single applyInArrow group (no
-# further per-level jobs for that subtree). The per-level loop keeps running
-# only for tiles too big for a task. 0 routes nothing (the pure level loop).
+# subtree routing: a tile whose vertex count fits one task's budget has its
+# whole sub-pyramid (just its own rows when it stops) finished inside a single
+# applyInArrow group (no further per-level jobs for that subtree). The
+# per-level loop keeps running only for tiles too big for a task. 0 routes
+# nothing (the pure level loop).
 _SUBTREE_MAX_POINTS = 200_000
 
 # every kernel output batch is built against the store layout (model.py)
@@ -432,9 +438,18 @@ class PyramidStore:
         self.frames: list[DataFrame] = []
         # always empty: head fusion is gone; kept for readers of the field
         self.head_fused: list = []
-        # one-shot audit: True when a build pass routed the z0 root, so the
-        # whole pyramid ran as a single subtree-kernel call (small corpora)
+        # one-shot audit: True when a first pass routed the z0 root and the
+        # root split, so the whole pyramid ran as a single subtree-kernel
+        # call (small corpora)
         self.one_shot: bool = False
+        # the routing decisions of the latest build_pyramid call on this
+        # store: {"start", "target", "one_shot", "levels": [{"z", "routed",
+        # "level_pass", "split"}, ...]}, one entry per level the loop ran.
+        # routed = tiles sent to the subtree kernel; level_pass = tiles with
+        # rows left to the level pass (None where the level decided
+        # distributed and only split is counted); split = level-pass tiles
+        # that split
+        self.decisions: dict = {}
 
     # read-only aliases of `frames` for readers of the old three lists
     # (perfbench); drop them with head_fused at the next benchmark change
@@ -471,7 +486,11 @@ _CKPT_POOL = None
 
 def _ckpt_pool():
     """One background thread for overlapping the subtree materialization with
-    the same level's fused pass (two Spark jobs; task slots cap concurrency)."""
+    the same level's fused pass (two Spark jobs; task slots cap concurrency).
+    Submit through pyspark's inheritable_thread_target(session): in
+    pinned-thread mode the thread's jobs then carry the caller's local
+    properties (job group, scheduler pool) and tags, so they count toward
+    the caller's jobs."""
     global _CKPT_POOL
     if _CKPT_POOL is None:
         from concurrent.futures import ThreadPoolExecutor
@@ -504,6 +523,7 @@ def build_pyramid(
     start: tuple = (0, 0, 0),
     target: Optional[tuple] = None,
     registered: frozenset = frozenset(),
+    start_counts: Optional[tuple] = None,
 ) -> PyramidStore:
     """Run the per-zoom split loop.
 
@@ -516,6 +536,13 @@ def build_pyramid(
             an update left valid). The reference keeps an existing tile
             (splitTile creates one only `if (!tile)`), so this call's rows
             for them are dropped — level pass and subtree kernel alike.
+    start_counts: (num_features, num_points) of features_df when the caller
+            already knows them (the engine: its source checkpoint's observed
+            counts, or a drill-down ancestor's registry row). The first
+            level then runs no counter job, and without a workdir
+            features_df, which such a caller hands over as a checkpoint or
+            a filter over one, is not checkpointed again: a start tile the
+            kernel takes is read once.
     """
     spark = features_df.sparkSession
     if store is None:
@@ -530,16 +557,9 @@ def build_pyramid(
     expected: Optional[DataFrame] = None  # child keys owed a registry entry
     expected_keys: Optional[list] = [start]  # driver mode; None once too large
     z = z0
-
-    # reference debug option (tile-index.ts:14,166-169 timing logs): >=1
-    # prints per-level phase timings on the driver
-    def _tick(label: str, t0: float) -> float:
-        if options.debug:
-            print(
-                f"[pyramid z={z:02d}] {label}: {time.time() - t0:.2f}s",
-                file=sys.stderr, flush=True,
-            )
-        return time.time()
+    decisions = store.decisions = {
+        "start": tuple(start), "target": target, "one_shot": False, "levels": [],
+    }
 
     # Arrow-stage parallelism: each Python-stage task occupies ~2-4 native
     # threads (JVM Arrow serde + the Python worker + numpy), the
@@ -552,19 +572,14 @@ def build_pyramid(
     arrow_parts = _par if _par <= 8 else max(8, _par // 4)
 
     feat_cols = FEATURE_SCHEMA.names
-    # decision counter, computed JVM-side: total source vertices per feature
-    # equals SUM(rlens) — identical to the assembly's npoints counter
-    npts_col = F.aggregate(
-        "rlens", F.lit(0).cast("long"), lambda a, v: a + v.cast("long")
-    )
 
     already_rdd = False
     if workdir is None:
-        # callers that hand us an eagerly-materialized frontier (bench,
-        # drill-down re-entry over cached sources) gain nothing from a
+        # callers that hand us an eagerly-materialized frontier (bench, the
+        # engine, which also knows its start counts) gain nothing from a
         # second localCheckpoint pass — skip it
         try:
-            already_rdd = (
+            already_rdd = start_counts is not None or (
                 frontier._jdf.queryExecution()
                 .optimizedPlan()
                 .toString()
@@ -581,7 +596,6 @@ def build_pyramid(
     parts: list[DataFrame] = []
 
     while True:
-        t0 = time.time()
         sub_future = None
         routed: list = []
         sources: Optional[DataFrame] = None
@@ -590,7 +604,7 @@ def build_pyramid(
         # Python crossing; the stop rule needs only counts + vertex sums) ----
         stats = frontier.groupBy("z", "x", "y").agg(
             F.count(F.lit(1)).alias("num_features"),
-            F.sum(npts_col).alias("num_points"),
+            F.sum(num_points_col()).alias("num_points"),
         )
 
         driver_mode = expected_keys is not None and len(expected_keys) <= _BROADCAST_TILE_LIMIT
@@ -600,8 +614,13 @@ def build_pyramid(
             # bounded (<= 4 x previous splits), so the split/stop decision
             # table fits the driver; one job per level instead of four.
             # Tile DATA stays distributed; only per-tile counters come back.
-            got = {(r.z, r.x, r.y): r for r in stats.collect()}
-            t0 = _tick("stats collect (JVM counters)", t0)
+            if z == z0 and start_counts is not None:
+                got = {start: start_counts} if start_counts[0] else {}
+            else:
+                got = {
+                    (r.z, r.x, r.y): (r.num_features, r.num_points)
+                    for r in stats.collect()
+                }
             if not got and target is None and z == z0:
                 # empty input: no root tile, like the reference, which
                 # skips splitTile when there are no features
@@ -610,14 +629,14 @@ def build_pyramid(
             split_list: list = []
             stop_list: list = []  # stopped tiles that hold rows
             for key in expected_keys:
-                r = got.get(key)
-                nf = r.num_features if r else 0
-                npts = r.num_points if r else 0
+                nf, npts = got.get(key, (0, 0))
                 stopped = _stop_rule(*key, npts, options, target)
-                if not stopped and 0 < npts <= _SUBTREE_MAX_POINTS:
-                    # task-sized splitting tile: the subtree kernel owns its
-                    # whole sub-pyramid, root registry row included
+                if 0 < npts <= _SUBTREE_MAX_POINTS:
+                    # task-sized tile: the subtree kernel owns its whole
+                    # sub-pyramid, root registry and source rows included
                     routed.append(key)
+                    if z == z0 and target is None and not stopped:
+                        decisions["one_shot"] = store.one_shot = True
                     continue
                 if not stopped and nf > 0:
                     split_list.append(key)
@@ -642,7 +661,7 @@ def build_pyramid(
             # the groupBy's distribution, so it is the ONLY shuffle.
             sub_parts = max(arrow_parts, min(len(routed), arrow_parts * 4))
             gids = balanced_gid_mapping(
-                routed, [got[k].num_points for k in routed], sub_parts
+                routed, [got[k][1] for k in routed], sub_parts
             )
             flags = local_frame(
                 spark,
@@ -675,15 +694,17 @@ def build_pyramid(
                 # read the (already-checkpointed) frontier, and in-flight
                 # tasks stay capped by the task slots
                 sub_future = _ckpt_pool().submit(
-                    _checkpoint,
+                    inheritable_thread_target(spark)(_checkpoint),
                     sub_in.groupBy("gid").applyInArrow(
                         _subtree_fn(options, target), STORE_SCHEMA
                     ),
                     workdir, f"subtree/z={z:02d}", resume,
                 )
-                if z == z0 and target is None:
-                    store.one_shot = True
             n_split = len(split_list)
+            decisions["levels"].append({
+                "z": z, "routed": len(routed),
+                "level_pass": len(split_list) + len(stop_list), "split": n_split,
+            })
             decision = None
         else:
             # ---- distributed decision path (web-scale levels) ----
@@ -729,6 +750,9 @@ def build_pyramid(
             )
             split_keys = decision.filter("split").select("z", "x", "y")
             n_split = split_keys.count()
+            decisions["levels"].append(
+                {"z": z, "routed": 0, "level_pass": None, "split": n_split}
+            )
             stop_keys = decision.filter("stopped").select("z", "x", "y")
             if n_split < _BROADCAST_TILE_LIMIT:
                 stop_keys = F.broadcast(stop_keys)
@@ -745,7 +769,6 @@ def build_pyramid(
                 arrow_parts
             ).mapInArrow(_level_fn(options), STORE_SCHEMA)
             unified = _checkpoint(unified, workdir, f"unified/z={z:02d}", resume)
-            t0 = _tick("fused assemble+split ckpt", t0)
             kind1 = unified.filter(F.col("kind") == KIND_TILE)
             # registry: driver/decision skeleton (num_features, num_points,
             # has_source) + per-tile num_simplified from the assembled rows —
@@ -773,7 +796,6 @@ def build_pyramid(
         if sub_future is not None:
             # the subtree kernel's output is store rows of kinds 1-3 already
             parts.append(sub_future.result())
-            t0 = _tick(f"subtree pass ({len(routed)} tiles)", t0)
 
         if n_split == 0:
             if decision is not None:
@@ -817,9 +839,11 @@ def build_pyramid(
 
     built = functools.reduce(DataFrame.union, parts)
     if registered:
-        built = built.join(
-            F.broadcast(local_frame(spark, sorted(registered), "z int, x int, y int")),
-            ["z", "x", "y"], "left_anti",
+        # a literal predicate (<= 24 x 5 keys): filtering in place keeps the
+        # appended frame a checkpoint scan, with no broadcast for every later
+        # tile read to re-run
+        built = built.where(
+            ~tile_key_col().isin([tile_key(*k) for k in sorted(registered)])
         )
     store.frames.append(built)
     return store

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..model import KIND_REGISTRY, KIND_TILE, REGISTRY_SCHEMA, STORE_SCHEMA
 from ..model import TILE_FEATURE_SCHEMA, kind_rows, store_rows, tile_feature_from_row
+from ..model import tile_key, tile_key_col
 
 # the on-disk dataset holds kinds 1 and 3, so only their columns are written
 _DISK_COLS = [
@@ -70,17 +71,12 @@ def lookup_frame(
             norm.add((z, x & ((1 << z) - 1), y))
     if not norm:  # folds to an empty relation: collecting it runs no job
         return store.where(F.lit(False))
-    key_col = (
-        F.shiftleft(F.col("z").cast("long"), 50)
-        + F.shiftleft(F.col("x").cast("long"), 25)
-        + F.col("y").cast("long")
-    )
     return store.where(
         F.col("kind").isin(list(kinds))
         & F.col("z").isin(sorted({z for z, _x, _y in norm}))
         & F.col("x").isin(sorted({x for _z, x, _y in norm}))
         & F.col("y").isin(sorted({y for _z, _x, y in norm}))
-        & key_col.isin([(z << 50) | (x << 25) | y for z, x, y in norm])
+        & tile_key_col().isin([tile_key(*k) for k in norm])
     )
 
 

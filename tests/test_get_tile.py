@@ -161,22 +161,61 @@ def test_get_tile_x_wrap(spark):
     assert eng.get_tile(1, -2, 0) == t
 
 
-def test_hit_job_budget(spark):
-    """A stored tile is one shared lookup (read_tiles): 1 Spark job on a
-    fresh engine (the store is the subtree kernel's checkpoint), at most 2
-    after update_data (the rebuilt root's registry rows join the level's
-    num_simplified aggregate, one more shuffle stage)."""
-    eng = GeoJSONVTSpark(
+ADDED_POINT = {"add": [{
+    "type": "Feature", "id": "added", "properties": {},
+    "geometry": {"type": "Point", "coordinates": [-74.5, 40.0]},
+}]}
+
+
+def _budget_engine(spark):
+    """The job-budget setup: a first pass to z7 over us-states, which is one
+    subtree-kernel call. count_jobs counts the kernel thread's jobs too (the
+    pool thread inherits the caller's job group)."""
+    return GeoJSONVTSpark(
         spark, data=load_fixture("us-states.json"),
         options=Options(updateable=True, index_max_zoom=7, index_max_points=200),
     )
+
+
+def test_hit_job_budget(spark):
+    """A stored tile is one shared lookup (read_tiles): 1 Spark job on a
+    fresh engine, after update_data and after a drill-down. Every frame a
+    hit reads is a checkpoint, filtered by literals at most: the first
+    pass's and the root rebuild's subtree-kernel output, the compacted
+    store update_data leaves, and a drill-down's kernel output minus the
+    keys the store already held. No hit re-runs a broadcast or a lazy
+    registry aggregate."""
+    eng = _budget_engine(spark)
     want = eng.all_tiles()
     for key in ((0, 0, 0), (7, 37, 48)):
         tile, jobs = count_jobs(spark, lambda: eng.get_tile(*key))
         assert tile == want["z%d-%d-%d" % key] and jobs == 1, (key, jobs)
-    eng.update_data({"add": [{
-        "type": "Feature", "id": "added", "properties": {},
-        "geometry": {"type": "Point", "coordinates": [-74.5, 40.0]},
-    }]})
+    eng.update_data(ADDED_POINT)
     tile, jobs = count_jobs(spark, lambda: eng.get_tile(0, 0, 0))
-    assert "added" in [f.get("id") for f in tile] and jobs <= 2, jobs
+    assert "added" in [f.get("id") for f in tile] and jobs == 1, jobs
+    assert eng.get_tile(12, 1207, 1539) is not None  # drill-down
+    for key in ((12, 1207, 1539), (0, 0, 0)):
+        tile, jobs = count_jobs(spark, lambda: eng.get_tile(*key))
+        assert tile is not None and jobs == 1, (key, jobs)
+
+
+def test_edit_job_budget(spark):
+    """update_data and a drill-down run only the jobs that compute
+    something, kernel-thread jobs included. update_data: the new source's
+    checkpoint (which also counts its rows and vertices, so no job probes
+    the affected set and the root rebuild needs no counter job), the
+    compaction of the invalidation anti-join (two broadcasts and the
+    checkpoint) and the root rebuild's one kernel call: 5 jobs. A z12
+    drill-down: the miss lookup, the ancestor lookup (whose registry row
+    gives the build its start counts), one kernel call and the tile read:
+    4 jobs. One job of headroom each."""
+    eng = _budget_engine(spark)
+    _, jobs = count_jobs(spark, lambda: eng.update_data(ADDED_POINT))
+    assert jobs <= 6, jobs
+    tile, jobs = count_jobs(spark, lambda: eng.get_tile(12, 1207, 1539))
+    assert tile is not None and jobs <= 5, jobs
+    # a second round costs the same: nothing accumulates in the store plan
+    _, jobs = count_jobs(spark, lambda: eng.update_data({"remove": ["added"]}))
+    assert jobs <= 6, jobs
+    tile, jobs = count_jobs(spark, lambda: eng.get_tile(12, 1208, 1539))
+    assert tile is not None and jobs <= 5, jobs

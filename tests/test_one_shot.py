@@ -1,11 +1,11 @@
-"""Subtree routing in the pyramid (plans/pyramid.py): every splitting tile
+"""Subtree routing in the pyramid (plans/pyramid.py): every tile with rows
 whose vertex count fits _SUBTREE_MAX_POINTS goes to the subtree kernel
 (_subtree_fn), which finishes its whole sub-pyramid, root included. The
-one-shot small-corpus mode is that rule applied at z0: the whole pyramid
-runs as ONE kernel call, zero per-level crossings. Routed builds must be
-row-identical to the pure level loop (cap 0) across all three outputs
-(registry, tiles, sources), engage/stand down exactly on the cap, and
-resume from their snapshots."""
+one-shot small-corpus mode is that rule applied to a splitting z0 root:
+the whole pyramid runs as ONE kernel call, zero per-level crossings.
+Routed builds must be row-identical to the pure level loop (cap 0) across
+all three outputs (registry, tiles, sources), engage/stand down exactly on
+the cap, and resume from their snapshots."""
 
 import os
 
@@ -82,8 +82,9 @@ def test_one_shot_stands_down_above_cap(rects, monkeypatch):
 
 
 def test_one_shot_stands_down_when_root_stops(spark, monkeypatch):
-    """A root the stop rule retains never enters one-shot mode (the level
-    loop finishes it in a single crossing anyway)."""
+    """A root the stop rule retains is not one-shot: one_shot means a
+    first-pass root was routed AND split. (The kernel still runs the
+    stopped root, as a one-level sub-pyramid.)"""
     options = Options(max_zoom=14, index_max_zoom=5, index_max_points=100_000)
     feats = bench.synth_rect_features(spark, 50, options).localCheckpoint(
         eager=True
@@ -91,6 +92,36 @@ def test_one_shot_stands_down_when_root_stops(spark, monkeypatch):
     s = _run(monkeypatch, feats, options, 200_000)
     assert not s.one_shot
     assert s.registry_df().count() == 1  # just the stopped root
+
+
+def test_build_decisions_record_routing(rects, loop, spark, monkeypatch):
+    """PyramidStore.decisions records each level's routing as data: the
+    pure loop routes nothing and runs a level pass per zoom; the one-shot
+    build routes the z0 root and has nothing left for a level pass; a root
+    the stop rule retains is routed too (it runs as a one-level sub-pyramid)
+    but is not one-shot."""
+    feats, options = rects
+    s_loop, _ = loop
+    levels = s_loop.decisions["levels"]
+    assert not s_loop.decisions["one_shot"]
+    assert [lv["z"] for lv in levels] == list(range(len(levels)))
+    assert len(levels) > 5
+    assert all(lv["routed"] == 0 and lv["level_pass"] > 0 for lv in levels)
+    assert levels[0] == {"z": 0, "routed": 0, "level_pass": 1, "split": 1}
+
+    s_os = _run(monkeypatch, feats, options, 200_000)
+    assert s_os.decisions == {
+        "start": (0, 0, 0), "target": None, "one_shot": True,
+        "levels": [{"z": 0, "routed": 1, "level_pass": 0, "split": 0}],
+    }
+
+    stop_opts = Options(max_zoom=14, index_max_zoom=5, index_max_points=100_000)
+    few = bench.synth_rect_features(spark, 50, stop_opts).localCheckpoint(eager=True)
+    s_stop = _run(monkeypatch, few, stop_opts, 200_000)
+    assert not s_stop.one_shot and not s_stop.decisions["one_shot"]
+    assert s_stop.decisions["levels"] == [
+        {"z": 0, "routed": 1, "level_pass": 0, "split": 0}
+    ]
 
 
 def test_one_shot_resume_reuses_snapshot(rects, tmp_path, monkeypatch):

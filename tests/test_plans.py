@@ -194,18 +194,23 @@ def test_get_tile_ancestor_lookup_is_pruned(spark):
     assert len(rows) <= len(anc)
 
 
-def test_tile_lookup_folds_away_cached_sources(spark):
-    """The store is one list of kind-tagged frames; a stopped level's
-    retained sources are a lazily cached branch tagged with a literal kind.
-    A tile lookup's kind filter must fold that branch away in the optimized
-    plan (through the invalidation anti-join too), or every tile read would
-    materialize the cache."""
+def test_tile_lookup_folds_away_cached_sources(spark, monkeypatch):
+    """The store is one list of kind-tagged frames. A tile too big for the
+    subtree kernel stops in the level pass, whose retained sources are a
+    lazily cached branch tagged with a literal kind; cap 0 sends every tile
+    there, here the root update_data rebuilds. A tile lookup's kind filter
+    must fold that branch away in the optimized plan, or every tile read
+    would materialize the cache. (Task-sized tiles, the default for this
+    corpus, come out of the subtree kernel as a checkpoint, with no cached
+    branch at all.)"""
+    import geojson_vt_spark.plans.pyramid as pyr
     from geojson_vt_spark.config import Options
     from geojson_vt_spark.operators.engine import GeoJSONVTSpark
     from geojson_vt_spark.sources.tile_store import lookup_frame
 
     from .conftest import load_fixture
 
+    monkeypatch.setattr(pyr, "_SUBTREE_MAX_POINTS", 0)
     eng = GeoJSONVTSpark(
         spark, data=load_fixture("us-states.json"),
         options=Options(updateable=True),
