@@ -608,41 +608,10 @@ def _nation_boxes(spark, sf_dir):
     )
 
 
-def _cell_scheme(res: int):
-    """Resolve the cell scheme for the cell-binned joins from
-    SPARK_GRAFT_CELL_SCHEME (quadkey default; hilbert = S2-style locality
-    curve; sphere = latitude-corrected equal-ground-area grid; h3 = native
-    fast path where libh3 exists). Join RESULTS are scheme-invariant (the
-    cell layer only generates candidates — contract-tested in
-    tests/test_cells.py), so the oracle stays green under every member."""
-    import os
-
-    from .operators.cells import (
-        H3Cells,
-        HilbertCells,
-        QuadkeyCells,
-        SphereCells,
-    )
-
-    name = os.environ.get("SPARK_GRAFT_CELL_SCHEME", "quadkey")
-    schemes = {
-        "quadkey": QuadkeyCells,
-        "hilbert": HilbertCells,
-        "sphere": SphereCells,
-        "h3": H3Cells,
-    }
-    if name not in schemes:
-        raise ValueError(
-            f"SPARK_GRAFT_CELL_SCHEME={name!r} is not a cell scheme; "
-            f"valid values: {', '.join(sorted(schemes))}"
-        )
-    return schemes[name](res)
-
-
 def q_pip_join(spark, sf_dir):
     pts = _event_points(spark, sf_dir)
     boxes = _nation_boxes(spark, sf_dir)
-    hits = point_in_box_join(pts, boxes, res=6, scheme=_cell_scheme(6))
+    hits = point_in_box_join(pts, boxes, res=6)
     return hits.groupBy("n_nationkey").agg(
         F.count(F.lit(1)).alias("n_points"),
         F.sum("event_id").alias("id_sum"),
@@ -672,7 +641,7 @@ GROUP BY n_nationkey
 
 def q_geo_radius_join(spark, sf_dir):
     """Geodesic (great-circle) radius join on the sphere-aware reduced grid
-    (operators/cells.py SphereCells geometry; round-4 verdict #4): every
+    (operators/spatial_join.py; round-4 verdict #4): every
     event within 500 km of each query point. Query points sit from the
     equator up to latitude 84 — exactly where planar mercator binning
     distorts (a fixed ground radius spans ~1/cos(lat)^2 more mercator cells

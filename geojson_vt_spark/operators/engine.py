@@ -19,6 +19,7 @@ from ..functions.convert import convert_geojson
 from ..functions.wrap import wrap_features
 from ..model import FEATURE_SCHEMA, KIND_REGISTRY, KIND_SOURCE
 from ..model import feature_to_row, local_frame, num_points_col
+from ..model import tile_key, tile_key_col
 from ..plans.pyramid import PyramidStore, build_pyramid
 from ..sources.tile_store import lookup_frame, read_tiles
 
@@ -202,6 +203,11 @@ class GeoJSONVTSpark:
         src = lookup_frame(self.store.frame(), [found], [KIND_SOURCE]).select(
             *FEATURE_SCHEMA.names
         )
+        # the build re-emits the start tile, which no longer keeps its
+        # source once it splits (tile-index.ts:191): its new rows replace
+        # the old ones, so the old ones go (a literal filter, no job)
+        other_keys = tile_key_col() != F.lit(tile_key(*found))
+        self.store.frames = [df.where(other_keys) for df in self.store.frames]
         build_pyramid(
             src,
             self.options,
@@ -209,7 +215,7 @@ class GeoJSONVTSpark:
             workdir=None,
             start=found,
             target=(z, x, y),
-            registered=frozenset(reg),
+            registered=frozenset(reg) - {found},
             # a retained source is the tile's rows: its registry counters
             # are the build's start counts
             start_counts=(reg[found].num_features, reg[found].num_points),

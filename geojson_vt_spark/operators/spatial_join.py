@@ -4,15 +4,21 @@ The reference has no relational joins — its spatial analogs are the quadtree
 assignment (tile-index.ts:208-219) and the kd-tree radius query
 (cluster-tile-index.ts). At cluster scale both become *cell-binned equi-joins*:
 
-  * cells are quadkeys over the mercator unit square at a fixed resolution —
-    pure Column math (JVM-side, codegen), no Python;
+  * cells are tile-aligned quadkeys over the mercator unit square at a fixed
+    resolution — pure Column math (JVM-side, codegen), no Python. A cell at
+    res r IS tile (z=r, x=cell>>r, y=cell & (2^r - 1)), so tile pyramids,
+    heatmaps and joins share one key space (SURVEY §8.3: quadkey, not
+    H3/S2);
   * point-in-polygon: coarse cell/bbox prefilter (broadcastable) + exact
     refine — range predicates for boxes, vectorized ray-casting (pandas UDF)
     for general polygons;
   * kNN: 3x3-neighborhood candidate join with driver-side ring doubling until
     every point's kth-neighbor distance is certified by the ring bound — each
     round joins only unsettled points, so hot cells don't force a global
-    blow-up. AQE skew-join handles dense-cell imbalance.
+    blow-up. AQE skew-join handles dense-cell imbalance;
+  * great-circle joins key lat/lng points on a latitude-corrected reduced
+    grid instead (see `row_of_lat`): its cells have roughly equal ground
+    area, so a ground radius covers O(1) cells at any latitude.
 """
 
 from __future__ import annotations
@@ -22,16 +28,33 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 
-def cell_col(x, y, res: int):
-    """Quadkey cell id at resolution `res` (2^res x 2^res grid over [0,1]²).
-    Clamps to the grid so buffered coords stay addressable. Thin wrapper over
-    the default scheme of the pluggable cell seam (operators/cells.py)."""
-    from .cells import QuadkeyCells
+def _quad_axis(v, res: int) -> Column:
+    n = 1 << res
+    return F.least(F.greatest(F.floor(v * n), F.lit(0)), F.lit(n - 1)).cast("long")
 
-    return QuadkeyCells(res).point_cell(x, y).alias("cell")
+
+def quad_cell(x, y, res: int) -> Column:
+    """Quadkey cell of a mercator-unit point: (cx << res) | cy on the
+    2^res x 2^res grid, clamped so buffered coords stay addressable."""
+    return F.shiftleft(_quad_axis(x, res), res) + _quad_axis(y, res)
+
+
+def quad_cover(minx, miny, maxx, maxy, res: int) -> Column:
+    """array<long> of the quadkey cells a mercator-unit box touches."""
+    x0, x1 = _quad_axis(minx, res), _quad_axis(maxx, res)
+    y0, y1 = _quad_axis(miny, res), _quad_axis(maxy, res)
+    return F.flatten(
+        F.transform(
+            F.sequence(x0, x1),
+            lambda cx: F.transform(
+                F.sequence(y0, y1),
+                lambda cy: F.shiftleft(cx, res) + cy,
+            ),
+        )
+    )
 
 
 def point_in_box_join(
@@ -40,34 +63,23 @@ def point_in_box_join(
     px: str = "x",
     py: str = "y",
     res: int = 8,
-    scheme=None,
 ) -> DataFrame:
     """points(id-ish cols, x, y) ⋈ boxes(box cols, minx, miny, maxx, maxy).
 
-    Coarse pass: boxes explode to covered cells (cheap — boxes are few),
-    points map to one cell, equi-join on cell (broadcast when boxes are
-    small); exact refine = closed-range containment predicate. Semantics:
-    minx <= x <= maxx AND miny <= y <= maxy.
-
-    `scheme` is any operators/cells.py CellScheme (default: tile-aligned
-    quadkeys at `res`; H3 where the native lib exists)."""
-    if scheme is None:
-        from .cells import QuadkeyCells
-
-        scheme = QuadkeyCells(res)
-
+    Coarse pass: boxes explode to covered quadkey cells (cheap — boxes are
+    few), points map to one cell, equi-join on cell (broadcast when boxes
+    are small); exact refine = closed-range containment predicate.
+    Semantics: minx <= x <= maxx AND miny <= y <= maxy."""
     boxes_cells = boxes.withColumn(
         "cell",
         F.explode(
-            scheme.bbox_cells(
-                F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy")
+            quad_cover(
+                F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res
             )
         ),
     )
 
-    pts = points.withColumn(
-        "cell", scheme.point_cell(F.col(px), F.col(py))
-    )
+    pts = points.withColumn("cell", quad_cell(F.col(px), F.col(py), res))
     joined = pts.join(F.broadcast(boxes_cells), "cell").where(
         (F.col(px) >= F.col("minx"))
         & (F.col(px) <= F.col("maxx"))
@@ -125,6 +137,55 @@ _EARTH_RADIUS_KM = 6371.0088
 _KM_PER_DEG = math.pi * _EARTH_RADIUS_KM / 180.0  # ~111.195
 
 
+# --- the reduced grid of the great-circle joins: 2^res uniform latitude
+# bands, each cut into max(1, ceil(2^(res+1) * cos(lat_mid))) longitude
+# columns (the reduced-Gaussian-grid construction), cell id
+# (band << 32) | column. A band is ~111 km of ground per degree everywhere
+# and holds ~cos(lat) x fewer columns, so cells have roughly equal ground
+# area; mercator quadkeys stretch by 1/cos(lat), so a fixed ground radius
+# covers ~(1/cos(lat))^2 more of them toward the poles (~33x at lat 80).
+# geo_radius_join keys both join sides through these functions only.
+
+
+def row_of_lat(lat, res: int) -> Column:
+    """Band index of a latitude in degrees."""
+    nrows = 1 << res
+    return (
+        F.least(
+            F.greatest(F.floor((lat + 90.0) / 180.0 * nrows), F.lit(0)),
+            F.lit(nrows - 1),
+        ).cast("long")
+    )
+
+
+def ncols_of_row(row, res: int) -> Column:
+    """Column count of a band (cos-reduced, never below 1)."""
+    lat_mid = (row.cast("double") + 0.5) * (180.0 / (1 << res)) - 90.0
+    return F.greatest(
+        F.lit(1),
+        F.ceil(F.cos(lat_mid * (math.pi / 180.0)) * (1 << (res + 1))),
+    ).cast("long")
+
+
+def col_of_lng(lng, ncols) -> Column:
+    """Column index of a longitude in degrees within a band."""
+    return (
+        F.least(
+            F.greatest(
+                F.floor((lng + 180.0) / 360.0 * ncols.cast("double")),
+                F.lit(0),
+            ),
+            ncols - 1,
+        ).cast("long")
+    )
+
+
+def reduced_grid_cell(lat, lng, res: int) -> Column:
+    """Reduced-grid cell of a lat/lng point in degrees."""
+    row = row_of_lat(lat, res)
+    return F.shiftleft(row, 32) + col_of_lng(lng, ncols_of_row(row, res))
+
+
 def geo_radius_join(
     a: DataFrame,
     b: DataFrame,
@@ -136,11 +197,11 @@ def geo_radius_join(
     """Geodesically honest radius join: all (a, b) pairs with great-circle
     distance <= radius_km. a: (a_id, lat, lng); b: (b_id, lat, lng), degrees.
 
-    Candidates come from the latitude-corrected reduced grid
-    (operators/cells.py SphereCells geometry): b-points key to one
-    (band << 32 | col) cell; each a-point explodes to the cells its ground
-    radius can reach — latitude bands within radius/111.195 deg, and per
-    band a longitude span from inverting the haversine law itself:
+    Candidates come from the latitude-corrected reduced grid (above):
+    b-points key to one (band << 32 | col) cell; each a-point explodes to
+    the cells its ground radius can reach — latitude bands within
+    radius/111.195 deg, and per band a longitude span from inverting the
+    haversine law itself:
 
         hav(dlng) <= (hav(R) - hav(dphi_min)) / (cos(lat_a) * cos_min)
 
@@ -155,7 +216,7 @@ def geo_radius_join(
     the right side reaches 1 the bound degenerates to "the whole band"
     (columns are few there — still O(1) cells per query). Column spans
     are WRAPPED modulo the band's column count (a query at lng 179
-    reaches cols at -180; planar mercator schemes get this wrong twice —
+    reaches cols at -180; planar mercator grids get this wrong twice —
     no wrap, and a fixed ground radius spans ~1/cos(lat) more mercator
     cells toward the poles, the distortion the round-3 verdict flagged).
     Refine is the exact haversine in Column math (pure JVM codegen);
@@ -165,15 +226,8 @@ def geo_radius_join(
     Scale shape: one equi-join on cell (shuffle both sides on a bounded
     key set), no cartesian; refine only on candidates. Dense-cell skew is
     AQE's skew-join case, same as knn_join."""
-    from .cells import SphereCells
-
-    # ONE source of truth for the reduced-grid geometry: the same
-    # SphereCells methods key both join sides and every SphereCells-based
-    # join elsewhere (a divergent local copy here was a review finding)
-    grid = SphereCells(res)
-    band_h_deg = 180.0 / grid.nrows
+    band_h_deg = 180.0 / (1 << res)
     r_deg = radius_km / _KM_PER_DEG  # latitude degrees per radius
-    _row, _ncols, _col = grid.row_of_lat, grid.ncols_of_row, grid.col_of_lng
 
     bx = b.select(
         F.col(b_id),
@@ -181,13 +235,11 @@ def geo_radius_join(
         F.col("lng").alias("blng"),
     )
     bcells = bx.withColumn(
-        "cell",
-        F.shiftleft(_row(F.col("blat")), 32)
-        + _col(F.col("blng"), _ncols(_row(F.col("blat")))),
+        "cell", reduced_grid_cell(F.col("blat"), F.col("blng"), res)
     )
 
-    row_lo = _row(F.col("alat") - F.lit(r_deg))
-    row_hi = _row(F.col("alat") + F.lit(r_deg))
+    row_lo = row_of_lat(F.col("alat") - F.lit(r_deg), res)
+    row_hi = row_of_lat(F.col("alat") + F.lit(r_deg), res)
     # hav(R) as a driver-side scalar; R clamped to the half-circumference
     # (hav is increasing only up to pi — geo_knn_join's final doubling
     # overshoots it, where the correct cover is "everything")
@@ -202,7 +254,7 @@ def geo_radius_join(
     # per candidate band: invert the haversine law for the lng span (see
     # docstring) — hav(dlng) <= (hav(R) - hav(dphi_min)) / (cosq * cos_min)
     def _cells_of_band(r):
-        ncols = _ncols(r)
+        ncols = ncols_of_row(r, res)
         lat1 = r.cast("double") * band_h_deg - 90.0  # band south edge
         lat2 = lat1 + band_h_deg  # band north edge
         edge_lat = F.greatest(F.abs(lat1), F.abs(lat2))
@@ -219,7 +271,7 @@ def geo_radius_join(
             F.lit(2.0) * F.asin(F.sqrt(F.greatest(hav_dl, F.lit(0.0))))
         )
         span = F.ceil(dlng / 360.0 * ncols.cast("double")).cast("long") + 1
-        c0 = _col(F.col("alng"), ncols)
+        c0 = col_of_lng(F.col("alng"), ncols)
         return F.when(
             (hav_dl >= 1.0) | (span * 2 >= ncols),
             F.transform(

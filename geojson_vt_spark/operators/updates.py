@@ -214,10 +214,9 @@ def filter_update(
 
     removed = source.mapInPandas(kernel, FEATURE_SCHEMA)
     removed = removed.localCheckpoint(eager=True)
-    if removed.isEmpty():
-        return affected, source
+    # no emptiness probe: an empty `removed` makes the anti-join and the
+    # union no-ops, and update_data finds a no-op from its row count. No
+    # broadcast hint: the failing ids can be the whole source
     removed_ids = removed.select("id").distinct()
-    source = source.join(
-        F.broadcast(removed_ids), ["id"], "left_anti"
-    )
+    source = source.join(removed_ids, ["id"], "left_anti")
     return affected.unionByName(removed), source

@@ -531,11 +531,11 @@ def build_pyramid(
     target: (cz, cx, cy) for drill-down mode (getTile miss), else None for the
             first-pass indexing run, which appends nothing to the store when
             features_df holds no rows.
-    registered: tile keys the store already holds (drill-down re-entry: the
-            start tile, and siblings an earlier drill-down registered that
-            an update left valid). The reference keeps an existing tile
-            (splitTile creates one only `if (!tile)`), so this call's rows
-            for them are dropped — level pass and subtree kernel alike.
+    registered: tile keys the store already holds (drill-down re-entry:
+            siblings an earlier drill-down registered that an update left
+            valid). The reference keeps an existing tile (splitTile creates
+            one only `if (!tile)`), so this call's rows for them are
+            dropped — level pass and subtree kernel alike.
     start_counts: (num_features, num_points) of features_df when the caller
             already knows them (the engine: its source checkpoint's observed
             counts, or a drill-down ancestor's registry row). The first

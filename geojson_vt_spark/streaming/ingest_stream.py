@@ -69,8 +69,8 @@ def admit_batch(
     stage_counts). The same plan as corpus_pipeline_job stages 1-2b, with
     the same knobs — the quality gate is the SHARED
     `analytics.admission_quality_col` expression, so batch/stream parity
-    is structural, not copy-paste — then a broadcast anti-join against
-    the contaminated ids."""
+    is structural, not copy-paste — then an anti-join against the
+    contaminated ids."""
     from ..analytics import admission_quality_col
     from ..hygiene import contamination_hits
     from ..training import lang_cols
@@ -100,9 +100,11 @@ def admit_batch(
     contaminated = contamination_hits(
         survivors, eval_docs, n=decontam_ngram
     ).select("doc_id")
-    admitted = survivors.join(
-        F.broadcast(contaminated), "doc_id", "left_anti"
-    ).select("doc_id", "source", "text")
+    # no broadcast hint: the id list grows with the contaminated-doc
+    # count; AQE broadcasts it when it is small
+    admitted = survivors.join(contaminated, "doc_id", "left_anti").select(
+        "doc_id", "source", "text"
+    )
     stage = {
         "docs_in": int(counts.n_in or 0),
         "quality_passed": int(counts.n_quality or 0),

@@ -321,9 +321,8 @@ def main(argv: list[str]) -> None:
             .localCheckpoint(eager=True)  # ids only; reused by count + join
         )
         n_contam = contaminated.count()
-        survivors = survivors.join(
-            F.broadcast(contaminated), "doc_id", "left_anti"
-        )
+        # plain join: the id list grows with the contaminated-doc count
+        survivors = survivors.join(contaminated, "doc_id", "left_anti")
 
     # Stage 3a: exact dedup — ONE fingerprint groupBy keeping the whole
     # min-doc_id row per (source, md5(text)). min(struct) compares doc_id

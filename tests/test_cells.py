@@ -1,10 +1,23 @@
-"""Pluggable cell-scheme seam (operators/cells.py)."""
+"""Cell keys of the spatial joins (operators/spatial_join.py): quadkeys for
+the mercator-unit joins, the reduced lat/lng grid for the great-circle
+joins."""
 
-import pytest
+import math
+
+import numpy as np
 from pyspark.sql import functions as F
 
-from geojson_vt_spark.operators.cells import CellScheme, H3Cells, QuadkeyCells
-from geojson_vt_spark.operators.spatial_join import point_in_box_join
+from geojson_vt_spark.operators.spatial_join import (
+    col_of_lng,
+    geo_knn_join,
+    geo_radius_join,
+    ncols_of_row,
+    point_in_box_join,
+    quad_cell,
+    quad_cover,
+    reduced_grid_cell,
+    row_of_lat,
+)
 
 
 def test_quadkey_point_cell(spark):
@@ -14,7 +27,7 @@ def test_quadkey_point_cell(spark):
     res = 4
     got = [
         r.c for r in df.select(
-            QuadkeyCells(res).point_cell(F.col("x"), F.col("y")).alias("c")
+            quad_cell(F.col("x"), F.col("y"), res).alias("c")
         ).collect()
     ]
     n = 1 << res
@@ -27,199 +40,68 @@ def test_quadkey_bbox_cover(spark):
                                ["minx", "miny", "maxx", "maxy"])
     res = 3  # cells of 1/8: x in {0,1,2}, y in {1,2}
     cells = df.select(
-        QuadkeyCells(res).bbox_cells(
-            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy")
+        quad_cover(
+            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res
         ).alias("cells")
     ).collect()[0].cells
     expect = sorted((cx << res) + cy for cx in (0, 1, 2) for cy in (1, 2))
     assert sorted(cells) == expect
 
 
-class ShiftedQuadkey(CellScheme):
-    """Deterministic fake scheme: quadkey with every id offset by 1000 —
-    exercises the seam end-to-end without native libs; results must be
-    identical (the cell layer is only a candidate prefilter)."""
-
-    def __init__(self, res):
-        self.inner = QuadkeyCells(res)
-
-    def point_cell(self, x, y):
-        return self.inner.point_cell(x, y) + F.lit(1000)
-
-    def bbox_cells(self, minx, miny, maxx, maxy):
-        return F.transform(
-            self.inner.bbox_cells(minx, miny, maxx, maxy), lambda c: c + 1000
-        )
-
-
-def test_join_is_scheme_agnostic(spark):
-    pts = spark.createDataFrame(
-        [(i, (i * 37 % 100) / 100.0, (i * 53 % 100) / 100.0) for i in range(200)],
-        ["pid", "x", "y"],
-    )
-    boxes = spark.createDataFrame(
-        [(1, 0.1, 0.1, 0.4, 0.5), (2, 0.55, 0.2, 0.9, 0.8)],
-        ["bid", "minx", "miny", "maxx", "maxy"],
-    )
-    base = {
-        (r.pid, r.bid)
-        for r in point_in_box_join(pts, boxes, res=5).collect()
-    }
-    alt = {
-        (r.pid, r.bid)
-        for r in point_in_box_join(
-            pts, boxes, scheme=ShiftedQuadkey(5)
-        ).collect()
-    }
-    assert base and base == alt
-
-
-def test_h3_requires_native_lib():
-    try:
-        import h3  # noqa: F401
-
-        pytest.skip("h3 installed: the guard path does not apply")
-    except ImportError:
-        pass
-    with pytest.raises(RuntimeError, match="h3"):
-        H3Cells(7)
-
-
-def test_hilbert_column_matches_numpy_twin(spark):
-    """The pure-Column Hilbert fold equals the numpy oracle on a coordinate
-    sweep (which itself matches the canonical scalar loop — verified in the
-    scheme's authoring tests) — bijection and range included."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from geojson_vt_spark.operators.cells import HilbertCells, hilbert_d_numpy
-
-    res = 6
-    sch = HilbertCells(res)
-    n = 1 << res
-    df = (
-        spark.range(n * n)
-        .select(
-            (F.col("id") % n).alias("cx"),
-            (F.col("id") / n).cast("long").alias("cy"),
-        )
-        .select(
-            "cx",
-            "cy",
-            sch._d(F.col("cx"), F.col("cy")).alias("d"),
-        )
-    )
-    rows = df.collect()
-    got = np.array([r.d for r in rows])
-    want = hilbert_d_numpy(
-        res, np.array([r.cx for r in rows]), np.array([r.cy for r in rows])
-    )
-    assert (got == want).all()
-    assert len(set(got.tolist())) == n * n and got.min() == 0
-
-
-def test_hilbert_point_cell_locality(spark):
-    """The reason the scheme exists: sorting by Hilbert id makes consecutive
-    cells GRID-ADJACENT (|dx|+|dy| == 1), which quadkey packing does not."""
-    import numpy as np
-
-    from geojson_vt_spark.operators.cells import hilbert_d_numpy
-
-    res = 7
-    n = 1 << res
-    xs, ys = np.meshgrid(np.arange(n), np.arange(n))
-    d = hilbert_d_numpy(res, xs.ravel(), ys.ravel())
-    order = np.argsort(d)
-    dx = np.abs(np.diff(xs.ravel()[order]))
-    dy = np.abs(np.diff(ys.ravel()[order]))
-    assert ((dx + dy) == 1).all()
-    # quadkey packing breaks adjacency at every row boundary
-    qk = (xs.ravel() << res) | ys.ravel()
-    oq = np.argsort(qk)
-    dq = np.abs(np.diff(xs.ravel()[oq])) + np.abs(np.diff(ys.ravel()[oq]))
-    assert (dq > 1).any()
-
-
-def test_join_identical_under_hilbert_scheme(spark):
-    """Cell ids are join keys only — the Hilbert bijection must give
-    row-identical spatial-join output to the default quadkeys."""
-    from pyspark.sql import functions as F
-
-    from geojson_vt_spark.operators.cells import HilbertCells
-    from geojson_vt_spark.operators.spatial_join import point_in_box_join
-
-    pts = spark.range(400).select(
-        F.col("id").alias("pid"),
-        (F.pmod(F.col("id") * 7919, F.lit(1000)) / 1000.0).alias("px"),
-        (F.pmod(F.col("id") * 104729 + 3, F.lit(1000)) / 1000.0).alias("py"),
-    )
-    boxes = spark.range(25).select(
-        F.col("id").alias("bid"),
-        (F.pmod(F.col("id") * 131, F.lit(100)) / 100.0).alias("minx"),
-        (F.pmod(F.col("id") * 131, F.lit(100)) / 100.0 + 0.15).alias("maxx"),
-        (F.pmod(F.col("id") * 37, F.lit(100)) / 100.0).alias("miny"),
-        (F.pmod(F.col("id") * 37, F.lit(100)) / 100.0 + 0.2).alias("maxy"),
-    )
-    base = {
-        tuple(r) for r in point_in_box_join(pts, boxes, px="px", py="py").select("pid", "bid").collect()
-    }
-    hil = {
-        tuple(r)
-        for r in point_in_box_join(pts, boxes, px="px", py="py", scheme=HilbertCells(5))
-        .select("pid", "bid")
-        .collect()
-    }
-    assert base == hil and base
-
-
-# ---------------------------------------------------------------------------
-# SphereCells: the geodesically honest, dependency-free member of the seam
-# ---------------------------------------------------------------------------
-
 def _merc(lat, lng):
     """lat/lng degrees -> mercator unit square (tests' ground-truth twin of
     functions/projection.py)."""
-    import math
-
     x = (lng + 180.0) / 360.0
     s = math.sin(lat * math.pi / 180.0)
     y = 0.5 - 0.25 * math.log((1 + s) / (1 - s)) / math.pi
     return x, y
 
 
+def _reduced_grid_cell_numpy(res, lat, lng):
+    """numpy twin of the reduced grid: 2^res latitude bands, each with
+    max(1, ceil(2^(res+1) * cos(band mid-latitude))) longitude columns,
+    cell (band << 32) + column."""
+    lat = np.asarray(lat, dtype=np.float64)
+    lng = np.asarray(lng, dtype=np.float64)
+    nrows = 1 << res
+    row = np.clip(np.floor((lat + 90.0) / 180.0 * nrows), 0, nrows - 1).astype(
+        np.int64
+    )
+    lat_mid = (row + 0.5) * (180.0 / nrows) - 90.0
+    ncols = np.maximum(
+        1, np.ceil(np.cos(lat_mid * math.pi / 180.0) * (1 << (res + 1)))
+    ).astype(np.int64)
+    col = np.clip(np.floor((lng + 180.0) / 360.0 * ncols), 0, ncols - 1).astype(
+        np.int64
+    )
+    return (row << 32) + col
+
+
 def test_sphere_point_cell_matches_numpy_twin(spark):
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from geojson_vt_spark.operators.cells import SphereCells, sphere_cell_numpy
-
+    """The reduced-grid cell geo_radius_join keys its b-side with equals
+    the numpy twin, poles, equator and both antimeridian edges included."""
     res = 6
-    sch = SphereCells(res)
     pts = [
-        _merc(lat, lng)
-        for lat in (-84.0, -60.0, -10.0, 0.0, 15.5, 45.0, 70.0, 84.0)
-        for lng in (-179.9, -120.0, -1.0, 0.0, 33.3, 120.0, 179.9)
+        (lat, lng)
+        for lat in (-90.0, -84.0, -60.0, -10.0, 0.0, 15.5, 45.0, 70.0, 84.0, 90.0)
+        for lng in (-180.0, -179.9, -120.0, -1.0, 0.0, 33.3, 120.0, 179.9, 180.0)
     ]
-    df = spark.createDataFrame(pts, ["x", "y"])
+    df = spark.createDataFrame(pts, ["lat", "lng"])
     rows = df.select(
-        "x", "y", sch.point_cell(F.col("x"), F.col("y")).alias("c")
+        "lat", "lng",
+        reduced_grid_cell(F.col("lat"), F.col("lng"), res).alias("c"),
     ).collect()
     got = np.array([r.c for r in rows])
-    want = sphere_cell_numpy(
-        res, np.array([r.x for r in rows]), np.array([r.y for r in rows])
+    want = _reduced_grid_cell_numpy(
+        res, [r.lat for r in rows], [r.lng for r in rows]
     )
     assert (got == want).all()
 
 
-def test_sphere_scheme_pip_join_agnostic_high_latitude(spark):
-    """point_in_box_join under SphereCells returns exactly the QuadkeyCells
-    rows (and the brute-force predicate) on a corpus concentrated at
-    latitude 75-84, where mercator distortion is strongest."""
-    from pyspark.sql import functions as F
-
-    from geojson_vt_spark.operators.cells import QuadkeyCells, SphereCells
-    from geojson_vt_spark.operators.spatial_join import point_in_box_join
-
+def test_pip_join_high_latitude_vs_brute(spark):
+    """point_in_box_join returns exactly the brute-force containment rows
+    on a corpus concentrated at latitude 75-84, where mercator distortion
+    is strongest."""
     pts = [
         (i,) + _merc(75.0 + (i * 7 % 90) / 10.0, -179.0 + (i * 13 % 3580) / 10.0)
         for i in range(500)
@@ -234,13 +116,9 @@ def test_sphere_scheme_pip_join_agnostic_high_latitude(spark):
         boxes.append((bid, x0, y0, x1, y1))
     bdf = spark.createDataFrame(boxes, ["bid", "minx", "miny", "maxx", "maxy"])
 
-    base = {
+    got = {
         (r.pid, r.bid)
-        for r in point_in_box_join(pdf, bdf, scheme=QuadkeyCells(6)).collect()
-    }
-    sph = {
-        (r.pid, r.bid)
-        for r in point_in_box_join(pdf, bdf, scheme=SphereCells(6)).collect()
+        for r in point_in_box_join(pdf, bdf, res=6).collect()
     }
     brute = {
         (r.pid, r.bid)
@@ -251,19 +129,14 @@ def test_sphere_scheme_pip_join_agnostic_high_latitude(spark):
         )
         .collect()
     }
-    assert base and base == sph == brute
+    assert got and got == brute
 
 
 def test_sphere_cells_ground_area_honesty(spark):
-    """A fixed 200x200 km ground box covers O(1) SphereCells at any latitude,
-    while the planar mercator grid inflates by ~1/cos(lat)^2 toward the
-    poles — the concrete distortion the scheme exists to fix."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from geojson_vt_spark.operators.cells import QuadkeyCells, SphereCells
-
+    """A fixed 200x200 km ground box covers O(1) reduced-grid cells at any
+    latitude (bands from row_of_lat, per band the columns col_of_lng gives
+    its edges), while the quadkey cover inflates by ~1/cos(lat)^2 toward
+    the poles: the distortion the great-circle joins avoid."""
     res = 8
     km = 200.0
     rows = []
@@ -272,38 +145,34 @@ def test_sphere_cells_ground_area_honesty(spark):
         dlng = km / (111.195 * math.cos(lat * math.pi / 180.0))
         x0, y1 = _merc(lat, 10.0)
         x1, y0 = _merc(lat + dlat, 10.0 + dlng)
-        rows.append((lat, x0, y0, x1, y1))
-    df = spark.createDataFrame(rows, ["lat", "minx", "miny", "maxx", "maxy"])
-
-    def counts(scheme):
-        out = {
-            r.lat: r.n
-            for r in df.select(
-                "lat",
-                F.size(
-                    scheme.bbox_cells(
-                        F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy")
-                    )
-                ).alias("n"),
-            ).collect()
-        }
-        return out[0.0], out[80.0]
-
-    q_eq, q_hi = counts(QuadkeyCells(res))
-    s_eq, s_hi = counts(SphereCells(res))
+        rows.append((lat, lat + dlat, 10.0, 10.0 + dlng, x0, y0, x1, y1))
+    df = spark.createDataFrame(
+        rows, ["lat0", "lat1", "lng0", "lng1", "minx", "miny", "maxx", "maxy"]
+    )
+    grid_cover = F.flatten(F.transform(
+        F.sequence(row_of_lat(F.col("lat0"), res), row_of_lat(F.col("lat1"), res)),
+        lambda r: F.sequence(
+            col_of_lng(F.col("lng0"), ncols_of_row(r, res)),
+            col_of_lng(F.col("lng1"), ncols_of_row(r, res)),
+        ),
+    ))
+    quad = quad_cover(
+        F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res
+    )
+    got = {
+        r.lat0: (r.q, r.s)
+        for r in df.select(
+            "lat0", F.size(quad).alias("q"), F.size(grid_cover).alias("s")
+        ).collect()
+    }
+    (q_eq, s_eq), (q_hi, s_hi) = got[0.0], got[80.0]
     assert q_hi / q_eq > 8.0      # planar: blows up toward the pole
-    assert s_hi <= 3 * max(s_eq, 1)  # sphere-aware: stays O(1)
+    assert s_hi <= 3 * max(s_eq, 1)  # reduced grid: stays O(1)
 
 
 def test_geo_radius_join_exact_vs_brute(spark):
     """geo_radius_join == brute-force haversine on a set spanning the
     equator, latitude 83, the antimeridian, and a near-polar band."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from geojson_vt_spark.operators.spatial_join import geo_radius_join
-
     b = [
         (i, -83.0 + (i * 11 % 1660) / 10.0, -180.0 + (i * 17 % 3600) / 10.0)
         for i in range(800)
@@ -352,10 +221,7 @@ def test_geo_radius_join_large_radius_superset(spark):
     plus randomized brute-force parity at 5600/12000/20100 km (the last is
     past the half-circumference: hav(R) clamps to 1 and every band covers
     fully — geo_knn_join's final doubling operates there)."""
-    import math
     import random
-
-    from geojson_vt_spark.operators.spatial_join import geo_radius_join
 
     rng = random.Random(7)
     a = [(0, 80.0, 0.0), (1, 60.0, 10.0)] + [
@@ -387,28 +253,10 @@ def test_geo_radius_join_large_radius_superset(spark):
     assert (0, 0) in got and (1, 1) in got
 
 
-@pytest.mark.parametrize("scheme", ["sphere", "hilbert"])
-def test_pip_join_oracle_green_under_scheme(spark, monkeypatch, scheme):
-    """The DRIVER oracle row for pip_join stays green with the sphere-aware
-    (and Hilbert) scheme swapped in via SPARK_GRAFT_CELL_SCHEME — the
-    round-4 verdict #4 done-criterion, checked literally."""
-    monkeypatch.setenv("SPARK_GRAFT_CELL_SCHEME", scheme)
-    from .oracle_harness import run_all
-
-    res = run_all(spark, "/root/testdata/sf0.001", names={"pip_join"})
-    assert res["pip_join"].get("hash_match"), res["pip_join"]
-
-
 def test_geo_knn_join_exact_vs_brute(spark):
     """geo_knn_join == brute-force haversine kNN, including an anchor whose
     5 nearest sit across the antimeridian and one needing several radius
     doublings (isolated near the pole)."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from geojson_vt_spark.operators.spatial_join import geo_knn_join
-
     b = [
         (i, -83.0 + (i * 11 % 1660) / 10.0, -180.0 + (i * 17 % 3600) / 10.0)
         for i in range(400)
@@ -458,8 +306,6 @@ def test_geo_knn_result_reads_checkpoints_not_recompute(spark):
     round's banded radius join + window from scratch (measured 16 s -> 0.4 s
     on the bench corpus after the fix). Only the final half-circumference
     round stays lazy, and it is absent when every point settles early."""
-    from geojson_vt_spark.operators.spatial_join import geo_knn_join
-
     b = [(i, float(i % 7), float(i % 11)) for i in range(40)]
     a = [(0, 1.0, 2.0), (1, 3.0, 4.0)]
     adf = spark.createDataFrame(a, ["a_id", "lat", "lng"])

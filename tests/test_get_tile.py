@@ -219,3 +219,40 @@ def test_edit_job_budget(spark):
     assert jobs <= 6, jobs
     tile, jobs = count_jobs(spark, lambda: eng.get_tile(12, 1208, 1539))
     assert tile is not None and jobs <= 5, jobs
+
+
+def test_drill_down_clears_entry_tile_source(spark):
+    """A drill-down splits its entry tile, which then keeps no source
+    (tile-index.ts:191): on the budget setup, get_tile(12, 1207, 1539)
+    enters at (7, 37, 48), whose registry row loses has_source with its
+    counters unchanged, and whose retained source rows leave the store.
+    Every tile stored before the drill-down is unchanged."""
+    eng = _budget_engine(spark)
+    entry = (7, 37, 48)
+
+    def registry_row(key):
+        rows = [
+            r.asDict() for r in eng.registry().collect() if (r.z, r.x, r.y) == key
+        ]
+        assert len(rows) == 1, rows
+        return rows[0]
+
+    def source_keys():
+        return {
+            (r.z, r.x, r.y)
+            for r in eng.store.sources_df().select("z", "x", "y").collect()
+        }
+
+    before = registry_row(entry)
+    assert before["has_source"] and entry in source_keys()
+    tiles = eng.all_tiles()
+    assert eng.get_tile(12, 1207, 1539) is not None
+
+    after = registry_row(entry)
+    assert not after["has_source"]
+    assert {k: v for k, v in after.items() if k != "has_source"} == {
+        k: v for k, v in before.items() if k != "has_source"
+    }
+    assert entry not in source_keys()
+    now = eng.all_tiles()
+    assert {k: now[k] for k in tiles} == tiles

@@ -9,7 +9,7 @@ import re
 
 import geojson_vt_spark
 
-ALLOWED = {"TABLE_FORMAT", "CELL_SCHEME", "MEDIA_FAKE"}
+ALLOWED = {"TABLE_FORMAT", "MEDIA_FAKE"}
 ROOT = pathlib.Path(geojson_vt_spark.__file__).parent
 
 
@@ -70,6 +70,27 @@ def test_data_pipeline_operators_have_no_engine_selectors():
         (hygiene, "LINE_BOILER_CAP"),
     ]:
         assert not hasattr(mod, name), name
+
+
+def test_spatial_joins_have_one_cell_grid():
+    """Quadkeys are the one cell key of the cell-binned joins: no caller
+    picks a cell scheme, and the removed scheme seam stays gone."""
+    import inspect
+
+    from geojson_vt_spark.operators import spatial_join
+
+    params = inspect.signature(spatial_join.point_in_box_join).parameters
+    assert "scheme" not in params, list(params)
+    assert not (ROOT / "operators" / "cells.py").exists()
+    removed = (
+        "CellScheme", "QuadkeyCells", "HilbertCells", "hilbert_d_numpy",
+        "H3Cells", "SphereCells", "sphere_cell_numpy", "_cell_scheme",
+        "cell_col",
+    )
+    for path in ROOT.rglob("*.py"):
+        text = path.read_text()
+        for name in removed:
+            assert not re.search(rf"\b{name}\b", text), (path.name, name)
 
 
 def test_pandas_crossing_inventory():

@@ -338,20 +338,50 @@ def test_ann_topk_bounded_heap(spark, tmp_path):
 
 def test_drop_and_hit_lists_join_without_broadcast_hint(spark):
     """The dedup drop lists (`drop_cluster_members`, which q_dedup_keep,
-    semantic_dedup_keep and both dedup jobs run) and decontaminate's hit
-    table join as plain joins: AQE picks broadcast or shuffle from their
-    measured size. Under autoBroadcastJoinThreshold=-1 none of those joins
-    may be a broadcast join — a hinted broadcast ignores the threshold."""
+    semantic_dedup_keep and both dedup jobs run), decontaminate's hit
+    table, the contaminated ids the stream admission gate drops
+    (`admit_batch`, the same join as corpus_pipeline_job stage 2b) and the
+    ids failing an update filter (`filter_update`) join as plain joins:
+    AQE picks broadcast or shuffle from their measured size. Under
+    autoBroadcastJoinThreshold=-1 none of those joins may be a broadcast
+    join — a hinted broadcast ignores the threshold."""
+    from geojson_vt_spark.config import Options
     from geojson_vt_spark.hygiene import q_decontaminate
+    from geojson_vt_spark.model import FEATURE_SCHEMA, local_frame
+    from geojson_vt_spark.operators.engine import geojson_to_feature_rows
+    from geojson_vt_spark.operators.updates import filter_update
+    from geojson_vt_spark.streaming.ingest_stream import admit_batch
     from geojson_vt_spark.training import q_dedup_keep, q_semantic_dedup_keep
 
     from .util import session_conf
+
+    def admitted(spark, sf):
+        docs = spark.createDataFrame(
+            [(1, "web", "the quick brown fox jumps over the lazy dog " * 4),
+             (2, "web", "zz1 zz2 zz3 zz4 zz5 zz6 zz7 zz8 zz9 and then some")],
+            "doc_id long, source string, text string",
+        )
+        evals = spark.createDataFrame(
+            [(9000, "zz1 zz2 zz3 zz4 zz5 zz6 zz7 zz8 zz9")], ["doc_id", "text"]
+        )
+        return admit_batch(docs, evals, min_chars=10, langs=("en",))[0]
+
+    def filtered(spark, sf):
+        rows = geojson_to_feature_rows({"type": "FeatureCollection", "features": [
+            {"type": "Feature", "id": name, "properties": {},
+             "geometry": {"type": "Point", "coordinates": [lng, 0.0]}}
+            for name, lng in (("a", 1.0), ("b", 2.0))
+        ]}, Options())
+        source = local_frame(spark, rows, FEATURE_SCHEMA)
+        return filter_update(source, source, lambda f: f["id"] == "a")[1]
 
     sf = "/root/testdata/sf0.001"
     cases = {
         "dedup_keep": (q_dedup_keep, "LeftAnti"),
         "semantic_dedup_keep": (q_semantic_dedup_keep, "LeftAnti"),
         "decontaminate": (q_decontaminate, "LeftOuter"),
+        "admit_batch": (admitted, "LeftAnti"),
+        "filter_update": (filtered, "LeftAnti"),
     }
     with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         for name, (fn, join_type) in cases.items():
