@@ -24,8 +24,13 @@ cell-collapsed tail batches, each anchored at its own coarsest zoom) gives
 1 + ceil((levels-k)/k_tail) serial barriers with per-anchor row counts
 bounded at ~4^k_tail * min_points after the first batch — skew-safe on
 dense-city corpora where a single coarse anchor would otherwise hold most
-of the data. The tests hold a per-zoom pure-Column reference
-(tests/grid_reference.py) that this engine is equality-tested against.
+of the data. A corpus of at most `_ONE_TASK_MAX_POINTS` points skips the
+plan: one kernel task runs every zoom over `coalesce(1)` of the points and
+writes one checkpoint, with no anchor exchange (the pyramid's
+`_SUBTREE_MAX_POINTS` rule: below the measured crossover an exchange costs
+more than the task it splits). The tests hold a per-zoom pure-Column
+reference (tests/grid_reference.py) that this engine is equality-tested
+against on both routes.
 Pass a workdir for parquet snapshots (resumable lineage, same contract as
 plans/pyramid.py).
 """
@@ -55,6 +60,12 @@ _LEVEL_BATCH = 4
 _LEVEL_BATCH_TAIL = 8
 # the kernel buffers a whole anchor partition in executor memory
 _MAX_PARTITION_ROWS = 100_000_000
+# a corpus of at most this many points runs every zoom in ONE kernel task
+# (no anchor exchange); 0 routes nothing. Measured at local[4] on a 4-vCPU
+# host (z0-8, perfbench's clustered points): the one task wins on wall up
+# to 600k points, the anchored plan from 800k (3.6 vs 3.7 s; 12 vs 51 s at
+# 4M) — CHANGES.md has the table. Tests monkeypatch it
+_ONE_TASK_MAX_POINTS = 600_000
 
 
 def _packed_cell(cx, cy):
@@ -129,7 +140,9 @@ def build_grid_trees(
 
     ``_batched_levels`` runs one exchange + one materialization per GROUP
     of levels (anchor-cell partitioning + a partition-local numpy kernel),
-    cutting a per-zoom loop's serial shuffle count by the batch factor.
+    cutting a per-zoom loop's serial shuffle count by the batch factor; at
+    most `_ONE_TASK_MAX_POINTS` points run every level in one task with no
+    exchange.
 
     It shuffles and checkpoints a NARROW frame — (x, y, src, parent, num,
     props) — about half the bytes of the full tree schema (props is NULL
@@ -311,7 +324,16 @@ def _batched_levels(
     rows; batch 1 anchors only k-1 levels below max_zoom (dense corpora
     still span many anchors there), and every later batch's per-anchor row
     count is capped at ~4^k_tail * min_points by the previous batch's
-    frontier collapse (see batch_plan)."""
+    frontier collapse (see batch_plan).
+
+    A task-sized corpus (n_points <= _ONE_TASK_MAX_POINTS) skips the plan:
+    every zoom is one batch over `coalesce(1)` of the frame, one kernel
+    task and one checkpoint, no exchange — the same routing rule as the
+    pyramid's `_SUBTREE_MAX_POINTS`."""
+    if n_points <= _ONE_TASK_MAX_POINTS:
+        zs = list(range(o.max_zoom, o.min_zoom - 1, -1))
+        _run_batches(frontier, trees, o, n_points, workdir, [zs], anchored=False)
+        return
     parts = int(
         frontier.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
@@ -347,6 +369,9 @@ def batch_plan(o: ClusterOptions, shuffle_partitions: int) -> list:
     (vs 2 for the skew-unsafe round-2 plan and 5 for uniform k=4 chunks);
     all barriers after the first shuffle a collapsed (cell-bounded)
     frontier, so added wall-clock is per-barrier fixed cost, not volume.
+
+    The plan applies above `_ONE_TASK_MAX_POINTS` only: a task-sized
+    corpus runs all of `zs` as one unanchored batch (`_batched_levels`).
     """
     zs = list(range(o.max_zoom, o.min_zoom - 1, -1))
     head, tail = zs[:_LEVEL_BATCH], zs[_LEVEL_BATCH:]
@@ -363,19 +388,25 @@ def _run_batches(
     n_points: int,
     workdir: Optional[str],
     batches: list,
+    anchored: bool = True,
 ) -> None:
+    """Run each batch's kernel over the frontier hash-partitioned by its
+    anchor cell at the batch's coarsest zoom, or over one coalesced task
+    when not `anchored`; checkpoint its output and slice the trees."""
     f32 = lambda c: c.cast("float").cast("double")  # noqa: E731 — JS fround
     for batch in batches:
         z_hi, z_lo = batch[0], batch[-1]
-        r_lo = o.radius / (o.extent * (2.0 ** z_lo))
-        anchored = frontier.withColumn(
-            "acx", F.floor(f32(F.col("x")) / F.lit(r_lo))
-        ).withColumn("acy", F.floor(f32(F.col("y")) / F.lit(r_lo)))
-        out = (
-            anchored.repartition("acx", "acy")
-            .drop("acx", "acy")
-            .mapInArrow(_make_level_kernel(batch, o, n_points), _BATCH_SCHEMA)
-        )
+        if anchored:
+            r_lo = o.radius / (o.extent * (2.0 ** z_lo))
+            part = (
+                frontier.withColumn("acx", F.floor(f32(F.col("x")) / F.lit(r_lo)))
+                .withColumn("acy", F.floor(f32(F.col("y")) / F.lit(r_lo)))
+                .repartition("acx", "acy")
+                .drop("acx", "acy")
+            )
+        else:
+            part = frontier.coalesce(1)
+        out = part.mapInArrow(_make_level_kernel(batch, o, n_points), _BATCH_SCHEMA)
         out = _checkpoint(out, workdir, f"ctree/zb={z_hi:02d}-{z_lo:02d}")
         for z in batch:
             trees[z + 1] = _widen(

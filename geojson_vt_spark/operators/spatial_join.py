@@ -28,7 +28,19 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
+from pyspark.sql import (
+    Column, DataFrame, Observation, Window, functions as F, types as T,
+)
+
+
+def _counted_checkpoint(df: DataFrame) -> tuple:
+    """(eager localCheckpoint of df, its row count): the count is observed
+    in the checkpoint's own job rather than by a second probe job."""
+    obs = Observation()
+    ckpt = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    return ckpt, obs.get["n"]
 
 
 def _quad_axis(v, res: int) -> Column:
@@ -345,7 +357,10 @@ def geo_knn_join(
     loop cannot fail to terminate.
 
     Scale shape: each round joins ONLY the unsettled a-points (same
-    settled-bookkeeping as knn_join, broadcast semi/anti joins); each
+    settled-bookkeeping as knn_join: plain semi/anti joins on the settled
+    ids, which grow with the a-side, so AQE picks broadcast or shuffle from
+    their measured size; the unsettled count is observed in the
+    checkpoint's own job, no probe job); each
     round's ranked candidates are localCheckpoint'ed ONCE, so the banded
     radius join + window run exactly once per round — settled-id
     derivation, the emitted rows, and the next round's anti-join all read
@@ -376,14 +391,14 @@ def geo_knn_join(
             (F.col("rank") == k) & (F.col("dist_km") <= radius - 1e-6)
         ).select(a_id)
         results.append(
-            ranked.join(F.broadcast(settled_ids), a_id, "leftsemi").select(
+            ranked.join(settled_ids, a_id, "leftsemi").select(
                 a_id, b_id, "dist_km", "rank"
             )
         )
-        unsettled = unsettled.join(
-            F.broadcast(settled_ids), a_id, "left_anti"
-        ).localCheckpoint(eager=True)
-        if unsettled.isEmpty():
+        unsettled, left = _counted_checkpoint(
+            unsettled.join(settled_ids, a_id, "left_anti")
+        )
+        if not left:
             break
         radius *= 2.0
     out = results[0]
@@ -415,19 +430,20 @@ def knn_join(
     n = 1 << res
     cell_size = 1.0 / n
 
+    # the quadkey axes, kept unpacked for the ring search
     ax = a.select(
         F.col(a_id),
         F.col("x").alias("ax"),
         F.col("y").alias("ay"),
-        F.floor(F.least(F.greatest(F.col("x") * n, F.lit(0.0)), F.lit(float(n) - 1e-9))).cast("long").alias("acx"),
-        F.floor(F.least(F.greatest(F.col("y") * n, F.lit(0.0)), F.lit(float(n) - 1e-9))).cast("long").alias("acy"),
+        _quad_axis(F.col("x"), res).alias("acx"),
+        _quad_axis(F.col("y"), res).alias("acy"),
     )
     bx = b.select(
         F.col(b_id),
         F.col("x").alias("bx"),
         F.col("y").alias("by"),
-        F.floor(F.least(F.greatest(F.col("x") * n, F.lit(0.0)), F.lit(float(n) - 1e-9))).cast("long").alias("bcx"),
-        F.floor(F.least(F.greatest(F.col("y") * n, F.lit(0.0)), F.lit(float(n) - 1e-9))).cast("long").alias("bcy"),
+        _quad_axis(F.col("x"), res).alias("bcx"),
+        _quad_axis(F.col("y"), res).alias("bcy"),
     ).cache()
 
     unsettled = ax
@@ -501,14 +517,12 @@ def knn_join(
             (F.col("found") >= k) & (F.col("kth") < F.lit(guarantee))
         ).select(a_id)
         results.append(
-            ranked.join(F.broadcast(settled_ids), a_id, "leftsemi").select(
-                a_id, b_id, "rank"
-            )
+            ranked.join(settled_ids, a_id, "leftsemi").select(a_id, b_id, "rank")
         )
-        unsettled = unsettled.join(settled_ids, a_id, "left_anti").localCheckpoint(
-            eager=True
+        unsettled, left = _counted_checkpoint(
+            unsettled.join(settled_ids, a_id, "left_anti")
         )
-        if unsettled.isEmpty():
+        if not left:
             break
         ring *= 2
 

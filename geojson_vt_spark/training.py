@@ -1,7 +1,10 @@
 """Training-data pipeline operators over the documents/embeddings/events
 tables — the large-scale corpus ops a 100 TB ingest needs, each expressed as
-pure DataFrame/Column work (no Python UDFs; everything whole-stage-codegen
-friendly).
+DataFrame/Column work, whole-stage-codegen friendly. The one Python
+crossing is the MinHash signature kernel (`minhash_signatures`, Arrow in
+and out, no pandas): a document's tokens already sit in one row, so
+folding their hashes into 64 minima in numpy replaces a token explode, a
+64-column hash aggregate and its exchange.
 
 Oracle-checked entries ship a DuckDB SQL twin (portable arithmetic only —
 no engine-specific hash functions). LSH/sketch entries whose candidate
@@ -13,7 +16,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .analytics import ranked_topk
 
@@ -47,7 +54,7 @@ def _mh_coeffs(n_hashes: int) -> list:
     ]
 
 
-def _mh_base_col(hash_fn: str):
+def _mh_base_col(t, hash_fn: str):
     """Per-token base draw in [0, P). "xxhash64" is the JVM fast path;
     "md5_60" (low 60 bits of md5's hex) is bit-identical across engines so a
     DuckDB oracle can replay the whole pipeline. Folding into 31 bits merges
@@ -55,51 +62,82 @@ def _mh_base_col(hash_fn: str):
     at 10^9-token vocabularies the place to widen is the base hash, not the
     family (the affine family must stay within exact int64)."""
     if hash_fn == "md5_60":
-        base = F.conv(F.substring(F.md5(F.col("t")), 1, 15), 16, 10).cast("long")
+        base = F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
     else:
-        base = F.xxhash64("t")
+        base = F.xxhash64(t)
     return F.pmod(base, F.lit(_MH_P))
+
+
+def _signature_kernel(n_hashes: int, schema: pa.Schema):
+    """mapInArrow kernel over (doc_id, source, x array<long>) batches: one
+    output row per document with a non-empty x list, h_s = min over its
+    tokens of (x*a_s + b_s) mod P. Segment minima come from
+    np.minimum.reduceat over the list offsets, one hash at a time, so memory
+    stays O(tokens in the batch) (x < P < 2^31 and a_s < P keep every
+    product exact in int64). A null x (md5 of a null token) never wins a
+    min; a document whose x are all null gets null signatures, as SQL min
+    gives."""
+    coeffs = _mh_coeffs(n_hashes)
+
+    def kern(batches):
+        for rb in batches:
+            lst = rb.column(2)
+            lens = pc.fill_null(pc.list_value_length(lst), 0).to_numpy()
+            keep = lens > 0
+            if not keep.any():
+                continue
+            ids = rb.select([0, 1])
+            if not keep.all():
+                ids = ids.filter(pa.array(keep))
+            vals = lst.flatten()  # valid lists' values, slice offset applied
+            nulls = (
+                vals.is_null().to_numpy(zero_copy_only=False)
+                if vals.null_count else None
+            )
+            x = vals.fill_null(0).to_numpy()
+            starts = (np.cumsum(lens) - lens)[keep]
+            cols = list(ids.columns)
+            h = np.empty_like(x)
+            for a, b in coeffs:
+                np.multiply(x, a, out=h)
+                h += b
+                np.remainder(h, _MH_P, out=h)
+                if nulls is not None:
+                    h[nulls] = _MH_P  # above every real value
+                m = np.minimum.reduceat(h, starts)
+                cols.append(pa.array(m, mask=None if nulls is None else m == _MH_P))
+            yield pa.RecordBatch.from_arrays(cols, schema=schema)
+
+    return kern
 
 
 def minhash_signatures(
     docs: DataFrame,
     n_hashes: int = 64,
     hash_fn: str = "xxhash64",
-    vocab_broadcast: bool = None,
 ) -> DataFrame:
-    """n_hashes minhashes per (doc_id, source) over the `toks` array column.
-    One shuffle total: the explode is map-side, the groupBy partial-aggregates
-    (map-side combine), and each doc travels as ONE narrow row of n_hashes
-    longs — never a signature-per-token.
+    """n_hashes minhashes per document over the `toks` array column:
+    (doc_id, source, h0..h{n-1}).
 
-    vocab_broadcast: hash each DISTINCT token once and broadcast the tiny
-    (token -> h0..h{n-1}) dictionary back over the token stream, so the
-    base hash + n_hashes multiply-adds run per VOCAB ENTRY instead of per
-    token occurrence. Correct whenever the dictionary fits a broadcast
-    (Zipf vocabularies are orders of magnitude smaller than token streams);
-    defaults ON for the md5_60 oracle-replay hash (md5-of-string per row is
-    the expensive case) and OFF for xxhash64, whose per-row cost is already
-    a single JVM hash — at open-vocabulary corpus scale keep it off."""
-    tok = docs.select("doc_id", "source", F.explode("toks").alias("t"))
-    if vocab_broadcast is None:
-        vocab_broadcast = hash_fn == "md5_60"
-    hexprs = [
-        F.pmod(F.col("x") * F.lit(a) + F.lit(b), F.lit(_MH_P))
-        for a, b in _mh_coeffs(n_hashes)
+    Contract: `docs` holds one row per (doc_id, source) — a document's
+    tokens are one array — and the output holds one row per document whose
+    token list is non-empty (a null or empty list emits no row).
+
+    Because one row already holds all of a document's tokens, no exchange
+    is needed: the base hash runs JVM-side per token inside the array
+    (`transform`, the same expression the DuckDB oracle replays), and one
+    mapInArrow crossing folds each document's base hashes into its
+    n_hashes minima partition-locally (`_signature_kernel`). No token
+    explode, no aggregate, no shuffle."""
+    x = F.transform("toks", lambda t: _mh_base_col(t, hash_fn)).alias("x")
+    base = docs.select("doc_id", "source", x)
+    fields = [docs.schema["doc_id"], docs.schema["source"]] + [
+        T.StructField(f"h{s}", T.LongType()) for s in range(n_hashes)
     ]
-    if vocab_broadcast:
-        vocab = (
-            tok.select("t")
-            .distinct()
-            .withColumn("x", _mh_base_col(hash_fn))
-            .select("t", *[h.alias(f"h{s}") for s, h in enumerate(hexprs)])
-        )
-        tok = tok.join(F.broadcast(vocab), "t")
-        aggs = [F.min(F.col(f"h{s}")).alias(f"h{s}") for s in range(n_hashes)]
-    else:
-        tok = tok.withColumn("x", _mh_base_col(hash_fn))
-        aggs = [F.min(h).alias(f"h{s}") for s, h in enumerate(hexprs)]
-    return tok.groupBy("doc_id", "source").agg(*aggs)
+    schema = T.StructType(fields)
+    return base.mapInArrow(
+        _signature_kernel(n_hashes, to_arrow_schema(schema)), schema
+    )
 
 
 def _cap_hot_buckets(bands: DataFrame, keys: list, cap: int | None) -> DataFrame:
@@ -157,7 +195,7 @@ def minhash_band_candidates(
     r = n_hashes // n_bands
     # The band self-join scans its input twice and Spark's exchange reuse
     # does NOT dedup the two sides (verified on the executed plan: 2 parquet
-    # scans), so the whole token-explode + n_hashes-min aggregation would run
+    # scans), so the token hashing and the signature kernel would run
     # twice. The signature frame is tiny (one narrow row per doc) — pin it
     # once. At cluster scale this is a persist-to-storage seam; local
     # checkpoint is its single-JVM equivalent.
@@ -360,8 +398,9 @@ def q_simhash_dedup(spark, sf_dir):
     The per-token bit source is the low 16 bits of md5's hex: bit-identical
     across engines, so the DuckDB oracle replays the whole pipeline (recall
     exactness is hash-agnostic). md5-of-string per token row is the replay
-    tax, so each DISTINCT token is hashed once and the dictionary broadcast
-    back (same move as minhash_signatures vocab_broadcast).
+    tax, so each DISTINCT token is hashed once and the dictionary joined
+    back. The join carries no broadcast hint: the dictionary grows with the
+    vocabulary, and AQE broadcasts it only while its measured size allows.
 
     No hot-bucket cap: capping would break the pigeonhole recall-exactness
     this entry advertises (and its ground-truth oracle); at web scale, where
@@ -375,7 +414,7 @@ def q_simhash_dedup(spark, sf_dir):
     )
     h = F.conv(F.substring(F.md5(F.col("t")), 29, 4), 16, 10).cast("long")
     vocab = tok.select("t").distinct().select("t", h.alias("h"))
-    tok = tok.join(F.broadcast(vocab), "t")
+    tok = tok.join(vocab, "t")
     contribs = [
         F.sum(
             F.when(F.shiftright("h", i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)

@@ -270,7 +270,19 @@ def test_grid_children_match_parent_counts(grid_index):
     assert bad == 0
 
 
-def test_grid_level_engines_equivalent(spark):
+def _grid_routes(monkeypatch, n):
+    """Yield once per grid route: the one-task route (the default cap
+    covers these test corpora) and the anchored batch plan (cap 0)."""
+    import geojson_vt_spark.cluster.grid as grid
+
+    default = grid._ONE_TASK_MAX_POINTS
+    assert n <= default
+    for cap in (default, 0):
+        monkeypatch.setattr(grid, "_ONE_TASK_MAX_POINTS", cap)
+        yield cap
+
+
+def test_grid_level_engines_equivalent(spark, monkeypatch):
     """The batched engine (anchor-partition kernel) and the per-level Column
     reference (tests/grid_reference.py) produce the same cluster structure:
     identical src sets and identical (src -> num, parent) maps at every zoom,
@@ -300,12 +312,14 @@ def test_grid_level_engines_equivalent(spark):
             for z in range(0, opts.max_zoom + 2)
         }
 
-    a, b = snap(build_grid_trees), snap(build_column_trees)
-    for z in a:
-        assert a[z] == b[z], f"zoom {z}: engines disagree"
+    b = snap(build_column_trees)
+    for route in _grid_routes(monkeypatch, n):
+        a = snap(build_grid_trees)
+        for z in a:
+            assert a[z] == b[z], f"zoom {z}, cap {route}: engines disagree"
 
 
-def test_grid_level_engines_equivalent_offset_zooms(spark):
+def test_grid_level_engines_equivalent_offset_zooms(spark, monkeypatch):
     """Same equivalence with min_zoom > 0 and a level count that is not a
     multiple of the batch factor (partial final batch)."""
     from pyspark.sql import functions as F
@@ -333,13 +347,15 @@ def test_grid_level_engines_equivalent_offset_zooms(spark):
             for z in sorted(trees)
         }
 
-    a, b = snap(build_grid_trees), snap(build_column_trees)
-    assert sorted(a) == sorted(b)
-    for z in a:
-        assert a[z] == b[z], f"zoom {z}: engines disagree"
+    b = snap(build_column_trees)
+    for route in _grid_routes(monkeypatch, n):
+        a = snap(build_grid_trees)
+        assert sorted(a) == sorted(b)
+        for z in a:
+            assert a[z] == b[z], f"zoom {z}, cap {route}: engines disagree"
 
 
-def test_grid_workdir_snapshot_resume(spark, tmp_path):
+def test_grid_workdir_snapshot_resume(spark, tmp_path, monkeypatch):
     """build_grid_trees(workdir=...) writes per-batch parquet snapshots; a
     rebuild over the same workdir reads them back (resumable lineage) and
     returns identical trees."""
@@ -356,7 +372,6 @@ def test_grid_workdir_snapshot_resume(spark, tmp_path):
         F.lit(None).cast("string").alias("tags"),
     ).localCheckpoint(eager=True)
     opts = ClusterOptions(max_zoom=6)
-    wd = str(tmp_path / "ctrees")
 
     def snap(trees):
         return {
@@ -364,11 +379,6 @@ def test_grid_workdir_snapshot_resume(spark, tmp_path):
                 trees[z].select("src", "num", "parent").collect()}
             for z in (0, 3, 6)
         }
-
-    first = snap(grid.build_grid_trees(pts, opts, n, workdir=wd))
-
-    # second build must hit the snapshots, not recompute: poison the kernel
-    orig = grid._make_level_kernel
 
     def poisoned(levels, o, n_points):
         def kern(it):
@@ -379,15 +389,19 @@ def test_grid_workdir_snapshot_resume(spark, tmp_path):
 
         return kern
 
-    grid._make_level_kernel = poisoned
-    try:
+    orig = grid._make_level_kernel
+    for route in _grid_routes(monkeypatch, n):
+        wd = str(tmp_path / f"ctrees-{route}")
+        first = snap(grid.build_grid_trees(pts, opts, n, workdir=wd))
+        # second build must hit the snapshots, not recompute: poison the
+        # kernel
+        monkeypatch.setattr(grid, "_make_level_kernel", poisoned)
         second = snap(grid.build_grid_trees(pts, opts, n, workdir=wd))
-    finally:
-        grid._make_level_kernel = orig
-    assert first == second
+        monkeypatch.setattr(grid, "_make_level_kernel", orig)
+        assert first == second, route
 
 
-def test_grid_engines_handle_world_copy_coords(spark):
+def test_grid_engines_handle_world_copy_coords(spark, monkeypatch):
     """Antimeridian wrap copies put x outside [0,1] (x in [-1-b, 2+b]).
     The packed-cell math is offset-signed; both engines must agree and
     conserve counts for negative and >1 coordinates."""
@@ -422,13 +436,15 @@ def test_grid_engines_handle_world_copy_coords(spark):
             for z in (0, 2, 5)
         }
 
-    a, b = snap(build_grid_trees), snap(build_column_trees)
-    for z in a:
-        assert a[z] == b[z], f"zoom {z}: engines disagree on world copies"
-        assert sum(num for num, _ in a[z].values()) == n
+    b = snap(build_column_trees)
+    for route in _grid_routes(monkeypatch, n):
+        a = snap(build_grid_trees)
+        for z in a:
+            assert a[z] == b[z], f"zoom {z}, cap {route}: world copies differ"
+            assert sum(num for num, _ in a[z].values()) == n
 
 
-def test_grid_dense_city_skew_balanced_and_equivalent(spark):
+def test_grid_dense_city_skew_balanced_and_equivalent(spark, monkeypatch):
     """Dense-city corpus: 80% of points inside one ~z2-cell-sized box (the
     shape tests/test_skew.py uses for the pyramid). The geometric batch plan
     anchors batch 1 only k-1 levels below max_zoom, so the city spreads over
@@ -494,10 +510,12 @@ def test_grid_dense_city_skew_balanced_and_equivalent(spark):
             for z in (0, 3, 7, 10)
         }
 
-    a, b = snap(build_grid_trees), snap(build_column_trees)
-    for z in a:
-        assert a[z] == b[z], f"zoom {z}: engines disagree on dense-city corpus"
-        assert sum(num for num, _ in a[z].values()) == n
+    b = snap(build_column_trees)
+    for route in _grid_routes(monkeypatch, n):
+        a = snap(build_grid_trees)
+        for z in a:
+            assert a[z] == b[z], f"zoom {z}, cap {route}: dense city differs"
+            assert sum(num for num, _ in a[z].values()) == n
 
 
 def test_grid_reduce_aggregation(spark, places):

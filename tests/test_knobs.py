@@ -23,9 +23,10 @@ def test_env_knob_inventory():
 
 
 def test_pyramid_and_grid_engines_have_no_pandas_crossing():
-    """The pyramid and grid-cluster kernels take and return Arrow batches;
-    a pandas crossing must not creep back into either engine."""
-    for rel in ("plans/pyramid.py", "cluster/grid.py"):
+    """The pyramid, grid-cluster and MinHash signature kernels take and
+    return Arrow batches; a pandas crossing must not creep back into any
+    of them."""
+    for rel in ("plans/pyramid.py", "cluster/grid.py", "training.py"):
         text = (ROOT / rel).read_text()
         for banned in ("mapInPandas", "applyInPandas", "import pandas"):
             assert banned not in text, f"{rel}: {banned}"
@@ -51,7 +52,7 @@ def test_data_pipeline_operators_have_no_engine_selectors():
 
     banned = {
         "engine", "algorithm", "hits_join", "boiler_cap", "n_shards",
-        "round_budget",
+        "round_budget", "vocab_broadcast",
     }
     for mod in (hygiene, training):
         for name, fn in inspect.getmembers(mod, inspect.isfunction):

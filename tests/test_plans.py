@@ -254,10 +254,12 @@ def test_cluster_tree_rows_broadcasts_window_not_points(spark):
     ), plan[:2000]
 
 
-def test_grid_cluster_batched_materialization_count(spark):
-    """The batched grid-cluster engine's reason to exist: the serial
-    barrier count is ceil(levels / batch) + 0 eager point materializations,
-    not one per zoom. Gate it structurally by counting _checkpoint calls."""
+def test_grid_cluster_batched_materialization_count(spark, monkeypatch):
+    """The grid-cluster engine's serial barrier count: a task-sized corpus
+    runs every zoom in ONE kernel task and one checkpoint (no anchor
+    exchange); with the one-task cap at 0 the anchored batch plan takes
+    ceil-by-tier batches, not one per zoom. Gate it structurally by
+    counting _checkpoint calls."""
     import math
 
     from pyspark.sql import functions as F
@@ -275,32 +277,34 @@ def test_grid_cluster_batched_materialization_count(spark):
     ).localCheckpoint(eager=True)
     opts = ClusterOptions(max_zoom=8)  # 9 levels -> 2 barriers (4+8 tiers)
 
-    calls = []
+    calls, plans = [], []
     orig = grid._checkpoint
 
     def counting(df, workdir, name):
         calls.append(name)
+        plans.append(_plan(df))
         return orig(df, workdir, name)
 
-    grid._checkpoint = counting
-    try:
-        grid.build_grid_trees(pts, opts, n)
-    finally:
-        grid._checkpoint = orig
+    monkeypatch.setattr(grid, "_checkpoint", counting)
+    assert n <= grid._ONE_TASK_MAX_POINTS
+    grid.build_grid_trees(pts, opts, n)
+    assert calls == ["ctree/zb=08-00"], calls
+    assert "Exchange" not in plans[0], plans[0]
 
-    from geojson_vt_spark.cluster.grid import batch_plan
-
+    calls.clear()
+    plans.clear()
+    monkeypatch.setattr(grid, "_ONE_TASK_MAX_POINTS", 0)
+    grid.build_grid_trees(pts, opts, n)
+    assert all("Exchange hashpartitioning(acx" in p for p in plans), plans
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    expected = len(batch_plan(opts, parts))
+    expected = len(grid.batch_plan(opts, parts))
     assert len(calls) == expected, calls
     # two-tier plan: 1 head batch (k=4, raw-point skew safety) +
     # ceil((levels-4)/8) tail batches (cell-collapsed frontiers run deeper);
     # 9 levels -> 2 barriers. Bounded per-anchor skew is what the extra
     # barrier over the round-2 single-anchor plan buys (batch_plan doc).
-    import math as _math
-
     levels = opts.max_zoom - opts.min_zoom + 1
-    assert expected == 1 + _math.ceil((levels - 4) / 8)
+    assert expected == 1 + math.ceil((levels - 4) / 8)
     assert all(name.startswith("ctree/zb=") for name in calls), calls
 
 
@@ -336,22 +340,28 @@ def test_ann_topk_bounded_heap(spark, tmp_path):
         assert plan.index("Window") < plan.index("TakeOrderedAndProject"), name
 
 
-def test_drop_and_hit_lists_join_without_broadcast_hint(spark):
+def test_drop_and_hit_lists_join_without_broadcast_hint(spark, monkeypatch):
     """The dedup drop lists (`drop_cluster_members`, which q_dedup_keep,
     semantic_dedup_keep and both dedup jobs run), decontaminate's hit
     table, the contaminated ids the stream admission gate drops
-    (`admit_batch`, the same join as corpus_pipeline_job stage 2b) and the
-    ids failing an update filter (`filter_update`) join as plain joins:
-    AQE picks broadcast or shuffle from their measured size. Under
-    autoBroadcastJoinThreshold=-1 none of those joins may be a broadcast
-    join — a hinted broadcast ignores the threshold."""
+    (`admit_batch`, the same join as corpus_pipeline_job stage 2b), the
+    ids failing an update filter (`filter_update`), the settled-id semi-
+    and anti-joins of `knn_join` and `geo_knn_join` and simhash's token
+    dictionary join as plain joins: AQE picks broadcast or shuffle from
+    their measured size. Under autoBroadcastJoinThreshold=-1 none of those
+    joins may be a broadcast join — a hinted broadcast ignores the
+    threshold. The kNN loops consume their anti-joins in a checkpoint, so
+    the plans of checkpointed frames are read too."""
+    from geojson_vt_spark.analytics import q_geo_knn_join, q_knn_join
     from geojson_vt_spark.config import Options
     from geojson_vt_spark.hygiene import q_decontaminate
     from geojson_vt_spark.model import FEATURE_SCHEMA, local_frame
     from geojson_vt_spark.operators.engine import geojson_to_feature_rows
     from geojson_vt_spark.operators.updates import filter_update
     from geojson_vt_spark.streaming.ingest_stream import admit_batch
-    from geojson_vt_spark.training import q_dedup_keep, q_semantic_dedup_keep
+    from geojson_vt_spark.training import (
+        q_dedup_keep, q_semantic_dedup_keep, q_simhash_dedup,
+    )
 
     from .util import session_conf
 
@@ -382,12 +392,28 @@ def test_drop_and_hit_lists_join_without_broadcast_hint(spark):
         "decontaminate": (q_decontaminate, "LeftOuter"),
         "admit_batch": (admitted, "LeftAnti"),
         "filter_update": (filtered, "LeftAnti"),
+        "knn_join": (q_knn_join, "LeftSemi", "LeftAnti"),
+        "geo_knn_join": (q_geo_knn_join, "LeftSemi", "LeftAnti"),
+        "simhash_dedup": (q_simhash_dedup, "Inner"),
     }
+    checkpointed = []
+    frame_cls = type(spark.range(1))
+    local_checkpoint = frame_cls.localCheckpoint
+
+    def recording(df, *args, **kwargs):
+        checkpointed.append(_plan(df))
+        return local_checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
     with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
-        for name, (fn, join_type) in cases.items():
-            joins = [
-                ln for ln in _plan(fn(spark, sf)).split("\n")
-                if "Join" in ln and join_type in ln
-            ]
-            assert joins, name
-            assert not any("Broadcast" in ln for ln in joins), (name, joins)
+        for name, (fn, *join_types) in cases.items():
+            checkpointed.clear()
+            out = _plan(fn(spark, sf))
+            plans = "\n".join(checkpointed + [out])
+            for join_type in join_types:
+                joins = [
+                    ln for ln in plans.split("\n")
+                    if "Join" in ln and join_type in ln
+                ]
+                assert joins, (name, join_type)
+                assert not any("Broadcast" in ln for ln in joins), (name, joins)

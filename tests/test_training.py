@@ -114,6 +114,40 @@ def test_minhash_equals_exact_jaccard(spark):
     assert len(exact) > 0  # corpus actually contains near-dups
 
 
+@pytest.mark.parametrize("hash_fn", ["md5_60", "xxhash64"])
+def test_minhash_signature_kernel_matches_reference(spark, hash_fn):
+    """The signature kernel equals the explode + group-min reference
+    (tests/util.py) row for row, over many small Arrow batches, with a
+    null and an empty token list (no row, as explode gives), a null token
+    (never the min) and an all-null token list."""
+    from geojson_vt_spark.training import _docs_tokens, minhash_signatures
+
+    from .util import minhash_signatures_reference, session_conf
+
+    extra = spark.createDataFrame(
+        [(90001, "web", None), (90002, "web", []),
+         (90003, "web", ["a", None, "b"]), (90004, "web", [None]),
+         (90005, "blog", ["solo"])],
+        "doc_id long, source string, toks array<string>",
+    )
+    docs = _docs_tokens(spark, SF).unionByName(extra).repartition(3)
+
+    def rows(df):
+        got = [tuple(r) for r in df.collect()]
+        keyed = {r[:2]: r for r in got}
+        assert len(keyed) == len(got)  # one row per (doc_id, source)
+        return keyed
+
+    conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": "7"}
+    with session_conf(spark, conf):
+        got = rows(minhash_signatures(docs, 64, hash_fn))
+    want = rows(minhash_signatures_reference(docs, 64, hash_fn))
+    assert got == want
+    assert len(got) > 3 * 7  # several batches per task
+    assert (90001, "web") not in got and (90002, "web") not in got
+    assert (90003, "web") in got and (90004, "web") in got
+
+
 def test_ngram_allpairs_scale_guard(spark):
     """The exact all-pairs baseline must refuse (or reroute) oversized
     source buckets instead of silently going quadratic (round-4 verdict #3)."""

@@ -100,3 +100,21 @@ def sequence_pack_reference(docs, budget=256):
         F.min("doc_id").alias("first_doc"),
         F.max("doc_id").alias("last_doc"),
     )
+
+
+def minhash_signatures_reference(docs, n_hashes=64, hash_fn="xxhash64"):
+    """The explode + group-min form of `training.minhash_signatures`: one
+    row per token, the base hash and the affine family as Columns, then
+    one hash aggregate per (doc_id, source). It exchanges every token, so
+    it is the equality reference for the signature kernel, not a
+    production plan."""
+    from pyspark.sql import functions as F
+
+    from geojson_vt_spark.training import _MH_P, _mh_base_col, _mh_coeffs
+
+    tok = docs.select("doc_id", "source", F.explode("toks").alias("t"))
+    x = _mh_base_col(F.col("t"), hash_fn)
+    return tok.groupBy("doc_id", "source").agg(*[
+        F.min(F.pmod(x * F.lit(a) + F.lit(b), F.lit(_MH_P))).alias(f"h{s}")
+        for s, (a, b) in enumerate(_mh_coeffs(n_hashes))
+    ])
