@@ -17,12 +17,10 @@ import json
 import os
 import sys
 import time
-from typing import Iterator
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-import pandas as pd  # noqa: E402
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 
@@ -48,15 +46,12 @@ def make_spark(cpus: int) -> SparkSession:
 def synth_rect_features(spark: SparkSession, n: int, options):
     """Deterministic random-ish rectangles (hash-mix per id, no RNG state):
     uniform lon/lat centers, widths 0.1-0.6 deg — the reference bench shape."""
-    from geojson_vt_spark.functions.convert import convert_geojson
-    from geojson_vt_spark.functions.wrap import wrap_features
-    from geojson_vt_spark.model import FEATURE_SCHEMA, feature_to_row
+    from geojson_vt_spark.model import FEATURE_SCHEMA, geojson_to_feature_rows, rows_to_arrow
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def gen(batches):
+        for batch in batches:
             rows = []
-            for i in pdf["id"]:
-                i = int(i)
+            for i in batch.column("id").to_pylist():
                 h1 = (i * 2654435761) % 4294967296 / 4294967296.0
                 h2 = (i * 2246822519 + 101) % 4294967296 / 4294967296.0
                 h3 = (i * 3266489917 + 202) % 4294967296 / 4294967296.0
@@ -77,14 +72,12 @@ def synth_rect_features(spark: SparkSession, n: int, options):
                         ]],
                     },
                 }
-                feats = convert_geojson(geo, options)
-                for fidx, (wcopy, f) in enumerate(wrap_features(feats, options)):
-                    rows.append(feature_to_row(f, 0, 0, 0, [wcopy, i, fidx]))
+                rows += geojson_to_feature_rows(geo, options, (i,))
             if rows:
-                yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
+                yield from rows_to_arrow(rows, FEATURE_SCHEMA).to_batches()
 
     base = spark.range(n).repartition(max(int(spark.conf.get("spark.default.parallelism")), 8))
-    return base.mapInPandas(gen, FEATURE_SCHEMA)
+    return base.mapInArrow(gen, FEATURE_SCHEMA)
 
 
 def bench_pyramid(spark: SparkSession, n_features: int) -> dict:
@@ -232,13 +225,13 @@ def main() -> None:
     spark = make_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Untimed Python-worker pool warm-up: the first mapInPandas in a session
-    # pays the 32-process fork + pandas/numpy import (~6 s clean, far worse
-    # under host contention — this was most of r3's media_decode_stats
-    # outlier). The pool survives long JVM-only stretches (measured: media
-    # 0.7-0.9 s after a 45 s pure-JVM gap), so one warm-up de-noises every
-    # downstream mapInPandas timing.
-    spark.range(10 * cpus, numPartitions=cpus).mapInPandas(
+    # Untimed Python-worker pool warm-up: the first Python crossing in a
+    # session pays the 32-process fork + pyarrow/numpy import (~6 s clean,
+    # far worse under host contention — this was most of r3's
+    # media_decode_stats outlier). The pool survives long JVM-only stretches
+    # (measured: media 0.7-0.9 s after a 45 s pure-JVM gap), so one warm-up
+    # de-noises every downstream kernel timing.
+    spark.range(10 * cpus, numPartitions=cpus).mapInArrow(
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
 

@@ -979,7 +979,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
     max_source_docs: int | None = NGRAM_ALLPAIRS_MAX_SOURCE,
-    reroute: bool = False,
 ) -> DataFrame:
     """EXACT near-dup baseline: all-pairs token-set Jaccard within each
     source bucket. Deliberately quadratic per source — it exists as the
@@ -987,60 +986,37 @@ def ngram_jaccard_pairs(
     equality- and subset-tested against, NOT as the scale path.
 
     Scale guard (round-4 verdict #3): if any source holds more than
-    `max_source_docs` documents this either raises (default — pointing at
-    minhash_lsh_pairs) or, with reroute=True, silently runs the r=1
-    exact-recall LSH mode instead (n_hashes == n_bands: banding only prunes,
-    per-pair miss 2^-16, equality-tested in test_minhash_equals_exact_jaccard).
+    `max_source_docs` documents the query raises, pointing at
+    minhash_lsh_pairs (its r=1 exact-recall mode, n_hashes == n_bands, is
+    equality-tested against this join in test_minhash_equals_exact_jaccard).
 
-    The default raise-mode guard is LAZY — a broadcast per-source-count join
-    plus `assert_true` folded into the returned plan, so merely BUILDING the
-    query (entry-contract consumers, plan harnesses) costs nothing and the
-    first real action fails fast inside the scan stage feeding the self-join
-    (a review flagged the old construction-time collect: one full eager scan
-    per call, even when the frame was never evaluated). reroute=True keeps
-    one eager count by necessity: the bucket size decides WHICH plan to
-    build. max_source_docs=None disables the guard entirely.
+    The guard is LAZY — a broadcast per-source-count join plus `assert_true`
+    folded into the returned plan, so merely BUILDING the query
+    (entry-contract consumers, plan harnesses) costs nothing and the first
+    real action fails fast inside the scan stage feeding the self-join.
+    max_source_docs=None disables the guard entirely.
     """
     docs = docs.select("doc_id", "source", "toks")
     if max_source_docs is not None:
-        if reroute:
-            biggest = (
-                docs.groupBy("source")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .agg(F.max("n"))
-                .collect()[0][0]
-                or 0
+        counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("_n_src"))
+        guard_msg = F.format_string(
+            "ngram_jaccard_pairs is the exact all-pairs baseline: source "
+            "'%s' holds %s docs (> "
+            f"{max_source_docs}) — use training.minhash_lsh_pairs (banded "
+            "LSH; n_hashes=n_bands for the r=1 exact-recall mode), or raise "
+            "max_source_docs if you really mean it.",
+            F.col("source"),
+            F.col("_n_src"),
+        )
+        docs = (
+            docs.join(F.broadcast(counts), "source")
+            .where(
+                F.assert_true(
+                    F.col("_n_src") <= F.lit(max_source_docs), guard_msg
+                ).isNull()
             )
-            if biggest > max_source_docs:
-                from .training import minhash_lsh_pairs
-
-                return minhash_lsh_pairs(
-                    docs, threshold=threshold, n_hashes=16, n_bands=16,
-                    bucket_cap=None,
-                )
-        else:
-            counts = docs.groupBy("source").agg(
-                F.count(F.lit(1)).alias("_n_src")
-            )
-            guard_msg = F.format_string(
-                "ngram_jaccard_pairs is the exact all-pairs baseline: source "
-                "'%s' holds %s docs (> "
-                f"{max_source_docs}) — use training.minhash_lsh_pairs (banded "
-                "LSH; n_hashes=n_bands for the r=1 exact-recall mode), pass "
-                "reroute=True to do that automatically, or raise "
-                "max_source_docs if you really mean it.",
-                F.col("source"),
-                F.col("_n_src"),
-            )
-            docs = (
-                docs.join(F.broadcast(counts), "source")
-                .where(
-                    F.assert_true(
-                        F.col("_n_src") <= F.lit(max_source_docs), guard_msg
-                    ).isNull()
-                )
-                .drop("_n_src")
-            )
+            .drop("_n_src")
+        )
     a = docs.alias("a")
     b = docs.alias("b")
     pairs = a.join(b, on="source").where(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -1163,9 +1139,7 @@ def tile_counters(spark, sf_dir, zmax: int = TC_ZMAX, cap: int = TC_CAP):
     threshold (the sweep test hardens the replay at several settings);
     the driver instance pins TC_ZMAX/TC_CAP."""
     from .config import Options
-    from .functions.convert import convert_geojson
-    from .functions.wrap import wrap_features
-    from .model import FEATURE_SCHEMA, feature_to_row
+    from .model import FEATURE_SCHEMA, geojson_to_feature_rows, rows_to_arrow
     from .plans.pyramid import build_pyramid
     from .training import _event_points
 
@@ -1177,34 +1151,22 @@ def tile_counters(spark, sf_dir, zmax: int = TC_ZMAX, cap: int = TC_CAP):
     )
 
     def gen(batches):
-        import pandas as pd
-
-        cols = [f.name for f in FEATURE_SCHEMA.fields]
-        for pdf in batches:
+        for batch in batches:
             rows = []
             for eid, lon, lat in zip(
-                pdf["event_id"], pdf["lon"], pdf["lat"]
+                *(batch.column(c).to_pylist() for c in ("event_id", "lon", "lat"))
             ):
                 geo = {
                     "type": "Feature",
-                    "id": int(eid),
+                    "id": eid,
                     "properties": {},
-                    "geometry": {
-                        "type": "Point",
-                        "coordinates": [float(lon), float(lat)],
-                    },
+                    "geometry": {"type": "Point", "coordinates": [lon, lat]},
                 }
-                feats = convert_geojson(geo, options)
-                for fidx, (wcopy, f) in enumerate(
-                    wrap_features(feats, options)
-                ):
-                    rows.append(
-                        feature_to_row(f, 0, 0, 0, [wcopy, int(eid), fidx])
-                    )
+                rows += geojson_to_feature_rows(geo, options, (eid,))
             if rows:
-                yield pd.DataFrame(rows, columns=cols)
+                yield from rows_to_arrow(rows, FEATURE_SCHEMA).to_batches()
 
-    feats = ev.mapInPandas(gen, FEATURE_SCHEMA).localCheckpoint(eager=True)
+    feats = ev.mapInArrow(gen, FEATURE_SCHEMA).localCheckpoint(eager=True)
     store = build_pyramid(feats, options)
     return store.registry_df().groupBy("z").agg(
         F.count(F.lit(1)).cast("long").alias("n_tiles"),

@@ -55,15 +55,6 @@ def project_y_np(y: np.ndarray) -> np.ndarray:
     return np.clip(y2, 0.0, 1.0)
 
 
-def unproject_x_np(x: np.ndarray) -> np.ndarray:
-    return (x - 0.5) * 360.0
-
-
-def unproject_y_np(y: np.ndarray) -> np.ndarray:
-    y2 = (180.0 - y * 360.0) * (np.pi / 180.0)
-    return 360.0 * np.arctan(np.exp(y2)) / np.pi - 90.0
-
-
 # ---- Spark Column expressions (JVM-side; no Python) -------------------------
 
 def project_x_col(col):

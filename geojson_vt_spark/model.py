@@ -22,7 +22,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from .functions.convert import convert_geojson
 from .functions.feature import make_feature, make_ring
+from .functions.wrap import wrap_features
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -155,8 +157,27 @@ def local_frame(
     rows = list(rows)
     if rows and not isinstance(rows[0], dict):
         rows = [dict(zip(schema.names, r)) for r in rows]
-    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(rows_to_arrow(rows, schema), schema)
+
+
+def rows_to_arrow(rows: list, schema: T.StructType) -> pa.Table:
+    """Dict rows (list columns may hold numpy arrays) as one Arrow table of
+    `schema`: the driver's local frames and the kernels that build Python
+    rows (`mapInArrow`, yielding its batches) share this one conversion."""
+    return pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+
+
+def geojson_to_feature_rows(data: dict, options, prefix: tuple = ()) -> list:
+    """Convert (O1-O6) + wrap (O7) of one GeoJSON object into FEATURE_SCHEMA
+    rows at z0, okey = [wcopy, *prefix, i] with i the position in the
+    wrapped list. Every GeoJSON ingest goes through here: the engine's
+    in-memory input (prefix ()), the documents parse kernel ((doc_seq,
+    offset)) and per-event features ((event_id,))."""
+    wrapped = wrap_features(convert_geojson(data, options), options)
+    return [
+        feature_to_row(f, 0, 0, 0, [wcopy, *prefix, i])
+        for i, (wcopy, f) in enumerate(wrapped)
+    ]
 
 
 def feature_to_row(feature: dict, z: int, x: int, y: int, okey: list) -> dict:

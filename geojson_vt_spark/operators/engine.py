@@ -15,25 +15,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..cluster.index import ClusterTileIndexSpark
 from ..config import ClusterOptions, Options
-from ..functions.convert import convert_geojson
-from ..functions.wrap import wrap_features
 from ..model import FEATURE_SCHEMA, KIND_REGISTRY, KIND_SOURCE
-from ..model import feature_to_row, local_frame, num_points_col
+from ..model import geojson_to_feature_rows, local_frame, num_points_col
 from ..model import tile_key, tile_key_col
 from ..plans.pyramid import PyramidStore, build_pyramid
 from ..sources.tile_store import lookup_frame, read_tiles
-
-
-def geojson_to_feature_rows(data: dict, options: Options) -> list:
-    """Driver-side convert (O1-O6) + wrap (O7) for in-memory GeoJSON inputs.
-    Large corpora go through sources/documents.py which runs the same kernels
-    inside mapInPandas."""
-    feats = convert_geojson(data, options)
-    wrapped = wrap_features(feats, options)
-    return [
-        feature_to_row(f, 0, 0, 0, [wcopy, fid])
-        for fid, (wcopy, f) in enumerate(wrapped)
-    ]
 
 
 def _counted_checkpoint(df: DataFrame) -> tuple:

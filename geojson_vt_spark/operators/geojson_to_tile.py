@@ -11,24 +11,32 @@ Two surfaces:
   * ``tile_from_features_df`` — the Spark shape: Catalyst bbox predicate on
     the plain bbox columns prunes rows *before* the Arrow clip/assemble
     kernel ever sees them (the scan reads only straddling candidates), then a
-    single mapInPandas emits the tile's features. This is the
+    single mapInArrow runs the pyramid's whole-batch flat kernels (band clip
+    on both axes, assembly) and emits the tile's features. This is the
     "minimum slice" query used when the source is already a (huge) feature
     table: predicate pushdown + column pruning happen for free.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import Options
 from ..functions.clip import AXIS_X, AXIS_Y, clip_features
 from ..functions.convert import convert_geojson
+from ..functions.flat import clip_flat, list_parts
 from ..functions.tile import assemble_feature, transform_tile_feature
 from ..functions.wrap import wrap_features
-from ..model import FEATURE_SCHEMA, TILE_FEATURE_SCHEMA, row_to_feature, tile_feature_to_json
+from ..model import TILE_FEATURE_SCHEMA
+from ..plans.pyramid import _read_state, _tile_rows
+
+_TILE_ARROW = to_arrow_schema(TILE_FEATURE_SCHEMA)
+_BBOX = ("minx", "miny", "maxx", "maxy")
 
 
 def _js_shl1(z) -> int:
@@ -86,8 +94,9 @@ def tile_from_features_df(
     """Distributed single-tile slice over a FEATURE_SCHEMA table.
 
     The bbox trivial accept/reject (clip.ts:29-35) is expressed as a Column
-    predicate so Catalyst pushes it into the scan; the Arrow kernel only
-    clips straddling rows.
+    predicate so Catalyst pushes it into the scan; the kernel clips only the
+    rows that pass. okey is the source okey plus the slice's ordinal within
+    its source feature; minx..maxy are the source row's bbox.
     """
     options = options or Options()
     z2 = 1 << z
@@ -102,39 +111,40 @@ def tile_from_features_df(
         & (F.col("miny") <= F.lit(k2y))
     )
 
-    cols = [f.name for f in FEATURE_SCHEMA.fields]
+    def clip(fl, k1, k2, axis):
+        n = fl.n_features
+        return clip_flat(fl, np.full(n, k1), np.full(n, k2), axis, options.line_metrics)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json
+    def kernel(batches):
+        for batch in batches:
+            fl, _z, _x, _y, okeys, ids, tags = _read_state(batch)
+            flx, srcx, _ = clip(fl, k1x, k2x, AXIS_X)
+            fly, srcy, _ = clip(flx, k1y, k2y, AXIS_Y)
+            n = fly.n_features
+            if not n:
+                continue
+            # clip output is ordered by source row, so a slice's ordinal
+            # within its source row is its distance from the run's start
+            src = srcx[srcy]
+            first = np.flatnonzero(np.r_[True, src[1:] != src[:-1]])
+            ordinal = np.arange(n) - np.repeat(first, np.diff(np.r_[first, n]))
+            ia = pa.array(src, pa.int64())
+            off, old = list_parts(okeys.take(ia))
+            okey = pa.ListArray.from_arrays(
+                pa.array(off + np.arange(n + 1), pa.int32()),
+                pa.array(np.insert(old, off[1:], ordinal)), type=okeys.type,
+            )
+            rows = _tile_rows((
+                fly, np.full(n, z), np.full(n, x), np.full(n, y),
+                okey, ids.take(ia), tags.take(ia),
+            ), options)[0]
+            keep = rows.column("tf_geom").is_valid()
+            cols = [
+                batch.column(f.name).take(ia) if f.name in _BBOX else rows.column(f.name)
+                for f in _TILE_ARROW
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [c.filter(keep) for c in cols], schema=_TILE_ARROW
+            )
 
-        for pdf in batches:
-            out = {f.name: [] for f in TILE_FEATURE_SCHEMA.fields}
-            for row in pdf[cols].to_dict("records"):
-                feat = row_to_feature(row)
-                xs = clip_features([feat], z2, x - buffer, x + 1 + buffer, AXIS_X, options)
-                ys = clip_features(xs, z2, y - buffer, y + 1 + buffer, AXIS_Y, options)
-                for i, f in enumerate(ys):
-                    tf, npts, nsimp = assemble_feature(f, z, options)
-                    if tf is None:
-                        continue
-                    tft = transform_tile_feature(tf, z, x, y, options.extent)
-                    out["z"].append(z)
-                    out["x"].append(x)
-                    out["y"].append(y)
-                    out["okey"].append(list(row["okey"]) + [i])
-                    out["tf_type"].append(tft["type"])
-                    out["tf_id"].append(row["id"])
-                    out["tf_tags"].append(
-                        None if tft["tags"] is None else json.dumps(tft["tags"])
-                    )
-                    out["tf_geom"].append(tile_feature_to_json(tft))
-                    out["npoints"].append(npts)
-                    out["nsimplified"].append(nsimp)
-                    out["minx"].append(row["minx"])
-                    out["miny"].append(row["miny"])
-                    out["maxx"].append(row["maxx"])
-                    out["maxy"].append(row["maxy"])
-            if out["z"]:
-                yield pd.DataFrame(out)
-
-    return pruned.mapInPandas(kernel, TILE_FEATURE_SCHEMA)
+    return pruned.mapInArrow(kernel, TILE_FEATURE_SCHEMA)

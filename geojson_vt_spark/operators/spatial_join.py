@@ -10,8 +10,8 @@ assignment (tile-index.ts:208-219) and the kd-tree radius query
     heatmaps and joins share one key space (SURVEY §8.3: quadkey, not
     H3/S2);
   * point-in-polygon: coarse cell/bbox prefilter (broadcastable) + exact
-    refine — range predicates for boxes, vectorized ray-casting (pandas UDF)
-    for general polygons;
+    refine — range predicates for boxes, whole-batch ray-casting (a
+    mapInArrow kernel over the vertex lists) for general polygons;
   * kNN: 3x3-neighborhood candidate join with driver-side ring doubling until
     every point's kth-neighbor distance is certified by the ring bound — each
     round joins only unsettled points, so hot cells don't force a global
@@ -24,13 +24,14 @@ assignment (tile-index.ts:208-219) and the kd-tree radius query
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import (
     Column, DataFrame, Observation, Window, functions as F, types as T,
 )
+
+from ..functions.flat import list_parts
 
 
 def _counted_checkpoint(df: DataFrame) -> tuple:
@@ -110,7 +111,7 @@ def point_in_polygon_join(
 ) -> DataFrame:
     """points ⋈ polygons(poly_id, xs array<double>, ys array<double>,
     minx, miny, maxx, maxy) — bbox-cell prefilter + exact even-odd
-    ray-casting refine (vectorized numpy over Arrow batches).
+    ray-casting refine (numpy over each whole Arrow batch's vertex lists).
 
     Boundary semantics: even-odd rule with half-open edges (points exactly on
     a horizontal-crossing vertex count once) — matches the classic PNPOLY
@@ -123,26 +124,30 @@ def point_in_polygon_join(
     )
     cols = [f.name for f in out_schema.fields]
 
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            for i, (x, y, xs, ys) in enumerate(
-                zip(pdf[px], pdf[py], pdf["xs"], pdf["ys"])
-            ):
-                xs = np.asarray(xs, dtype=np.float64)
-                ys = np.asarray(ys, dtype=np.float64)
-                x1, y1 = np.roll(xs, 1), np.roll(ys, 1)
-                cond = (ys > y) != (y1 > y)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    xin = (x1 - xs) * (y - ys) / (y1 - ys) + xs
-                keep[i] = bool(np.logical_and(cond, x < xin).sum() % 2)
-            out = pdf.loc[keep, cols]
-            if len(out):
+    def refine(batches):
+        for batch in batches:
+            off, xs = list_parts(batch.column("xs"))
+            ys = list_parts(batch.column("ys"))[1]
+            n = np.diff(off)
+            starts = off[:-1][n > 0]
+            # each vertex's ring predecessor, cyclic (vertex 0 follows the last)
+            prev = np.arange(len(xs)) - 1
+            prev[starts] = off[1:][n > 0] - 1
+            x1, y1 = xs[prev], ys[prev]
+            x = np.repeat(batch.column(px).to_numpy(), n)
+            y = np.repeat(batch.column(py).to_numpy(), n)
+            cond = (ys > y) != (y1 > y)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                xin = (x1 - xs) * (y - ys) / (y1 - ys) + xs
+            hits = np.logical_and(cond, x < xin).astype(np.int64)
+            # parity per row; rows without vertices have no crossings
+            odd = np.zeros(batch.num_rows, bool)
+            odd[n > 0] = np.add.reduceat(hits, starts) % 2 == 1
+            out = batch.filter(pa.array(odd)).select(cols)
+            if out.num_rows:
                 yield out
 
-    return candidates.mapInPandas(refine, out_schema)
+    return candidates.mapInArrow(refine, out_schema)
 
 
 _EARTH_RADIUS_KM = 6371.0088

@@ -22,18 +22,18 @@ Spark shape (MERGE INTO semantics, not a list rewrite):
                        prefix on `okey` so every downstream sort-by-okey sees
                        the same sequence.
 
-The user predicate filter (O24, geojsonvt.ts:115-127) runs as an Arrow-batched
-mapInPandas over the full source — the one place a user-supplied Python
-callable touches every row — emitting only failing rows; removal is then an
-id anti-join (all antimeridian copies of a failing id go together).
+The user predicate filter (O24, geojsonvt.ts:115-127) runs as a mapInArrow
+kernel over the full source — the one place a user-supplied Python callable
+touches every row — emitting only failing rows; removal is then an id
+anti-join (all antimeridian copies of a failing id go together).
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import Options
@@ -198,21 +198,19 @@ def filter_update(
 ) -> tuple:
     """O24 (geojsonvt.ts:115-127): drop id-bearing features failing a user
     GeoJSON predicate; failing rows join the affected set."""
-    cols = [f.name for f in FEATURE_SCHEMA.fields]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keep_mask = []
-            for row in pdf[cols].to_dict("records"):
-                if row["id"] is None:
-                    keep_mask.append(True)
-                    continue
-                keep_mask.append(bool(predicate(feature_to_geojson(row_to_feature(row)))))
-            out = pdf[~pd.Series(keep_mask, index=pdf.index)]
-            if len(out):
+    def kernel(batches):
+        for batch in batches:
+            failing = pa.array([
+                row["id"] is not None
+                and not predicate(feature_to_geojson(row_to_feature(row)))
+                for row in batch.to_pylist()
+            ], pa.bool_())
+            out = batch.filter(failing)
+            if out.num_rows:
                 yield out
 
-    removed = source.mapInPandas(kernel, FEATURE_SCHEMA)
+    removed = source.select(*FEATURE_SCHEMA.names).mapInArrow(kernel, FEATURE_SCHEMA)
     removed = removed.localCheckpoint(eager=True)
     # no emptiness probe: an empty `removed` makes the anti-join and the
     # union no-ops, and update_data finds a no-op from its row count. No

@@ -6,7 +6,7 @@ Input table shape:
 
 kind ∈ {'text','media','geojson'}; GeoJSON payloads ride in `text` when
 kind='geojson'. The engine extracts geojson spans into internal feature rows
-(O1 Spark-side: posexplode -> filter -> Arrow-batched parse/convert/wrap) and
+(O1 Spark-side: posexplode -> filter -> mapInArrow parse/convert/wrap) and
 never rewrites the documents table — the per-document span sequence
 (kind, text, media_ref, order) is an invariant checked by
 `span_sequence_violations`.
@@ -19,15 +19,12 @@ from __future__ import annotations
 
 import hashlib
 import json
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..config import Options
-from ..functions.convert import convert_geojson
-from ..functions.wrap import wrap_features
-from ..model import FEATURE_SCHEMA, feature_to_row, local_frame
+from ..model import FEATURE_SCHEMA, geojson_to_feature_rows, local_frame, rows_to_arrow
 
 SPAN_SCHEMA = T.StructType(
     [
@@ -104,7 +101,7 @@ def features_from_documents(
     okey = [wcopy, doc_seq, offset, feature_idx] — reference input order when
     documents are read in doc_seq order.
 
-    The geojson filter + column pruning happen *before* the UDF: Catalyst
+    The geojson filter + column pruning happen *before* the kernel: Catalyst
     pushes `kind = 'geojson'` into the exploded scan so text/media spans never
     cross the Arrow boundary.
     """
@@ -117,25 +114,19 @@ def features_from_documents(
         .select("doc_seq", F.col("s.offset").alias("offset"), F.col("s.text").alias("payload"))
     )
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def parse(batches):
+        for batch in batches:
             rows = []
             for doc_seq, offset, payload in zip(
-                pdf["doc_seq"], pdf["offset"], pdf["payload"]
+                *(batch.column(c).to_pylist() for c in ("doc_seq", "offset", "payload"))
             ):
-                data = json.loads(payload)
-                feats = convert_geojson(data, options)
-                wrapped = wrap_features(feats, options)
-                for fidx, (wcopy, f) in enumerate(wrapped):
-                    rows.append(
-                        feature_to_row(
-                            f, 0, 0, 0, [wcopy, int(doc_seq), int(offset), fidx]
-                        )
-                    )
+                rows += geojson_to_feature_rows(
+                    json.loads(payload), options, (doc_seq, offset)
+                )
             if rows:
-                yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
+                yield from rows_to_arrow(rows, FEATURE_SCHEMA).to_batches()
 
-    return spans.mapInPandas(parse, FEATURE_SCHEMA)
+    return spans.mapInArrow(parse, FEATURE_SCHEMA)
 
 
 def span_sequence_violations(before: DataFrame, after: DataFrame) -> DataFrame:

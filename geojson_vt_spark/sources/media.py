@@ -1,6 +1,6 @@
 """Multimodal spans: opaque binary payloads + typed metadata, with the
-decode / feature-extract / resize / frame-sample stages as Arrow-batched
-kernels over mapInPandas.
+decode / feature-extract / resize / frame-sample stages as whole-batch
+mapInArrow kernels.
 
 The input_hint's interleaved documents carry `media_ref` spans; this module
 gives them a real Spark shape: a `media` table (binary payload + kind +
@@ -22,11 +22,12 @@ where PIL IS importable fails loudly instead of serving fabricated stats.
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 try:  # real decoders, if ever present in the image
     import PIL.Image  # noqa: F401
@@ -59,6 +60,7 @@ DECODED_SCHEMA = T.StructType(
         T.StructField("sampled_frames", T.ArrayType(T.LongType()), True),
     ]
 )
+_DECODED_ARROW = to_arrow_schema(DECODED_SCHEMA)
 
 
 def media_from_documents(documents: DataFrame) -> DataFrame:
@@ -117,57 +119,53 @@ def decode_media(media: DataFrame, frame_stride: int = 5) -> DataFrame:
             "decoders (geojson_vt_spark/sources/media.py)"
         )
 
+    if frame_stride < 1:
+        raise ValueError(f"frame_stride must be >= 1, got {frame_stride}")
+
     # every stub stat is a pure function of len(payload) and kind, so the
     # whole Arrow batch is processed with numpy column ops: per-kind boolean
-    # masks + modular arithmetic on the length vector, and a 30-entry LUT for
-    # the (bounded) video frame-sample lists. Real codecs will be per-row by
-    # nature; the stub must not be (it was the one per-row loop in the repo).
-    # object-dtype LUT filled entry-by-entry (31 constant iterations): fancy
-    # indexing into it keeps every row's list as an opaque object reference.
-    # Assigning a list-of-lists through a boolean mask is NOT safe — numpy
-    # promotes equal-length inner lists to a 2-D array and the masked
-    # assignment raises (a batch holding one video, or frame_stride >= 30,
-    # makes every list the same length).
-    frames_lut = np.empty(31, dtype=object)
-    for nf in range(1, 31):
-        frames_lut[nf] = list(range(0, nf, frame_stride))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = pdf["payload"].map(len).to_numpy(dtype=np.int64)
-            kind = pdf["kind"].to_numpy()
-            is_img = kind == "image"
-            is_aud = kind == "audio"
+    # masks + modular arithmetic on the length vector, and the video
+    # frame-sample lists built on their offsets and values buffers. Real
+    # codecs will be per-row by nature; the stub must not be.
+    def kernel(batches):
+        for batch in batches:
+            n = pc.binary_length(batch.column("payload")).to_numpy().astype(np.int64)
+            kind = batch.column("kind")
+            is_img = pc.equal(kind, "image").to_numpy(zero_copy_only=False)
+            is_aud = pc.equal(kind, "audio").to_numpy(zero_copy_only=False)
             is_vid = ~is_img & ~is_aud
+            wh_mask = is_img | is_vid
 
             def masked(values, mask):
-                col = np.where(mask, values, 0).astype(object)
-                col[~mask] = None
-                return col
+                return pa.array(values, pa.int64(), mask=~mask)
 
-            width = np.where(is_img, 16 + n % 240, 32 + n % 224)
-            height = np.where(is_img, 16 + (n * 7) % 240, 32 + (n * 3) % 224)
             n_frames = 1 + n % 30
-            wh_mask = is_img | is_vid
-            sampled = np.full(len(n), None, dtype=object)
-            if is_vid.any():
-                sampled[is_vid] = frames_lut[n_frames[is_vid]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "media_ref": pdf["media_ref"],
-                    "kind": pdf["kind"],
-                    "n_bytes": n,
-                    "width": masked(width, wh_mask),
-                    "height": masked(height, wh_mask),
-                    "n_samples": masked(n * 4, is_aud),
-                    "sample_rate": masked(np.full(len(n), 16000), is_aud),
-                    "n_frames": masked(n_frames, is_vid),
-                    "sampled_frames": sampled,
-                }
+            # video rows sample frames 0, stride, 2*stride, ... < n_frames
+            k = np.where(is_vid, -(-n_frames // frame_stride), 0)
+            off = np.zeros(len(n) + 1, np.int32)
+            np.cumsum(k, out=off[1:])
+            sampled = frame_stride * (np.arange(off[-1]) - np.repeat(off[:-1], k))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("doc_id").cast(pa.int64()),
+                    batch.column("media_ref"),
+                    kind,
+                    pa.array(n),
+                    masked(np.where(is_img, 16 + n % 240, 32 + n % 224), wh_mask),
+                    masked(np.where(is_img, 16 + (n * 7) % 240, 32 + (n * 3) % 224), wh_mask),
+                    masked(n * 4, is_aud),
+                    masked(np.full(len(n), 16000), is_aud),
+                    masked(n_frames, is_vid),
+                    pa.ListArray.from_arrays(
+                        pa.array(off), pa.array(sampled, pa.int64()),
+                        type=_DECODED_ARROW.field("sampled_frames").type,
+                        mask=pa.array(~is_vid),
+                    ),
+                ],
+                schema=_DECODED_ARROW,
             )
 
-    return media.mapInPandas(kernel, DECODED_SCHEMA)
+    return media.mapInArrow(kernel, DECODED_SCHEMA)
 
 
 def q_media_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

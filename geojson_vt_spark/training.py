@@ -595,7 +595,6 @@ def ann_join(
     k: int = 10,
     n_bits: int = 8,
     n_bands: int = 4,
-    bucket_cap: int | None = None,
 ) -> DataFrame:
     """Batch-query ANN join: top-k cosine neighbors in `corpus` for EVERY
     row of `queries` (both frames: (vec_id, embedding)) — the kNN-join
@@ -610,13 +609,7 @@ def ann_join(
     makes precision exact; recall follows the multi-probe banding bound
     (~4e-4 miss at cos >= 0.99 with 8 bits / 4 bands). The query side is
     broadcast into the refine (ANN-join batches are query-small by nature);
-    widen n_bits to shrink buckets at corpus scale.
-
-    bucket_cap: optional corpus-side hot-bucket guard (_cap_hot_buckets) —
-    a band value holding a disproportionate slice of the corpus (embedding
-    collapse, zero vectors) multiplies EVERY query landing there by the
-    bucket size. Default OFF (the oracle replays uncapped and n_bits is the
-    primary lever); set it when corpus embeddings are not well-spread."""
+    widen n_bits to shrink buckets at corpus scale."""
     planes = _hyperplanes(n_bits, 64)
     bits_per_band = n_bits // n_bands
     bmask = (1 << bits_per_band) - 1
@@ -644,11 +637,7 @@ def ann_join(
 
     # _bucket_col reads the `embedding` column, so keep it in scope per side
     qb = _bands(queries.select("vec_id", "embedding"), "q_id")
-    cb = _cap_hot_buckets(
-        _bands(corpus.select("vec_id", "embedding"), "c_id"),
-        ["band", "bval"],
-        bucket_cap,
-    )
+    cb = _bands(corpus.select("vec_id", "embedding"), "c_id")
     cand = (
         qb.join(cb, ["band", "bval"])
         .where(F.col("q_id") != F.col("c_id"))
@@ -911,9 +900,7 @@ def ivf_index_write(embeddings: DataFrame, path: str, nlist: int = 16) -> None:
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
-def ivf_index_append(
-    new_embeddings: DataFrame, path: str, skip_existing: bool = True
-) -> None:
+def ivf_index_append(new_embeddings: DataFrame, path: str) -> None:
     """Incremental maintenance of the on-disk IVF index: assign NEWLY
     ARRIVED vectors against the FROZEN centroid table stored beside the
     lists and append them to their inverted-list directories
@@ -930,13 +917,11 @@ def ivf_index_append(
     ivf_index_append(df, path)) turns an arriving-embeddings stream into
     a live-growing index.
 
-    skip_existing (default True) makes the append IDEMPOTENT: new vec_ids
-    anti-join the index's stored ids first, so an at-least-once foreachBatch
-    replay (parquet committed, checkpoint offset not) cannot duplicate rows
-    — duplicated vectors would silently occupy two top-k ranks at serving
-    time forever. Cost: one ids-only column-pruned scan of the index per
-    append; pass False only for bulk loads with externally-guaranteed
-    exactly-once ids."""
+    The append is IDEMPOTENT: new vec_ids anti-join the index's stored ids
+    first, so an at-least-once foreachBatch replay (parquet committed,
+    checkpoint offset not) cannot duplicate rows — duplicated vectors would
+    silently occupy two top-k ranks at serving time forever. Cost: one
+    ids-only column-pruned scan of the index per append."""
     spark = new_embeddings.sparkSession
     cents = [
         (int(r.rk), [float(v) for v in r.embedding])
@@ -944,15 +929,14 @@ def ivf_index_append(
     ]
     cents.sort()
     ranked = _ivf_rank_structs(cents)
-    if skip_existing:
-        # eager checkpoint cuts the plan's dependency on the very parquet
-        # path the write below appends to (read-your-own-append hazard)
-        existing = (
-            spark.read.parquet(f"{path}/lists")
-            .select("vec_id")
-            .localCheckpoint(eager=True)
-        )
-        new_embeddings = new_embeddings.join(existing, "vec_id", "left_anti")
+    # eager checkpoint cuts the plan's dependency on the very parquet path
+    # the write below appends to (read-your-own-append hazard)
+    existing = (
+        spark.read.parquet(f"{path}/lists")
+        .select("vec_id")
+        .localCheckpoint(eager=True)
+    )
+    new_embeddings = new_embeddings.join(existing, "vec_id", "left_anti")
     (
         new_embeddings.select(
             "vec_id", "embedding", ranked[0]["rk"].alias("list_id")

@@ -13,6 +13,7 @@ from geojson_vt_spark.operators.spatial_join import (
     geo_radius_join,
     ncols_of_row,
     point_in_box_join,
+    point_in_polygon_join,
     quad_cell,
     quad_cover,
     reduced_grid_cell,
@@ -130,6 +131,66 @@ def test_pip_join_high_latitude_vs_brute(spark):
         .collect()
     }
     assert got and got == brute
+
+
+def _pnpoly(x, y, xs, ys):
+    """Scalar even-odd ray cast (PNPOLY), the per-edge formula of the
+    join's refine."""
+    inside = False
+    j = len(xs) - 1
+    for i in range(len(xs)):
+        if (ys[i] > y) != (ys[j] > y) and x < (
+            (xs[j] - xs[i]) * (y - ys[i]) / (ys[j] - ys[i]) + xs[i]
+        ):
+            inside = not inside
+        j = i
+    return inside
+
+
+def test_point_in_polygon_join_vs_brute(spark):
+    """Even-odd refine over several Arrow batches against a brute-force
+    PNPOLY over every (point, polygon) pair in the closed bbox: a convex
+    square, a convex triangle, a concave C (open ring), and a concave
+    arrow (closed ring). The point grid sits on the polygons' vertex
+    lattice, so points level with a vertex and points on horizontal edges
+    are in the set."""
+    from .util import session_conf
+
+    g = 40.0
+    polys = {
+        0: [(24, 20), (36, 20), (36, 32), (24, 32)],
+        1: [(24, 4), (36, 4), (30, 14)],
+        2: [(4, 4), (20, 4), (20, 8), (8, 8), (8, 16), (20, 16), (20, 20), (4, 20)],
+        3: [(4, 24), (16, 30), (4, 36), (8, 30), (4, 24)],
+    }
+    prow = []
+    for pid, ring in polys.items():
+        xs = [a / g for a, _ in ring]
+        ys = [b / g for _, b in ring]
+        prow.append((pid, xs, ys, min(xs), min(ys), max(xs), max(ys)))
+    polygons = spark.createDataFrame(
+        prow, "poly_id int, xs array<double>, ys array<double>, "
+        "minx double, miny double, maxx double, maxy double",
+    )
+    pts = [(i * 41 + j, i / g, j / g) for i in range(41) for j in range(41)]
+    points = spark.createDataFrame(pts, "pid int, x double, y double")
+    want = {
+        (pid, poly_id)
+        for pid, x, y in pts
+        for poly_id, xs, ys, x0, y0, x1, y1 in prow
+        if x0 <= x <= x1 and y0 <= y <= y1 and _pnpoly(x, y, xs, ys)
+    }
+    with session_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "16"}):
+        joined = point_in_polygon_join(points, polygons)
+        got = {(r.pid, r.poly_id) for r in joined.collect()}
+    assert got == want
+    assert {p for _, p in want} == set(polys)
+    # on-edge and vertex-level points land on both sides of the rule
+    on_bottom = {(i * 41 + 20, 0) for i in range(24, 37)}
+    assert on_bottom & want and on_bottom - want
+    assert "xs" not in joined.columns and "ys" not in joined.columns
+    # candidates exceed one batch, so the kernel really runs per batch
+    assert point_in_box_join(points, polygons).count() > 3 * 16
 
 
 def test_sphere_cells_ground_area_honesty(spark):

@@ -65,6 +65,40 @@ def test_multi_doc_feature_order(spark):
     assert [f["id"] for f in got["z0-0-0"]] == [f["id"] for f in exp["z0-0-0"]]
 
 
+def test_parse_kernel_rows_over_batches(spark):
+    """The parse kernel over several Arrow batches emits exactly the rows of
+    a driver-side convert + wrap + feature_to_row per payload, okey
+    [wcopy, doc_seq, offset, i] included (dateline has wrap copies)."""
+    from geojson_vt_spark.functions.convert import convert_geojson
+    from geojson_vt_spark.functions.wrap import wrap_features
+    from geojson_vt_spark.model import feature_to_row
+
+    from .util import session_conf
+
+    feats = (
+        load_fixture("us-states.json")["features"]
+        + load_fixture("dateline.json")["features"]
+    )
+    payloads = [
+        {"type": "FeatureCollection", "features": feats[i : i + 5]}
+        for i in range(0, len(feats), 5)
+    ]
+    docs = synthesize_documents(spark, [json.dumps(p) for p in payloads], n_docs=16)
+    opts = Options()
+    with session_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "2"}):
+        got = [r.asDict() for r in features_from_documents(docs, opts).collect()]
+    want = []
+    for doc_seq, data in enumerate(payloads):
+        wrapped = wrap_features(convert_geojson(data, opts), opts)
+        for i, (wcopy, f) in enumerate(wrapped):
+            row = feature_to_row(f, 0, 0, 0, [wcopy, doc_seq, 1, i])
+            want.append({k: v.tolist() if hasattr(v, "tolist") else v for k, v in row.items()})
+    got.sort(key=lambda r: r["okey"])
+    want.sort(key=lambda r: r["okey"])
+    assert len(payloads) > 2 and any(r["okey"][0] for r in want)
+    assert got == want
+
+
 def test_span_roundtrip_oracle_parity(spark):
     """The input_hint invariant as a driver-checked oracle row: Column-built
     interleaved spans survive explode -> shuffle -> per-doc reassembly with

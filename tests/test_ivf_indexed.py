@@ -247,8 +247,7 @@ def test_index_append_from_stream(spark, tmp_path):
 
 def test_index_append_idempotent_on_replay(spark, tmp_path):
     """An at-least-once replay of the same append batch must not duplicate
-    rows (skip_existing anti-join), and skip_existing=False documents the
-    raw behavior."""
+    rows (the stored-id anti-join)."""
     from geojson_vt_spark.training import ivf_index_append, ivf_index_write
 
     e = _emb(spark)
@@ -261,6 +260,3 @@ def test_index_append_idempotent_on_replay(spark, tmp_path):
     ivf_index_append(new, p)  # replayed micro-batch
     n2 = spark.read.parquet(f"{p}/lists").count()
     assert n1 == n2 == e.count()
-    # raw mode really appends (the external-exactly-once bulk path)
-    ivf_index_append(new.limit(5), p, skip_existing=False)
-    assert spark.read.parquet(f"{p}/lists").count() == n2 + 5

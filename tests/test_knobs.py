@@ -1,8 +1,8 @@
 """Inventory of the package's environment knobs and engine crossings.
 Engines run one production path; tuning constants live in their modules
 (tests monkeypatch them). A new SPARK_GRAFT_* variable therefore needs a
-deliberate edit here, and so does a pandas crossing in an Arrow-native
-engine."""
+deliberate edit here, and so does a pandas crossing: batch operators cross
+into Python through Arrow only."""
 
 import pathlib
 import re
@@ -23,13 +23,17 @@ def test_env_knob_inventory():
 
 
 def test_pyramid_and_grid_engines_have_no_pandas_crossing():
-    """The pyramid, grid-cluster and MinHash signature kernels take and
-    return Arrow batches; a pandas crossing must not creep back into any
-    of them."""
-    for rel in ("plans/pyramid.py", "cluster/grid.py", "training.py"):
-        text = (ROOT / rel).read_text()
-        for banned in ("mapInPandas", "applyInPandas", "import pandas"):
-            assert banned not in text, f"{rel}: {banned}"
+    """The pyramid and grid engines, like every batch kernel, take and
+    return Arrow batches: pandas is imported, and crossed into with
+    applyInPandas, only by the stateful streaming dedup
+    (applyInPandasWithState has no Arrow twin)."""
+    for banned in ("import pandas", "applyInPandas"):
+        found = {
+            str(path.relative_to(ROOT))
+            for path in ROOT.rglob("*.py")
+            if banned in path.read_text()
+        }
+        assert found == {"streaming/dedup_stream.py"}, (banned, found)
 
 
 def test_driver_built_frames_go_through_local_frame():
@@ -43,18 +47,19 @@ def test_driver_built_frames_go_through_local_frame():
 
 
 def test_data_pipeline_operators_have_no_engine_selectors():
-    """One production path per hygiene/training operator: no public function
-    lets its caller pick an engine, a join strategy or a loop budget, and
-    the removed second engines stay gone."""
+    """One production path per hygiene/training/analytics operator: no
+    public function lets its caller pick an engine, a join strategy, a loop
+    budget or a fallback, and the removed second engines and unset options
+    stay gone."""
     import inspect
 
-    from geojson_vt_spark import hygiene, training
+    from geojson_vt_spark import analytics, hygiene, training
 
     banned = {
         "engine", "algorithm", "hits_join", "boiler_cap", "n_shards",
-        "round_budget", "vocab_broadcast",
+        "round_budget", "vocab_broadcast", "reroute",
     }
-    for mod in (hygiene, training):
+    for mod in (hygiene, training, analytics):
         for name, fn in inspect.getmembers(mod, inspect.isfunction):
             if name.startswith("_") or fn.__module__ != mod.__name__:
                 continue
@@ -63,6 +68,10 @@ def test_data_pipeline_operators_have_no_engine_selectors():
     assert list(inspect.signature(training.q_simhash_dedup).parameters) == [
         "spark", "sf_dir",
     ]
+    assert "bucket_cap" not in inspect.signature(training.ann_join).parameters
+    assert "skip_existing" not in inspect.signature(
+        training.ivf_index_append
+    ).parameters
     for mod, name in [
         (training, "ann_topk_ivf_matmul"),
         (training, "_round6_half_up_np"),
@@ -95,11 +104,10 @@ def test_spatial_joins_have_one_cell_grid():
 
 
 def test_pandas_crossing_inventory():
-    """Six mapInPandas sites remain (updates filter, spatial-join refine,
-    geojson_to_tile, documents parse, media decode, analytics event
-    features); a new one needs a deliberate edit here."""
+    """No mapInPandas site remains: every batch kernel is Arrow in, Arrow
+    out; a new pandas crossing needs a deliberate edit here."""
     found = {
         str(path.relative_to(ROOT)): path.read_text().count("mapInPandas(")
         for path in ROOT.rglob("*.py")
     }
-    assert sum(found.values()) == 6, {k: n for k, n in found.items() if n}
+    assert sum(found.values()) == 0, {k: n for k, n in found.items() if n}

@@ -42,7 +42,7 @@ def test_single_tile_bbox_pushdown(feature_table):
     assert "PushedFilters: [IsNotNull(maxx)" in plan
     assert "GreaterThanOrEqual(maxx" in plan
     # the full filter (both axes) runs before the Python kernel
-    assert plan.index("Filter") > plan.index("MapInPandas") or "minx" in plan.split("Filter", 1)[1].split("+-")[0]
+    assert plan.index("Filter") > plan.index("MapInArrow") or "minx" in plan.split("Filter", 1)[1].split("+-")[0]
 
 
 def test_pip_join_broadcasts_dim(spark):
@@ -138,7 +138,7 @@ def test_documents_span_filter_before_arrow(spark):
     df = features_from_documents(docs, Options())
     opt = _optimized(df)
     # the filter sits below the Python evaluation node in the optimized plan
-    assert opt.index("geojson") > opt.index("MapInPandas")
+    assert opt.index("geojson") > opt.index("MapInArrow")
 
 
 def test_minhash_bands_shuffle_on_band_keys(spark):

@@ -2,14 +2,16 @@
 O25 convert->deconvert round trips (reference: test/round-trip.test.ts).
 
 The driver-side parity matrix runs kernel-only (no Spark); the distributed
-variant is exercised against the same goldens through mapInPandas with the
-Catalyst bbox prune."""
+variant is exercised against the same goldens through its mapInArrow kernel
+with the Catalyst bbox prune, and row for row against the scalar walkers
+(`tests/util.py:tile_slice_reference`)."""
 
 import pytest
 
 from geojson_vt_spark.config import Options
 from geojson_vt_spark.functions.convert import convert_geojson
 from geojson_vt_spark.functions.deconvert import features_to_geojson
+from geojson_vt_spark.model import TILE_FEATURE_SCHEMA
 from geojson_vt_spark.operators.engine import geojson_to_feature_rows
 from geojson_vt_spark.operators.geojson_to_tile import (
     geojson_to_tile,
@@ -115,6 +117,61 @@ def test_distributed_single_tile_matches_driver(spark):
     got = [tile_feature_from_row(r.asDict()) for r in out]
     golden = load_fixture("us-states-z7-37-48.json")
     assert json.dumps(got, sort_keys=True) == json.dumps(golden, sort_keys=True)
+
+
+# us-states (polygons) + dateline (points, lines, a multiline, a polygon) +
+# a line that leaves and re-enters tile 2/1/1 five times, so lineMetrics
+# splits it into several slices of one source row
+ZIGZAG = {
+    "type": "Feature",
+    "id": "zigzag",
+    "properties": {"kind": "zigzag"},
+    "geometry": {
+        "type": "LineString",
+        "coordinates": [[-100 + 20 * (k % 2), 5 + 3 * k] for k in range(12)],
+    },
+}
+SLICE_TILES = [(0, 0, 0), (1, 0, 0), (2, 1, 1), (3, 1, 3), (5, 0, 12),
+               (7, 37, 48), (9, 148, 192), (11, 800, 400)]
+
+
+@pytest.mark.parametrize(
+    "options",
+    [Options(), Options(line_metrics=True), Options(tolerance=0)],
+    ids=["default", "line_metrics", "tolerance0"],
+)
+def test_distributed_single_tile_matches_scalar_rows(spark, options):
+    """Every output column of the flat kernel equals the scalar walkers',
+    over several Arrow batches per task, LineStrings included."""
+    from geojson_vt_spark.model import FEATURE_SCHEMA, local_frame
+
+    from .util import session_conf, tile_slice_reference
+
+    data = {
+        "type": "FeatureCollection",
+        "features": load_fixture("us-states.json")["features"]
+        + load_fixture("dateline.json")["features"] + [ZIGZAG],
+    }
+    rows = geojson_to_feature_rows(data, options)
+    df = local_frame(spark, rows, FEATURE_SCHEMA)
+    src = [r.asDict() for r in df.collect()]
+    names = [f.name for f in TILE_FEATURE_SCHEMA.fields]
+    sliced = 0
+    with session_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "7"}):
+        for z, x, y in SLICE_TILES:
+            got = sorted(
+                (r.asDict() for r in tile_from_features_df(df, z, x, y, options).collect()),
+                key=lambda r: r["okey"],
+            )
+            want = tile_slice_reference(src, z, x, y, options)
+            want.sort(key=lambda r: r["okey"])
+            assert [[r[c] for c in names] for r in got] == [
+                [r[c] for c in names] for r in want
+            ], (z, x, y)
+            sliced += sum(r["okey"][-1] > 0 for r in want)
+    # the empty tile stays empty; lineMetrics really splits the zigzag
+    assert not tile_slice_reference(src, 11, 800, 400, options)
+    assert (sliced > 0) == options.line_metrics
 
 
 # ---- round trips (reference: test/round-trip.test.ts) ----------------------

@@ -149,30 +149,34 @@ def test_minhash_signature_kernel_matches_reference(spark, hash_fn):
 
 
 def test_ngram_allpairs_scale_guard(spark):
-    """The exact all-pairs baseline must refuse (or reroute) oversized
-    source buckets instead of silently going quadratic (round-4 verdict #3)."""
+    """The exact all-pairs baseline must refuse oversized source buckets
+    instead of silently going quadratic (round-4 verdict #3); the r=1
+    exact-recall LSH mode the guard points at finds the same pairs."""
     import pytest
 
     from geojson_vt_spark.analytics import ngram_jaccard_pairs
+    from geojson_vt_spark.training import minhash_lsh_pairs
 
     rows = [(i, "web", [f"t{i}", f"u{i}", "x"]) for i in range(50)]
     rows += [(1000, "web", ["dup", "pair", "a"]), (1001, "web", ["dup", "pair", "a"])]
     docs = spark.createDataFrame(rows, ["doc_id", "source", "toks"])
 
-    # the raise-mode guard is LAZY: building the plan runs no job and does
-    # not raise (entry-contract consumers build every query up front) ...
+    # the guard is LAZY: building the plan runs no job and does not raise
+    # (entry-contract consumers build every query up front) ...
     guarded = ngram_jaccard_pairs(docs, max_source_docs=10)
     # ... but the first action fails fast with the pointer to the LSH path
     with pytest.raises(Exception, match="minhash_lsh_pairs"):
         guarded.collect()
 
-    # reroute runs the r=1 exact-recall LSH mode and finds the planted pair
+    # the r=1 exact-recall LSH mode finds the planted pair
     got = {
         (r.doc_a, r.doc_b)
-        for r in ngram_jaccard_pairs(docs, max_source_docs=10, reroute=True).collect()
+        for r in minhash_lsh_pairs(
+            docs, n_hashes=16, n_bands=16, bucket_cap=None
+        ).collect()
     }
     assert (1000, 1001) in got
-    # within the guard, the exact join runs and agrees with the reroute
+    # within the guard, the exact join runs and agrees with it
     exact = {
         (r.doc_a, r.doc_b)
         for r in ngram_jaccard_pairs(docs, max_source_docs=None).collect()

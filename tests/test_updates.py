@@ -262,6 +262,51 @@ def test_filter_removes_all(population_engine):
     assert eng.get_tile(0, 0, 0) == []
 
 
+def test_filter_update_rows_over_batches(spark):
+    """filter_update over several Arrow batches: the removed rows are the
+    id-bearing rows failing the predicate, every copy of a failing id
+    leaves the source, and null-id rows always stay."""
+    from geojson_vt_spark.functions.deconvert import feature_to_geojson
+    from geojson_vt_spark.model import FEATURE_SCHEMA, local_frame, row_to_feature
+    from geojson_vt_spark.operators.engine import geojson_to_feature_rows
+    from geojson_vt_spark.operators.updates import filter_update
+
+    from .conftest import load_fixture
+    from .util import session_conf
+
+    data = load_fixture("us-states.json")
+    data["features"] += load_fixture("dateline.json")["features"]
+    data["features"].append(pt(None, [5, 5], {"density": 0}))
+    rows = geojson_to_feature_rows(data, Options(updateable=True))
+    source = local_frame(spark, rows, FEATURE_SCHEMA)
+    empty = local_frame(spark, [], FEATURE_SCHEMA)
+
+    def pred(f):
+        return (f["properties"] or {}).get("density", 0) > 100
+
+    src = [r.asDict() for r in source.collect()]
+    failing = [
+        r for r in src
+        if r["id"] is not None
+        and not pred(feature_to_geojson(row_to_feature(dict(r))))
+    ]
+    bad_ids = {r["id"] for r in failing}
+    with session_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "7"}):
+        affected, kept = filter_update(source, empty, pred)
+        got_removed = [r.asDict() for r in affected.collect()]
+        got_kept = [r.asDict() for r in kept.collect()]
+
+    def key(r):
+        return r["okey"]
+
+    assert len(src) > 3 * 7 and failing and len(failing) < len(src)
+    assert any(r["id"] is None for r in src)
+    assert sorted(got_removed, key=key) == sorted(failing, key=key)
+    assert sorted(got_kept, key=key) == sorted(
+        (r for r in src if r["id"] not in bad_ids), key=key
+    )
+
+
 def test_get_data(spark):
     data = fc(pt("point1", [0, 0], {"name": "Test"}))
     eng = GeoJSONVTSpark(spark, data=data, options=Options(updateable=True))

@@ -118,3 +118,38 @@ def minhash_signatures_reference(docs, n_hashes=64, hash_fn="xxhash64"):
         F.min(F.pmod(x * F.lit(a) + F.lit(b), F.lit(_MH_P))).alias(f"h{s}")
         for s, (a, b) in enumerate(_mh_coeffs(n_hashes))
     ])
+
+
+def tile_slice_reference(rows, z, x, y, options):
+    """The scalar form of `geojson_to_tile.tile_from_features_df` over
+    FEATURE_SCHEMA row dicts: per row, the clip.py band clip on both axes
+    and the tile.py assembly + transform. Returns TILE_FEATURE_SCHEMA row
+    dicts: okey is the source okey plus the slice's ordinal within its
+    source row, minx..maxy the source row's bbox."""
+    import json
+
+    from geojson_vt_spark.functions.clip import AXIS_X, AXIS_Y, clip_features
+    from geojson_vt_spark.functions.tile import assemble_feature, transform_tile_feature
+    from geojson_vt_spark.model import row_to_feature, tile_feature_to_json
+
+    z2 = 1 << z
+    buffer = options.buffer / options.extent
+    out = []
+    for row in rows:
+        feat = row_to_feature(row)
+        xs = clip_features([feat], z2, x - buffer, x + 1 + buffer, AXIS_X, options)
+        ys = clip_features(xs, z2, y - buffer, y + 1 + buffer, AXIS_Y, options)
+        for i, f in enumerate(ys):
+            tf, npts, nsimp = assemble_feature(f, z, options)
+            if tf is None:
+                continue
+            tft = transform_tile_feature(tf, z, x, y, options.extent)
+            out.append({
+                "z": z, "x": x, "y": y, "okey": list(row["okey"]) + [i],
+                "tf_type": tft["type"], "tf_id": row["id"],
+                "tf_tags": None if tft["tags"] is None else json.dumps(tft["tags"]),
+                "tf_geom": tile_feature_to_json(tft),
+                "npoints": npts, "nsimplified": nsimp,
+                **{k: row[k] for k in ("minx", "miny", "maxx", "maxy")},
+            })
+    return out
