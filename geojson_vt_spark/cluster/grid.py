@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..config import ClusterOptions
+from ..sources.table_format import snapshot
 
 # Cells can be negative for antimeridian copies, and cx grows like
 # extent*2^z/radius (~5.4e7 at extent=512, radius=40, z=22). The packed cell
@@ -82,17 +83,6 @@ def _validate_cell_range(options: ClusterOptions) -> None:
             f"(extent={options.extent}, radius={options.radius}): |cx| can "
             f"reach {max_cx:.3g} >= 2^27; lower max_zoom or raise radius"
         )
-
-
-def _checkpoint(df: DataFrame, workdir: Optional[str], name: str) -> DataFrame:
-    if workdir:
-        from ..sources.table_format import resolve_format
-
-        store = resolve_format(df.sparkSession, workdir)
-        if not store.exists(name):
-            store.write(df, name)
-        return store.read(df.sparkSession, name, df.schema)
-    return df.localCheckpoint(eager=True)
 
 
 def _widen(df: DataFrame, n_points: int) -> DataFrame:
@@ -407,7 +397,9 @@ def _run_batches(
         else:
             part = frontier.coalesce(1)
         out = part.mapInArrow(_make_level_kernel(batch, o, n_points), _BATCH_SCHEMA)
-        out = _checkpoint(out, workdir, f"ctree/zb={z_hi:02d}-{z_lo:02d}")
+        out = snapshot(
+            out, workdir, f"ctree/zb={z_hi:02d}-{z_lo:02d}", resume=True
+        )
         for z in batch:
             trees[z + 1] = _widen(
                 out.filter((F.col("level") == z + 1) & (~F.col("fr"))).select(

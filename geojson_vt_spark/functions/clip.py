@@ -14,7 +14,6 @@ columns so Catalyst filters rows before the UDF ever sees them.
 from __future__ import annotations
 
 import math
-from typing import Optional
 
 import numpy as np
 

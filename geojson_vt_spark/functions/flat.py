@@ -18,8 +18,6 @@ grouped contiguously per feature and vertices per ring.
 
 from __future__ import annotations
 
-from typing import Optional
-
 import numpy as np
 
 from .feature import (

@@ -15,14 +15,11 @@ in one task.
 
 from __future__ import annotations
 
-from typing import Optional
-
 import numpy as np
 
 from ..config import Options
 from .feature import (
     LINESTRING,
-    MULTILINESTRING,
     MULTIPOINT,
     MULTIPOLYGON,
     POINT,

@@ -9,8 +9,6 @@ clip is then skipped entirely).
 
 from __future__ import annotations
 
-import numpy as np
-
 from ..config import Options
 from .clip import AXIS_X, clip_features
 from .feature import make_feature, make_ring

@@ -15,7 +15,7 @@ stage here preserves/extends okey and consumers sort by it.
 from __future__ import annotations
 
 import json
-from typing import Any, Iterable, Optional
+from typing import Any, Iterable
 
 import numpy as np
 import pyarrow as pa
@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .functions.convert import convert_geojson
-from .functions.feature import make_feature, make_ring
+from .functions.feature import make_ring
 from .functions.wrap import wrap_features
 
 FEATURE_SCHEMA = T.StructType(

@@ -8,7 +8,6 @@ reference golden tests, /root/reference/test/full.test.ts:52-72).
 
 from __future__ import annotations
 
-import json
 from typing import Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F

@@ -30,7 +30,7 @@ Spark job is needed to predict placement.
 from __future__ import annotations
 
 import heapq
-from typing import Dict, Hashable, List, Sequence, Tuple
+from typing import Dict, Hashable, List, Sequence
 
 _MASK32 = 0xFFFFFFFF
 _MASK64 = 0xFFFFFFFFFFFFFFFF

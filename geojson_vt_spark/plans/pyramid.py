@@ -42,10 +42,12 @@ Spark-first design (NOT a translation of the single-threaded BFS):
   * Arrow-stage parallelism defaults to defaultParallelism/4 (task-cpus
     accounting for JVM serde + Python worker + numpy threads; see
     arrow_parts in build_pyramid);
-  * each level is checkpointed (parquet or Iceberg via
-    sources/table_format.py under `workdir`, else localCheckpoint)
-    -> per-partition lineage: a killed job resumes at the first missing level
-    without recomputing finished zooms;
+  * each level's kernel outputs (level pass and subtree kernel) are two
+    branches of one union, written as ONE snapshot by one job
+    (sources/table_format.snapshot: parquet or Iceberg under `workdir`, else
+    localCheckpoint); the union's tasks share the slots, so the two kernels
+    still overlap. Per-partition lineage: a killed job resumes at the first
+    missing level without recomputing finished zooms;
   * empty child tiles are registered from the split-decision table (the
     reference pushes all 4 children even when a quadrant clip is empty,
     tile-index.ts:223-226) — no data rows needed;
@@ -65,7 +67,6 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.util import inheritable_thread_target
 
 from ..config import Options
 from ..functions.feature import LINESTRING
@@ -85,6 +86,7 @@ from ..model import FEATURE_SCHEMA, REGISTRY_SCHEMA, STORE_SCHEMA, TILE_FEATURE_
 from ..model import KIND_FRONTIER, KIND_REGISTRY, KIND_SOURCE, KIND_TILE
 from ..model import kind_rows, local_frame, num_points_col, store_rows, tile_key
 from ..model import tile_key_col
+from ..sources.table_format import snapshot
 from .balance import balanced_gid_mapping
 from ..functions.tile import GEOJSONVT_CLIP_END, GEOJSONVT_CLIP_START, js_div
 
@@ -481,39 +483,6 @@ class PyramidStore:
         self.frames = [self.frame().localCheckpoint(eager=True)]
 
 
-_CKPT_POOL = None
-
-
-def _ckpt_pool():
-    """One background thread for overlapping the subtree materialization with
-    the same level's fused pass (two Spark jobs; task slots cap concurrency).
-    Submit through pyspark's inheritable_thread_target(session): in
-    pinned-thread mode the thread's jobs then carry the caller's local
-    properties (job group, scheduler pool) and tags, so they count toward
-    the caller's jobs."""
-    global _CKPT_POOL
-    if _CKPT_POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _CKPT_POOL = ThreadPoolExecutor(max_workers=1)
-    return _CKPT_POOL
-
-
-def _checkpoint(df: DataFrame, workdir: Optional[str], name: str, resume: bool) -> DataFrame:
-    """Per-level lineage checkpoint. With a workdir each level is a snapshot
-    in the configured table format (parquet dir by default, Iceberg table
-    when a catalog is present — sources/table_format.py); without,
-    localCheckpoint truncates lineage."""
-    if workdir:
-        from ..sources.table_format import resolve_format
-
-        store = resolve_format(df.sparkSession, workdir)
-        if not (resume and store.exists(name)):
-            store.write(df, name)
-        return store.read(df.sparkSession, name, df.schema)
-    return df.localCheckpoint(eager=True)
-
-
 def build_pyramid(
     features_df: DataFrame,
     options: Options,
@@ -588,15 +557,14 @@ def build_pyramid(
         except Exception:  # noqa: BLE001 — conservative: checkpoint
             already_rdd = False
     if not already_rdd:
-        frontier = _checkpoint(
-            frontier, workdir, f"frontier/z={z0:02d}", resume
-        )
+        frontier = snapshot(frontier, workdir, f"frontier/z={z0:02d}", resume)
 
     # this call's kind-tagged store rows; the store gets their union
     parts: list[DataFrame] = []
 
     while True:
-        sub_future = None
+        # this level's kernel outputs: branches of one union, one snapshot
+        branches: list[DataFrame] = []
         routed: list = []
         sources: Optional[DataFrame] = None
         run_level = True
@@ -690,16 +658,9 @@ def build_pyramid(
                     sub_parts, "gid"
                 )
             if routed:
-                # materialize CONCURRENTLY with this level's pass: both jobs
-                # read the (already-checkpointed) frontier, and in-flight
-                # tasks stay capped by the task slots
-                sub_future = _ckpt_pool().submit(
-                    inheritable_thread_target(spark)(_checkpoint),
-                    sub_in.groupBy("gid").applyInArrow(
-                        _subtree_fn(options, target), STORE_SCHEMA
-                    ),
-                    workdir, f"subtree/z={z:02d}", resume,
-                )
+                branches.append(sub_in.groupBy("gid").applyInArrow(
+                    _subtree_fn(options, target), STORE_SCHEMA
+                ))
             n_split = len(split_list)
             decisions["levels"].append({
                 "z": z, "routed": len(routed),
@@ -757,7 +718,7 @@ def build_pyramid(
             if n_split < _BROADCAST_TILE_LIMIT:
                 stop_keys = F.broadcast(stop_keys)
             sources = frontier.join(stop_keys, ["z", "x", "y"], "leftsemi")
-            sources = _checkpoint(sources, workdir, f"sources/z={z:02d}", resume)
+            sources = snapshot(sources, workdir, f"sources/z={z:02d}", resume)
             flag_keys = split_keys.withColumn("do_split", F.lit(True))
             if n_split < _BROADCAST_TILE_LIMIT:
                 flag_keys = F.broadcast(flag_keys)
@@ -765,20 +726,33 @@ def build_pyramid(
 
         if run_level:
             # ---- fused assemble+split: ONE Arrow crossing per level ----
-            unified = level_in.fillna(False, ["do_split"]).coalesce(
+            branches.append(level_in.fillna(False, ["do_split"]).coalesce(
                 arrow_parts
-            ).mapInArrow(_level_fn(options), STORE_SCHEMA)
-            unified = _checkpoint(unified, workdir, f"unified/z={z:02d}", resume)
-            kind1 = unified.filter(F.col("kind") == KIND_TILE)
+            ).mapInArrow(_level_fn(options), STORE_SCHEMA))
+        if branches:
+            # ONE job writes the level: the union's tasks share the slots, so
+            # the subtree kernel and the level pass still run side by side
+            unified = snapshot(
+                functools.reduce(DataFrame.union, branches),
+                workdir, f"unified/z={z:02d}", resume,
+            )
+            # the store keeps the kernels' rows of kinds 1-3; kind-0 rows are
+            # the next frontier, and a level-pass tile row whose feature
+            # simplified away (null tf_type) only feeds the registry counter
+            kind = F.col("kind")
+            parts.append(unified.where(
+                (kind != KIND_FRONTIER)
+                & ((kind != KIND_TILE) | F.col("tf_type").isNotNull())
+            ))
+        if run_level:
             # registry: driver/decision skeleton (num_features, num_points,
             # has_source) + per-tile num_simplified from the assembled rows —
-            # a small lazy join, materialized only when the registry is read
-            nsimp_agg = kind1.groupBy("z", "x", "y").agg(
-                F.sum("nsimplified").alias("num_simplified")
-            )
-            parts.append(store_rows(
-                kind1.filter(F.col("tf_type").isNotNull()), KIND_TILE
-            ))
+            # a small lazy join, materialized only when the registry is read.
+            # Subtree tiles are absent from `skel`, so the left join drops
+            # their rows from the aggregate
+            nsimp_agg = unified.filter(F.col("kind") == KIND_TILE).groupBy(
+                "z", "x", "y"
+            ).agg(F.sum("nsimplified").alias("num_simplified"))
             parts.append(store_rows(
                 skel.join(nsimp_agg, ["z", "x", "y"], "left")
                 .fillna(0, ["num_simplified"]),
@@ -793,9 +767,6 @@ def build_pyramid(
         # source retained only where we stopped (tile-index.ts:174,191)
         if sources is not None:
             parts.append(store_rows(sources, KIND_SOURCE))
-        if sub_future is not None:
-            # the subtree kernel's output is store rows of kinds 1-3 already
-            parts.append(sub_future.result())
 
         if n_split == 0:
             if decision is not None:
@@ -832,7 +803,7 @@ def build_pyramid(
                 )
                 .select("z", F.col("c.cx").alias("x"), F.col("c.cy").alias("y"))
             )
-            expected = _checkpoint(expected, workdir, f"expected/z={z + 1:02d}", resume)
+            expected = snapshot(expected, workdir, f"expected/z={z + 1:02d}", resume)
         if decision is not None:
             decision.unpersist()
         z += 1

@@ -1,10 +1,12 @@
 """Table-format seam for checkpointed lineage snapshots.
 
 The pyramid loop and the grid-cluster loop persist one snapshot per level
-(resumable lineage, BASELINE.json north rule). The storage format is
-isolated behind this interface so the same job runs against plain parquet
-directories (default, always available) or an Iceberg catalog (the north
-star's lakehouse deployment) without touching the plan code.
+(resumable lineage, BASELINE.json north rule) through one step, `snapshot`.
+The storage format is isolated behind this interface so the same job runs
+against plain parquet directories (default, always available) or an Iceberg
+catalog (the north star's lakehouse deployment) without touching the plan
+code. `guard_fingerprint` keeps a resumed workdir honest: snapshots are
+reused only under the options and input that built them.
 
 Selection: `resolve_format(spark)` returns IcebergSnapshotStore when an
 Iceberg catalog is configured on the session (spark.sql.catalog.* set and
@@ -21,6 +23,7 @@ environments without a catalog — this sandbox included.
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Optional
 
@@ -136,3 +139,56 @@ def _namespace_for(root: str) -> str:
     return "ckpt_" + "".join(
         c if c.isalnum() else "_" for c in root.strip("/")
     )
+
+
+def snapshot(
+    df: DataFrame, workdir: Optional[str], name: str, resume: bool
+) -> DataFrame:
+    """The one per-level lineage checkpoint. With a workdir the level is a
+    named snapshot in the configured table format, reused when `resume` is
+    set and it exists; without, localCheckpoint truncates lineage."""
+    if workdir:
+        store = resolve_format(df.sparkSession, workdir)
+        if not (resume and store.exists(name)):
+            store.write(df, name)
+        return store.read(df.sparkSession, name, df.schema)
+    return df.localCheckpoint(eager=True)
+
+
+def guard_fingerprint(
+    spark: SparkSession, workdir: str, fingerprint: dict, resume: bool
+) -> None:
+    """Snapshots are only valid under the options (and input) that built
+    them: record `fingerprint` (a JSON-able dict) in the workdir on a fresh
+    run and REFUSE to resume under a different one — mixing levels built
+    under old options would return a wrong result with no error. Stored as a
+    1-row parquet so it works on any Hadoop-compatible filesystem
+    (s3/hdfs/local), like the snapshots themselves."""
+    from ..model import local_frame
+
+    path = workdir.rstrip("/") + "/_options_fingerprint"
+
+    def record():
+        local_frame(spark, [(json.dumps(fingerprint),)], "fp string").write.mode(
+            "overwrite"
+        ).parquet(path)
+
+    if not resume:
+        record()
+        return
+    try:
+        prev = json.loads(spark.read.parquet(path).collect()[0]["fp"])
+    except Exception:  # noqa: BLE001 — first run: nothing recorded yet
+        record()
+        return
+    if prev != fingerprint:
+        diff = {
+            k: (prev.get(k), fingerprint.get(k))
+            for k in sorted(prev.keys() | fingerprint.keys())
+            if prev.get(k) != fingerprint.get(k)
+        }
+        raise ValueError(
+            f"--workdir {workdir} holds snapshots built under DIFFERENT "
+            f"options/input (recorded vs requested: {diff}); resuming would "
+            "mix them into a wrong result. Choose a new --workdir."
+        )

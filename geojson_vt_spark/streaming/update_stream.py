@@ -38,7 +38,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 DIFF_SCHEMA = T.StructType(
     [

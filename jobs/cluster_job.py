@@ -19,7 +19,9 @@ is one point feature.
 Output: one parquet per zoom (<output>/z=<z>) in the engine's tree layout
 (cluster rows with weighted centroids, num, parent pointers), the shape
 every Supercluster query surface (tile emit, bbox query, children/leaves)
-consumes. With --workdir, level batches snapshot for resume.
+consumes. With --workdir, level batches snapshot for resume; a workdir
+whose snapshots were built under other options or input is refused (the
+options fingerprint), so re-submit those with a new --workdir.
 
 Prints one CLUSTER_METRICS JSON line: per-zoom cluster counts + wall time.
 """
@@ -61,8 +63,18 @@ def main(argv: list[str]) -> None:
     from geojson_vt_spark.cluster.grid import build_grid_trees
     from geojson_vt_spark.config import ClusterOptions
     from geojson_vt_spark.functions.projection import project_x_col, project_y_col
+    from geojson_vt_spark.sources.table_format import guard_fingerprint
 
     spark = SparkSession.builder.appName("geojson-vt-spark cluster").getOrCreate()
+
+    if args.workdir:
+        # the level-batch snapshots are reused only under the options and
+        # input that built them: a mismatch fails instead of serving old trees
+        fp = {k: getattr(args, k) for k in (
+            "min_zoom", "max_zoom", "radius", "extent", "min_points",
+            "points", "lonlat",
+        )}
+        guard_fingerprint(spark, args.workdir, fp, resume=True)
 
     pts = spark.read.parquet(args.points)
     if args.lonlat:

@@ -63,55 +63,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     return ap.parse_args(argv)
 
 
-_FP_FIELDS = (
-    "max_zoom",
-    "index_max_zoom",
-    "index_max_points",
-    "buffer",
-    "extent",
-    "tolerance",
-)
-
-
-def _guard_options_fingerprint(
-    spark, workdir: str, options, documents: str, resume: bool
-) -> None:
-    """Snapshots are only valid under the options (and input) that built
-    them: record the fingerprint in the workdir on first run and REFUSE to
-    resume under a different one — silently mixing levels built under old
-    options would produce a wrong pyramid with no error. --no-resume
-    rebuilds fresh and re-records. Stored as a 1-row parquet so it works on
-    any Hadoop-compatible filesystem (s3/hdfs/local), like the snapshots
-    themselves."""
-    fp = {k: getattr(options, k) for k in _FP_FIELDS}
-    fp["documents"] = documents
-    path = workdir.rstrip("/") + "/_options_fingerprint"
-
-    def record():
-        spark.createDataFrame([(json.dumps(fp),)], "fp string").write.mode(
-            "overwrite"
-        ).parquet(path)
-
-    if not resume:
-        record()
-        return
-    try:
-        prev = json.loads(spark.read.parquet(path).collect()[0]["fp"])
-    except Exception:  # noqa: BLE001 — first run: nothing recorded yet
-        record()
-        return
-    if prev != fp:
-        diff = {
-            k: (prev.get(k), fp[k]) for k in fp if prev.get(k) != fp[k]
-        }
-        raise SystemExit(
-            "pyramid_job: --workdir holds snapshots built under DIFFERENT "
-            f"options/input (recorded vs requested: {diff}); resuming would "
-            "mix levels into a wrong pyramid. Pass --no-resume to rebuild "
-            "fresh, or use a new --workdir."
-        )
-
-
 def main(argv: list[str]) -> None:
     args = parse_args(argv)
 
@@ -121,6 +72,7 @@ def main(argv: list[str]) -> None:
     from geojson_vt_spark.config import Options
     from geojson_vt_spark.plans.pyramid import build_pyramid
     from geojson_vt_spark.sources.documents import features_from_documents
+    from geojson_vt_spark.sources.table_format import guard_fingerprint
 
     spark = SparkSession.builder.appName("geojson-vt-spark pyramid").getOrCreate()
 
@@ -135,9 +87,14 @@ def main(argv: list[str]) -> None:
 
     resume = not args.no_resume
     if args.workdir:
-        _guard_options_fingerprint(
-            spark, args.workdir, options, args.documents, resume
-        )
+        # snapshots are reused only under the options and input that built
+        # them; --no-resume rebuilds fresh and re-records
+        fp = {k: getattr(options, k) for k in (
+            "max_zoom", "index_max_zoom", "index_max_points",
+            "buffer", "extent", "tolerance",
+        )}
+        fp["documents"] = args.documents
+        guard_fingerprint(spark, args.workdir, fp, resume)
 
     t0 = time.time()
     docs = spark.read.parquet(args.documents)

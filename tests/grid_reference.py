@@ -14,12 +14,12 @@ from pyspark.sql import DataFrame, functions as F
 
 from geojson_vt_spark.cluster.grid import (
     _NARROW_COLS,
-    _checkpoint,
     _packed_cell,
     _validate_cell_range,
     _widen,
 )
 from geojson_vt_spark.config import ClusterOptions
+from geojson_vt_spark.sources.table_format import snapshot
 
 
 def _f32(c):
@@ -44,7 +44,9 @@ def build_column_trees(
         F.lit(1).cast("long").alias("num"),
         F.lit(None).cast("string").alias("props"),
     )
-    frontier = _checkpoint(level, workdir, f"ctree/z={o.max_zoom + 1:02d}")
+    frontier = snapshot(
+        level, workdir, f"ctree/z={o.max_zoom + 1:02d}", resume=True
+    )
     trees = {o.max_zoom + 1: _widen(frontier, n_points)}
     column_levels(frontier, trees, o, n_points, workdir)
     return trees
@@ -108,8 +110,9 @@ def column_levels(
             F.lit(True).alias("merged"),
             F.lit(1).alias("rk"),
         )
-        combined = _checkpoint(
-            rows_part.unionByName(clusters_part), workdir, f"ctree/z={z:02d}"
+        combined = snapshot(
+            rows_part.unionByName(clusters_part), workdir, f"ctree/z={z:02d}",
+            resume=True,
         )
         # level z+1 with parent pointers filled in (children drill-down)
         trees[z + 1] = _widen(

@@ -197,6 +197,45 @@ def test_zero_items(spark):
     assert idx.get_clusters([-180, -85, 180, 85], 0) == []
 
 
+def test_engine_cluster_surfaces_match_index(spark, places):
+    """The engine's cluster surfaces (geojsonvt.ts:160-183): with cluster on,
+    children and leaves of a cluster equal a ClusterTileIndexSpark's over
+    the same points; with cluster off, all four return None."""
+    from geojson_vt_spark.config import Options
+    from geojson_vt_spark.model import FEATURE_SCHEMA, local_frame
+    from geojson_vt_spark.operators.engine import (
+        GeoJSONVTSpark, geojson_to_feature_rows,
+    )
+
+    data = {"type": "FeatureCollection", "features": places}
+    options = Options(cluster=True)
+    eng = GeoJSONVTSpark(spark, data=data, options=options)
+    # the index over the engine's ingested rows (wrap copies included)
+    idx = ClusterTileIndexSpark(spark, ClusterOptions()).initialize_df(
+        local_frame(spark, geojson_to_feature_rows(data, options), FEATURE_SCHEMA)
+    )
+    clusters = [
+        c for c in eng.get_clusters([-180, -85, 180, 85], 0)
+        if (c["properties"] or {}).get("cluster")
+    ]
+    assert clusters
+    cid = clusters[0]["properties"]["cluster_id"]
+    children = eng.get_cluster_children(cid)
+    assert children and children == idx.get_children(cid)
+    leaves = eng.get_cluster_leaves(cid, 5, 2)
+    assert len(leaves) == 5 and leaves == idx.get_leaves(cid, 5, 2)
+    assert eng.get_cluster_leaves(cid) == idx.get_leaves(cid)
+
+    off = GeoJSONVTSpark(
+        spark, data={"type": "FeatureCollection", "features": places[:10]},
+        options=Options(index_max_zoom=0),
+    )
+    assert off.get_clusters([-180, -85, 180, 85], 0) is None
+    assert off.get_cluster_expansion_zoom(cid) is None
+    assert off.get_cluster_children(cid) is None
+    assert off.get_cluster_leaves(cid) is None
+
+
 # ---- grid mode (distributed scale path) — invariant validation -------------
 
 

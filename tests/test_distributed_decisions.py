@@ -28,13 +28,13 @@ def _build(monkeypatch, feats, options, limit=None):
     if limit is not None:
         monkeypatch.setattr(pyr, "_BROADCAST_TILE_LIMIT", limit)
     names = []
-    real = pyr._checkpoint
+    real = pyr.snapshot
 
     def recording(df, workdir, name, resume):
         names.append(name)
         return real(df, workdir, name, resume)
 
-    monkeypatch.setattr(pyr, "_checkpoint", recording)
+    monkeypatch.setattr(pyr, "snapshot", recording)
     store = build_pyramid(feats, options)
     reg = sorted(tuple(r) for r in store.registry_df().collect())
     tiles = sorted(

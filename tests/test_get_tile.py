@@ -169,8 +169,7 @@ ADDED_POINT = {"add": [{
 
 def _budget_engine(spark):
     """The job-budget setup: a first pass to z7 over us-states, which is one
-    subtree-kernel call. count_jobs counts the kernel thread's jobs too (the
-    pool thread inherits the caller's job group)."""
+    subtree-kernel call, run on the caller's thread like every build job."""
     return GeoJSONVTSpark(
         spark, data=load_fixture("us-states.json"),
         options=Options(updateable=True, index_max_zoom=7, index_max_points=200),

@@ -111,3 +111,20 @@ def test_pandas_crossing_inventory():
         for path in ROOT.rglob("*.py")
     }
     assert sum(found.values()) == 0, {k: n for k, n in found.items() if n}
+
+
+def test_level_snapshots_have_one_step():
+    """Each pyramid level is one union written by one snapshot job on the
+    caller's thread: no thread pool or background submit in the plans, and
+    `sources/table_format.snapshot` is the package's only snapshot step."""
+    for path in (ROOT / "plans").rglob("*.py"):
+        text = path.read_text()
+        for banned in ("ThreadPoolExecutor", "inheritable_thread_target", ".submit("):
+            assert banned not in text, (path.name, banned)
+    found = {
+        str(path.relative_to(ROOT))
+        for path in ROOT.rglob("*.py")
+        if "def _checkpoint" in path.read_text()
+    }
+    assert not found, found
+    assert "def snapshot(" in (ROOT / "sources" / "table_format.py").read_text()

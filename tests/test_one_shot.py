@@ -125,14 +125,14 @@ def test_build_decisions_record_routing(rects, loop, spark, monkeypatch):
 
 
 def test_one_shot_resume_reuses_snapshot(rects, tmp_path, monkeypatch):
-    """Killed-and-resubmitted one-shot build reuses the subtree/z=00
+    """Killed-and-resubmitted one-shot build reuses the unified/z=00
     snapshot and returns identical rows."""
     feats, options = rects
     wd = str(tmp_path / "wd")
     s1 = _run(monkeypatch, feats, options, 200_000, workdir=wd, resume=True)
     assert s1.one_shot
     reg1 = sorted(tuple(r) for r in s1.registry_df().collect())
-    assert os.path.isdir(os.path.join(wd, "subtree"))
+    assert os.path.isdir(os.path.join(wd, "unified"))
     s2 = _run(monkeypatch, feats, options, 200_000, workdir=wd, resume=True)
     assert s2.one_shot
     reg2 = sorted(tuple(r) for r in s2.registry_df().collect())
@@ -174,16 +174,16 @@ def test_one_shot_plan_no_shuffle(rects, monkeypatch):
     frontier and the single applyInArrow task."""
     feats, options = rects
     handed = {}
-    real = pyr._checkpoint
+    real = pyr.snapshot
 
     def recording(df, workdir, name, resume):
         handed[name] = df
         return real(df, workdir, name, resume)
 
-    monkeypatch.setattr(pyr, "_checkpoint", recording)
+    monkeypatch.setattr(pyr, "snapshot", recording)
     s = _run(monkeypatch, feats, options, 200_000)
     assert s.one_shot
-    plan = handed["subtree/z=00"]._jdf.queryExecution().executedPlan().toString()
+    plan = handed["unified/z=00"]._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert "Coalesce" in plan, plan
 
@@ -199,17 +199,50 @@ def test_routing_below_root_equals_loop(rects, loop, monkeypatch):
     cap = reg[(0, 0, 0)] - 1
     assert z1_max <= cap, (z1_max, cap)
     handed = {}
-    real = pyr._checkpoint
+    real = pyr.snapshot
 
     def recording(df, workdir, name, resume):
         handed[name] = df
         return real(df, workdir, name, resume)
 
-    monkeypatch.setattr(pyr, "_checkpoint", recording)
+    monkeypatch.setattr(pyr, "snapshot", recording)
     s_sub = _run(monkeypatch, feats, options, cap)
-    assert "subtree/z=01" in handed, sorted(handed)
+    assert "unified/z=01" in handed, sorted(handed)
     assert not s_sub.one_shot
     assert _collect(s_sub) == loop_out
+
+
+def test_mixed_level_is_one_snapshot_job(rects, loop, spark, monkeypatch):
+    """A level that both routes tiles and runs a level pass writes ONE
+    snapshot in one job: the level pass and the subtree kernel are two
+    branches of one union. With the cap at the second-largest z1 tile, z1
+    routes three tiles and passes the largest on; rows equal the pure level
+    loop, and the build's job count is pinned (one fewer than when each
+    kernel wrote its own snapshot)."""
+    from .util import count_jobs
+
+    feats, options = rects
+    loop_out = loop[1]
+    z1 = sorted(r[4] for r in loop_out[0] if r[0] == 1)  # num_points
+    assert len(z1) == 4 and z1[2] < z1[3], z1
+    names = []
+    real = pyr.snapshot
+
+    def recording(df, workdir, name, resume):
+        names.append(name)
+        return real(df, workdir, name, resume)
+
+    monkeypatch.setattr(pyr, "snapshot", recording)
+    monkeypatch.setattr(pyr, "_SUBTREE_MAX_POINTS", z1[2])
+    store, jobs = count_jobs(spark, lambda: build_pyramid(feats, options))
+    assert store.decisions["levels"][:2] == [
+        {"z": 0, "routed": 0, "level_pass": 1, "split": 1},
+        {"z": 1, "routed": 3, "level_pass": 1, "split": 1},
+    ]
+    assert names.count("unified/z=01") == 1, names
+    assert all(n.startswith("unified/") for n in names), names
+    assert jobs == 15, jobs
+    assert _collect(store) == loop_out
 
 
 def test_tile_counters_replay_parameter_sweep(spark):

@@ -259,7 +259,7 @@ def test_grid_cluster_batched_materialization_count(spark, monkeypatch):
     runs every zoom in ONE kernel task and one checkpoint (no anchor
     exchange); with the one-task cap at 0 the anchored batch plan takes
     ceil-by-tier batches, not one per zoom. Gate it structurally by
-    counting _checkpoint calls."""
+    counting snapshot calls."""
     import math
 
     from pyspark.sql import functions as F
@@ -278,14 +278,14 @@ def test_grid_cluster_batched_materialization_count(spark, monkeypatch):
     opts = ClusterOptions(max_zoom=8)  # 9 levels -> 2 barriers (4+8 tiers)
 
     calls, plans = [], []
-    orig = grid._checkpoint
+    orig = grid.snapshot
 
-    def counting(df, workdir, name):
+    def counting(df, workdir, name, resume):
         calls.append(name)
         plans.append(_plan(df))
-        return orig(df, workdir, name)
+        return orig(df, workdir, name, resume)
 
-    monkeypatch.setattr(grid, "_checkpoint", counting)
+    monkeypatch.setattr(grid, "snapshot", counting)
     assert n <= grid._ONE_TASK_MAX_POINTS
     grid.build_grid_trees(pts, opts, n)
     assert calls == ["ctree/zb=08-00"], calls

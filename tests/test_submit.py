@@ -102,20 +102,29 @@ def test_spark_submit_cluster_job(spark, tmp_path):
     pts.write.parquet(pts_path)
 
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    proc = subprocess.run(
-        [
-            _spark_submit(),
-            "--master", "local[2]",
-            "--conf", "spark.ui.enabled=false",
-            "--conf", "spark.sql.shuffle.partitions=4",
-            "--py-files", zip_path,
-            os.path.join(REPO, "jobs", "cluster_job.py"),
-            "--points", pts_path,
-            "--output", str(tmp_path / "trees-out"),
-            "--cluster-store", str(tmp_path / "cluster-store"),
-            "--max-zoom", "4",
-        ],
-        capture_output=True, text=True, cwd=str(tmp_path), env=env, timeout=600,
+    workdir = str(tmp_path / "wd")
+
+    def submit(*extra):
+        return subprocess.run(
+            [
+                _spark_submit(),
+                "--master", "local[2]",
+                "--conf", "spark.ui.enabled=false",
+                "--conf", "spark.sql.shuffle.partitions=4",
+                "--py-files", zip_path,
+                os.path.join(REPO, "jobs", "cluster_job.py"),
+                "--points", pts_path,
+                "--workdir", workdir,
+                "--max-zoom", "4",
+                *extra,
+            ],
+            capture_output=True, text=True, cwd=str(tmp_path), env=env,
+            timeout=600,
+        )
+
+    proc = submit(
+        "--output", str(tmp_path / "trees-out"),
+        "--cluster-store", str(tmp_path / "cluster-store"),
     )
     assert proc.returncode == 0, f"spark-submit failed:\n{proc.stderr[-4000:]}"
     line = [l for l in proc.stdout.splitlines() if l.startswith("CLUSTER_METRICS ")]
@@ -164,6 +173,15 @@ def test_spark_submit_cluster_job(spark, tmp_path):
         else 1
         for f in leaves
     ) <= n
+
+    # re-submitting over the same --workdir with another --radius must fail
+    # on the options fingerprint, not resume the old level-batch snapshots
+    # (spark-submit relays the driver's Python traceback on stdout)
+    proc = submit("--radius", "60")
+    assert proc.returncode != 0
+    assert "CLUSTER_METRICS " not in proc.stdout
+    assert "DIFFERENT" in proc.stdout, proc.stdout[-4000:]
+    assert "'radius': (40.0, 60.0)" in proc.stdout, proc.stdout[-4000:]
 
 
 def test_spark_submit_dedup_job(spark, tmp_path):
@@ -269,27 +287,27 @@ def test_spark_submit_pyramid_job(spark, tmp_path):
 def test_pyramid_job_options_fingerprint_guard(spark, tmp_path):
     """Resuming a workdir whose snapshots were built under different options
     (or a different input) must fail loudly, not silently mix levels;
-    --no-resume re-records the fingerprint for fresh builds."""
-    import importlib.util
+    --no-resume (resume=False) re-records the fingerprint for fresh builds.
+    The pyramid job's fingerprint: its Options fields plus --documents."""
+    from geojson_vt_spark.sources.table_format import guard_fingerprint
 
-    spec = importlib.util.spec_from_file_location(
-        "pyramid_job", os.path.join(REPO, "jobs", "pyramid_job.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    from geojson_vt_spark.config import Options
+    def fp(max_zoom, documents):
+        return {
+            "max_zoom": max_zoom, "index_max_zoom": 5,
+            "index_max_points": 100000, "buffer": 64, "extent": 4096,
+            "tolerance": 3.0, "documents": documents,
+        }
 
     wd = str(tmp_path / "wd")
-    o1, o2 = Options(max_zoom=5), Options(max_zoom=7)
-    mod._guard_options_fingerprint(spark, wd, o1, "in.parquet", resume=True)
-    mod._guard_options_fingerprint(spark, wd, o1, "in.parquet", resume=True)
-    with pytest.raises(SystemExit, match="DIFFERENT"):
-        mod._guard_options_fingerprint(spark, wd, o2, "in.parquet", resume=True)
-    with pytest.raises(SystemExit, match="DIFFERENT"):
-        mod._guard_options_fingerprint(spark, wd, o1, "other.parquet", resume=True)
-    # --no-resume rebuilds fresh and re-records; subsequent resume matches
-    mod._guard_options_fingerprint(spark, wd, o2, "in.parquet", resume=False)
-    mod._guard_options_fingerprint(spark, wd, o2, "in.parquet", resume=True)
+    guard_fingerprint(spark, wd, fp(5, "in.parquet"), resume=True)
+    guard_fingerprint(spark, wd, fp(5, "in.parquet"), resume=True)
+    with pytest.raises(ValueError, match="DIFFERENT"):
+        guard_fingerprint(spark, wd, fp(7, "in.parquet"), resume=True)
+    with pytest.raises(ValueError, match="DIFFERENT"):
+        guard_fingerprint(spark, wd, fp(5, "other.parquet"), resume=True)
+    # a fresh build re-records; a later resume under it matches
+    guard_fingerprint(spark, wd, fp(7, "in.parquet"), resume=False)
+    guard_fingerprint(spark, wd, fp(7, "in.parquet"), resume=True)
 
 
 def test_dedup_job_rejects_misnamed_input(spark, tmp_path):

@@ -61,16 +61,16 @@ def test_iceberg_identifier_mapping():
 
 
 def test_pyramid_checkpoint_through_seam(spark, tmp_path):
-    """build_pyramid's per-level snapshots flow through the seam (default
-    parquet impl) and the resume contract holds."""
-    from geojson_vt_spark.plans.pyramid import _checkpoint
+    """The one snapshot step (every pyramid and grid level) writes through
+    the seam (default parquet impl) and the resume contract holds."""
+    from geojson_vt_spark.sources.table_format import snapshot
 
     df = spark.range(4).selectExpr("id AS a")
-    out1 = _checkpoint(df, str(tmp_path), "unified/z=00", resume=False)
+    out1 = snapshot(df, str(tmp_path), "unified/z=00", resume=False)
     assert out1.count() == 4
     marker = os.path.join(str(tmp_path), "unified/z=00", "_SUCCESS")
     assert os.path.exists(marker)
     mtime = os.stat(marker).st_mtime_ns
-    out2 = _checkpoint(df, str(tmp_path), "unified/z=00", resume=True)
+    out2 = snapshot(df, str(tmp_path), "unified/z=00", resume=True)
     assert out2.count() == 4
     assert os.stat(marker).st_mtime_ns == mtime  # reused, not rewritten
